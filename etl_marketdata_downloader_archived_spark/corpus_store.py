@@ -49,6 +49,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
+from .io import _vfs
+
 __all__ = [
     "corpus_bucket_expr",
     "write_corpus_meta",
@@ -60,12 +62,6 @@ __all__ = [
 ]
 
 _META = "/_meta"
-
-
-def _vfs(spark: SparkSession, path: str):
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    return jvm_path, fs
 
 
 def corpus_bucket_expr(id_col: str | Column, buckets: int) -> Column:

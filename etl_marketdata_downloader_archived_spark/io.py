@@ -29,6 +29,18 @@ from .schemas import DRIVER_TABLES
 _SCHEMA_CACHE: dict[tuple[int, str], T.StructType] = {}
 
 
+def _vfs(spark: SparkSession, path: str):
+    """``(Path, fs)``: the Hadoop ``Path`` class and the FileSystem
+    that owns ``path``, resolved through the session's Hadoop
+    configuration, so every scheme Spark can read (file://, hdfs://,
+    s3a://...) works. The package's one Hadoop-FS accessor: every
+    existence probe, listing, rename and delete goes through it."""
+    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
+    return jvm_path, jvm_path(path).getFileSystem(
+        spark._jsc.hadoopConfiguration()
+    )
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver parquet table. Parquet carries its own schema;
     vectorized scan + pushdown apply automatically (the explicit
@@ -236,8 +248,7 @@ def compact_lake(
     old = lake_dir.rstrip("/") + "__old"
     cur.write.mode("overwrite").partitionBy(*partition_cols).parquet(tmp)
 
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(lake_dir).getFileSystem(spark._jsc.hadoopConfiguration())
+    jvm_path, fs = _vfs(spark, lake_dir)
     fs.delete(jvm_path(old), True)  # leftover from a prior crashed swap
     if not fs.rename(jvm_path(lake_dir), jvm_path(old)):
         raise IOError(f"compact_lake: could not rename {lake_dir} aside")
@@ -399,8 +410,7 @@ def maintenance_lock(
     import uuid
 
     jvm = spark._jvm
-    jvm_path = jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(path).getFileSystem(spark._jsc.hadoopConfiguration())
+    jvm_path, fs = _vfs(spark, path)
     root = path.rstrip("/")
     # qualify against the FS (absolute path + scheme/authority) so the
     # local-scheme java.io.File claim below and the later fs.create /
@@ -490,7 +500,7 @@ def _read_lock_owner(spark: SparkSession, lock) -> str | None:
     """Owner nonce stored in a maintenance lock file, or None if the
     file is unreadable/absent (vanished mid-check)."""
     jvm = spark._jvm
-    fs = lock.getFileSystem(spark._jsc.hadoopConfiguration())
+    _, fs = _vfs(spark, lock.toString())
     try:
         stream = fs.open(lock)
     except Exception:  # noqa: BLE001
@@ -522,8 +532,7 @@ def _break_expired_lock(spark: SparkSession, path: str, ttl_s: int) -> None:
     raises.)"""
     import time
 
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(path).getFileSystem(spark._jsc.hadoopConfiguration())
+    jvm_path, fs = _vfs(spark, path)
     root = path.rstrip("/")
     lock = jvm_path(root + "__lock")
     if not fs.exists(lock):
@@ -545,8 +554,7 @@ def _takeover_expired(spark: SparkSession, path: str, stale_mtime: int) -> None:
     observation (the real race window)."""
     import uuid
 
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(path).getFileSystem(spark._jsc.hadoopConfiguration())
+    jvm_path, fs = _vfs(spark, path)
     root = path.rstrip("/")
     lock = jvm_path(root + "__lock")
     tomb = jvm_path(root + "__lock_takeover_" + uuid.uuid4().hex)
@@ -605,8 +613,7 @@ def publish_partitions(
     Partition dir names travel verbatim (URL-escaped values
     included). Single maintenance writer per lake assumed, as
     compact_lake."""
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(path).getFileSystem(spark._jsc.hadoopConfiguration())
+    jvm_path, fs = _vfs(spark, path)
     backup = path.rstrip("/") + "__backup"
     fs.mkdirs(jvm_path(backup))
     prefix = partition_col + "="
@@ -650,8 +657,7 @@ def vacuum_maintenance(spark: SparkSession, path: str) -> dict:
 
     Returns {"recovered": [...], "removed": [...]} of paths acted on.
     Single maintenance writer per lake assumed, as everywhere."""
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(path).getFileSystem(spark._jsc.hadoopConfiguration())
+    jvm_path, fs = _vfs(spark, path)
     root = path.rstrip("/")
     recovered: list[str] = []
     removed: list[str] = []
@@ -865,8 +871,7 @@ def compact_files(
 
     vacuum_maintenance(spark, path)  # restore any crashed-publish state first
 
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(path).getFileSystem(spark._jsc.hadoopConfiguration())
+    jvm_path, fs = _vfs(spark, path)
     target_bytes = target_mb * 1024 * 1024
 
     from urllib.parse import unquote
@@ -1014,8 +1019,7 @@ def write_audit_publish(
             "staging": staging,
         }
 
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(path).getFileSystem(spark._jsc.hadoopConfiguration())
+    jvm_path, fs = _vfs(spark, path)
     fs.mkdirs(jvm_path(path))
 
     def _move(src_dir: str, dst_dir: str) -> None:
@@ -1159,12 +1163,6 @@ def read_formatted(
 # publish-then-read-mostly reference tables (the catalog/manifest
 # class), not high-frequency concurrent upserts (that is
 # write_audit_publish + merge_partitioned territory).
-
-
-def _vfs(spark: SparkSession, root: str):
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    p = jvm_path(root)
-    return jvm_path, p.getFileSystem(spark._jsc.hadoopConfiguration())
 
 
 def list_versions(spark: SparkSession, root: str) -> list[int]:

@@ -23,6 +23,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..io import _vfs
 from .text import fingerprint
 
 
@@ -317,10 +318,8 @@ def read_band_meta(spark, postings_dir: str) -> dict | None:
     """Read the band-store ``_meta`` sidecar, or None when the store
     predates it (legacy - the caller may write it forward). A
     present-but-unreadable sidecar raises: corruption, not absence."""
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    p = jvm_path(postings_dir.rstrip("/") + "/_meta")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
+    jvm_path, fs = _vfs(spark, postings_dir)
+    if not fs.exists(jvm_path(postings_dir.rstrip("/") + "/_meta")):
         return None
     row = spark.read.parquet(postings_dir.rstrip("/") + "/_meta").first()
     if row is None or row["_q"] != 1_000_000:

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..io import _vfs
+
 __all__ = [
     "compact_postings",
     "deletion_variants",
@@ -1040,10 +1042,8 @@ def read_postings_meta(spark, postings_dir: str) -> dict | None:
     caller then falls back to the distinct-_p scan and may write the
     sidecar forward). A present-but-unreadable sidecar raises - that
     is corruption, not absence."""
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    p = jvm_path(postings_dir.rstrip("/") + "/_meta")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
+    jvm_path, fs = _vfs(spark, postings_dir)
+    if not fs.exists(jvm_path(postings_dir.rstrip("/") + "/_meta")):
         return None
     row = spark.read.parquet(postings_dir.rstrip("/") + "/_meta").first()
     if row is None or row["_q"] != 1_000_000:
@@ -1058,12 +1058,6 @@ def read_postings_threshold(spark, postings_dir: str) -> int | None:
     or None when absent."""
     meta = read_postings_meta(spark, postings_dir)
     return None if meta is None else meta["p_num"]
-
-
-def _posting_fs(spark, path: str):
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    return jvm_path, fs
 
 
 def _list_data_files(fs, jvm_path, base: str) -> dict:
@@ -1125,7 +1119,7 @@ def recover_posting_store(spark, postings_dir: str) -> bool:
     and compact_postings call this at entry, so the crash window heals
     on the NEXT batch/maintenance pass without operator action."""
     root = postings_dir.rstrip("/")
-    jvm_path, fs = _posting_fs(spark, root)
+    jvm_path, fs = _vfs(spark, root)
     old = jvm_path(root + "__old")
     if not fs.exists(old):
         return False
@@ -1147,7 +1141,7 @@ def posting_store_file_count(spark, postings_dir: str) -> int:
     row-level duplication is invisible to it, but both problems have
     the same cure (compact_postings) and the same growth source."""
     root = postings_dir.rstrip("/")
-    jvm_path, fs = _posting_fs(spark, root)
+    jvm_path, fs = _vfs(spark, root)
     return len(_list_data_files(fs, jvm_path, root))
 
 
@@ -1213,7 +1207,7 @@ def compact_postings(
     before the live->__old rename - the exact race window.
     Returns (rows_before, rows_after)."""
     root = postings_dir.rstrip("/")
-    jvm_path, fs = _posting_fs(spark, root)
+    jvm_path, fs = _vfs(spark, root)
     recover_posting_store(spark, root)
     if not fs.exists(jvm_path(root)):
         raise ValueError(f"compact_postings: no store at {postings_dir}")

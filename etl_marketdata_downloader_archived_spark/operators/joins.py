@@ -134,24 +134,6 @@ def _is_temporal(dt) -> bool:
     return isinstance(dt, (T.TimestampType, T.TimestampNTZType, T.DateType))
 
 
-def range_join(
-    left: DataFrame,
-    right: DataFrame,
-    condition: Column,
-    how: str = "inner",
-) -> DataFrame:
-    """Theta/range join - join on an arbitrary boolean condition.
-
-    Catalyst executes pure non-equi conditions as broadcast
-    nested-loop; ALWAYS carry an equi-key in ``condition`` when one
-    exists (Catalyst splits conjuncts: equi parts hash-partition, range
-    parts become post-join filters), otherwise use
-    ``banded_interval_join`` below to manufacture the equality
-    component.
-    """
-    return left.join(right, condition, how)
-
-
 def banded_interval_join(
     left: DataFrame,
     right: DataFrame,

@@ -49,6 +49,12 @@ _NUMERIC = (
     T.FloatType, T.DoubleType, T.DecimalType,
 )
 
+_PROFILE_SCHEMA = (
+    "column string, n bigint, n_null bigint, n_distinct bigint, "
+    "num_min double, num_max double, num_mean double, "
+    "str_min string, str_max string"
+)
+
 
 def profile(
     df: DataFrame, columns: list[str] | None = None, exact: bool = False
@@ -59,13 +65,17 @@ def profile(
     (column, n, n_null, n_distinct, num_min, num_max, num_mean,
     str_min, str_max) - the num_* fields are NULL for string columns
     and vice versa; num_mean is rounded to 4 dp so profiles compare
-    stably across engines/run orders."""
+    stably across engines/run orders. No column to profile (an empty
+    ``columns``, or a frame with no numeric/string column) gives an
+    empty frame with that schema."""
     fields = {f.name: f.dataType for f in df.schema.fields}
     if columns is None:
         columns = [
             c for c, t in fields.items()
             if isinstance(t, _NUMERIC) or isinstance(t, T.StringType)
         ]
+    if not columns:
+        return df.sparkSession.createDataFrame([], _PROFILE_SCHEMA)
     dcount = F.countDistinct if exact else (
         lambda c: F.approx_count_distinct(c)
     )

@@ -488,7 +488,8 @@ def debounce_count(
     if df.schema[ts_col].dataType.simpleString() == "timestamp_ntz":
         us = F.expr(
             "timestampdiff(MICROSECOND,"
-            f" TIMESTAMP_NTZ '1970-01-01 00:00:00', {ts_col})"
+            " TIMESTAMP_NTZ '1970-01-01 00:00:00',"
+            f" `{ts_col.replace('`', '``')}`)"
         )
     else:
         us = F.unix_micros(F.col(ts_col))

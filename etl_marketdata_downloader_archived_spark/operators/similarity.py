@@ -67,29 +67,6 @@ def topk_cosine(
     return scored.orderBy(F.col("cos_sim").desc(), F.col(id_col)).limit(k)
 
 
-def cosine_pairs_bucketed(
-    df: DataFrame,
-    bucket_col: str,
-    threshold: float,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """All pairs above a cosine threshold within a bucket (label, LSH
-    bucket, IVF cluster). The bucket is the equi-join key - global
-    O(n^2) never happens."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    s = df.repartition(par).select(F.col(bucket_col).alias("_b"), F.col(id_col), F.col(vec_col))
-    a = s.select("_b", F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a"))
-    b = s.select("_b", F.col(id_col).alias("id_b"), F.col(vec_col).alias("v_b"))
-    return (
-        a.join(b, "_b")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cos_sim", cosine(F.col("v_a"), F.col("v_b")))
-        .filter(F.col("cos_sim") >= threshold)
-        .select(F.col("_b").alias(bucket_col), "id_a", "id_b", "cos_sim")
-    )
-
-
 def rp_lsh_bucket(
     vec: Column, num_planes: int = 8, seed: int = 7
 ) -> Column:

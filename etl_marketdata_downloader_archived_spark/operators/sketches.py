@@ -91,20 +91,6 @@ def theta_estimate(
     return sketches.agg(est)
 
 
-def theta_overlap(a, b):
-    """Column expr: estimated |A intersect B| of two sketch columns -
-    the retention primitive (e.g. users active in both periods)."""
-    a, b = F.col(a) if isinstance(a, str) else a, F.col(b) if isinstance(b, str) else b
-    return _theta_binop("theta_intersection", a, b)
-
-
-def theta_only_in_first(a, b):
-    """Column expr: estimated |A \\ B| - the churn primitive (e.g.
-    users seen last period but not this one)."""
-    a, b = F.col(a) if isinstance(a, str) else a, F.col(b) if isinstance(b, str) else b
-    return _theta_binop("theta_difference", a, b)
-
-
 def _theta_binop(fn: str, a, b):
     from pyspark.sql.functions import call_function
 

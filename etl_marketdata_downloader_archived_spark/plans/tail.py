@@ -178,23 +178,27 @@ def dedup_near_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     th.start()
 
     caches: list = []
-    pairs = D.minhash_dedup_pairs(
-        d, "doc_id", "text", num_hashes=32, bands=16, jaccard_threshold=0.2,
-        cache_registry=caches,
-    )
-    comps = D.connected_components(pairs)
-    # the common small-graph path materialized `pairs` during the
-    # bounded collect above - the minhash intermediates are dead now;
-    # release them so repeated panel runs don't stack DISK_ONLY copies
-    for c in caches:
-        c.unpersist(blocking=False)
+    try:
+        pairs = D.minhash_dedup_pairs(
+            d, "doc_id", "text", num_hashes=32, bands=16,
+            jaccard_threshold=0.2, cache_registry=caches,
+        )
+        comps = D.connected_components(pairs)
+    finally:
+        # the common small-graph path materialized `pairs` during the
+        # bounded collect above - the minhash intermediates are dead
+        # now; release them so repeated panel runs don't stack
+        # DISK_ONLY copies. On a minhash failure the side thread is
+        # joined too, so it never outlives the call.
+        for c in caches:
+            c.unpersist(blocking=False)
+        th.join()
     clusters = comps.select(
         F.lit("cluster").alias("kind"),
         F.col("id").alias("id_a"),
         F.col("component").alias("id_b"),
         F.lit(None).cast("double").alias("metric"),
     )
-    th.join()
     if "err" in sim_box:
         raise sim_box["err"]
     return clusters.unionByName(sim_box["df"])

@@ -64,12 +64,6 @@ def valid_rows(catalog: DataFrame) -> DataFrame:
     return catalog.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
 
 
-def corrupt_rows(catalog: DataFrame) -> DataFrame:
-    if "_corrupt_record" not in catalog.columns:
-        return catalog.limit(0)
-    return catalog.filter(F.col("_corrupt_record").isNotNull())
-
-
 def write_catalog(catalog: DataFrame, path: str) -> None:
     """Atomic whole-table overwrite (catalog is control-table sized;
     coalesce(1) keeps one file like the reference's single CSV)."""

@@ -17,14 +17,74 @@ that need adapting are exactly the stateful ones:
   suites are MBs, so the index rides the task closure the same way a
   broadcast variable would; for a rare giant index, run the batch
   pipeline under foreachBatch instead.
+
+Admission protocol. The three ADMISSION ingests (near-dup, exact,
+DSIR) screen each micro-batch against what the corpus already holds,
+so they run under ``foreachBatch``: the batch both reads and appends
+the corpus (and a posting store or model). The checkpoint is the ack
+- a batch is committed only after ``process`` returns - so every
+batch may be replayed and every step must be idempotent. Each step is
+written once below; each ingest's ``process`` keeps only its screen:
+
+1. ``_gated`` - the narrow lang/quality/stopword gate.
+2. ``_corpus_layout`` - heal a crashed ``bucket_corpus`` migration,
+   probe the corpus, and take its ``_ck`` bucket count from its own
+   sidecar (``corpus_store``).
+3. ``_replayed_ids`` - the replay guard: corpus ids a replayed batch
+   may already have appended, read pruned to the batch ids' buckets.
+4. Posting-store ingests (near-dup, exact) only, over one
+   ``_PostingIngest`` contract: ``_resolve_layout`` (heal a crashed
+   compaction, store sidecar contract incl. legacy and sheared
+   stores, compaction trigger, corpus layout),
+   ``_open_store`` (a corpus without its store fails loud),
+   ``_greedy_admit`` (intra-batch admission) and ``_commit`` - the
+   crash-ordered commit, whose docstring holds the durability, replay
+   and maintenance rules.
+5. ``_start`` - the ``foreachBatch`` + ``availableNow`` tail.
+
+DSIR shares steps 1-3 and 5; its commit (append marker, corpus rows,
+model fold) is its own, documented on ``start_corpus_ingest_dsir``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import math
+from collections.abc import Callable
+from typing import NamedTuple
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
 
+from ..corpus_store import (
+    append_corpus_rows,
+    forbid_sheared_corpus,
+    read_corpus,
+    read_corpus_meta,
+    write_corpus_meta,
+)
+from ..io import _vfs, publish_small_table, recover_small_table
+from ..operators.dedup import (
+    band_postings,
+    greedy_admission_drops,
+    incremental_minhash_dedup,
+    minhash_dedup_pairs,
+    read_band_meta,
+    word_shingles,
+    write_band_meta,
+)
+from ..operators.dsir import hashed_ngram_buckets
+from ..operators.fuzzy import (
+    compact_postings,
+    jaccard_prefix_join,
+    jaccard_prefix_postings,
+    jaccard_screen_vs_postings,
+    posting_store_file_count,
+    read_postings_meta,
+    recover_posting_store,
+    write_postings_meta,
+)
 from ..operators.text import (
     fingerprint,
     lang_id,
@@ -42,32 +102,8 @@ def _dir_exists(spark, path: str) -> bool:
     anti-join and admitting duplicates with no signal (ADVICE r12).
     With this probe, absence is checked explicitly and a genuine read
     error propagates and fails the micro-batch - retryable, loud."""
-    p = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(p))
-
-
-def _forbid_sheared_bucketed_store(
-    spark, postings_dir: str, fn_name: str, restore_hint: str
-) -> None:
-    """Shared guard for both ingests (second-review: it was duplicated
-    verbatim): a posting store with NO ``_meta`` sidecar is a legacy
-    UNBUCKETED store - unless its on-disk layout is actually
-    ``_bk=``-partitioned, in which case the sidecar was LOST and
-    appending unbucketed rows would shear the layout (and, once the
-    true sidecar is restored, be pruned out of every screen's
-    partition filter). Fail loud with the restore instruction."""
-    p = spark._jvm.org.apache.hadoop.fs.Path(postings_dir)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if any(
-        st.getPath().getName().startswith("_bk=")
-        for st in fs.listStatus(p)
-    ):
-        raise ValueError(
-            f"{fn_name}: posting store at {postings_dir} is "
-            "_bk-partitioned but its _meta sidecar is missing - "
-            f"restore the sidecar ({restore_hint}) before resuming"
-        )
+    jvm_path, fs = _vfs(spark, path)
+    return bool(fs.exists(jvm_path(path)))
 
 
 def _validate_compact_trigger(
@@ -97,14 +133,306 @@ def _validate_compact_trigger(
 def benchmark_gram_index(benchmark: DataFrame, text_col: str = "text", n: int = 5) -> list[str]:
     """Collect the distinct n-grams of the eval corpus (driver-side,
     eval-suite sized)."""
-    from ..operators.dedup import word_shingles
-
     return [
         r["_g"]
         for r in benchmark.select(
             F.explode(word_shingles(text_col, n)).alias("_g")
         ).distinct().collect()
     ]
+
+
+def _gated(
+    docs: DataFrame, text_col: str, languages: tuple[str, ...],
+    min_quality: float, max_stopword_ratio: float, keep_scores: bool = False,
+) -> DataFrame:
+    """The narrow language/quality/stopword gate, the same on every
+    ingest. ``lang_guess`` always rides along; ``keep_scores`` also
+    carries ``quality``, ``sw_ratio`` and the exact-dedup fingerprint
+    ``fp`` as columns (the plain and near-dup corpora keep them)."""
+    quality = F.round(quality_score(text_col), 6)
+    sw_ratio = F.round(stopword_ratio(text_col), 6)
+    docs = docs.withColumn("lang_guess", lang_id(text_col))
+    if keep_scores:
+        docs = (
+            docs.withColumn("quality", quality)
+            .withColumn("sw_ratio", sw_ratio)
+            .withColumn("fp", fingerprint(text_col))
+        )
+        quality, sw_ratio = F.col("quality"), F.col("sw_ratio")
+    return docs.filter(
+        F.col("lang_guess").isin(*languages)
+        & (quality >= min_quality)
+        & (sw_ratio <= max_stopword_ratio)
+    )
+
+
+def _corpus_layout(
+    spark, corpus_dir: str, corpus_bucket_count: int | None, fn_name: str
+) -> tuple[bool, int | None]:
+    """``(exists, buckets)`` of the corpus. A crashed ``bucket_corpus``
+    migration (live dir missing, ``__old`` intact) heals first - the
+    mutator self-recovery rule. An existing corpus's layout comes from
+    ITS OWN sidecar, never from this call's parameter (a restart may
+    have changed it): no sidecar is a legacy unpartitioned corpus -
+    full scans, unpartitioned appends - unless its on-disk layout is
+    ``_ck``-partitioned (sheared: fail loud). A new corpus takes
+    ``corpus_bucket_count``."""
+    recover_small_table(spark, corpus_dir)
+    if not _dir_exists(spark, corpus_dir):
+        return False, corpus_bucket_count
+    buckets = read_corpus_meta(spark, corpus_dir)
+    if buckets is None:
+        forbid_sheared_corpus(spark, corpus_dir, fn_name)
+    return True, buckets
+
+
+def _replayed_ids(
+    spark, corpus_dir: str, cbuckets: int | None, schema: StructType,
+    ids: DataFrame, id_col: str,
+) -> DataFrame:
+    """The replay guard: the corpus ids that ``ids`` must be
+    anti-joined against, so a replayed batch never re-appends a doc
+    even where its screen would admit it. Read pruned to ``ids``'
+    ``_ck`` buckets - an equal id shares a bucket, so the pruned read
+    sees every id the full read could veto with (full scan on a legacy
+    corpus). ``schema`` is the corpus row schema."""
+    return read_corpus(
+        spark, corpus_dir, schema, cbuckets,
+        prune_ids=ids.select(id_col), id_col=id_col,
+    ).select(id_col)
+
+
+class _PostingIngest(NamedTuple):
+    """What the shared steps need to know about one posting-store
+    ingest: its paths and maintenance setting, and its store's data
+    columns and ``_meta`` sidecar contract."""
+
+    fn: str  # the public entry point, named in every error
+    corpus_dir: str
+    postings_dir: str
+    id_col: str
+    store_bucket_count: int
+    corpus_bucket_count: int | None
+    compact_trigger_files: int | None
+    columns: Callable[[str], str]  # id type -> store schema, no ``_bk``
+    rebuild_with: Callable  # rebuilds a lost store from the corpus
+    read_meta: Callable[[SparkSession, str], dict | None]
+    # write_meta(spark, postings_dir, *meta_args, buckets=...)
+    write_meta: Callable
+    meta_args: tuple
+    want: dict  # build parameters the sidecar must match
+    why: str  # what a parameter drift would silently do
+    # legacy (pre-sidecar) store check, given the store as a frame
+    legacy_check: Callable[[DataFrame], None] | None = None
+
+
+class _Layout(NamedTuple):
+    store_exists: bool
+    buckets: int | None  # store ``_bk`` buckets; None = legacy unbucketed
+    corpus_exists: bool
+    cbuckets: int | None  # corpus ``_ck`` buckets; None = legacy
+
+
+def _forbid_sheared_bucketed_store(spark, ing: _PostingIngest) -> None:
+    """A posting store with NO ``_meta`` sidecar is a legacy
+    UNBUCKETED store - unless its on-disk layout is actually
+    ``_bk=``-partitioned, in which case the sidecar was LOST and
+    appending unbucketed rows would shear the layout (and, once the
+    true sidecar is restored, be pruned out of every screen's
+    partition filter). Fail loud with the restore instruction."""
+    jvm_path, fs = _vfs(spark, ing.postings_dir)
+    if any(
+        st.getPath().getName().startswith("_bk=")
+        for st in fs.listStatus(jvm_path(ing.postings_dir))
+    ):
+        raise ValueError(
+            f"{ing.fn}: posting store at {ing.postings_dir} is "
+            "_bk-partitioned but its _meta sidecar is missing - "
+            f"restore the sidecar ({ing.write_meta.__name__} with the "
+            "original parameters and bucket count) before resuming"
+        )
+
+
+def _resolve_layout(spark, ing: _PostingIngest, idt: str) -> _Layout:
+    """Probe the store and the corpus INDEPENDENTLY and resolve both
+    layouts.
+
+    A crashed compaction heals BEFORE the store probe - mid-swap
+    leftovers otherwise read as a missing/half store and fail every
+    batch until an operator intervenes - but ONLY in auto-maintenance
+    mode: with the trigger disabled an EXTERNAL operator owns the
+    store, and self-healing here would race a live compaction's swap
+    window (restoring ``__old`` mid-swap breaks the external pass's
+    rollback and can re-duplicate the postings it just removed).
+
+    The store's contract (build parameters, ``_bk`` buckets)
+    comes from ITS OWN sidecar whenever the store exists - never from
+    this call's parameters, which a restart may have changed - and a
+    drift fails loud even on the crash-window replay where the corpus
+    append never landed: mismatched parameters screen against the
+    wrong postings and silently admit duplicates of the whole corpus.
+    The compaction trigger is re-validated against the resolved
+    layout. A legacy store without the sidecar is checked
+    (``legacy_check``) and gets the sidecar written forward,
+    unbucketed, under the CURRENT parameters (the caller is asserting
+    continuity, exactly what resuming the ingest means) - before the
+    corpus probe, so no replay can append postings under new
+    parameters into an unchecked store."""
+    if ing.compact_trigger_files is not None:
+        recover_posting_store(spark, ing.postings_dir)
+    store_exists = _dir_exists(spark, ing.postings_dir)
+    meta = ing.read_meta(spark, ing.postings_dir) if store_exists else None
+    if meta is not None:
+        have = {k: meta[k] for k in ing.want}
+        if have != ing.want:
+            raise ValueError(
+                f"{ing.fn}: posting store at {ing.postings_dir} was built "
+                f"with {have}, ingest requested {ing.want} - {ing.why}; "
+                "rebuild the store or resume with its parameters"
+            )
+        buckets = meta["buckets"]
+    elif store_exists:
+        _forbid_sheared_bucketed_store(spark, ing)
+        buckets = None
+    else:
+        buckets = ing.store_bucket_count
+    _validate_compact_trigger(
+        ing.compact_trigger_files,
+        buckets if buckets is not None else spark.sparkContext.defaultParallelism,
+        ing.fn,
+    )
+    if store_exists and meta is None:
+        if ing.legacy_check is not None:
+            legacy = spark.read.schema(ing.columns(idt)).parquet(ing.postings_dir)
+            ing.legacy_check(legacy)
+        ing.write_meta(spark, ing.postings_dir, *ing.meta_args, buckets=None)
+    corpus_exists, cbuckets = _corpus_layout(
+        spark, ing.corpus_dir, ing.corpus_bucket_count, ing.fn
+    )
+    return _Layout(store_exists, buckets, corpus_exists, cbuckets)
+
+
+def _open_store(spark, ing: _PostingIngest, lay: _Layout, idt: str) -> DataFrame:
+    """The posting store as a frame, for screening a batch against an
+    existing corpus. A MISSING store next to an existing corpus is
+    corruption or a half migration and fails loud - screening against
+    nothing would admit duplicates of the whole corpus. The schema is
+    explicit: an exists-but-empty store (a crashed first append, or
+    only unshingleable admissions) is a LEGITIMATE empty table, not an
+    inference error."""
+    if not lay.store_exists:
+        raise ValueError(
+            f"{ing.fn}: corpus exists at {ing.corpus_dir} but the "
+            f"posting store {ing.postings_dir} is missing - rebuild it "
+            f"with {ing.rebuild_with.__name__} over the corpus before resuming "
+            "(screening without it would silently admit duplicates)"
+        )
+    schema = ing.columns(idt)
+    if lay.buckets is not None:
+        schema += ", _bk int"
+    return spark.read.schema(schema).parquet(ing.postings_dir)
+
+
+def _greedy_admit(
+    survivors: DataFrame, pairs: DataFrame, id_col: str, reuse_drops: bool = False
+) -> tuple[DataFrame, DataFrame]:
+    """``(drops, admitted)``: the SEQUENTIAL intra-batch admission
+    among the corpus survivors. ``pairs`` restricted to survivor
+    endpoints is exact - a corpus-rejected doc is rejected under any
+    arrival order and must not block a batch sibling, which is why the
+    corpus screen runs first. The greedy min-id-first pass
+    (operators.dedup.greedy_admission_drops) equals one-doc-at-a-time
+    arrival in ascending-id order; "drop the greater id of every pair"
+    over-dropped on chains (ADVICE r12: for a<b<c with a~b, b~c, a!~c
+    it discarded c although c's only partner b was itself dropped).
+
+    ``admitted`` is one deterministic snapshot: it feeds both appends,
+    and the corpus append must not be re-evaluated lazily AFTER the
+    store has grown. ``reuse_drops`` snapshots the rejected-id-sized
+    drop set too, for a caller that consumes it again."""
+    drops = greedy_admission_drops(pairs).withColumnRenamed("id", id_col)
+    if reuse_drops:
+        drops = drops.localCheckpoint()
+    return drops, survivors.join(drops, id_col, "left_anti").localCheckpoint()
+
+
+def _commit(
+    spark, ing: _PostingIngest, lay: _Layout, admitted: DataFrame, postings: DataFrame
+) -> None:
+    """Make one batch's admissions durable - the crash-ordered commit
+    of both posting-store ingests. In order:
+
+    1. store sidecar, on the FIRST admission: a crash right after
+       leaves a store that is empty but already carries its contract;
+    2. corpus sidecar, for a new bucketed corpus: AFTER the store's (a
+       corpus-exists probe must never find a corpus whose store is
+       missing) and before any corpus row;
+    3. POSTINGS, appended partitioned by ``_bk`` (unpartitioned on a
+       legacy store, so its layout never shears);
+    4. corpus rows, under the corpus's own layout;
+    5. in-line compaction, when the store's data-file count reaches
+       ``compact_trigger_files``.
+
+    Durability: postings go down BEFORE corpus rows. A crash between
+    the two appends leaves orphan postings, which are harmless - the
+    screens' verify joins candidates back to CORPUS rows, so a posting
+    with no corpus row never rejects anything - and the replay appends
+    them again: duplicates, absorbed by the screens' candidate distinct
+    and reclaimed by ``operators.fuzzy.compact_postings``. The reverse
+    order left admitted docs WITHOUT postings after a crash: invisible
+    to every future screen, a permanent silent recall hole (VERDICT
+    r12).
+
+    Replay: the checkpoint is the ack, so a crash anywhere above
+    replays the whole batch. The replay finds any sidecar already
+    written and validates it instead, and ``_replayed_ids`` keeps ids
+    already in the corpus out of both appends.
+
+    Maintenance is wired IN (VERDICT r13): step 5 runs AFTER both
+    appends, when the batch is fully durable and this writer is the
+    store's only appender; its trigger probe is ONE recursive listing
+    (metadata-bounded, no data read), and a compaction that crashes
+    mid-swap heals at the next batch (``_resolve_layout``), so replay
+    growth reclaims itself without an operator remembering to.
+    ``compact_trigger_files=None`` disables it (external maintenance
+    owns the store). The trigger must exceed the post-compaction file
+    floor - one data file per store bucket, or defaultParallelism
+    unbucketed - else EVERY batch would rerun a full-store compaction;
+    it is validated loudly at entry and per batch against the
+    sidecar-resolved layout (ADVICE r14)."""
+    if not lay.store_exists:
+        ing.write_meta(
+            spark, ing.postings_dir, *ing.meta_args,
+            buckets=ing.store_bucket_count,
+        )
+    if not lay.corpus_exists and lay.cbuckets is not None:
+        write_corpus_meta(spark, ing.corpus_dir, lay.cbuckets)
+    writer = postings.write.mode("append")
+    if lay.buckets is not None:
+        writer = writer.partitionBy("_bk")
+    writer.parquet(ing.postings_dir)
+    append_corpus_rows(admitted, ing.corpus_dir, ing.id_col, lay.cbuckets)
+    if (
+        ing.compact_trigger_files is not None
+        and posting_store_file_count(spark, ing.postings_dir)
+        >= ing.compact_trigger_files
+    ):
+        compact_postings(spark, ing.postings_dir)
+
+
+def _start(
+    docs: DataFrame,
+    process: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+) -> StreamingQuery:
+    """Run ``process`` per micro-batch, checkpoint-as-ack, until the
+    source is drained (run-to-completion in tests and backfills)."""
+    return (
+        docs.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def gated_doc_stream(
@@ -122,18 +450,9 @@ def gated_doc_stream(
     """Apply the corpus gates + decontamination + cross-batch exact
     dedup to a streaming (or batch) document frame carrying an event
     timestamp column ``ts_col``."""
-    from ..operators.dedup import word_shingles
-
-    scored = (
-        docs.withColumn("lang_guess", lang_id(text_col))
-        .withColumn("quality", F.round(quality_score(text_col), 6))
-        .withColumn("sw_ratio", F.round(stopword_ratio(text_col), 6))
-        .withColumn("fp", fingerprint(text_col))
-    )
-    gated = scored.filter(
-        F.col("lang_guess").isin(*languages)
-        & (F.col("quality") >= min_quality)
-        & (F.col("sw_ratio") <= max_stopword_ratio)
+    gated = _gated(
+        docs, text_col, languages, min_quality, max_stopword_ratio,
+        keep_scores=True,
     )
     if bench_grams is not None:
         grams = word_shingles(text_col, decontam_ngram)
@@ -168,214 +487,75 @@ def start_corpus_ingest_neardup(
 ) -> StreamingQuery:
     """Streaming ingest with NEAR-dup admission against the persistent
     corpus: per micro-batch, gate the new docs, screen them against
-    the LSH posting store (operators.dedup.incremental_minhash_dedup -
-    the corpus is never re-signatured), drop already-admitted ids
-    (replay idempotence), then run the SEQUENTIAL intra-batch
-    admission among the corpus-survivors, append their POSTINGS, and
-    append the corpus rows last. foreachBatch because the batch both
-    READS and APPENDS two tables - the sanctioned multi-sink shape,
-    checkpoint-as-ack making replays idempotent at the source level.
-
-    The CORPUS is bucketed like the store (VERDICT r14): written
-    ``partitionBy("_ck")``, ``_ck = pmod(xxhash64(id),
-    corpus_bucket_count)``, bucket count in a ``corpus_store`` _meta
-    sidecar. The Jaccard VERIFY leg reads only the candidate ids'
-    buckets (``incremental_minhash_dedup``'s ``corpus_loader`` hook)
-    and the replay anti-joins read only the BATCH ids' buckets - so
-    the per-batch corpus cost tracks candidate/batch bucket coverage,
-    never corpus size (equal ids share a bucket: pruned == full). A
-    legacy unpartitioned corpus keeps full scans and unpartitioned
-    appends; migrate with ``corpus_store.bucket_corpus`` (ingest
-    stopped).
+    the LSH band-posting store (operators.dedup.incremental_minhash_dedup
+    - the corpus is never re-signatured), drop already-admitted ids,
+    run the greedy intra-batch admission among the corpus survivors,
+    then commit their postings and corpus rows. The protocol - layout
+    resolution, replay guard, crash ordering, in-line maintenance - is
+    the module's admission protocol (see ``_commit``).
 
     Semantics: the admitted set is exactly what one-doc-at-a-time
     arrival (ascending id within a batch, batch order across batches)
-    would produce. Corpus screen runs FIRST because a corpus-rejected
-    doc is rejected under any arrival order and must not block a batch
-    sibling; intra-batch admission is the greedy min-id-first pass
-    (operators.dedup.greedy_admission_drops), not "drop the greater id
-    of every pair" - that over-dropped on similarity chains (ADVICE
-    r12: for a<b<c with a~b, b~c, a!~c it discarded c although c's
-    only similar partner b was itself dropped).
+    would produce, up to LSH recall.
 
-    Durability (mirrors the exact variant, VERDICT r12): postings are
-    appended BEFORE corpus rows - a crash between the appends leaves
-    orphan postings, which are harmless (the screen's verify joins
-    candidates back to CORPUS text, so a posting with no corpus row
-    never rejects anything; a replay appends duplicate postings,
-    absorbed by the candidate dropDuplicates and reclaimed by
-    operators.fuzzy.compact_postings). The reverse order left admitted
-    docs WITHOUT postings after a crash: invisible to every future
-    screen, a permanent silent recall hole. The corpus and store reads
-    are INDEPENDENT fs.exists probes: a corpus without its store fails
-    loud (screening against nothing would admit duplicates of the
-    whole corpus), and a genuine read error fails the batch instead of
-    masquerading as first-batch.
+    The store is partitioned by ``_bk = pmod(band_hash,
+    store_bucket_count)``; its ``_meta`` sidecar carries the LSH build
+    parameters (num_hashes, bands, shingle_n, threshold) and bucket
+    count, validated every batch: band hashes from mismatched
+    parameters simply never collide, so a drift across restarts would
+    not fail - it would silently admit duplicates of the whole corpus,
+    the worst failure mode this module has. The corpus is bucketed like
+    the store (VERDICT r14): ``partitionBy("_ck")``, ``_ck =
+    pmod(xxhash64(id), corpus_bucket_count)``; the Jaccard VERIFY leg
+    reads only the candidate ids' buckets (the ``corpus_loader`` hook),
+    so the per-batch corpus cost tracks candidate bucket coverage,
+    never corpus size. A legacy unpartitioned corpus keeps full scans;
+    migrate with ``corpus_store.bucket_corpus`` (ingest stopped).
 
-    The store carries its LSH build parameters (num_hashes, bands,
-    shingle_n, threshold) in a one-row ``_meta`` sidecar, written
-    before the first postings append and validated every batch: band
-    hashes from mismatched parameters simply never collide, so a
-    parameter drift across restarts would not fail - it would
-    silently admit duplicates of the whole corpus, the worst failure
-    mode this module has. Legacy stores without the sidecar get it
-    written forward under the CURRENT parameters (the caller is
-    asserting continuity, exactly what resuming the ingest means).
-
-    Maintenance is wired IN (VERDICT r13): when the store's data-file
-    count reaches ``compact_trigger_files`` after a batch's appends,
-    the batch runs ``operators.fuzzy.compact_postings`` in-line -
-    replay growth reclaims itself without an operator remembering to
-    (the compact_files/skipping-index auto-refresh discipline). The
-    trigger probe is ONE recursive listing (metadata-bounded, no data
-    read); compaction leftovers from a crash mid-swap heal at the next
-    batch via ``recover_posting_store``. ``None`` disables (external
-    maintenance owns the store). The trigger must exceed the
-    post-compaction file floor - one data file per store bucket
-    (``store_bucket_count``), or defaultParallelism unbucketed - else
-    EVERY batch would rerun a full-store compaction; validated loudly
-    at entry and per batch against the sidecar-resolved layout
-    (ADVICE r14)."""
-    from ..corpus_store import (
-        append_corpus_rows,
-        forbid_sheared_corpus,
-        read_corpus,
-        read_corpus_meta,
-        write_corpus_meta,
-    )
-    from ..io import recover_small_table
-    from ..operators.dedup import (
-        band_postings,
-        greedy_admission_drops,
-        incremental_minhash_dedup,
-        minhash_dedup_pairs,
-        read_band_meta,
-        write_band_meta,
-    )
-    from ..operators.fuzzy import (
-        compact_postings,
-        posting_store_file_count,
-        recover_posting_store,
-    )
-
-    _validate_compact_trigger(
-        compact_trigger_files, store_bucket_count,
-        "start_corpus_ingest_neardup",
+    The admitted docs' postings REUSE the signature pass the corpus
+    screen already ran (``incremental_minhash_dedup``'s second return),
+    filtered by the drop set - the batch is never re-signatured; only
+    the first batch, which ran no screen, signatures at commit."""
+    fn = "start_corpus_ingest_neardup"
+    _validate_compact_trigger(compact_trigger_files, store_bucket_count, fn)
+    ing = _PostingIngest(
+        fn, corpus_dir, postings_dir, id_col, store_bucket_count,
+        corpus_bucket_count, compact_trigger_files,
+        columns=lambda idt: f"{id_col} {idt}, band_idx int, band_hash bigint",
+        rebuild_with=band_postings,
+        read_meta=read_band_meta,
+        write_meta=write_band_meta,
+        meta_args=(num_hashes, bands, shingle_n, jaccard_threshold),
+        want={
+            "num_hashes": num_hashes,
+            "bands": bands,
+            "shingle_n": shingle_n,
+            "p_num": round(jaccard_threshold * 1_000_000),
+        },
+        why="mismatched LSH parameters never collide in bands, which "
+        "would silently admit duplicates",
     )
 
     def process(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
         spark = batch.sparkSession
-        # heal a crashed compaction BEFORE probing the store: mid-swap
-        # leftovers otherwise read as a missing/half store and fail
-        # the batch until an operator intervenes.
-        # ONLY in auto-maintenance mode: with the trigger disabled an
-        # EXTERNAL operator owns the store's maintenance, and
-        # self-healing here would race a live compaction's swap window
-        # (review finding - restoring __old mid-swap breaks the
-        # external pass's rollback and can re-duplicate the postings
-        # it just removed)
-        if compact_trigger_files is not None:
-            recover_posting_store(spark, postings_dir)
-        scored = (
-            batch.withColumn("lang_guess", lang_id(text_col))
-            .withColumn("quality", F.round(quality_score(text_col), 6))
-            .withColumn("sw_ratio", F.round(stopword_ratio(text_col), 6))
-            .withColumn("fp", fingerprint(text_col))
-        )
-        gated = scored.filter(
-            F.col("lang_guess").isin(*languages)
-            & (F.col("quality") >= min_quality)
-            & (F.col("sw_ratio") <= max_stopword_ratio)
+        gated = _gated(
+            batch, text_col, languages, min_quality, max_stopword_ratio,
+            keep_scores=True,
         ).localCheckpoint()
         if gated.isEmpty():
             return
         idt = gated.schema[id_col].dataType.simpleString()
-        store_exists = _dir_exists(spark, postings_dir)
-        # like the exact variant: the store's contract (LSH params,
-        # bucket layout) comes from ITS OWN sidecar, never from this
-        # call's parameters, which a restart may have changed
-        buckets: int | None = store_bucket_count
-        if store_exists:
-            meta = read_band_meta(spark, postings_dir)
-            want = {
-                "num_hashes": num_hashes,
-                "bands": bands,
-                "shingle_n": shingle_n,
-                "p_num": round(jaccard_threshold * 1_000_000),
-            }
-            if meta is not None:
-                have = {k: meta[k] for k in want}
-                if have != want:
-                    raise ValueError(
-                        "start_corpus_ingest_neardup: posting store at "
-                        f"{postings_dir} was built with {have}, ingest "
-                        f"requested {want} - mismatched LSH parameters "
-                        "never collide in bands, which would silently "
-                        "admit duplicates; rebuild the store or resume "
-                        "with its parameters"
-                    )
-                buckets = meta["buckets"]
-            else:
-                _forbid_sheared_bucketed_store(
-                    spark, postings_dir, "start_corpus_ingest_neardup",
-                    "write_band_meta with the original parameters and "
-                    "bucket count",
-                )
-                # legacy store: unbucketed layout on disk; record the
-                # contract forward and keep appends layout-consistent
-                buckets = None
-                write_band_meta(
-                    spark, postings_dir, num_hashes, bands, shingle_n,
-                    jaccard_threshold, buckets=None,
-                )
-        _validate_compact_trigger(
-            compact_trigger_files,
-            buckets
-            if buckets is not None
-            else spark.sparkContext.defaultParallelism,
-            "start_corpus_ingest_neardup",
-        )
-        # heal a crashed bucket_corpus migration before probing the
-        # corpus (mutator self-recovery, same as the store above)
-        recover_small_table(spark, corpus_dir)
-        corpus_exists = _dir_exists(spark, corpus_dir)
-        if corpus_exists:
-            # corpus layout from ITS OWN sidecar (a restart may have
-            # changed the parameter); no sidecar = legacy full-scan
-            # corpus, unless the on-disk layout is sheared
-            cbuckets = read_corpus_meta(spark, corpus_dir)
-            if cbuckets is None:
-                forbid_sheared_corpus(
-                    spark, corpus_dir, "start_corpus_ingest_neardup"
-                )
-        else:
-            cbuckets = corpus_bucket_count
-        if corpus_exists:
-            if not store_exists:
-                raise ValueError(
-                    "start_corpus_ingest_neardup: corpus exists at "
-                    f"{corpus_dir} but the posting store "
-                    f"{postings_dir} is missing - rebuild it with "
-                    "operators.dedup.band_postings over the corpus "
-                    "before resuming (screening without it would "
-                    "silently admit duplicates)"
-                )
-            # explicit schemas: an exists-but-empty directory (crashed
-            # first append) must read as an EMPTY table, not an
-            # inference error misread as absence
-            schema = f"{id_col} {idt}, band_idx int, band_hash bigint"
-            if buckets is not None:
-                schema += ", _bk int"
-            store = spark.read.schema(schema).parquet(postings_dir)
+        lay = _resolve_layout(spark, ing, idt)
+        if lay.corpus_exists:
+            store = _open_store(spark, ing, lay, idt)
 
             def corpus_texts_for(ids_df: DataFrame) -> DataFrame:
                 # partition-pruned verify read: only the candidate
-                # ids' _ck buckets are scanned and re-shingled (full
-                # scan on a legacy corpus, cbuckets None)
+                # ids' _ck buckets are scanned and re-shingled
                 return read_corpus(
-                    spark, corpus_dir, gated.schema, cbuckets,
+                    spark, corpus_dir, gated.schema, lay.cbuckets,
                     prune_ids=ids_df, id_col=id_col,
                 ).select(id_col, text_col)
 
@@ -383,93 +563,45 @@ def start_corpus_ingest_neardup(
                 gated, store, None,
                 id_col, text_col, num_hashes=num_hashes, bands=bands,
                 jaccard_threshold=jaccard_threshold, shingle_n=shingle_n,
-                store_buckets=buckets, corpus_loader=corpus_texts_for,
+                store_buckets=lay.buckets, corpus_loader=corpus_texts_for,
             )
-            # replay idempotence: ids already in the corpus never
-            # re-append even if the similarity screen would admit
-            # (the postings side gets the same filter so it stays the
-            # survivors' posting set). Pruned to the BATCH ids'
-            # buckets - an equal id shares a bucket, so the pruned
-            # read sees every id the full read could veto with
-            corpus_ids = read_corpus(
-                spark, corpus_dir, gated.schema, cbuckets,
-                prune_ids=gated.select(id_col), id_col=id_col,
-            ).select(id_col)
+            # the replay guard covers the survivors' postings too, so
+            # they stay the survivors' posting set
+            corpus_ids = _replayed_ids(
+                spark, corpus_dir, lay.cbuckets, gated.schema, gated, id_col
+            )
             survivors = survivors.join(corpus_ids, id_col, "left_anti")
             # batch-postings-sized snapshot: the append consumes this
             # lazily AFTER the corpus/store reads, and an
             # un-checkpointed lineage would re-run the whole screen a
-            # second time per trigger (second-review finding)
+            # second time per trigger
             surv_post = surv_post.join(
                 corpus_ids, id_col, "left_anti"
             ).localCheckpoint()
         else:
-            survivors = gated
-            surv_post = None
+            survivors, surv_post = gated, None
         survivors = survivors.localCheckpoint()
         pairs = minhash_dedup_pairs(
             survivors, id_col, text_col, num_hashes=num_hashes,
             bands=bands, jaccard_threshold=jaccard_threshold,
             shingle_n=shingle_n,
         )
-        # doomed is consumed twice (the corpus anti-join AND the
-        # postings anti-join) and is rejected-id-sized: snapshot it
-        doomed = greedy_admission_drops(pairs).withColumnRenamed(
-            "id", id_col
-        ).localCheckpoint()
-        # one deterministic snapshot: admitted feeds both appends (and
-        # the postings derivation), and the corpus append must not be
-        # re-evaluated lazily AFTER the store has grown
-        admitted = survivors.join(doomed, id_col, "left_anti").localCheckpoint()
-        if not store_exists:
-            # sidecar BEFORE any postings: a crash right after leaves
-            # a store that is empty but already carries its contract
-            write_band_meta(
-                spark, postings_dir, num_hashes, bands, shingle_n,
-                jaccard_threshold, buckets=store_bucket_count,
-            )
-        if not corpus_exists and cbuckets is not None:
-            # corpus sidecar AFTER the store's (the corpus-exists
-            # probe must never find a corpus whose store is missing)
-            # and BEFORE any corpus rows - same crash ordering
-            write_corpus_meta(spark, corpus_dir, cbuckets)
-        # the admitted docs' postings REUSE the signature pass the
-        # corpus screen already ran (incremental_minhash_dedup's
-        # second return), filtered by the drop set - not a fresh
-        # band_postings(admitted) run (review finding: the batch was
-        # being re-signatured a third time per trigger); only the
-        # first batch, which ran no screen, signatures here
+        drops, admitted = _greedy_admit(
+            survivors, pairs, id_col, reuse_drops=True
+        )
         if surv_post is None:
             surv_post = band_postings(
                 survivors, id_col, text_col, num_hashes=num_hashes,
                 bands=bands, shingle_n=shingle_n,
             )
-        new_postings = surv_post.join(doomed, id_col, "left_anti")
-        if buckets is not None:
-            new_postings = new_postings.withColumn(
-                "_bk", F.pmod(F.col("band_hash"), F.lit(buckets))
+        postings = surv_post.join(drops, id_col, "left_anti")
+        if lay.buckets is not None:
+            postings = postings.withColumn(
+                "_bk", F.pmod(F.col("band_hash"), F.lit(lay.buckets))
             )
-        writer = new_postings.write.mode("append")
-        if buckets is not None:
-            writer = writer.partitionBy("_bk")
-        writer.parquet(postings_dir)
-        append_corpus_rows(admitted, corpus_dir, id_col, cbuckets)
-        # in-line maintenance AFTER both appends: the batch is fully
-        # durable, this writer is the store's only appender, and the
-        # trigger probe is one metadata listing
-        if (
-            compact_trigger_files is not None
-            and posting_store_file_count(spark, postings_dir)
-            >= compact_trigger_files
-        ):
-            compact_postings(spark, postings_dir)
+        _commit(spark, ing, lay, admitted, postings)
 
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(docs, process, checkpoint_dir)
 
 
 def start_corpus_ingest(
@@ -511,247 +643,101 @@ def start_corpus_ingest_exact(
     deterministic twin of ``start_corpus_ingest_neardup`` (LSH bands
     trade recall for speed; this tier guarantees NO qualifying
     duplicate is ever admitted, the recall-1.0 contract of
-    operators.fuzzy). Per micro-batch:
+    operators.fuzzy). Per micro-batch: gate, screen the batch against
+    the PERSISTED prefix-posting store (``jaccard_screen_vs_postings``
+    - admitted docs' hash-order prefix postings were appended at their
+    own admission and are NEVER recomputed), drop already-admitted
+    ids, run the greedy intra-batch admission over the exact pair
+    graph, then commit the admitted docs' postings and corpus rows.
+    The protocol - layout resolution, replay guard, crash ordering,
+    in-line maintenance - is the module's admission protocol (see
+    ``_commit``).
 
-    1. gate (language/quality/stopword - identical narrow stages);
-    2. screen the gated batch against the PERSISTED POSTING STORE
-       (``jaccard_screen_vs_postings``): admitted docs' hash-order
-       prefix postings were appended at their own admission and are
-       NEVER recomputed. The store is PARTITIONED by
-       ``_bk = pmod(_hk, store_bucket_count)`` and the screen prunes
-       its read to the batch's own posting buckets (a partition
-       filter - the per-batch store cost tracks the batch's bucket
-       coverage); the build threshold and bucket count live in the
-       store's one-row ``_meta`` sidecar, so the per-batch threshold
-       guard is a tiny sidecar read, not a second store scan (ADVICE
-       r12). A legacy store without the sidecar screens via the
-       distinct-_p scan once and writes the sidecar forward
-       (unbucketed - rebuild to bucket it). The CORPUS side of the
-       verify gets the same treatment (VERDICT r14 - the path's true
-       last linear term): the corpus is written
-       ``partitionBy("_ck")``, ``_ck = pmod(xxhash64(id),
-       corpus_bucket_count)`` with its own ``_meta`` sidecar
-       (``corpus_store``), and the screen's verify leg reads ONLY the
-       partitions the candidate ids hash into
-       (``corpus_store.read_corpus`` via the screen's
-       ``corpus_loader`` hook) - so the per-batch corpus read tracks
-       candidate bucket coverage, never corpus size. A legacy
-       unpartitioned corpus (no sidecar) keeps full-scan semantics
-       and unpartitioned appends; migrate it in place with
-       ``corpus_store.bucket_corpus`` (stop the ingest first).
-    3. id-level anti-join for crash-replay idempotence (pruned to the
-       BATCH ids' corpus buckets when bucketed - equal ids share a
-       bucket, so the pruned anti-join drops exactly what the full
-       one would), then the
-       SEQUENTIAL intra-batch admission among the corpus-survivors:
-       greedy min-id-first over the exact pair graph
-       (operators.dedup.greedy_admission_drops), which equals
-       one-doc-at-a-time arrival in ascending-id order - screening
-       first matters, because a corpus-rejected doc is rejected under
-       any order and must not block a batch sibling, and the greedy
-       pass (not "drop the greater id of every pair") keeps c in the
-       chain a~b, b~c, a!~c after its only partner b is dropped
-       (ADVICE r12);
-    4. append the POSTINGS FIRST and the corpus rows second: a crash
-       between the appends leaves orphan postings, which are
-       harmless (the verify joins candidates back to CORPUS rows, so
-       a posting with no corpus row can never reject anything, and a
-       replay merely appends duplicate postings - deduped by the
-       screen's candidate distinct and reclaimed by
-       ``operators.fuzzy.compact_postings``). The reverse order would
-       leave admitted docs WITHOUT postings after a crash: invisible
-       to every future screen, a silent recall hole. On the FIRST
-       admission the ``_meta`` sidecar goes down before any postings,
-       so a crash at any point leaves a store whose contract is
-       already recorded.
-
-    The corpus probe is an explicit ``fs.exists`` (never a bare
-    except around the read): absence means first batch; a genuine
-    read error fails the micro-batch loudly instead of silently
-    skipping the screen and the idempotence anti-join (ADVICE r12).
-
-    Maintenance is wired IN (VERDICT r13): when the store's data-file
-    count reaches ``compact_trigger_files`` after a batch's appends,
-    the batch runs ``operators.fuzzy.compact_postings`` in-line; the
-    trigger probe is one recursive metadata listing, and compaction
-    crash leftovers heal at the next batch via
-    ``recover_posting_store``. ``None`` disables. The trigger must
-    exceed the post-compaction file floor (one file per store bucket,
-    or defaultParallelism unbucketed) - validated loudly at entry and
-    per batch, else every batch would rerun a full compaction
-    (ADVICE r14).
+    The store is partitioned by ``_bk = pmod(_hk, store_bucket_count)``
+    and the screen prunes its read to the batch's own posting buckets
+    (a partition filter - the per-batch store cost tracks the batch's
+    bucket coverage). The build threshold and bucket count live in the
+    store's one-row ``_meta`` sidecar, so the per-batch threshold guard
+    is a tiny sidecar read, not a second store scan (ADVICE r12). A
+    legacy store without the sidecar is validated ONCE by a
+    distinct-``_p`` scan and gets the sidecar written forward
+    (unbucketed - rebuild to bucket it). The corpus is written
+    ``partitionBy("_ck")``, ``_ck = pmod(xxhash64(id),
+    corpus_bucket_count)`` (VERDICT r14), and the screen's verify leg
+    reads ONLY the partitions the candidate ids hash into, so the
+    per-batch corpus read tracks candidate bucket coverage, never
+    corpus size. A legacy unpartitioned corpus keeps full scans;
+    migrate it with ``corpus_store.bucket_corpus`` (ingest stopped).
 
     Similarity domain is word ``shingle_n``-gram sets
     (operators.dedup.word_shingles, pure Catalyst); docs too short to
     shingle cannot match anything and are admitted. Admission is
     ORDER-DEPENDENT across batches by design (first arrival wins) -
     the same contract every sequential admission policy has."""
-    from ..corpus_store import (
-        append_corpus_rows,
-        forbid_sheared_corpus,
-        read_corpus,
-        read_corpus_meta,
-        write_corpus_meta,
-    )
-    from ..io import recover_small_table
-    from ..operators.dedup import greedy_admission_drops, word_shingles
-    from ..operators.fuzzy import (
-        compact_postings,
-        jaccard_prefix_join,
-        jaccard_prefix_postings,
-        jaccard_screen_vs_postings,
-        posting_store_file_count,
-        read_postings_meta,
-        recover_posting_store,
-        write_postings_meta,
-    )
+    fn = "start_corpus_ingest_exact"
+    _validate_compact_trigger(compact_trigger_files, store_bucket_count, fn)
+    p_req = round(jaccard_threshold * 1_000_000)
 
-    _validate_compact_trigger(
-        compact_trigger_files, store_bucket_count,
-        "start_corpus_ingest_exact",
+    def legacy_threshold(legacy: DataFrame) -> None:
+        wrong = sorted(
+            p["_p"]
+            for p in legacy.select("_p").distinct().collect()
+            if p["_p"] != p_req
+        )
+        if wrong:
+            raise ValueError(
+                f"{fn}: legacy posting store at {postings_dir} holds "
+                f"postings built at threshold p={wrong}/1e6, ingest "
+                f"requested p={p_req}/1e6 - rebuild the store or ingest "
+                "at its threshold"
+            )
+
+    ing = _PostingIngest(
+        fn, corpus_dir, postings_dir, id_col, store_bucket_count,
+        corpus_bucket_count, compact_trigger_files,
+        columns=lambda idt: f"_id {idt}, _n int, _hk bigint, _p int",
+        rebuild_with=jaccard_prefix_postings,
+        read_meta=read_postings_meta,
+        write_meta=write_postings_meta,
+        meta_args=(jaccard_threshold,),
+        want={"p_num": p_req},
+        why="prefixes built at another threshold miss qualifying "
+        "pairs, which would silently admit duplicates",
+        legacy_check=legacy_threshold,
     )
 
     def process(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
         spark = batch.sparkSession
-        # heal a crashed compaction BEFORE probing the store (mid-swap
-        # leftovers otherwise read as missing/half a store).
-        # ONLY in auto-maintenance mode: with the trigger disabled an
-        # EXTERNAL operator owns the store's maintenance, and
-        # self-healing here would race a live compaction's swap window
-        # (review finding - restoring __old mid-swap breaks the
-        # external pass's rollback and can re-duplicate the postings
-        # it just removed)
-        if compact_trigger_files is not None:
-            recover_posting_store(spark, postings_dir)
-        gated = batch.withColumn("lang_guess", lang_id(text_col)).filter(
-            F.col("lang_guess").isin(*languages)
-            & (F.round(quality_score(text_col), 6) >= min_quality)
-            & (F.round(stopword_ratio(text_col), 6) <= max_stopword_ratio)
+        gated = _gated(
+            batch, text_col, languages, min_quality, max_stopword_ratio
         )
         if gated.isEmpty():
             return
         # materialize ONCE: the screen references the batch three
         # times (its postings, its token arrays, the anti-join) and
-        # each reference would otherwise re-run the shingle chain -
-        # the branch-count-vs-recompute regression the dedup-first
-        # tier's first cut already paid for (review-caught)
+        # each reference would otherwise re-run the shingle chain
         toks = gated.withColumn(
             "_toks", word_shingles(text_col, shingle_n)
         ).localCheckpoint()
         idt = toks.schema[id_col].dataType.simpleString()
-        # the store's contract (threshold, bucket layout) is resolved
-        # from ITS OWN sidecar whenever the store exists - never from
-        # this call's parameters, which a restart may have changed; a
-        # threshold drift must fail loud even on the crash-window
-        # replay where the corpus append never landed
-        store_exists = _dir_exists(spark, postings_dir)
-        meta = read_postings_meta(spark, postings_dir) if store_exists else None
-        if store_exists:
-            buckets = meta["buckets"] if meta is not None else None
-            if meta is None:
-                _forbid_sheared_bucketed_store(
-                    spark, postings_dir, "start_corpus_ingest_exact",
-                    "write_postings_meta with the original threshold "
-                    "and bucket count",
-                )
-        else:
-            buckets = store_bucket_count
-        p_req = round(jaccard_threshold * 1_000_000)
-        if meta is not None and meta["p_num"] != p_req:
-            raise ValueError(
-                "start_corpus_ingest_exact: posting store at "
-                f"{postings_dir} was built at threshold "
-                f"p={meta['p_num']}/1e6, ingest requested p={p_req}/1e6 "
-                "- rebuild the store or ingest at its threshold"
-            )
-        _validate_compact_trigger(
-            compact_trigger_files,
-            buckets
-            if buckets is not None
-            else spark.sparkContext.defaultParallelism,
-            "start_corpus_ingest_exact",
-        )
-        if store_exists and meta is None:
-            # legacy (pre-sidecar) store: validate its threshold by
-            # the one-time distinct-_p scan HERE - independent of the
-            # corpus probe (review finding: validating only inside the
-            # corpus branch let a crash-window replay, where the
-            # corpus append never landed, append postings at a NEW
-            # threshold into the old store before any check ran) -
-            # then record the sidecar so the scan never recurs
-            legacy = spark.read.schema(
-                f"_id {idt}, _n int, _hk bigint, _p int"
-            ).parquet(postings_dir)
-            wrong = sorted(
-                p["_p"]
-                for p in legacy.select("_p").distinct().collect()
-                if p["_p"] != p_req
-            )
-            if wrong:
-                raise ValueError(
-                    "start_corpus_ingest_exact: legacy posting store "
-                    f"at {postings_dir} holds postings built at "
-                    f"threshold p={wrong}/1e6, ingest requested "
-                    f"p={p_req}/1e6 - rebuild the store or ingest at "
-                    "its threshold"
-                )
-            write_postings_meta(
-                spark, postings_dir, jaccard_threshold, buckets=None
-            )
-            meta = {"p_num": p_req, "buckets": None}
-        # heal a crashed bucket_corpus migration (live dir missing,
-        # __old intact) before probing the corpus: the mutator
-        # self-recovery rule, same as the posting store above
-        recover_small_table(spark, corpus_dir)
-        corpus_exists = _dir_exists(spark, corpus_dir)
-        if corpus_exists:
-            # the corpus layout comes from ITS OWN sidecar, never this
-            # call's parameter (a restart may have changed it); no
-            # sidecar = legacy unpartitioned corpus -> full scans and
-            # unpartitioned appends, unless the layout is sheared
-            cbuckets = read_corpus_meta(spark, corpus_dir)
-            if cbuckets is None:
-                forbid_sheared_corpus(
-                    spark, corpus_dir, "start_corpus_ingest_exact"
-                )
-        else:
-            cbuckets = corpus_bucket_count
-        if corpus_exists:
-            # a MISSING store next to an existing corpus is
-            # corruption/migration and must fail loud, never screen
-            # nothing silently
-            if not store_exists:
-                raise ValueError(
-                    "start_corpus_ingest_exact: corpus exists at "
-                    f"{corpus_dir} but the posting store "
-                    f"{postings_dir} is missing - rebuild it with "
-                    "jaccard_prefix_postings over the corpus before "
-                    "resuming (screening without it would silently "
-                    "admit duplicates)"
-                )
-            # explicit schema: a store holding only unshingleable
-            # admissions has zero part files, which is a LEGITIMATE
-            # state (nothing to screen against), not an inference
-            # error
-            schema = f"_id {idt}, _n int, _hk bigint, _p int"
-            if buckets is not None:
-                schema += ", _bk int"
-            store = spark.read.schema(schema).parquet(postings_dir)
+        lay = _resolve_layout(spark, ing, idt)
+        if lay.corpus_exists:
+            store = _open_store(spark, ing, lay, idt)
 
             def corpus_rows_for(ids_df: DataFrame) -> DataFrame:
                 # partition-pruned verify read: only the candidate
-                # ids' _ck buckets are scanned (full scan on a legacy
-                # corpus, cbuckets None)
+                # ids' _ck buckets are scanned
                 return read_corpus(
-                    spark, corpus_dir, gated.schema, cbuckets,
+                    spark, corpus_dir, gated.schema, lay.cbuckets,
                     prune_ids=ids_df, id_col=id_col,
                 ).select(
                     id_col,
                     word_shingles(text_col, shingle_n).alias("_toks"),
                 )
 
+            # the sidecar matched p_req (or was written forward at it)
             hits = jaccard_screen_vs_postings(
                 toks.select(id_col, "_toks"),
                 store,
@@ -759,11 +745,8 @@ def start_corpus_ingest_exact(
                 id_col,
                 "_toks",
                 jaccard_threshold,
-                # meta is always present here: first-write stores get
-                # the sidecar before any postings, legacy stores had
-                # it validated and written forward above
-                store_p_num=meta["p_num"],
-                store_buckets=buckets,
+                store_p_num=p_req,
+                store_buckets=lay.buckets,
                 corpus_loader=corpus_rows_for,
             )
             survivors = toks.join(
@@ -771,73 +754,30 @@ def start_corpus_ingest_exact(
                 id_col,
                 "left_anti",
             )
-            # replay idempotence: ids already in the corpus never
-            # re-append even if the similarity screen would admit -
-            # this anti-join runs whenever the CORPUS exists,
-            # independent of the store's state. Pruned to the BATCH
-            # ids' buckets: an equal id shares a bucket, so the pruned
-            # read sees every id the full read could veto with
             survivors = survivors.join(
-                read_corpus(
-                    spark, corpus_dir, gated.schema, cbuckets,
-                    prune_ids=toks.select(id_col), id_col=id_col,
-                ).select(id_col),
+                _replayed_ids(
+                    spark, corpus_dir, lay.cbuckets, gated.schema, toks,
+                    id_col,
+                ),
                 id_col,
                 "left_anti",
             ).localCheckpoint()
         else:
             survivors = toks
-        # sequential intra-batch admission among the survivors: pairs
-        # restricted to survivor endpoints is exact (a corpus-rejected
-        # or already-admitted endpoint never blocks anyone)
         pairs = jaccard_prefix_join(
             survivors, id_col, "_toks", jaccard_threshold
         )
-        doomed = greedy_admission_drops(pairs).withColumnRenamed(
-            "id", id_col
-        )
-        admitted = survivors.join(doomed, id_col, "left_anti").localCheckpoint()
-        if not store_exists:
-            # sidecar BEFORE any postings: a crash right after leaves
-            # a store that is empty but already carries its contract
-            write_postings_meta(
-                spark, postings_dir, jaccard_threshold,
-                buckets=store_bucket_count,
-            )
-        if not corpus_exists and cbuckets is not None:
-            # corpus sidecar AFTER the store's (so a corpus-exists
-            # probe never finds a corpus whose store is missing) and
-            # BEFORE any corpus rows - same crash ordering as above
-            write_corpus_meta(spark, corpus_dir, cbuckets)
-        new_postings = jaccard_prefix_postings(
+        _, admitted = _greedy_admit(survivors, pairs, id_col)
+        postings = jaccard_prefix_postings(
             admitted.select(id_col, "_toks"),
             id_col,
             "_toks",
             jaccard_threshold,
-            bucket_by=buckets,
+            bucket_by=lay.buckets,
         )
-        writer = new_postings.write.mode("append")
-        if buckets is not None:
-            writer = writer.partitionBy("_bk")
-        writer.parquet(postings_dir)
-        append_corpus_rows(
-            admitted.drop("_toks"), corpus_dir, id_col, cbuckets
-        )
-        # in-line maintenance AFTER both appends (see the near-dup
-        # variant): metadata-bounded trigger, single-appender store
-        if (
-            compact_trigger_files is not None
-            and posting_store_file_count(spark, postings_dir)
-            >= compact_trigger_files
-        ):
-            compact_postings(spark, postings_dir)
+        _commit(spark, ing, lay, admitted.drop("_toks"), postings)
 
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(docs, process, checkpoint_dir)
 
 
 def start_corpus_ingest_dsir(
@@ -860,15 +800,16 @@ def start_corpus_ingest_dsir(
 ) -> StreamingQuery:
     """Streaming ingest with DSIR target-matched admission
     (operators.dsir on a live stream): per micro-batch, gate the new
-    docs (language/quality/stopword - the shared narrow stages), weight
-    each against the CURRENT importance model (fixed hashed-ngram
-    target counts vs the accumulated raw counts of everything streamed
-    so far), admit docs with ``log_weight >= min_log_weight``, append
-    them to the corpus, then fold the batch's bucket counts into the
-    persisted raw model. The model state is TWO m-row tables under
-    ``model_dir`` (`target` written once at stream start, `raw`
-    re-published per batch via the crash-safe publish_small_table
-    swap) - O(m) state forever, the DSIR scale contract.
+    docs, weight each against the CURRENT importance model (fixed
+    hashed-ngram target counts vs the accumulated raw counts of
+    everything streamed so far), admit docs with ``log_weight >=
+    min_log_weight``, append them to the corpus, then fold the batch's
+    bucket counts into the persisted raw model. The model state is TWO
+    m-row tables under ``model_dir`` (`target` written once at stream
+    start, `raw` re-published per batch via the crash-safe
+    publish_small_table swap) - O(m) state forever, the DSIR scale
+    contract. Gate, corpus layout, replay guard and stream tail are the
+    module's admission protocol; the commit below is DSIR's own.
 
     Semantics and ordering (deliberate, and DIFFERENT from the posting
     ingests' postings-first rule because the model is a scoring PRIOR,
@@ -910,18 +851,7 @@ def start_corpus_ingest_dsir(
       the target model (crash-safe publish_small_table swap);
       admission from the next batch on follows the new target, the
       raw model and corpus are untouched."""
-    import math
-
-    from ..corpus_store import (
-        append_corpus_rows,
-        forbid_sheared_corpus,
-        read_corpus,
-        read_corpus_meta,
-        write_corpus_meta,
-    )
-    from ..io import publish_small_table, recover_small_table
-    from ..operators.dsir import hashed_ngram_buckets
-
+    fn = "start_corpus_ingest_dsir"
     raw_dir = model_dir.rstrip("/") + "/raw"
     target_dir = model_dir.rstrip("/") + "/target"
     marker_dir = corpus_dir.rstrip("/") + "/_append_marker"
@@ -940,12 +870,7 @@ def start_corpus_ingest_dsir(
             return
         spark = batch.sparkSession
         gated = (
-            batch.withColumn("lang_guess", lang_id(text_col))
-            .filter(
-                F.col("lang_guess").isin(*languages)
-                & (F.round(quality_score(text_col), 6) >= min_quality)
-                & (F.round(stopword_ratio(text_col), 6) <= max_stopword_ratio)
-            )
+            _gated(batch, text_col, languages, min_quality, max_stopword_ratio)
             .drop("lang_guess")
             .localCheckpoint()
         )
@@ -1030,23 +955,16 @@ def start_corpus_ingest_dsir(
             )
             .filter(F.col("log_weight") >= min_log_weight)
         )
-        # corpus layout + replay gate. The marker is a corpus-side
-        # one-row sidecar published crash-safe BEFORE the append: on
-        # the common path (marker < batch_id) this batch's rows
-        # CANNOT be in the corpus, so no anti-join runs and the batch
-        # touches the corpus only to append - the replay-idempotence
-        # read is replay-only (VERDICT r14 item 2)
-        recover_small_table(spark, corpus_dir)
+        # replay gate. The marker is a corpus-side one-row sidecar
+        # published crash-safe BEFORE the append: on the common path
+        # (marker < batch_id) this batch's rows CANNOT be in the
+        # corpus, so no anti-join runs and the batch touches the
+        # corpus only to append - the replay-idempotence read is
+        # replay-only (VERDICT r14 item 2)
+        corpus_exists, cbuckets = _corpus_layout(
+            spark, corpus_dir, corpus_bucket_count, fn
+        )
         recover_small_table(spark, marker_dir)
-        corpus_exists = _dir_exists(spark, corpus_dir)
-        if corpus_exists:
-            cbuckets = read_corpus_meta(spark, corpus_dir)
-            if cbuckets is None:
-                forbid_sheared_corpus(
-                    spark, corpus_dir, "start_corpus_ingest_dsir"
-                )
-        else:
-            cbuckets = corpus_bucket_count
         marked = None
         if _dir_exists(spark, marker_dir):
             marked = spark.read.schema("_b bigint").parquet(
@@ -1054,14 +972,16 @@ def start_corpus_ingest_dsir(
             ).first()
         if marked is not None and marked["_b"] >= batch_id:
             # crash replay: the marker landed, so this batch's append
-            # MAY have too - suppress re-appends by id, pruned to the
-            # admitted ids' buckets (equal ids share a bucket)
+            # MAY have too
             admitted = admitted.localCheckpoint()
-            corpus_ids = read_corpus(
-                spark, corpus_dir, admitted.schema, cbuckets,
-                prune_ids=admitted.select(id_col), id_col=id_col,
-            ).select(id_col)
-            admitted = admitted.join(corpus_ids, id_col, "left_anti")
+            admitted = admitted.join(
+                _replayed_ids(
+                    spark, corpus_dir, cbuckets, admitted.schema, admitted,
+                    id_col,
+                ),
+                id_col,
+                "left_anti",
+            )
         if not corpus_exists and cbuckets is not None:
             # sidecar BEFORE marker and rows: a crash right after
             # leaves an empty corpus that already carries its layout
@@ -1090,9 +1010,4 @@ def start_corpus_ingest_dsir(
         )
         publish_small_table(new_raw, raw_dir)
 
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(docs, process, checkpoint_dir)

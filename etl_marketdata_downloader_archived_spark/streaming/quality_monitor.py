@@ -19,6 +19,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..io import _vfs
 from ..operators.evaluation import binary_auc
 
 __all__ = [
@@ -230,18 +231,39 @@ class _StateSnapshots:
     binary sketch structs) addressed through the Hadoop FS
     abstraction, so any checkpoint scheme works; only the last two
     batches are retained (``N-1`` is the replay base, older ones are
-    unreachable)."""
+    unreachable).
 
-    def __init__(self, spark, checkpoint: str):
+    The object also holds the monitor's in-memory state and the batch
+    id it reflects, so ``rebase`` is the one place the base of batch
+    ``N`` is chosen and each monitor keeps only its merge."""
+
+    def __init__(self, spark, checkpoint: str, monitor: str):
         self.spark = spark
-        self.base = checkpoint.rstrip("/") + "/state_snapshots"
-        self._jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-        self._fs = self._jvm_path(self.base).getFileSystem(
-            spark._jsc.hadoopConfiguration()
-        )
+        self.monitor = monitor
+        self.root = checkpoint.rstrip("/") + "/state_snapshots"
+        self._jvm_path, self._fs = _vfs(spark, self.root)
+        self.state = None
+        self.last = -1
 
     def path(self, batch_id: int) -> str:
-        return f"{self.base}/batch-{int(batch_id)}"
+        return f"{self.root}/batch-{int(batch_id)}"
+
+    def rebase(self, batch_id: int, empty, load):
+        """The state batch ``batch_id`` merges into: ``empty`` at
+        batch 0; the in-memory state when it reflects batch ``N-1``;
+        otherwise ``load(snapshot N-1)`` (restart or replay). A
+        missing snapshot raises - resuming without it cannot be
+        exact."""
+        if batch_id == 0:
+            return empty
+        if self.last == batch_id - 1:
+            return self.state
+        if not self.has(batch_id - 1):
+            raise ValueError(
+                f"{self.monitor}: batch {batch_id} has no base snapshot "
+                f"{self.path(batch_id - 1)!r} - cannot resume exactly"
+            )
+        return load(self.read(batch_id - 1))
 
     def has(self, batch_id: int) -> bool:
         return self._fs.exists(self._jvm_path(self.path(batch_id)))
@@ -250,14 +272,16 @@ class _StateSnapshots:
         return self.spark.read.parquet(self.path(batch_id))
 
     def any_snapshot(self) -> bool:
-        p = self._jvm_path(self.base)
+        p = self._jvm_path(self.root)
         return self._fs.exists(p) and len(self._fs.listStatus(p)) > 0
 
-    def write(self, batch_id: int, df: DataFrame) -> None:
+    def write(self, batch_id: int, df: DataFrame, state) -> None:
+        """Persist snapshot ``batch_id`` from ``df``, then remember
+        ``state`` as the in-memory state that batch reflects."""
         df.write.mode("overwrite").parquet(self.path(batch_id))
         # GC: N-1 stays (the replay base); everything older is
         # unreachable by the resume protocol
-        p = self._jvm_path(self.base)
+        p = self._jvm_path(self.root)
         for st in self._fs.listStatus(p):
             name = st.getPath().getName()
             if name.startswith("batch-"):
@@ -267,6 +291,7 @@ class _StateSnapshots:
                     continue
                 if bid <= batch_id - 2:
                     self._fs.delete(st.getPath(), True)
+        self.state, self.last = state, batch_id
 
 
 def _check_resumable(
@@ -280,10 +305,9 @@ def _check_resumable(
     empty and silently under-count every bucket - fail at start()
     instead (through the Hadoop FS abstraction, so any checkpoint
     scheme is covered)."""
-    snaps = _StateSnapshots(spark, checkpoint)
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
+    snaps = _StateSnapshots(spark, checkpoint, monitor)
+    jvm_path, fs = _vfs(spark, checkpoint)
     p = jvm_path(checkpoint.rstrip("/") + "/commits")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
     if (
         fs.exists(p)
         and len(fs.listStatus(p)) > 0
@@ -386,27 +410,11 @@ def start_seasonal_monitor(
     snaps = _check_resumable(
         spark_ref, checkpoint, "start_seasonal_monitor"
     )
-    # mem caches the store between batches; "last" is the batch id it
-    # reflects. On restart (or replay) the snapshot is the base.
-    mem: dict = {"store": {}, "max_hour": None, "last": -1}
 
-    def _base_state(batch_id: int) -> tuple[dict, int | None]:
-        if mem["last"] == batch_id - 1:
-            # a COPY: if this batch fails mid-merge, the retained
-            # store must still be exactly batch N-1's state, or the
-            # replay would double-merge the partial work
-            return dict(mem["store"]), mem["max_hour"]
-        if batch_id == 0:
-            return {}, None
-        if not snaps.has(batch_id - 1):
-            raise ValueError(
-                f"start_seasonal_monitor: batch {batch_id} has no base "
-                f"snapshot {snaps.path(batch_id - 1)!r} - cannot resume "
-                "exactly"
-            )
+    def _load_store(snap: DataFrame) -> tuple[dict, int | None]:
         store: dict = {}
         max_hour = None
-        for r in snaps.read(batch_id - 1).collect():
+        for r in snap.collect():
             k = tuple(r[c] for c in keys) + (r["_hour_us"],)
             store[k] = r["_n"]
             if max_hour is None or r["_hour_us"] > max_hour:
@@ -418,7 +426,11 @@ def start_seasonal_monitor(
         return store, max_hour
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        store, max_hour = _base_state(batch_id)
+        store, max_hour = snaps.rebase(batch_id, ({}, None), _load_store)
+        # a COPY: if this batch fails mid-merge, the retained store
+        # must still be exactly batch N-1's state, or the replay would
+        # double-merge the partial work
+        store = dict(store)
         batch_counts = (
             batch_df.filter(F.col(ts_col).isNotNull())
             .groupBy(
@@ -506,10 +518,7 @@ def start_seasonal_monitor(
             [k + (n,) for k, n in store.items()],
             schema=key_schema + "_hour_us bigint, _n bigint",
         )
-        snaps.write(batch_id, snap_df)
-        mem["store"], mem["max_hour"], mem["last"] = (
-            store, max_hour, batch_id,
-        )
+        snaps.write(batch_id, snap_df, (store, max_hour))
         out = (
             spark_ref.createDataFrame(
                 rows,
@@ -576,30 +585,17 @@ def start_trending_monitor(
     snaps = _check_resumable(
         stream_df.sparkSession, checkpoint, "start_trending_monitor"
     )
-    held: dict = {"rows": None, "schema": None, "last": -1}
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark_ref = batch_df.sparkSession
-        if held["last"] != batch_id - 1:
-            # restart or replay: re-base on the persisted snapshot
-            if batch_id == 0:
-                held["rows"], held["schema"] = None, None
-            elif snaps.has(batch_id - 1):
-                base = snaps.read(batch_id - 1)
-                held["rows"], held["schema"] = base.collect(), base.schema
-            else:
-                raise ValueError(
-                    f"start_trending_monitor: batch {batch_id} has no "
-                    f"base snapshot {snaps.path(batch_id - 1)!r} - "
-                    "cannot resume exactly"
-                )
+        held, schema = snaps.rebase(
+            batch_id, (None, None), lambda base: (base.collect(), base.schema)
+        )
         sb = build_topk_sketches(
             batch_df, value_col, keys, max_items_tracked
         )
-        if held["rows"]:
-            sb = sb.unionByName(
-                spark_ref.createDataFrame(held["rows"], held["schema"])
-            )
+        if held:
+            sb = sb.unionByName(spark_ref.createDataFrame(held, schema))
         # coalesce(1): ApproxTopKCombine's partial aggregate cannot
         # serialize the null buffer an EMPTY input partition produces
         # (scala.MatchError in genSketchSerDe) - and the sketch frame
@@ -616,11 +612,8 @@ def start_trending_monitor(
             )
         )
         rows = merged.collect()  # group-count bounded sketch rows
-        held["rows"], held["schema"], held["last"] = (
-            rows, merged.schema, batch_id,
-        )
         snap = spark_ref.createDataFrame(rows, merged.schema).coalesce(1)
-        snaps.write(batch_id, snap)
+        snaps.write(batch_id, snap, (rows, merged.schema))
         out = estimate_topk(snap, k, group_cols=keys or None)
         w = (
             Window.partitionBy(*keys) if keys else Window.partitionBy()

@@ -27,6 +27,8 @@ from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..io import _vfs
+
 
 def start_scheduled_harvest(
     spark: SparkSession,
@@ -91,8 +93,7 @@ def publish_tick(
     byte-deterministic and its hash stable across replays."""
     import hashlib
 
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(task_dir).getFileSystem(spark._jsc.hadoopConfiguration())
+    jvm_path, fs = _vfs(spark, task_dir)
     stage = f"{task_dir}/.tick-{batch_id}"
     tasks.coalesce(1).sortWithinPartitions("task_json").write.mode(
         "overwrite"
@@ -140,8 +141,7 @@ def sweep_stale_ticks(spark: SparkSession, task_dir: str) -> list[str]:
     replays from the checkpoint and rewrites its stage from scratch.
     Called by start_scheduled_harvest at entry; returns the swept
     paths."""
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(task_dir).getFileSystem(spark._jsc.hadoopConfiguration())
+    jvm_path, fs = _vfs(spark, task_dir)
     root = jvm_path(task_dir)
     swept: list[str] = []
     if not fs.exists(root):

@@ -18,18 +18,14 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-
-def _fs_and_path(spark: SparkSession, path: str):
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, jpath
+from ..io import _vfs
 
 
 def ensure_dirs(spark: SparkSession, *dirs: str) -> None:
     """mkdir -p for each staging prefix (the create-folders lambda)."""
     for d in dirs:
-        fs, p = _fs_and_path(spark, d)
-        fs.mkdirs(p)
+        jvm_path, fs = _vfs(spark, d)
+        fs.mkdirs(jvm_path(d))
 
 
 def move_files(
@@ -42,19 +38,18 @@ def move_files(
     not reported as moved - this is what makes the claim step safe
     under concurrent pollers. ``only`` restricts the sweep to specific
     names (the claimed batch)."""
-    fs, src = _fs_and_path(spark, src_dir)
-    _, dst = _fs_and_path(spark, dst_dir)
+    jvm_path, fs = _vfs(spark, src_dir)
+    src, dst = jvm_path(src_dir), jvm_path(dst_dir)
     fs.mkdirs(dst)
     moved = []
     if not fs.exists(src):
         return moved
-    Path = spark._jvm.org.apache.hadoop.fs.Path
     for status in fs.listStatus(src):
         if status.isFile():
             name = status.getPath().getName()
             if only is not None and name not in only:
                 continue
-            if fs.rename(status.getPath(), Path(dst, name)):
+            if fs.rename(status.getPath(), jvm_path(dst, name)):
                 moved.append(name)
     return moved
 

@@ -58,6 +58,26 @@ def test_profile_long_form(spark):
     assert (out["v"].n_null, out["v"].num_mean) == (1, 4.0)
 
 
+def test_profile_without_columns_is_empty_with_schema(spark) -> None:
+    """ADVICE: nothing to profile - ``columns=[]``, or a frame with no
+    numeric or string column - gives an EMPTY frame with the 9-column
+    profile schema in both tiers, instead of an IndexError."""
+    from etl_marketdata_downloader_archived_spark.operators.profile import (
+        profile,
+    )
+
+    df = spark.createDataFrame([(1, "a", True)], "k long, s string, b boolean")
+    want = [(f.name, f.dataType) for f in profile(df, ["k", "s"]).schema]
+    assert len(want) == 9
+    for exact in (False, True):
+        for out in (
+            profile(df, columns=[], exact=exact),
+            profile(df.select("b"), exact=exact),
+        ):
+            assert [(f.name, f.dataType) for f in out.schema] == want
+            assert out.count() == 0
+
+
 def test_apply_changes_latest_wins(spark) -> None:
     """CDC apply: latest change per key wins; stale intermediates are
     skipped; deletes remove; untouched rows survive bit-identical."""

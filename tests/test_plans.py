@@ -410,3 +410,96 @@ def test_sentence_udtf_oracle_regex_model(spark) -> None:
         'he said "stop. now" and left.',
         "done",
     ]
+
+
+def test_dedup_near_panel_minhash_failure_releases_side_work(
+    spark, sf_dir, monkeypatch
+) -> None:
+    """ADVICE: when the minhash branch of dedup_near_panel raises, the
+    error propagates, the overlapped simhash thread has been joined
+    (no live side thread), and the minhash intermediates are no longer
+    persisted."""
+    import pyspark
+    import pytest
+
+    from etl_marketdata_downloader_archived_spark.operators import dedup as D
+    from etl_marketdata_downloader_archived_spark.plans.tail import (
+        dedup_near_panel,
+    )
+
+    threads: list = []
+    registries: list = []
+    real_pairs = D.minhash_dedup_pairs
+
+    class RecordedThread(pyspark.InheritableThread):
+        def __init__(self, *args, **kwargs):
+            super().__init__(*args, **kwargs)
+            threads.append(self)
+
+    def recorded_pairs(*args, cache_registry=None, **kwargs):
+        registries.append(cache_registry)
+        return real_pairs(*args, cache_registry=cache_registry, **kwargs)
+
+    def failing_components(*args, **kwargs):
+        raise RuntimeError("connected_components failed")
+
+    monkeypatch.setattr(pyspark, "InheritableThread", RecordedThread)
+    monkeypatch.setattr(D, "minhash_dedup_pairs", recorded_pairs)
+    monkeypatch.setattr(D, "connected_components", failing_components)
+    with pytest.raises(RuntimeError, match="connected_components failed"):
+        dedup_near_panel(spark, sf_dir)
+    assert threads and not any(t.is_alive() for t in threads)
+    cached = [df for reg in registries for df in reg]
+    assert cached  # the branch registered its persisted stage
+    for df in cached:
+        level = df.storageLevel
+        assert not df.is_cached
+        assert not (level.useDisk or level.useMemory)
+
+
+def test_hadoop_fs_accessor_is_single() -> None:
+    """Every Hadoop FileSystem handle in the package comes from
+    ``io._vfs``: the ``Path`` class lookup and ``getFileSystem`` appear
+    in io.py alone, so path/scheme resolution cannot drift between
+    copies."""
+    from pathlib import Path
+
+    pkg = (
+        Path(__file__).resolve().parents[1]
+        / "etl_marketdata_downloader_archived_spark"
+    )
+    hits = {
+        str(p.relative_to(pkg))
+        for p in pkg.rglob("*.py")
+        for needle in ("hadoop.fs.Path", "getFileSystem(")
+        if needle in p.read_text(encoding="utf-8")
+    }
+    assert hits == {"io.py"}
+
+
+def test_sloc_counts_lines_by_kind() -> None:
+    """tools/sloc.py puts every line in exactly one bucket: docstring,
+    blank, comment-only, or code."""
+    import importlib.util
+    from pathlib import Path
+
+    path = Path(__file__).resolve().parents[1] / "tools" / "sloc.py"
+    spec = importlib.util.spec_from_file_location("sloc", path)
+    sloc = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(sloc)
+
+    src = (
+        '"""Module doc."""\n'
+        "\n"
+        "import os  # trailing comments stay code\n"
+        "\n"
+        "# a comment line\n"
+        "def f():\n"
+        '    """Two\n'
+        '    lines."""\n'
+        '    return """not a\n'
+        '    docstring"""\n'
+    )
+    assert sloc.count_source(src) == {
+        "total": 10, "code": 4, "comment": 1, "docstring": 3, "blank": 2,
+    }

@@ -481,6 +481,33 @@ def test_debounce_anchor_semantics(spark) -> None:
     ]
 
 
+def test_debounce_count_quotes_ntz_column_name(spark) -> None:
+    """ADVICE: the TIMESTAMP_NTZ leg of ``debounce_count`` builds a SQL
+    expression, so a timestamp column whose name needs quoting (a
+    space, a backtick) is backtick-quoted there and counts like any
+    other: a 1 s burst under a 5 s gap keeps the 0th, 6th and 12th
+    event."""
+    from pyspark.sql import functions as F
+
+    from etl_marketdata_downloader_archived_spark.operators.sessions import (
+        debounce_count,
+    )
+
+    burst = spark.createDataFrame(
+        [("u1", datetime(2024, 1, 1, 0, 0, i)) for i in range(13)],
+        "user_id string, ts timestamp",
+    )
+    for name in ("event ts", "ev`ts"):
+        df = burst.select(
+            "user_id", F.col("ts").cast("timestamp_ntz").alias(name)
+        )
+        got = {
+            r.user_id: r.n_kept
+            for r in debounce_count(df, ["user_id"], name, 5_000_000).collect()
+        }
+        assert got == {"u1": 3}, name
+
+
 def test_debounce_count_matches_grouped_python_fold(spark) -> None:
     """r15 differential: the pure-Catalyst ``debounce_count`` fold
     (higher-order aggregate, two-scalar accumulator) equals the

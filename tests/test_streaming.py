@@ -8,6 +8,7 @@ from __future__ import annotations
 import json
 from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_marketdata_downloader_archived_spark.streaming import (
@@ -2402,26 +2403,36 @@ def test_neardup_ingest_missing_store_fails_loud(spark, tmp_path) -> None:
     assert exc is not None and "posting store" in str(exc)
 
 
-def test_exact_admission_unreadable_corpus_fails_batch(spark, tmp_path) -> None:
+@pytest.mark.parametrize("ingest", ["exact", "neardup"])
+def test_posting_ingest_unreadable_corpus_fails_batch(
+    spark, tmp_path, ingest
+) -> None:
     """ADVICE r12 (medium): a corpus that EXISTS but cannot be read
     (corrupt footer standing in for any transient IO failure) must
     FAIL the micro-batch - the old bare-except treated it as
     'first batch, no corpus yet' and silently skipped both the
-    similarity screen and the replay anti-join."""
+    similarity screen and the replay anti-join. Both posting-store
+    ingests share the probe."""
     import os
 
+    from etl_marketdata_downloader_archived_spark.operators.dedup import (
+        write_band_meta,
+    )
     from etl_marketdata_downloader_archived_spark.operators.fuzzy import (
         write_postings_meta,
     )
-    from etl_marketdata_downloader_archived_spark.streaming.corpus_ingest import (
-        start_corpus_ingest_exact,
+    from etl_marketdata_downloader_archived_spark.streaming import (
+        corpus_ingest,
     )
 
     cdir = tmp_path / "ur_corpus"
     cdir.mkdir()
     (cdir / "part-00000.parquet").write_bytes(b"NOT A PARQUET FILE")
     pdir = str(tmp_path / "ur_postings")
-    write_postings_meta(spark, pdir, 0.7, buckets=64)
+    if ingest == "exact":
+        write_postings_meta(spark, pdir, 0.7, buckets=64)
+    else:
+        write_band_meta(spark, pdir, 32, 8, 3, 0.7, buckets=64)
 
     src = tmp_path / "ur_src"
     src.mkdir()
@@ -2433,7 +2444,7 @@ def test_exact_admission_unreadable_corpus_fails_batch(spark, tmp_path) -> None:
     docs = raw.select(
         F.from_json("value", "doc_id LONG, text STRING").alias("j")
     ).select("j.*")
-    q = start_corpus_ingest_exact(
+    q = getattr(corpus_ingest, f"start_corpus_ingest_{ingest}")(
         docs,
         corpus_dir=str(cdir),
         postings_dir=pdir,
@@ -2536,9 +2547,12 @@ def test_neardup_ingest_rejects_lsh_parameter_drift(spark, tmp_path) -> None:
     # resuming with the ORIGINAL parameters still works
     assert run() is None
 
-def test_neardup_ingest_sheared_sidecar_fails_loud(spark, tmp_path) -> None:
-    """Review finding (parity with the exact variant's guard): a
-    _bk-partitioned band store whose _meta sidecar was lost must fail
+@pytest.mark.parametrize("ingest", ["neardup", "exact"])
+def test_posting_ingest_sheared_sidecar_fails_loud(
+    spark, tmp_path, ingest
+) -> None:
+    """Review finding (the guard both posting-store ingests share): a
+    _bk-partitioned store whose _meta sidecar was lost must fail
     loud - treating it as legacy-unbucketed would append unbucketed
     rows into the partitioned layout, and once the true sidecar is
     restored those rows are pruned out of every screen."""
@@ -2546,18 +2560,27 @@ def test_neardup_ingest_sheared_sidecar_fails_loud(spark, tmp_path) -> None:
 
     from etl_marketdata_downloader_archived_spark.operators.dedup import (
         band_postings,
+        word_shingles,
     )
-    from etl_marketdata_downloader_archived_spark.streaming.corpus_ingest import (
-        start_corpus_ingest_neardup,
+    from etl_marketdata_downloader_archived_spark.operators.fuzzy import (
+        jaccard_prefix_postings,
+    )
+    from etl_marketdata_downloader_archived_spark.streaming import (
+        corpus_ingest,
     )
 
     base = ("the quick brown fox jumps over the lazy dog near the river "
             "bank every single day without fail in all weather")
     pdir = tmp_path / "sh_postings"
     seed = spark.createDataFrame([(1, base)], "doc_id long, text string")
-    band_postings(seed, "doc_id", "text", bucket_by=64).write.mode(
-        "append"
-    ).partitionBy("_bk").parquet(str(pdir))
+    if ingest == "neardup":
+        postings = band_postings(seed, "doc_id", "text", bucket_by=64)
+    else:
+        postings = jaccard_prefix_postings(
+            seed.select("doc_id", word_shingles("text", 3).alias("_toks")),
+            "doc_id", "_toks", 0.7, bucket_by=64,
+        )
+    postings.write.mode("append").partitionBy("_bk").parquet(str(pdir))
     shutil.rmtree(pdir / "_meta", ignore_errors=True)  # the shear
 
     src = tmp_path / "sh_src"
@@ -2567,7 +2590,7 @@ def test_neardup_ingest_sheared_sidecar_fails_loud(spark, tmp_path) -> None:
     docs = raw.select(
         F.from_json("value", "doc_id LONG, text STRING").alias("j")
     ).select("j.*")
-    q = start_corpus_ingest_neardup(
+    q = getattr(corpus_ingest, f"start_corpus_ingest_{ingest}")(
         docs,
         corpus_dir=str(tmp_path / "sh_corpus"),
         postings_dir=str(pdir),
@@ -2637,15 +2660,21 @@ def test_exact_ingest_legacy_threshold_drift_in_crash_window(
     assert len(os.listdir(pdir)) == n_before
 
 
-def test_exact_ingest_auto_compacts_past_trigger(spark, tmp_path) -> None:
+@pytest.mark.parametrize(
+    "ingest, store_id", [("exact", "_id"), ("neardup", "doc_id")]
+)
+def test_posting_ingest_auto_compacts_past_trigger(
+    spark, tmp_path, ingest, store_id
+) -> None:
     """VERDICT r13 item 2: posting-store maintenance wired into the
     ingest loop. Replay-duplicated postings (the crash-between-appends
     shape) are reclaimed by the NEXT batch automatically once the
     store's data-file count crosses ``compact_trigger_files`` - no
     operator action - and the screen's admission decisions are
-    unchanged across the compaction."""
-    from etl_marketdata_downloader_archived_spark.streaming.corpus_ingest import (
-        start_corpus_ingest_exact,
+    unchanged across the compaction. Both posting-store ingests share
+    the commit that runs it."""
+    from etl_marketdata_downloader_archived_spark.streaming import (
+        corpus_ingest,
     )
 
     base = ("the quick brown fox jumps over the lazy dog near the river "
@@ -2661,7 +2690,7 @@ def test_exact_ingest_auto_compacts_past_trigger(spark, tmp_path) -> None:
         docs = raw.select(
             F.from_json("value", "doc_id LONG, text STRING").alias("j")
         ).select("j.*")
-        q = start_corpus_ingest_exact(
+        q = getattr(corpus_ingest, f"start_corpus_ingest_{ingest}")(
             docs,
             corpus_dir=str(tmp_path / "ac_corpus"),
             postings_dir=pdir,
@@ -2707,7 +2736,7 @@ def test_exact_ingest_auto_compacts_past_trigger(spark, tmp_path) -> None:
     # carry exactly the admitted docs
     rows = store().collect()
     assert len(rows) == len({tuple(r) for r in rows})
-    assert {r._id for r in rows} == {1, 11}
+    assert {r[store_id] for r in rows} == {1, 11}
     import os
 
     assert not os.path.exists(pdir + "__old")
@@ -2725,16 +2754,20 @@ def test_exact_ingest_auto_compacts_past_trigger(spark, tmp_path) -> None:
     assert ids == [1, 11]
 
 
-def test_neardup_ingest_heals_crashed_compaction(spark, tmp_path) -> None:
+@pytest.mark.parametrize("ingest", ["neardup", "exact"])
+def test_posting_ingest_heals_crashed_compaction(
+    spark, tmp_path, ingest
+) -> None:
     """recover_posting_store wired into the ingest entry: a compaction
     that crashed between its two renames (live missing, __old intact)
     heals at the NEXT batch without operator action - the batch runs
     and screens against the restored store instead of failing with
-    the missing-store guard."""
+    the missing-store guard. Both posting-store ingests share the
+    heal."""
     import shutil
 
-    from etl_marketdata_downloader_archived_spark.streaming.corpus_ingest import (
-        start_corpus_ingest_neardup,
+    from etl_marketdata_downloader_archived_spark.streaming import (
+        corpus_ingest,
     )
 
     base = ("the quick brown fox jumps over the lazy dog near the river "
@@ -2748,7 +2781,7 @@ def test_neardup_ingest_heals_crashed_compaction(spark, tmp_path) -> None:
         docs = raw.select(
             F.from_json("value", "doc_id LONG, text STRING").alias("j")
         ).select("j.*")
-        q = start_corpus_ingest_neardup(
+        q = getattr(corpus_ingest, f"start_corpus_ingest_{ingest}")(
             docs,
             corpus_dir=str(tmp_path / "hc_corpus"),
             postings_dir=pdir,
