@@ -22,8 +22,28 @@ data-downloader/data_downloader.py:204-228 and the per-type handlers
     -> lake write partitioned by route + manifest append; failures ->
        quarantine rows (replaces SNS at :52-56) + catalog flag=2
 
-Scale notes: every network call lives in exactly two mapInPandas
-stages (page/listing fetch, file fetch); everything else is Catalyst.
+One micro-batch (``run_downloader``) is planned and executed once:
+
+1. Snapshot the inputs: the quarantine log's attempts per unit (a
+   lineage-free local checkpoint) and the manifest's key set (a path
+   read, listed when it is created).
+2. Fetch once: every network call lives in exactly two mapInPandas
+   stages, the body fetch (pages and listings, one stage for all three
+   TYPEs) and the file fetch, and each stage has exactly one consumer.
+   A failed fetch or an unknown task is a row with ``error`` set that
+   rides through the rest of the plan, so splitting ok from failed
+   rows never reads a stage twice and nothing needs a ``persist``.
+3. Materialise the outcome once: lake, quarantine and dead-letter rows
+   in one ``localCheckpoint(DISK_ONLY)`` frame. The lake, manifest and
+   quarantine writes and the returned views are projections of it.
+
+Why the outcome is checkpointed rather than cached: a path read lists
+its files when it is created, but every ``write.parquet(append)``
+re-lists each cached plan that reads the output path
+(``CacheManager.recacheByPath``). A cached fetch over the manifest
+scan would be dropped by the manifest append, so the next consumer
+would fetch again and dedup the batch against its own manifest rows.
+
 Fetch stages key their outputs by (route, file_name) so at-least-once
 re-runs are idempotent after the manifest anti-join - the Structured
 Streaming twin of this plan reuses the same stages per micro-batch.
@@ -36,10 +56,12 @@ from datetime import datetime, timezone
 
 import pandas as pd
 from pyspark import StorageLevel
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.globs import glob_to_regex
 from ..functions.urls import last_segment, last_ws_token, url_join
 from ..io import latest_per_key
 from ..schemas import MANIFEST, TASK
@@ -52,6 +74,7 @@ ROUTE_LINKS_OVER = "LINKS_OVER"
 ROUTE_LINKS_DIRECT = "LINKS_DIRECT"
 ROUTE_FTP_FILE = "FTP_FILE"
 ROUTE_FTP_FILES = "FTP_FILES"
+
 
 def decode_tasks(messages: DataFrame, body_col: str = "task_json") -> DataFrame:
     """JSON task decode (reference: data-downloader/data_downloader.py:216).
@@ -148,64 +171,150 @@ def _hrefs_lenient(body: str) -> list[str]:
         return _hrefs_stdlib(body)
 
 
+@F.pandas_udf(T.ArrayType(T.StringType()))
+def _lenient_hrefs(bodies: pd.Series) -> pd.Series:
+    """Pandas-UDF href extraction: one lenient HTML parse per page,
+    Arrow-batched. Python-side and ~10x the regex cost per byte -
+    reserve it for real-world pages where commented-out nav links and
+    broken markup occur; the JVM regex stays the fast path for
+    trusted/generated markup."""
+    return bodies.map(lambda b: [] if b is None else _hrefs_lenient(b))
+
+
 def _extract_links_lenient(ok: DataFrame) -> DataFrame:
-    """Pandas-UDF branch of the href explode: one lenient HTML parse
-    per page, Arrow-batched. Python-side and ~10x the regex cost per
-    byte - reserve it for real-world pages where commented-out nav
-    links and broken markup occur; the JVM regex stays the fast path
-    for trusted/generated markup."""
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"ID": [], "TYPE": [], "page_url": [], "href": []}
-            for r in pdf.itertuples(index=False):
-                for href in _hrefs_lenient(r.body or ""):
-                    rows["ID"].append(r.ID)
-                    rows["TYPE"].append(r.TYPE)
-                    rows["page_url"].append(r.URL)
-                    rows["href"].append(href)
-            yield pd.DataFrame(rows, columns=["ID", "TYPE", "page_url", "href"])
-
-    return ok.select("ID", "TYPE", "URL", "body").mapInPandas(
-        parse, schema="ID string, TYPE string, page_url string, href string"
+    """The lenient branch's href explode on its own: one row per href
+    of each fetched page, in page order."""
+    return ok.select(
+        "ID",
+        "TYPE",
+        F.col("URL").alias("page_url"),
+        F.explode(_lenient_hrefs("body")).alias("href"),
     )
 
 
-_PAGE_SCHEMA = "ID string, URL string, TYPE string, PATTERN string, body string, error string"
+def _check_parser(html_parser: str) -> None:
+    if html_parser not in ("regex", "lenient"):
+        raise ValueError(f"unknown html_parser {html_parser!r}")
 
 
-def _fetch_body_stage(tasks: DataFrame, listing: bool, allow_network: bool) -> DataFrame:
-    """Shared page/listing fetch: one Python I/O stage, Arrow-batched.
-    Errors become rows (never exceptions) so the quarantine split is a
-    plain filter."""
+_LINK_TYPES = ("LINKS", "LINKS_OVERWRITE")
+_BODY_COLS = ["ID", "URL", "TYPE", "PATTERN", "body", "error", "_re"]
+_BODY_SCHEMA = (
+    "ID string, URL string, TYPE string, PATTERN string, body string, "
+    "error string, _re string"
+)
+
+
+def _fetch_bodies(tasks: DataFrame, allow_network: bool) -> DataFrame:
+    """The page/listing fetch: one Python I/O stage, Arrow-batched, for
+    the LINKS, LINKS_OVERWRITE and FTP_FILES tasks of ``tasks``. A
+    listing row also carries its glob as an anchored regex (``_re``;
+    the glob varies per task row, so the match downstream is
+    ``regexp_like`` against a per-row regex column). Errors become rows
+    (never exceptions)."""
 
     def fetch_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
             for r in pdf.itertuples(index=False):
+                listing = r.TYPE == "FTP_FILES"
                 try:
-                    body = (
-                        fetch_listing(r.URL, allow_network)
-                        if listing
-                        else fetch_text(r.URL, allow_network)
-                    )
-                    err = None
+                    fetch = fetch_listing if listing else fetch_text
+                    body, err = fetch(r.URL, allow_network), None
                 except TransportError as exc:
                     body, err = None, str(exc)
-                out.append(
-                    {
-                        "ID": r.ID,
-                        "URL": r.URL,
-                        "TYPE": r.TYPE,
-                        "PATTERN": r.PATTERN,
-                        "body": body,
-                        "error": err,
-                    }
-                )
-            yield pd.DataFrame(out, columns=["ID", "URL", "TYPE", "PATTERN", "body", "error"])
+                regex = glob_to_regex(r.PATTERN) if listing and r.PATTERN is not None else None
+                out.append((r.ID, r.URL, r.TYPE, r.PATTERN, body, err, regex))
+            yield pd.DataFrame(out, columns=_BODY_COLS)
 
-    return tasks.select("ID", "URL", "TYPE", "PATTERN").mapInPandas(
-        fetch_part, schema=_PAGE_SCHEMA
+    return (
+        tasks.filter(F.col("TYPE").isin(*_LINK_TYPES, "FTP_FILES"))
+        .select("ID", "URL", "TYPE", "PATTERN")
+        .mapInPandas(fetch_part, schema=_BODY_SCHEMA)
+    )
+
+
+def _expand_bodies(bodies: DataFrame, html_parser: str) -> DataFrame:
+    """The one consumer of the body stage: one row per candidate file of
+    each fetched page or listing (``ID, route, file_url, file_name``,
+    ``error`` NULL) and one row per failed fetch (``file_url`` the task
+    URL, ``route`` and ``file_name`` NULL, ``error`` set).
+
+    Pages: hrefs -> urljoin -> last segment -> nonempty (reference:
+    data-downloader/data_downloader.py:83-107). Listings: split CRLF ->
+    last token -> glob match (:152-170)."""
+    is_listing = F.col("TYPE") == "FTP_FILES"
+    failed = F.col("error").isNotNull()
+    if html_parser == "lenient":
+        hrefs = _lenient_hrefs(F.when(~is_listing, F.col("body")))
+    else:
+        # href extraction stays JVM-side: regexp_extract_all + explode
+        # (for well-formed anchor lists a regex is equivalent to the
+        # reference's soup, and codegen-friendly)
+        hrefs = F.regexp_extract_all("body", F.lit(_HREF_SQL_RE), 1)
+    lines = F.split("body", "\r\n")
+    items = (
+        # a failed fetch keeps exactly one row, with a NULL item
+        F.when(failed, F.array(F.lit(None).cast("string")))
+        # split('\r\n')[0:-1] - the reference drops the trailing empty
+        .when(is_listing, F.slice(lines, F.lit(1), F.greatest(F.size(lines) - 1, F.lit(0))))
+        .otherwise(hrefs)
+    )
+    rows = bodies.select(
+        "ID", "URL", "TYPE", "error", "_re", F.explode(items).alias("item")
+    )
+    href = F.col("item") if html_parser == "lenient" else _strip_quotes(F.col("item"))
+    link_url = url_join(F.col("URL"), href)
+    listed = last_ws_token("item")
+    named = rows.select(
+        "ID",
+        "TYPE",
+        "error",
+        "_re",
+        F.when(failed, F.col("URL"))
+        .when(is_listing, F.concat("URL", listed))
+        .otherwise(link_url)
+        .alias("file_url"),
+        F.when(failed, F.lit(None))
+        .when(is_listing, listed)
+        .otherwise(last_segment(link_url))
+        .alias("file_name"),
+    )
+    keep = (
+        failed
+        | (is_listing & F.expr("regexp_like(file_name, _re)"))
+        | (~is_listing & (F.length("file_name") > 0))
+    )
+    return named.filter(keep).select(
+        "ID",
+        F.when(failed, F.lit(None))
+        .when(is_listing, ROUTE_FTP_FILES)
+        .when(F.col("TYPE") == "LINKS_OVERWRITE", ROUTE_LINKS_OVER)
+        .otherwise(ROUTE_LINK)
+        .alias("route"),
+        "file_url",
+        "file_name",
+        "error",
+    )
+
+
+def _expand_apart(
+    tasks: DataFrame,
+    allow_network: bool,
+    cache_registry: list | None,
+    html_parser: str,
+) -> tuple[DataFrame, DataFrame]:
+    """(candidate files, failed fetches) of the body stage for callers
+    that consume the two apart. The fetched bodies are persisted so the
+    two views fetch once, and appended to ``cache_registry`` so the
+    caller can release them."""
+    bodies = _fetch_bodies(tasks, allow_network).persist(StorageLevel.DISK_ONLY)
+    if cache_registry is not None:
+        cache_registry.append(bodies)
+    files = _expand_bodies(bodies, html_parser).filter(F.col("error").isNull())
+    return (
+        files.select("ID", "route", "file_url", "file_name"),
+        bodies.filter(F.col("error").isNotNull()).drop("_re"),
     )
 
 
@@ -217,10 +326,8 @@ def expand_link_tasks(
 ) -> tuple[DataFrame, DataFrame]:
     """LINKS / LINKS_OVERWRITE branch: page -> hrefs -> one row per
     candidate file (reference: data-downloader/data_downloader.py:83-107).
-    Returns (candidate files, failed page fetches). The persisted fetch
-    stage is appended to ``cache_registry`` so the caller can release
-    it (a streaming twin would otherwise accumulate one cache entry per
-    micro-batch, unbounded).
+    Returns (candidate files, failed page fetches); the persisted fetch
+    stage is appended to ``cache_registry``.
 
     ``html_parser``: "regex" (default) extracts hrefs JVM-side - fast,
     codegen-friendly, but reads through comments/CDATA and can smear
@@ -228,47 +335,9 @@ def expand_link_tasks(
     (bs4 when importable, else the stdlib tokenizer bs4 wraps) as an
     Arrow-batched pandas stage - reference-fidelity on malformed
     real-world pages (data-downloader/data_downloader.py:83-91)."""
-    if html_parser not in ("regex", "lenient"):
-        raise ValueError(f"expand_link_tasks: unknown html_parser {html_parser!r}")
-    pages = _fetch_body_stage(
-        tasks.filter(F.col("TYPE").isin("LINKS", "LINKS_OVERWRITE")),
-        listing=False,
-        allow_network=allow_network,
-    ).persist(StorageLevel.DISK_ONLY)
-    if cache_registry is not None:
-        cache_registry.append(pages)
-    # persisted because BOTH branches (ok links, failed fetches) derive
-    # from it: without it the quarantine write re-runs the page fetch -
-    # every URL fetched twice per batch, timeouts paid twice. DISK_ONLY:
-    # page bodies are raw payload, not worth executor memory.
-    ok = pages.filter(F.col("error").isNull())
-
-    if html_parser == "lenient":
-        links = _extract_links_lenient(ok)
-    else:
-        # href extraction stays JVM-side: regexp_extract_all + explode
-        # (the reference soups the page, data_downloader.py:84-91; for
-        # well-formed anchor lists a regex is equivalent and
-        # codegen-friendly)
-        links = ok.select(
-            "ID",
-            "TYPE",
-            F.col("URL").alias("page_url"),
-            F.explode(F.regexp_extract_all("body", F.lit(_HREF_SQL_RE), 1)).alias("raw_href"),
-        ).withColumn("href", _strip_quotes(F.col("raw_href")))
-    resolved = links.select(
-        "ID",
-        "TYPE",
-        url_join(F.col("page_url"), F.col("href")).alias("file_url"),
-    )
-    named = resolved.withColumn("file_name", last_segment("file_url")).filter(
-        F.length("file_name") > 0
-    )
-    return named.withColumn(
-        "route",
-        F.when(F.col("TYPE") == "LINKS_OVERWRITE", ROUTE_LINKS_OVER).otherwise(ROUTE_LINK),
-    ).select("ID", "route", "file_url", "file_name"), pages.filter(
-        F.col("error").isNotNull()
+    _check_parser(html_parser)
+    return _expand_apart(
+        tasks.filter(F.col("TYPE").isin(*_LINK_TYPES)), allow_network, cache_registry, html_parser
     )
 
 
@@ -279,49 +348,11 @@ def expand_listing_tasks(
 ) -> tuple[DataFrame, DataFrame]:
     """FTP_FILES branch: listing -> file names -> glob match
     (reference: data-downloader/data_downloader.py:152-170).
-    Returns (candidate files, failed listing fetches).
-
-    The glob pattern varies per task row, so the translation runs as a
-    vectorized pandas UDF and the match is ``regexp_like`` with a
-    per-row regex column."""
-    listings = _fetch_body_stage(
-        tasks.filter(F.col("TYPE") == "FTP_FILES"), listing=True, allow_network=allow_network
-    ).persist(StorageLevel.DISK_ONLY)
-    # persisted for the same ok/error double-consumption reason as the
-    # page fetch in expand_link_tasks
-    if cache_registry is not None:
-        cache_registry.append(listings)
-    ok = listings.filter(F.col("error").isNull())
-
-    from ..functions.globs import glob_to_regex  # noqa: PLC0415
-
-    @F.pandas_udf("string")
-    def glob_regex(pats: pd.Series) -> pd.Series:
-        return pats.map(glob_to_regex)
-
-    lines = ok.select(
-        "ID",
-        F.col("URL").alias("base_url"),
-        "PATTERN",
-        # split('\r\n')[0:-1] - the reference drops the trailing empty
-        F.explode(
-            F.slice(
-                F.split("body", "\r\n"),
-                F.lit(1),
-                F.greatest(F.size(F.split("body", "\r\n")) - 1, F.lit(0)),
-            )
-        ).alias("line"),
+    Returns (candidate files, failed listing fetches); the persisted
+    fetch stage is appended to ``cache_registry``."""
+    return _expand_apart(
+        tasks.filter(F.col("TYPE") == "FTP_FILES"), allow_network, cache_registry, "regex"
     )
-    named = lines.withColumn("file_name", last_ws_token("line"))
-    matched = named.withColumn("_re", glob_regex("PATTERN")).filter(
-        F.expr("regexp_like(file_name, _re)")
-    )
-    return matched.select(
-        "ID",
-        F.lit(ROUTE_FTP_FILES).alias("route"),
-        F.concat("base_url", "file_name").alias("file_url"),
-        "file_name",
-    ), listings.filter(F.col("error").isNotNull())
 
 
 def expand_direct_tasks(tasks: DataFrame) -> DataFrame:
@@ -339,26 +370,12 @@ def expand_direct_tasks(tasks: DataFrame) -> DataFrame:
     )
 
 
-def dedup_against_manifest(candidates: DataFrame, manifest: DataFrame | None) -> DataFrame:
-    """Cross-run dedup: drop candidates already landed, except on the
-    overwrite route (reference semantics: LINKS_OVERWRITE always
-    rewrites, data-downloader/data_downloader.py:102-104; the other
-    four sinks carry the unimplemented dedup TODO)."""
-    within = candidates.dropDuplicates(["route", "file_name"])
-    if manifest is None:
-        return within
-    seen = manifest.select("route", "file_name").dropDuplicates()
-    keep_over = within.filter(F.col("route") == ROUTE_LINKS_OVER)
-    rest = within.filter(F.col("route") != ROUTE_LINKS_OVER)
-    fresh = rest.join(seen, ["route", "file_name"], "left_anti")
-    return fresh.unionByName(keep_over)
-
-
 # manifest as persisted by run_downloader: MANIFEST + the lake route
 _MANIFEST_ON_DISK = T.StructType(
     list(MANIFEST.fields) + [T.StructField("route", T.StringType())]
 )
 
+_FETCH_COLS = ["ID", "route", "file_url", "file_name", "content", "size_bytes", "error"]
 _FETCH_SCHEMA = (
     "ID string, route string, file_url string, file_name string, "
     "content binary, size_bytes long, error string"
@@ -369,48 +386,48 @@ def fetch_files(candidates: DataFrame, allow_network: bool = False) -> DataFrame
     """The download_upload stage (reference:
     data-downloader/data_downloader.py:62-70) as mapInPandas: bytes in
     a BinaryType column instead of a blind S3 put, so hashing/metadata
-    are one projection away."""
+    are one projection away. ``candidates`` carries an ``error``
+    column: a row that arrives with it set (a failed page fetch, an
+    unknown task) passes through unfetched, so every failure of a batch
+    leaves this one stage as a row."""
 
     def fetch_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
-                try:
-                    content = fetch_bytes(r.file_url, allow_network)
-                    err = None
-                except TransportError as exc:
-                    content, err = None, str(exc)
-                rows.append(
-                    {
-                        "ID": r.ID,
-                        "route": r.route,
-                        "file_url": r.file_url,
-                        "file_name": r.file_name,
-                        "content": content,
-                        "size_bytes": len(content) if content is not None else None,
-                        "error": err,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "ID", "route", "file_url", "file_name",
-                    "content", "size_bytes", "error",
-                ],
-            )
+                content, err = None, r.error
+                if err is None:
+                    try:
+                        content = fetch_bytes(r.file_url, allow_network)
+                    except TransportError as exc:
+                        err = str(exc)
+                size = len(content) if content is not None else None
+                rows.append((r.ID, r.route, r.file_url, r.file_name, content, size, err))
+            yield pd.DataFrame(rows, columns=_FETCH_COLS)
 
-    return candidates.mapInPandas(fetch_part, schema=_FETCH_SCHEMA)
+    return candidates.select("ID", "route", "file_url", "file_name", "error").mapInPandas(
+        fetch_part, schema=_FETCH_SCHEMA
+    )
+
+
+def _read_log(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame | None:
+    """An append log as of now, or None before its first write. The
+    path read lists the files when it is created and raises on a
+    missing path, both without running a job; the listing is not
+    refreshed later unless a cached plan reads the path (every append
+    re-lists the cached plans that read its output path), so the caller
+    must not cache a plan over this frame while it appends to the log."""
+    try:
+        return spark.read.schema(schema).parquet(path)
+    except AnalysisException:
+        return None
 
 
 def read_manifest_current(spark: SparkSession, manifest_dir: str) -> DataFrame | None:
     """The manifest as a current-state table (latest row per
     route/file_name), or None before the first write."""
-    try:
-        log = spark.read.schema(_MANIFEST_ON_DISK).parquet(manifest_dir)
-        log.head(1)  # force existence check now
-    except Exception:  # noqa: BLE001 - first run: no manifest yet
-        return None
-    return latest_per_key(log, ["route", "file_name"])
+    log = _read_log(spark, manifest_dir, _MANIFEST_ON_DISK)
+    return None if log is None else latest_per_key(log, ["route", "file_name"])
 
 
 def read_lake_current(spark: SparkSession, lake_dir: str) -> DataFrame:
@@ -430,6 +447,24 @@ _QUARANTINE_SCHEMA = T.StructType(
         T.StructField("failed_at", T.TimestampType()),
     ]
 )
+
+# the returned views, as projections of the batch outcome
+_LAKE_COLS = [
+    "route", "file_name", "content", "content_hash", "size_bytes",
+    "ID AS source_id", "URL AS url", "ts AS fetched_at",
+]
+_MANIFEST_COLS = [
+    "file_name", "route AS source_type", "ID AS source_id", "URL AS url",
+    "content_hash", "ts AS fetched_at", "size_bytes", "route",
+]
+_QUARANTINE_COLS = ["ID", "URL", "REASON", "attempts", "ts AS failed_at"]
+
+
+def _free_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of a ``localCheckpoint`` frame, which
+    ``unpersist()`` and ``clearCache()`` leave in place: they belong to
+    the checkpointed RDD the frame's plan reads."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def run_downloader(
@@ -454,18 +489,22 @@ def run_downloader(
     in the catalog - no caller composition required.
 
     Returns {'landed', 'manifest', 'quarantine', 'dead_letter',
-    'catalog'} DataFrames; lake and manifest are also written out
-    (parquet, lake partitioned by route). The caller owns scheduling;
-    the streaming twin wraps this in foreachBatch with checkpointing as
-    the ack (SURVEY.md section 3.2).
+    'catalog', 'release'}; lake, manifest and quarantine are also
+    written out (parquet, lake partitioned by route). The four views
+    are projections of the batch outcome, which is materialised once
+    before any write, so they show this batch's rows whenever they are
+    read; ``release()`` frees the outcome and the other blocks the
+    batch pinned, after which the views are unreadable. The caller owns
+    scheduling; the streaming twin wraps this in foreachBatch with
+    checkpointing as the ack (SURVEY.md section 3.2).
     """
+    _check_parser(html_parser)
     # one wall-clock per batch: lake rows and manifest rows of the same
-    # batch must carry the SAME timestamp (two actions would evaluate
-    # current_timestamp() twice), and latest_per_key orders by it.
-    # Shipped as explicit epoch micros: F.lit(datetime) converts through
-    # the Python PROCESS timezone, and a wall-clock STRING would parse
-    # under the session timezone (host-dependent on a vanilla session,
-    # and non-monotonic across a DST fold, which would make
+    # batch must carry the SAME timestamp, and latest_per_key orders by
+    # it. Shipped as explicit epoch micros: F.lit(datetime) converts
+    # through the Python PROCESS timezone, and a wall-clock STRING would
+    # parse under the session timezone (host-dependent on a vanilla
+    # session, and non-monotonic across a DST fold, which would make
     # latest_per_key prefer stale rows). An instant has neither problem.
     batch_ts = F.timestamp_micros(
         F.lit(int(datetime.now(timezone.utc).timestamp() * 1_000_000))
@@ -477,9 +516,9 @@ def run_downloader(
     # the retry machinery - the attempts lookup, the DLQ gate - is
     # NULL-unsafe equality, so such a message would be re-quarantined
     # at attempts=1 FOREVER instead of dead-lettering after
-    # max_attempts (review finding). A deterministic body-hash
-    # sentinel gives the redelivered message a stable key the
-    # maxReceiveCount semantics can count.
+    # max_attempts. A deterministic body-hash sentinel gives the
+    # redelivered message a stable key the maxReceiveCount semantics
+    # can count.
     _body_key = F.concat(
         F.lit("malformed:"),
         F.substring(
@@ -490,135 +529,118 @@ def run_downloader(
         "ID", F.coalesce(F.col("ID"), _body_key)
     ).withColumn("URL", F.coalesce(F.col("URL"), _body_key))
 
-    # attempts so far per failing unit (task URL or file URL), from the
-    # quarantine log - the cross-run retry memory
-    attempts_prev = None
-    if quarantine_dir is not None:
-        try:
-            prior = spark.read.schema(_QUARANTINE_SCHEMA).parquet(quarantine_dir)
-            prior.head(1)
-            # localCheckpoint SNAPSHOTS the log before this run appends
-            # to it: the returned DataFrames re-evaluate lazily after
-            # the write, and a plain parquet read would then see this
-            # run's own rows (attempts double-counting, self-gating)
-            attempts_prev = prior.groupBy("ID", "URL").agg(
-                F.max("attempts").alias("prev_attempts")
-            ).localCheckpoint()
-        except Exception:  # noqa: BLE001 - first run: no quarantine yet
-            attempts_prev = None
-
-    # DLQ gate: a unit that failed max_attempts times stops being
-    # retried (the SQS maxReceiveCount -> DLQ bound). Tasks are gated
-    # on their task URL here; failing FILES are gated per file_url at
-    # the candidate stage below.
-    dead_letter = spark.createDataFrame([], _QUARANTINE_SCHEMA)
-    if attempts_prev is not None:
-        exhausted = attempts_prev.filter(F.col("prev_attempts") >= max_attempts)
-        dead_letter = (
-            spark.read.schema(_QUARANTINE_SCHEMA).parquet(quarantine_dir)
-            .join(
-                exhausted.select("ID", "URL"), ["ID", "URL"], "left_semi"
+    # the inputs, read once: the attempts so far per failing unit (task
+    # URL or file URL) from the quarantine log - the cross-run retry
+    # memory - and the manifest's key set. The attempts are snapshot
+    # lineage-free because four places of the plan join them.
+    pinned: list[DataFrame] = []
+    prior = _read_log(spark, quarantine_dir, _QUARANTINE_SCHEMA) if quarantine_dir else None
+    attempts_prev = exhausted = None
+    if prior is not None:
+        attempts_prev = prior.groupBy("ID", "URL").agg(
+            F.max("attempts").alias("prev_attempts")
+        ).localCheckpoint(storageLevel=StorageLevel.DISK_ONLY)
+        pinned.append(attempts_prev)
+        # DLQ gate: a unit that failed max_attempts times stops being
+        # retried (the SQS maxReceiveCount -> DLQ bound). Tasks are
+        # gated on their task URL here; failing FILES are gated per
+        # file_url at the candidate stage below.
+        exhausted = attempts_prev.filter(F.col("prev_attempts") >= max_attempts).select("ID", "URL")
+        tasks = tasks.join(exhausted, ["ID", "URL"], "left_anti")
+    landed_keys = None
+    if manifest_dir is not None:
+        log = _read_log(spark, manifest_dir, _MANIFEST_ON_DISK)
+        if log is not None:
+            # LINKS_OVERWRITE always re-lands (reference: the overwrite
+            # sink rewrites, data-downloader/data_downloader.py:102-104)
+            landed_keys = log.select("route", "file_name").filter(
+                F.col("route") != ROUTE_LINKS_OVER
             )
-        ).localCheckpoint()
-        tasks = tasks.join(
-            exhausted.select("ID", F.col("URL")), ["ID", "URL"], "left_anti"
-        )
-    tasks = tasks.cache()
-    cached: list[DataFrame] = [tasks]
 
-    link_files, link_errs = expand_link_tasks(
-        tasks, allow_network, cache_registry=cached, html_parser=html_parser
-    )
-    ftp_files, ftp_errs = expand_listing_tasks(tasks, allow_network, cache_registry=cached)
-    direct_files = expand_direct_tasks(tasks)
-    unknown = tasks.filter(F.col("handler") == "error_unknown_type")
-
-    candidates = link_files.unionByName(ftp_files).unionByName(direct_files)
-    if attempts_prev is not None:
-        candidates = candidates.join(
-            attempts_prev.filter(F.col("prev_attempts") >= max_attempts)
-            .select("ID", F.col("URL").alias("file_url")),
-            ["ID", "file_url"],
-            "left_anti",
-        )
-
-    manifest_prev = read_manifest_current(spark, manifest_dir) if manifest_dir else None
-
-    fresh = dedup_against_manifest(candidates, manifest_prev)
-    # DISK_ONLY, not memory: `content` is raw fetched payload (BinaryType);
-    # pinning it in executor memory is an OOM at lake scale - spill it,
-    # both consumers (landed split, failed split) stream it back once
-    fetched = fetch_files(fresh, allow_network).persist(StorageLevel.DISK_ONLY)
-    cached.append(fetched)
-    landed = fetched.filter(F.col("error").isNull())
-    failed = fetched.filter(F.col("error").isNotNull())
-
-    # quarantine = page/listing errors + file errors + unknown types,
-    # each carrying prior_attempts + 1
-    def _q(df: DataFrame, url_col: str, reason_col) -> DataFrame:
-        rows = df.select(
-            F.col("ID"),
-            F.col(url_col).alias("URL"),
-            reason_col.alias("REASON"),
-        )
-        if attempts_prev is not None:
-            rows = rows.join(attempts_prev, ["ID", "URL"], "left")
-        else:
-            rows = rows.withColumn("prev_attempts", F.lit(None).cast("int"))
-        return rows.select(
-            "ID",
-            "URL",
-            "REASON",
-            (F.coalesce(F.col("prev_attempts"), F.lit(0)) + 1).cast("int").alias("attempts"),
-            batch_ts.alias("failed_at"),
-        )
-
-    quarantine = (
-        _q(link_errs, "URL", F.col("error"))
-        .unionByName(_q(ftp_errs, "URL", F.col("error")))
-        .unionByName(_q(failed, "file_url", F.col("error")))
-        .unionByName(
-            _q(
-                unknown,
-                "URL",
-                # a parse failure leaves TYPE (and every field) NULL;
-                # name the malformed payload instead of emitting a
-                # NULL reason (concat with NULL TYPE was NULL)
-                F.when(
-                    F.col("TYPE").isNotNull(),
-                    F.concat(F.lit("unknown TYPE: "), F.col("TYPE")),
-                ).otherwise(
-                    F.concat(
-                        F.lit("malformed or TYPE-less task JSON: "),
-                        F.substring(
-                            F.coalesce(
-                                F.col("_task_body"), F.lit("<null body>")
-                            ),
-                            1,
-                            120,
-                        ),
-                    )
-                ),
+    # every unit of work as one row: candidate files of the fetched
+    # pages and listings, direct files, and the failures so far (failed
+    # page/listing fetches, unknown TYPEs) with ``error`` set
+    unknown = tasks.filter(F.col("handler") == "error_unknown_type").select(
+        "ID",
+        F.col("URL").alias("file_url"),
+        # a parse failure leaves TYPE (and every field) NULL; name the
+        # malformed payload instead of emitting a NULL reason
+        F.when(
+            F.col("TYPE").isNotNull(),
+            F.concat(F.lit("unknown TYPE: "), F.col("TYPE")),
+        ).otherwise(
+            F.concat(
+                F.lit("malformed or TYPE-less task JSON: "),
+                F.substring(F.coalesce(F.col("_task_body"), F.lit("<null body>")), 1, 120),
             )
-        )
+        ).alias("error"),
     )
+    units = (
+        _expand_bodies(_fetch_bodies(tasks, allow_network), html_parser)
+        .unionByName(expand_direct_tasks(tasks), allowMissingColumns=True)
+        .unionByName(unknown, allowMissingColumns=True)
+    )
+    if exhausted is not None:
+        units = units.join(
+            exhausted.withColumnRenamed("URL", "file_url"), ["ID", "file_url"], "left_anti"
+        )
+    # within the batch each file lands once and each failure is
+    # reported once; across batches the manifest anti-join drops files
+    # already landed (the four "check repeat file" TODOs of the
+    # reference, :106,131,169,194, implemented)
+    fresh = units.withColumn(
+        "_failure", F.when(F.col("error").isNotNull(), F.struct("ID", "file_url"))
+    ).dropDuplicates(["route", "file_name", "_failure"]).drop("_failure")
+    if landed_keys is not None:
+        fresh = fresh.join(landed_keys, ["route", "file_name"], "left_anti")
 
-    lake = landed.select(
+    fetched = fetch_files(fresh, allow_network)
+    rows = fetched.select(
+        F.when(F.col("error").isNull(), "landed").otherwise("quarantine").alias("kind"),
         "route",
         "file_name",
         "content",
         F.sha2("content", 256).alias("content_hash"),
         "size_bytes",
-        F.col("ID").alias("source_id"),
-        F.col("file_url").alias("url"),
-        batch_ts.alias("fetched_at"),
+        "ID",
+        F.col("file_url").alias("URL"),
+        F.col("error").alias("REASON"),
     )
-    lake.write.mode("append").partitionBy("route").parquet(lake_dir)
+    if attempts_prev is not None:
+        rows = rows.join(attempts_prev, ["ID", "URL"], "left")
+    else:
+        rows = rows.withColumn("prev_attempts", F.lit(None).cast("int"))
+    # each failure carries prior attempts + 1
+    outcome = rows.select(
+        "kind", "route", "file_name", "content", "content_hash", "size_bytes", "ID", "URL",
+        "REASON",
+        F.when(
+            F.col("kind") == "quarantine", F.coalesce(F.col("prev_attempts"), F.lit(0)) + 1
+        ).cast("int").alias("attempts"),
+        batch_ts.alias("ts"),
+    )
+    if exhausted is not None:
+        dead = prior.join(exhausted, ["ID", "URL"], "left_semi")
+        outcome = outcome.unionByName(
+            dead.select(
+                F.lit("dead_letter").alias("kind"), "ID", "URL", "REASON", "attempts",
+                F.col("failed_at").alias("ts"),
+            ),
+            allowMissingColumns=True,
+        )
+    # the outcome, materialised once and lineage-free: every sink below
+    # and every returned view reads these blocks, so no write re-runs a
+    # fetch and no view sees the logs this batch appends to
+    outcome = outcome.localCheckpoint(storageLevel=StorageLevel.DISK_ONLY)
+    pinned.append(outcome)
 
-    manifest_new = lake.select(
-        "file_name", F.col("route").alias("source_type"), "source_id", "url",
-        "content_hash", "fetched_at", "size_bytes", "route",
-    )
+    def view(kind: str, cols: list[str]) -> DataFrame:
+        return outcome.filter(F.col("kind") == kind).selectExpr(*cols)
+
+    lake = view("landed", _LAKE_COLS)
+    manifest_new = view("landed", _MANIFEST_COLS)
+    quarantine = view("quarantine", _QUARANTINE_COLS)
+    lake.write.mode("append").partitionBy("route").parquet(lake_dir)
     if manifest_dir is not None:
         manifest_new.write.mode("append").parquet(manifest_dir)
     if quarantine_dir is not None:
@@ -636,23 +658,18 @@ def run_downloader(
         if broken:
             cat = valid_rows(read_catalog(spark, catalog_path, fmt="parquet"))
             catalog_out = flag_broken(cat, broken).localCheckpoint()
+            pinned.append(catalog_out)
             write_catalog(catalog_out, catalog_path)
 
-    # the persisted stages stay cached: the returned DataFrames are
-    # views over them and an unpersist here would re-run the network
-    # fetches on the caller's next action. The caller releases them via
-    # the returned callable once done with the views - the streaming
-    # twin calls it per micro-batch (an unreleased cache entry per
-    # batch grows without bound on a long-running stream).
     def release() -> None:
-        for df in cached:
-            df.unpersist()
+        for df in pinned:
+            _free_checkpoint(df)
 
     return {
         "landed": lake,
         "manifest": manifest_new,
         "quarantine": quarantine,
-        "dead_letter": dead_letter,
+        "dead_letter": view("dead_letter", _QUARANTINE_COLS),
         "catalog": catalog_out,
         "release": release,
     }

@@ -16,8 +16,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
 
 def get_spark(
     app_name: str = "etl-marketdata-spark",
@@ -30,9 +28,12 @@ def get_spark(
     Defaults are local-mode friendly but every knob matters at cluster
     scale too: AQE re-plans joins/skew at runtime, broadcast threshold
     keeps dimension tables (region/nation/... analogs) out of shuffles.
+    ``$SPARK_GRAFT_CPUS`` (default 32) sizes both the local master and
+    the shuffle partitions; it is read on each call, not at import.
     """
-    master = master or f"local[{DEFAULT_CPUS}]"
-    n_shuffle = shuffle_partitions or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    master = master or f"local[{cpus}]"
+    n_shuffle = shuffle_partitions or int(cpus)
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)

@@ -52,9 +52,12 @@ def read_catalog(spark: SparkSession, path: str, fmt: str = "csv") -> DataFrame:
     # tick's current file, like the reference's per-invocation S3
     # read), while localCheckpoint pins unreplicated executor blocks
     # that an executor loss makes permanently unreadable. Re-creating
-    # the frame from collected rows is fresh, lineage-free, and
-    # survives any executor churn.
-    return spark.createDataFrame(df.collect(), df.schema)
+    # the frame from the collected Arrow table is fresh, lineage-free,
+    # survives any executor churn, and stays on the JVM side: the
+    # result is a local relation, so later actions start no Python
+    # worker (rows collected into Python would be re-shipped as a
+    # Python RDD, one Python task per core on every action).
+    return spark.createDataFrame(df.toArrow(), df.schema)
 
 
 def valid_rows(catalog: DataFrame) -> DataFrame:

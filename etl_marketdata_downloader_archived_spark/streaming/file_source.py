@@ -67,9 +67,9 @@ def start_lake_sink(
             catalog_path=catalog_path,
             allow_network=allow_network,
         )
-        # all sinks are written inside run_downloader; release the
-        # batch's persisted fetch stages so a long-running stream does
-        # not accumulate one cache entry set per micro-batch
+        # all sinks are written inside run_downloader; free the
+        # batch's checkpoint blocks so a long-running stream does not
+        # accumulate one set per micro-batch
         out["release"]()
 
     return (

@@ -70,6 +70,37 @@ def test_catalog_read_permissive(spark, catalog_csv) -> None:
     assert cat.filter(F.col("_corrupt_record").isNotNull()).count() == 1
 
 
+def test_catalog_read_is_fresh_per_call(spark, tmp_path) -> None:
+    """Each read_catalog call reads the file as it is then: a rewrite
+    between two reads shows on the second, and the first frame keeps
+    the rows it read."""
+    p = tmp_path / "catalog.csv"
+    p.write_text("1,file:///a,hourly,x,1,y,z,LINKS,p,0\n")
+    first = read_catalog(spark, str(p))
+    assert [(r.id, r.active) for r in first.collect()] == [("1", 1)]
+
+    p.write_text(
+        "1,file:///a,hourly,x,2,y,z,LINKS,p,0\n2,file:///b,hourly,x,1,y,z,DIRECT,b,0\n"
+    )
+    second = read_catalog(spark, str(p))
+    assert sorted((r.id, r.active) for r in second.collect()) == [("1", 2), ("2", 1)]
+    assert [(r.id, r.active) for r in first.collect()] == [("1", 1)]
+
+
+def test_catalog_read_keeps_nulls(spark, tmp_path) -> None:
+    """Empty integer fields read as SQL NULL, not NaN: a NULL
+    ``active`` or ``utc_offset`` must fail every comparison the
+    harvester makes, and NULL (unlike NaN) is what isNull() finds."""
+    p = tmp_path / "catalog.csv"
+    p.write_text("1,file:///a,hourly,x,,y,z,LINKS,p,\n2,file:///b,hourly,x,1,y,z,LINKS,p,2\n")
+    cat = valid_rows(read_catalog(spark, str(p)))
+    assert dict(cat.dtypes)["active"] == "int" and dict(cat.dtypes)["utc_offset"] == "int"
+    rows = {r.id: r for r in cat.collect()}
+    assert rows["1"].active is None and rows["1"].utc_offset is None
+    assert rows["2"].active == 1 and rows["2"].utc_offset == 2
+    assert cat.filter(F.col("active").isNull() & F.col("utc_offset").isNull()).count() == 1
+
+
 def test_harvest_filters_and_templates(spark, catalog_csv) -> None:
     tasks = harvest_tasks(read_catalog(spark, catalog_csv), "hourly", NOW)
     got = {r.ID: r for r in tasks.collect()}
@@ -144,6 +175,34 @@ def test_downloader_rerun_dedups_against_manifest(
     landed_again = second["landed"].count()
     assert landed_again == 0  # everything already in the manifest
     assert spark.read.parquet(lake).count() == n_first  # lake unchanged
+
+
+def test_returned_views_show_the_batch_after_a_manifest_exists(spark, tmp_path) -> None:
+    """The views run_downloader returns show what THIS batch landed,
+    also once a manifest exists: reading them after the batch's own
+    appends must neither fetch again nor dedup the batch against its
+    own manifest rows."""
+    root = tmp_path / "remote"
+    (root / "files").mkdir(parents=True)
+    for n in ("a.csv", "b.csv", "c.csv"):
+        (root / "files" / n).write_text(n)
+    page = root / "page.html"
+    lake, manifest = str(tmp_path / "lake"), str(tmp_path / "manifest")
+    msgs = spark.createDataFrame(
+        [(f'{{"ID":"1","URL":"file://{page}","TYPE":"LINKS","PATTERN":"p","UTC":"0"}}',)],
+        ["task_json"],
+    )
+
+    page.write_text('<a href="files/a.csv">a</a>')
+    first = run_downloader(spark, msgs, lake, manifest)
+    assert [r.file_name for r in first["landed"].collect()] == ["a.csv"]
+
+    page.write_text("".join(f'<a href="files/{n}">{n}</a>' for n in ("a.csv", "b.csv", "c.csv")))
+    second = run_downloader(spark, msgs, lake, manifest)
+    assert second["landed"].count() == 2
+    assert second["manifest"].count() == 2
+    assert sorted(r.file_name for r in second["landed"].collect()) == ["b.csv", "c.csv"]
+    assert spark.read.parquet(manifest).count() == 3
 
 
 def test_unknown_type_quarantined(spark, tmp_path) -> None:

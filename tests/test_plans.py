@@ -503,3 +503,43 @@ def test_sloc_counts_lines_by_kind() -> None:
     assert sloc.count_source(src) == {
         "total": 10, "code": 4, "comment": 1, "docstring": 3, "blank": 2,
     }
+
+
+def test_tick_profile_lists_each_job_of_a_tick() -> None:
+    """tools/tick_profile.py attributes jobs to a tick by submission
+    time and prints, per job, its SQL execution, the tasks of the
+    stages it ran (skipped stages left out), its duration and the
+    stage operators."""
+    import importlib.util
+    import json
+    from pathlib import Path
+
+    path = Path(__file__).resolve().parents[1] / "tools" / "tick_profile.py"
+    spec = importlib.util.spec_from_file_location("tick_profile", path)
+    tp = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(tp)
+
+    def scope(name: str) -> str:
+        return json.dumps({"id": "1", "name": name})
+
+    events = [
+        {"Event": "org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart",
+         "executionId": 4, "sparkPlanInfo": {"nodeName": "AdaptiveSparkPlan"}},
+        {"Event": "SparkListenerJobStart", "Job ID": 7, "Submission Time": 10_500,
+         "Stage IDs": [1, 2], "Properties": {"spark.sql.execution.id": "4"},
+         "Stage Infos": [
+             {"Stage ID": 1, "RDD Info": [{"RDD ID": 3, "Scope": scope("Exchange")},
+                                          {"RDD ID": 2, "Scope": scope("Scan text ")}]},
+             {"Stage ID": 2, "RDD Info": [{"RDD ID": 5, "Scope": scope("MapInPandas")}]},
+         ]},
+        {"Event": "SparkListenerTaskEnd", "Stage ID": 2},
+        {"Event": "SparkListenerTaskEnd", "Stage ID": 2},
+        {"Event": "SparkListenerJobEnd", "Job ID": 7, "Completion Time": 10_750},
+        {"Event": "SparkListenerJobStart", "Job ID": 8, "Submission Time": 99_000,
+         "Stage IDs": [], "Stage Infos": []},
+    ]
+    lines = tp._report({"tick": 3, "dur": 1.25, "w0": 10.0, "w1": 12.0}, tp._index(events))
+    assert lines[0] == "tick 3: 1.250 s, 1 jobs"
+    assert len(lines) == 2
+    assert "job    7  +  500  sql    4  tasks   2     250 ms" in lines[1]
+    assert lines[1].endswith("AdaptiveSparkPlan: MapInPandas")

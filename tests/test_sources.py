@@ -167,3 +167,42 @@ def test_json_csv_interchange_requires_schema(spark, sf_dir, tmp_path) -> None:
         )
     with _pytest.raises(ValueError, match="unsupported format"):
         write_formatted(r, str(tmp_path / "x"), fmt="xml")
+
+
+def test_get_spark_reads_cpus_when_called(monkeypatch) -> None:
+    """``$SPARK_GRAFT_CPUS`` is read by each ``get_spark`` call, so a
+    caller that sets it after importing the package still sizes the
+    master and the shuffle partitions with it."""
+    from etl_marketdata_downloader_archived_spark import session
+
+    seen: dict[str, str] = {}
+
+    class _Builder:
+        def master(self, m):
+            seen["master"] = m
+            return self
+
+        def appName(self, _name):  # noqa: N802 - the builder's API
+            return self
+
+        def config(self, k, v):
+            seen[k] = v
+            return self
+
+        def getOrCreate(self):  # noqa: N802 - the builder's API
+            class _Spark:
+                class sparkContext:  # noqa: N801 - mirrors the attribute
+                    @staticmethod
+                    def setLogLevel(_level):  # noqa: N802
+                        pass
+
+            return _Spark()
+
+    class _SparkSession:
+        builder = _Builder()
+
+    monkeypatch.setattr(session, "SparkSession", _SparkSession)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    session.get_spark()
+    assert seen["master"] == "local[3]"
+    assert seen["spark.sql.shuffle.partitions"] == "3"

@@ -541,6 +541,59 @@ def test_streaming_error_path_composes_quarantine_and_catalog(spark, tmp_path) -
     assert flags["9"] == 2
 
 
+def test_lake_sink_releases_what_each_batch_pinned(spark, tmp_path) -> None:
+    """Each micro-batch of the lake sink frees every block it pinned,
+    the local checkpoints included (the batch outcome, the attempts
+    snapshot, the flagged catalog), which unpersist() and clearCache()
+    leave in place: after two batches with failures no new RDD holds a
+    cached partition."""
+    from etl_marketdata_downloader_archived_spark.sources.catalog import write_catalog
+
+    jsc = spark.sparkContext._jsc.sc()
+
+    def cached_rdds() -> set[int]:
+        return {i.id() for i in jsc.getRDDStorageInfo() if i.numCachedPartitions() > 0}
+
+    before = cached_rdds()
+    remote = tmp_path / "remote"
+    remote.mkdir()
+    (remote / "ok.csv").write_text("x\n1\n")
+    cat_dir = str(tmp_path / "catalog")
+    write_catalog(
+        spark.createDataFrame(
+            [("7", "file:///nope.html", "hourly", None, 1, None, None, "LINKS", "p", 0)],
+            "id string, url string, interval string, col3 string, active int, "
+            "col5 string, col6 string, type string, pattern string, utc_offset int",
+        ),
+        cat_dir,
+    )
+    tasks = [
+        {"ID": "6", "URL": f"file://{remote}/ok.csv", "TYPE": "DIRECT", "PATTERN": "ok.csv"},
+        {"ID": "7", "URL": f"file://{remote}/missing.html", "TYPE": "LINKS", "PATTERN": "p"},
+        {"ID": "8", "URL": f"file://{remote}/gone.csv", "TYPE": "DIRECT", "PATTERN": "gone.csv"},
+    ]
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    qdir = str(tmp_path / "quarantine")
+    for tick in range(2):
+        (in_dir / f"tick{tick}.json").write_text("\n".join(json.dumps(t) for t in tasks))
+        q = start_lake_sink(
+            file_task_stream(spark, str(in_dir)),
+            str(tmp_path / "lake"),
+            str(tmp_path / "manifest"),
+            str(tmp_path / "ckpt"),
+            quarantine_dir=qdir,
+            catalog_path=cat_dir,
+        )
+        q.awaitTermination(120)
+        assert q.exception() is None
+
+    assert sorted((r.ID, r.attempts) for r in spark.read.parquet(qdir).collect()) == [
+        ("7", 1), ("7", 2), ("8", 1), ("8", 2)
+    ]
+    assert cached_rdds() - before == set()
+
+
 def test_streaming_bars_feed_batch_indicators(spark, tmp_path) -> None:
     """Lambda composition: streaming OHLC bars land in a checkpointed
     parquet sink; the batch indicator panel then reads the landed bars
