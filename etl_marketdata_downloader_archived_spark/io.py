@@ -816,7 +816,8 @@ def incremental_rollup(
         _ROLLUP_COMBINE[kind](f"{col}_{kind}").alias(f"{col}_{kind}")
         for col, kind in spec
     ]
-    if not os.path.exists(path):
+    jvm_path, fs = _vfs(spark, path)
+    if not fs.exists(jvm_path(path)):
         delta.write.partitionBy(partition_col).parquet(path)
         return
     touched = [r[0] for r in delta.select(partition_col).distinct().collect()]

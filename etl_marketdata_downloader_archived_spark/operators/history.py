@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from ..io import _vfs, publish_small_table, read_version, recover_small_table
+
 
 def scd2_history(
     log: DataFrame,
@@ -140,10 +142,13 @@ def scd2_foreach_batch(
     micro-batch into the persistent history at ``path`` via
     ``scd2_merge`` (first batch bootstraps with ``scd2_history``).
     Streaming ingest IS the monotone-arrival case the incremental fold
-    assumes. The merged history is materialized (localCheckpoint)
-    before overwriting the path it was read from; history tables are
-    dimension-sized (rows = state changes), so the single-file
-    overwrite is the catalog-update pattern, not a fact-table rewrite.
+    assumes. ``path`` may be any Hadoop URI (file://, hdfs://,
+    s3a://...). The merged history is published with
+    ``io.publish_small_table`` (stage, then rename-swap), so a crash
+    mid-write keeps the previous history instead of deleting it;
+    history tables are dimension-sized (rows = state changes), so the
+    single-file publish is the catalog-update pattern, not a
+    fact-table rewrite.
 
     Usage::
 
@@ -151,22 +156,17 @@ def scd2_foreach_batch(
             scd2_foreach_batch("/lake/catalog_history", ["k"], "ts", ["status"])
         ).option("checkpointLocation", ckpt).start()
     """
-    import os
-
     def fold(batch_df: DataFrame, _epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        if os.path.exists(path):
+        recover_small_table(spark, path)
+        jvm_path, fs = _vfs(spark, path)
+        if fs.exists(jvm_path(path)):
             merged = scd2_merge(
                 spark.read.parquet(path), batch_df, keys, ts_col, attrs
             )
         else:
             merged = scd2_history(batch_df, keys, ts_col, attrs)
-        (
-            merged.localCheckpoint(eager=True)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(path)
-        )
+        publish_small_table(merged, path)
 
     return fold
 
@@ -191,6 +191,4 @@ def bitemporal_read(
     belief - exactly the property a versioned history has and a
     mutable one cannot offer. Pure composition: one pinned snapshot
     scan + snapshot_at's filter; no join, no window."""
-    from ..io import read_version
-
     return snapshot_at(read_version(spark, root, tx_version), valid_at)

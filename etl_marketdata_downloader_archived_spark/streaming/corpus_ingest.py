@@ -40,7 +40,8 @@ written once below; each ingest's ``process`` keeps only its screen:
    ``_greedy_admit`` (intra-batch admission) and ``_commit`` - the
    crash-ordered commit, whose docstring holds the durability, replay
    and maintenance rules.
-5. ``_start`` - the ``foreachBatch`` + ``availableNow`` tail.
+5. ``file_source._start`` - the ``foreachBatch`` + ``availableNow``
+   tail every streaming sink shares.
 
 DSIR shares steps 1-3 and 5; its commit (append marker, corpus rows,
 model fold) is its own, documented on ``start_corpus_ingest_dsir``.
@@ -91,6 +92,7 @@ from ..operators.text import (
     quality_score,
     stopword_ratio,
 )
+from .file_source import _start
 
 
 def _dir_exists(spark, path: str) -> bool:
@@ -418,21 +420,6 @@ def _commit(
         >= ing.compact_trigger_files
     ):
         compact_postings(spark, ing.postings_dir)
-
-
-def _start(
-    docs: DataFrame,
-    process: Callable[[DataFrame, int], None],
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """Run ``process`` per micro-batch, checkpoint-as-ack, until the
-    source is drained (run-to-completion in tests and backfills)."""
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def gated_doc_stream(

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.profile import ks_from_counts
+from .file_source import _start
 
 __all__ = ["reference_counts", "batch_ks", "start_drift_monitor"]
 
@@ -183,9 +184,4 @@ def start_drift_monitor(
             # release the batch-counts cache before the next one
             b.unpersist()
 
-    w = stream_df.writeStream.foreachBatch(on_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(stream_df, on_batch, checkpoint, trigger_available_now)

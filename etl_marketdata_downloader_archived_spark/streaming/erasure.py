@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .file_source import _start
+
 __all__ = ["start_purge_with_audit"]
 
 
@@ -169,9 +171,4 @@ def start_purge_with_audit(
             )
             publish_small_table(new_store, store_path)
 
-    return (
-        df.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(df, fold, checkpoint)

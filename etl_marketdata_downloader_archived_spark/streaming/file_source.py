@@ -17,8 +17,29 @@ Reference mapping:
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
+
+
+def _start(
+    df: DataFrame,
+    process: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    available_now: bool = True,
+) -> StreamingQuery:
+    """Run ``process`` per micro-batch, checkpoint-as-ack: the one
+    ``foreachBatch`` tail of the package's streaming sinks.
+    ``available_now`` runs until the source is drained (run-to-
+    completion in tests and backfills); False keeps Spark's default
+    trigger, a micro-batch as soon as the previous one ends."""
+    w = df.writeStream.foreachBatch(process).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if available_now:
+        w = w.trigger(availableNow=True)
+    return w.start()
 
 
 def file_task_stream(
@@ -72,9 +93,4 @@ def start_lake_sink(
         # accumulate one set per micro-batch
         out["release"]()
 
-    return (
-        tasks.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(tasks, process, checkpoint_dir)

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..io import _vfs
 from ..operators.evaluation import binary_auc
+from .file_source import _start
 
 __all__ = [
     "start_auc_monitor",
@@ -123,12 +124,7 @@ def start_auc_monitor(
             )
         on_result(out, batch_id)
 
-    w = stream_df.writeStream.foreachBatch(on_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(stream_df, on_batch, checkpoint, trigger_available_now)
 
 
 def start_percentile_monitor(
@@ -206,12 +202,7 @@ def start_percentile_monitor(
             )
         on_result(out, batch_id)
 
-    w = stream_df.writeStream.foreachBatch(on_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(stream_df, on_batch, checkpoint, trigger_available_now)
 
 
 class _StateSnapshots:
@@ -536,12 +527,7 @@ def start_seasonal_monitor(
         )
         on_result(out, batch_id)
 
-    w = stream_df.writeStream.foreachBatch(on_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(stream_df, on_batch, checkpoint, trigger_available_now)
 
 
 def start_trending_monitor(
@@ -624,9 +610,4 @@ def start_trending_monitor(
         )
         on_result(out, batch_id)
 
-    w = stream_df.writeStream.foreachBatch(on_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(stream_df, on_batch, checkpoint, trigger_available_now)

@@ -7,11 +7,34 @@ per-key state with a TTL: attempts accumulate across micro-batches,
 and a key crossing the bound is emitted as a dead-letter row exactly
 once. State is bounded by the processing-time timeout (the streaming
 analog of the queue's message retention).
+
+Every operator here is one per-key ``step(key, pdf, prev) -> (out,
+new_state)`` that ``_fold`` runs under one GroupState protocol:
+
+- a key whose timeout fired is removed and emits nothing;
+- otherwise the key's frames are concatenated, and an empty batch is
+  a no-op;
+- ``prev`` is the carried state tuple, None for a new or expired key;
+- a non-None ``new_state`` is stored and, with a TTL, re-arms the
+  key's timeout; None leaves both the store and the timeout as they
+  were (how an operator keeps state for only some keys);
+- ``out`` is emitted only when it has rows.
+
+``state_ttl_ms`` expires keys quiet for that long, so state tracks the
+live key set, not history - use it on continuous streams. Leave it
+None under run-to-completion triggers (availableNow): with a
+processing-time timeout configured, the scheduler must keep running
+empty batches to fire expirations, so the query never reaches a final
+batch. An expired key restarts from ``prev=None``.
+
+The debounce and sessionize steps are module-level factories because
+their transformWithState ports (streaming/topk_state.py) run the same
+steps on a named ValueState.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import Any
 
 import numpy as np
@@ -21,6 +44,81 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 ATTEMPTS_SCHEMA = "ID string, attempts long, dead boolean"
 _STATE_SCHEMA = "attempts long, dead boolean"
+
+# step(key, pdf, prev state or None) -> (out, new state or None)
+Step = Callable[[tuple, pd.DataFrame, Any], tuple]
+
+
+def _apply(
+    step: Step,
+    key: tuple,
+    pdfs: Iterator[pd.DataFrame],
+    prev: tuple | None,
+    store: Callable[[tuple], None],
+) -> Iterator[pd.DataFrame]:
+    """One key's batch under the fold contract: concatenate, run
+    ``step``, ``store`` a non-None new state, yield a non-empty out."""
+    pdf = pd.concat(list(pdfs), ignore_index=True)
+    if len(pdf) == 0:
+        return
+    out, new_state = step(key, pdf, prev)
+    if new_state is not None:
+        store(new_state)
+    if len(out):
+        yield out
+
+
+def _fold(
+    df: DataFrame,
+    keys: list[str],
+    step: Step,
+    out_schema: str,
+    state_schema: str,
+    state_ttl_ms: int | None,
+    output_mode: str = "append",
+) -> DataFrame:
+    """``step`` per key per micro-batch under the module's GroupState
+    protocol (module docstring)."""
+    use_ttl = state_ttl_ms is not None
+
+    def update(
+        key: tuple[Any, ...],
+        pdfs: Iterator[pd.DataFrame],
+        state: GroupState,
+    ) -> Iterator[pd.DataFrame]:
+        if state.hasTimedOut:
+            state.remove()
+            return
+
+        def store(new_state: tuple) -> None:
+            state.update(new_state)
+            if use_ttl:
+                state.setTimeoutDuration(state_ttl_ms)
+
+        yield from _apply(
+            step, key, pdfs, state.get if state.exists else None, store
+        )
+
+    return df.groupBy(*keys).applyInPandasWithState(
+        update,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode=output_mode,
+        timeoutConf=(
+            GroupStateTimeout.ProcessingTimeTimeout
+            if use_ttl
+            else GroupStateTimeout.NoTimeout
+        ),
+    )
+
+
+def _types(df: DataFrame) -> dict[str, str]:
+    return {f.name: f.dataType.simpleString() for f in df.schema.fields}
+
+
+def _ddl(df: DataFrame, cols: list[str]) -> str:
+    types = _types(df)
+    return ", ".join(f"{c} {types[c]}" for c in cols)
 
 
 def track_attempts(
@@ -34,33 +132,18 @@ def track_attempts(
     Input: a stream of failure events keyed by ``id_col``. Output: one
     row per (key, batch-with-failures) carrying the cumulative attempt
     count; ``dead=True`` exactly on the batch where the count crosses
-    ``max_attempts`` (the redrive moment).
+    ``max_attempts`` (the redrive moment). Update mode.
 
     ``state_ttl_ms`` expires quiet keys so state tracks the live
-    failure set, not history - use it on continuous streams. Leave it
-    None for run-to-completion triggers (availableNow): with a
-    processing-time timeout configured, the scheduler must keep running
-    empty batches to fire expirations, so the query never reaches a
-    final batch.
+    failure set, not history (see the module docstring for the
+    trade-off against availableNow).
     """
-    use_ttl = state_ttl_ms is not None
 
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        n_new = sum(len(pdf) for pdf in pdfs)
-        attempts, was_dead = state.get if state.exists else (0, False)
-        attempts += n_new
+    def step(key, pdf, prev):
+        attempts, was_dead = prev or (0, False)
+        attempts += len(pdf)
         dead = attempts >= max_attempts
-        state.update((attempts, dead))
-        if use_ttl:
-            state.setTimeoutDuration(state_ttl_ms)
-        yield pd.DataFrame(
+        out = pd.DataFrame(
             {
                 "ID": [key[0]],
                 "attempts": [attempts],
@@ -68,17 +151,11 @@ def track_attempts(
                 "dead": [dead and not was_dead],
             }
         )
+        return out, (attempts, dead)
 
-    return failures.groupBy(id_col).applyInPandasWithState(
-        update,
-        outputStructType=ATTEMPTS_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if use_ttl
-            else GroupStateTimeout.NoTimeout
-        ),
+    return _fold(
+        failures, [id_col], step, ATTEMPTS_SCHEMA, _STATE_SCHEMA,
+        state_ttl_ms, output_mode="update",
     )
 
 
@@ -102,54 +179,54 @@ def streaming_ewma(
     timestamp fold in arrival order - feed the stream through a
     watermark/sort upstream when strict time order matters.
 
-    ``state_ttl_ms`` expires quiet keys (continuous streams); leave it
-    None under run-to-completion triggers, same trade-off as
-    track_attempts above.
+    ``state_ttl_ms``: module docstring.
     """
-    in_schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    out_schema = ", ".join(
-        f"{c} {in_schema[c]}" for c in (key, ts, value)
-    ) + ", ewma double"
-    use_ttl = state_ttl_ms is not None
 
-    def update(
-        key_t: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if len(pdf) == 0:
-            return
+    def step(key_t, pdf, prev):
         pdf = pdf.sort_values(ts, ignore_index=True)
-        if state.exists:
-            (prev,) = state.get
+        if prev is not None:
             seeded = pd.concat(
-                [pd.Series([prev]), pdf[value]], ignore_index=True
+                [pd.Series([prev[0]]), pdf[value]], ignore_index=True
             )
             ew = seeded.ewm(alpha=alpha, adjust=False).mean().iloc[1:]
             ew.index = pdf.index
         else:
             ew = pdf[value].ewm(alpha=alpha, adjust=False).mean()
         pdf["ewma"] = ew
-        state.update((float(ew.iloc[-1]),))
-        if use_ttl:
-            state.setTimeoutDuration(state_ttl_ms)
-        yield pdf[[key, ts, value, "ewma"]]
+        return pdf[[key, ts, value, "ewma"]], (float(ew.iloc[-1]),)
 
-    return df.groupBy(key).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType="last_ewma double",
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if use_ttl
-            else GroupStateTimeout.NoTimeout
-        ),
+    return _fold(
+        df, [key], step, _ddl(df, [key, ts, value]) + ", ewma double",
+        "last_ewma double", state_ttl_ms,
     )
+
+
+def _sessionize_step(
+    ts: str, gap: str | float, tiebreak: str | None, cols: list[str]
+) -> Step:
+    """The session-labelling step of both sessionize twins. ``gap`` is
+    an interval string ("30 minutes", "1 day", "1 hour 30 minutes" -
+    what the batch twin's INTERVAL accepts) or a number of seconds.
+    State is (last event ns, current session seq); out is ``cols`` +
+    session_seq."""
+    gap_ns = (
+        pd.Timedelta(gap) if isinstance(gap, str) else pd.Timedelta(seconds=gap)
+    ).value
+    sort_cols = [ts] + ([tiebreak] if tiebreak else [])
+
+    def step(key, pdf, prev):
+        pdf = pdf.sort_values(sort_cols, kind="mergesort", ignore_index=True)
+        t_ns = pdf[ts].astype("int64")
+        last = t_ns.shift(1)
+        seq = 0
+        if prev is not None:
+            last.iloc[0], seq = int(prev[0]), int(prev[1])
+        is_new = last.isna() | ((t_ns - last) > gap_ns)
+        pdf["session_seq"] = seq + is_new.cumsum().astype("int64")
+        new_state = (int(t_ns.iloc[-1]), int(pdf["session_seq"].iloc[-1]))
+        return pdf[cols + ["session_seq"]], new_state
+
+    return step
 
 
 def streaming_sessionize(
@@ -174,58 +251,12 @@ def streaming_sessionize(
     streaming_ewma: rows arriving in a later batch than a larger
     timestamp fold in arrival order.
 
-    ``state_ttl_ms`` expires quiet users (continuous streams); leave
-    None under run-to-completion triggers."""
-    gap_n, gap_unit = gap.split()
-    gap_s = float(gap_n) * {
-        "seconds": 1, "second": 1, "minutes": 60, "minute": 60,
-        "hours": 3600, "hour": 3600,
-    }[gap_unit]
-    in_schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    ``state_ttl_ms`` expires quiet users: module docstring."""
     cols = [user, ts] + ([tiebreak] if tiebreak else [])
-    out_schema = ", ".join(
-        f"{c} {in_schema[c]}" for c in cols
-    ) + ", session_seq long"
-    use_ttl = state_ttl_ms is not None
-
-    def update(
-        key_t: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if len(pdf) == 0:
-            return
-        sort_cols = [ts] + ([tiebreak] if tiebreak else [])
-        pdf = pdf.sort_values(sort_cols, ignore_index=True)
-        t_ns = pdf[ts].astype("int64")
-        if state.exists:
-            last_ns, seq = state.get
-        else:
-            last_ns, seq = None, 0
-        prev = t_ns.shift(1)
-        if last_ns is not None:
-            prev.iloc[0] = last_ns
-        is_new = prev.isna() | ((t_ns - prev) > gap_s * 1e9)
-        pdf["session_seq"] = seq + is_new.cumsum().astype("int64")
-        state.update((int(t_ns.iloc[-1]), int(pdf["session_seq"].iloc[-1])))
-        if use_ttl:
-            state.setTimeoutDuration(state_ttl_ms)
-        yield pdf[cols + ["session_seq"]]
-
-    return df.groupBy(user).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType="last_ts_ns long, seq long",
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if use_ttl
-            else GroupStateTimeout.NoTimeout
-        ),
+    return _fold(
+        df, [user], _sessionize_step(ts, gap, tiebreak, cols),
+        _ddl(df, cols) + ", session_seq long", "last_ts_ns long, seq long",
+        state_ttl_ms,
     )
 
 
@@ -261,16 +292,16 @@ def streaming_attribution(
     same caveat as streaming_ewma; watermark/sort upstream when
     strict order matters across batches.
 
-    ``state_ttl_ms`` expires quiet users (continuous streams); leave
-    None under run-to-completion triggers. State is O(live users) x
-    two touches - the minimum exact attribution needs.
+    ``state_ttl_ms`` expires quiet users (module docstring). State is
+    O(live users) x two touches - the minimum exact attribution needs;
+    a user with no touch yet stores none.
 
     Emits one row per conversion: user, conversion_id,
     conversion_ts_us, channel, touch_id, latency_us - the batch
     operator's exact schema with the input's own key/id/ts types
     (NULL channel = unattributed).
     """
-    in_t = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    in_t = _types(df)
     out_schema = (
         f"{user} {in_t[user]}, conversion_id {in_t[id_col]}, "
         f"conversion_ts_us {in_t[ts_us]}, channel {in_t[type_col]}, "
@@ -280,27 +311,18 @@ def streaming_attribution(
         f"t {in_t[ts_us]}, i {in_t[id_col]}, ty {in_t[type_col]}, "
         f"pt {in_t[ts_us]}, pi {in_t[id_col]}, pty {in_t[type_col]}"
     )
-    use_ttl = state_ttl_ms is not None
     channels = set(channel_types)
+    out_cols = [
+        user, "conversion_id", "conversion_ts_us", "channel", "touch_id",
+        "latency_us",
+    ]
 
-    def update(
-        key_t: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if len(pdf) == 0:
-            return
+    def step(key_t, pdf, prev):
         pdf = pdf.sort_values([ts_us, id_col], ignore_index=True)
-        touch = None
-        pending = None
-        if state.exists:
-            st = state.get
-            touch = (st[0], st[1], st[2]) if st[0] is not None else None
-            pending = (st[3], st[4], st[5]) if st[3] is not None else None
+        touch = pending = None
+        if prev is not None:
+            touch = tuple(prev[:3]) if prev[0] is not None else None
+            pending = tuple(prev[3:]) if prev[3] is not None else None
         out = []
         for t, ty, i in zip(
             pdf[ts_us].tolist(), pdf[type_col].tolist(), pdf[id_col].tolist()
@@ -326,32 +348,12 @@ def streaming_attribution(
                 pending is None or (t, i) > (pending[0], pending[1])
             ):
                 pending = (t, i, ty)
+        new_state = None
         if touch is not None or pending is not None:
-            tt = touch or (None, None, None)
-            pp = pending or (None, None, None)
-            state.update((tt[0], tt[1], tt[2], pp[0], pp[1], pp[2]))
-            if use_ttl:
-                state.setTimeoutDuration(state_ttl_ms)
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    user, "conversion_id", "conversion_ts_us",
-                    "channel", "touch_id", "latency_us",
-                ],
-            )
+            new_state = (touch or (None,) * 3) + (pending or (None,) * 3)
+        return pd.DataFrame(out, columns=out_cols), new_state
 
-    return df.groupBy(user).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if use_ttl
-            else GroupStateTimeout.NoTimeout
-        ),
-    )
+    return _fold(df, [user], step, out_schema, state_schema, state_ttl_ms)
 
 
 def streaming_transitions(
@@ -380,38 +382,24 @@ def streaming_transitions(
     caveat as streaming_sessionize/streaming_ewma: rows arriving in a
     LATER batch than a larger timestamp fold in arrival order.
 
-    ``state_ttl_ms`` expires quiet users (continuous streams); leave
-    None under run-to-completion triggers. State is O(live users) x
-    one event value."""
-    in_schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    ``state_ttl_ms`` expires quiet users (module docstring). State is
+    O(live users) x one event value."""
+    in_schema = _types(df)
     out_schema = (
         f"{user} {in_schema[user]}, {ts} {in_schema[ts]}, "
         f"from_event {in_schema[event]}, to_event {in_schema[event]}"
     )
-    use_ttl = state_ttl_ms is not None
+    sort_cols = [ts] + ([tiebreak] if tiebreak else [])
 
-    def update(
-        key_t: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if len(pdf) == 0:
-            return
-        sort_cols = [ts] + ([tiebreak] if tiebreak else [])
+    def step(key_t, pdf, prev):
         pdf = pdf.sort_values(sort_cols, ignore_index=True)
         ev = pdf[event]
         # shift through OBJECT dtype: a plain int64 shift promotes to
         # float64 (the introduced NaN), silently corrupting integer
         # event codes above 2^53 in the emitted from_event
         frm = ev.astype(object).shift(1)
-        if state.exists:
-            _last_ns, last_ev = state.get
-            frm.iloc[0] = last_ev
-        t_ns = pdf[ts].astype("int64")
+        if prev is not None:
+            frm.iloc[0] = prev[1]
         out = pd.DataFrame(
             {
                 user: pdf[user],
@@ -434,21 +422,11 @@ def streaming_transitions(
             last = None
         elif hasattr(last, "item"):
             last = last.item()
-        state.update((int(t_ns.iloc[-1]), last))
-        if use_ttl:
-            state.setTimeoutDuration(state_ttl_ms)
-        yield out
+        return out, (int(pdf[ts].astype("int64").iloc[-1]), last)
 
-    return df.groupBy(user).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=f"last_ts_ns long, last_event {in_schema[event]}",
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if use_ttl
-            else GroupStateTimeout.NoTimeout
-        ),
+    return _fold(
+        df, [user], step, out_schema,
+        f"last_ts_ns long, last_event {in_schema[event]}", state_ttl_ms,
     )
 
 
@@ -493,14 +471,9 @@ def streaming_reconciliation(
 
     ``state_ttl_ms`` expires settled orders on continuous streams
     (after which a very-late line restarts that order's total from
-    zero - bound it by the book-closing window); leave None under
-    run-to-completion triggers, the family's usual trade-off."""
+    zero - bound it by the book-closing window); module docstring for
+    the rest of the trade-off."""
     from pyspark.sql import functions as F
-
-    key_t = {f.name: f.dataType.simpleString() for f in lines.schema.fields}[
-        order_key
-    ]
-    use_ttl = state_ttl_ms is not None
 
     o_ref = orders.select(
         F.col("o_orderkey").alias("_o_key"),
@@ -522,64 +495,41 @@ def streaming_reconciliation(
     ).join(o_ref, F.col(order_key) == F.col("_o_key"), "left")
 
     out_schema = (
-        f"o_orderkey {key_t}, o_orderstatus string, order_c bigint, "
-        "line_c bigint, n_lines bigint, abs_diff_c bigint, status string"
+        f"o_orderkey {_types(lines)[order_key]}, o_orderstatus string, "
+        "order_c bigint, line_c bigint, n_lines bigint, abs_diff_c bigint, "
+        "status string"
     )
     tol = int(tolerance_c)
 
-    def update(
-        key_tuple: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if len(pdf) == 0:
-            return
-        prev_c, prev_n = state.get if state.exists else (0, 0)
+    def step(key_tuple, pdf, prev):
+        prev_c, prev_n = prev or (0, 0)
         line_c = int(prev_c) + int(pdf["_line_c"].sum())
         n = int(prev_n) + len(pdf)
-        state.update((line_c, n))
-        if use_ttl:
-            state.setTimeoutDuration(state_ttl_ms)
+        row = {
+            "o_orderkey": key_tuple[0],
+            "o_orderstatus": None,
+            "order_c": None,
+            "line_c": line_c,
+            "n_lines": n,
+            "abs_diff_c": None,
+            "status": "no_order",
+        }
         have = pdf["_o_key"].notna()
         if have.any():
             i = have.idxmax()
             order_c = int(pdf["_order_c"].iloc[i])
             diff = abs(order_c - line_c)
-            row = {
-                "o_orderkey": key_tuple[0],
-                "o_orderstatus": pdf["_o_status"].iloc[i],
-                "order_c": order_c,
-                "line_c": line_c,
-                "n_lines": n,
-                "abs_diff_c": diff,
-                "status": "ok" if diff <= tol else "mismatch",
-            }
-        else:
-            row = {
-                "o_orderkey": key_tuple[0],
-                "o_orderstatus": None,
-                "order_c": None,
-                "line_c": line_c,
-                "n_lines": n,
-                "abs_diff_c": None,
-                "status": "no_order",
-            }
-        yield pd.DataFrame([row])
+            row.update(
+                o_orderstatus=pdf["_o_status"].iloc[i],
+                order_c=order_c,
+                abs_diff_c=diff,
+                status="ok" if diff <= tol else "mismatch",
+            )
+        return pd.DataFrame([row]), (line_c, n)
 
-    return enriched.groupBy(order_key).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType="line_c long, n_lines long",
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if use_ttl
-            else GroupStateTimeout.NoTimeout
-        ),
+    return _fold(
+        enriched, [order_key], step, out_schema, "line_c long, n_lines long",
+        state_ttl_ms,
     )
 
 
@@ -619,32 +569,18 @@ def streaming_fd_monitor(
 
     ``state_ttl_ms`` expires quiet keys on continuous streams (after
     which a key's history restarts - use only when the FD window is
-    naturally bounded, e.g. per-day order ids); leave None under
-    run-to-completion triggers."""
-    in_schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    naturally bounded, e.g. per-day order ids); module docstring for
+    the rest of the trade-off."""
+    in_schema = _types(df)
     det_t, dep_t = in_schema[determinant], in_schema[dependent]
     out_schema = (
         f"{determinant} {det_t}, n_distinct long, n_rows long, "
         f"witness_min {dep_t}, witness_max {dep_t}"
     )
-    use_ttl = state_ttl_ms is not None
 
-    def update(
-        key_t: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if len(pdf) == 0:
-            return
-        if state.exists:
-            vals, has_null, n_rows = state.get
-            seen = set(vals)
-        else:
-            seen, has_null, n_rows = set(), False, 0
+    def step(key_t, pdf, prev):
+        vals, has_null, n_rows = prev or ((), False, 0)
+        seen = set(vals)
         col = pdf[dependent]
         nn = col[col.notna()]
         # denumpify so scalars round-trip the state schema exactly.
@@ -671,35 +607,23 @@ def streaming_fd_monitor(
                 "longer a functional dependency - fix the declaration "
                 "or raise the cap deliberately."
             )
-        state.update((sorted(seen), has_null, n_rows))
-        if use_ttl:
-            state.setTimeoutDuration(state_ttl_ms)
         n_distinct = len(seen) + (1 if has_null else 0)
+        rows = []
         if n_distinct > 1:
-            yield pd.DataFrame(
-                [
-                    {
-                        determinant: key_t[0],
-                        "n_distinct": n_distinct,
-                        "n_rows": n_rows,
-                        "witness_min": min(seen) if seen else None,
-                        "witness_max": max(seen) if seen else None,
-                    }
-                ]
+            rows.append(
+                {
+                    determinant: key_t[0],
+                    "n_distinct": n_distinct,
+                    "n_rows": n_rows,
+                    "witness_min": min(seen) if seen else None,
+                    "witness_max": max(seen) if seen else None,
+                }
             )
+        return pd.DataFrame(rows), (sorted(seen), has_null, n_rows)
 
-    return df.groupBy(determinant).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=(
-            f"vals array<{dep_t}>, has_null boolean, n_rows long"
-        ),
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if use_ttl
-            else GroupStateTimeout.NoTimeout
-        ),
+    return _fold(
+        df, [determinant], step, out_schema,
+        f"vals array<{dep_t}>, has_null boolean, n_rows long", state_ttl_ms,
     )
 
 
@@ -751,32 +675,18 @@ def streaming_fifo(
     and both side-counts named rather than silently OOMing an
     executor; raise the cap deliberately for ledgers whose genuine
     float is larger."""
-    in_schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    in_schema = _types(df)
     k_t, s_t = in_schema[key], in_schema[seq]
     out_schema = f"{key} {k_t}, in_seq {s_t}, out_seq {s_t}, alloc bigint"
     state_schema = (
         f"lot_seq array<{s_t}>, lot_rem array<bigint>, "
         f"dem_seq array<{s_t}>, dem_rem array<bigint>"
     )
-    use_ttl = state_ttl_ms is not None
 
-    def update(
-        key_t: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if len(pdf) == 0:
-            return
-        if state.exists:
-            lot_seq, lot_rem, dem_seq, dem_rem = (
-                list(x) for x in state.get
-            )
-        else:
-            lot_seq, lot_rem, dem_seq, dem_rem = [], [], [], []
+    def step(key_t, pdf, prev):
+        lot_seq, lot_rem, dem_seq, dem_rem = (
+            [list(x) for x in prev] if prev is not None else [[], [], [], []]
+        )
         pdf = pdf.sort_values(seq, ignore_index=True)
         matches: list[tuple] = []
         li = di = 0  # consumed-prefix pointers (pop-free drain)
@@ -830,33 +740,17 @@ def streaming_fifo(
                 "no one draws) - fix the feed or raise the cap "
                 "deliberately."
             )
-        state.update(
-            (lot_seq[li:], lot_rem[li:], dem_seq[di:], dem_rem[di:])
+        out = pd.DataFrame(
+            {
+                key: [key_t[0]] * len(matches),
+                "in_seq": [m[0] for m in matches],
+                "out_seq": [m[1] for m in matches],
+                "alloc": [m[2] for m in matches],
+            }
         )
-        if use_ttl:
-            state.setTimeoutDuration(state_ttl_ms)
-        if matches:
-            kv = key_t[0]
-            yield pd.DataFrame(
-                {
-                    key: [kv] * len(matches),
-                    "in_seq": [m[0] for m in matches],
-                    "out_seq": [m[1] for m in matches],
-                    "alloc": [m[2] for m in matches],
-                }
-            )
+        return out, (lot_seq[li:], lot_rem[li:], dem_seq[di:], dem_rem[di:])
 
-    return df.groupBy(key).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if use_ttl
-            else GroupStateTimeout.NoTimeout
-        ),
-    )
+    return _fold(df, [key], step, out_schema, state_schema, state_ttl_ms)
 
 
 def streaming_purge_filter(
@@ -886,21 +780,7 @@ def streaming_purge_filter(
     ONE boolean per doomed subject - never a row buffer;
     ``state_ttl_ms`` ages it out once the retention window passes on
     continuous streams."""
-    in_schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    out_schema = ", ".join(f"{f.name} {in_schema[f.name]}" for f in df.schema.fields)
-    use_ttl = state_ttl_ms is not None
-
-    def update(
-        key_t: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if len(pdf) == 0:
-            return
+    def step(key_t, pdf, prev):
         # STABLE sort with the directive ordered BEFORE data at an
         # equal timestamp: an unstable single-key sort could emit a
         # data row stamped at the directive's exact ts - a leak that
@@ -910,7 +790,7 @@ def streaming_purge_filter(
         ).sort_values(
             [ts, "_is_data"], kind="mergesort", ignore_index=True
         )
-        doomed = bool(state.get[0]) if state.exists else False
+        doomed = prev is not None and bool(prev[0])
         keep = []
         for k in pdf[kind].tolist():
             if k == purge_value:
@@ -918,29 +798,14 @@ def streaming_purge_filter(
                 keep.append(False)  # the directive itself never emits
             else:
                 keep.append(not doomed)
-        # state rows exist ONLY for doomed subjects - updating
-        # (False,) for every key ever seen would grow the store with
-        # total subjects, not purged ones
-        if doomed:
-            state.update((True,))
-            if use_ttl:
-                state.setTimeoutDuration(state_ttl_ms)
-        out = pdf[pd.Series(keep, index=pdf.index)].drop(
-            columns=["_is_data"]
-        )
-        if len(out):
-            yield out
+        out = pdf[pd.Series(keep, index=pdf.index)].drop(columns=["_is_data"])
+        # state rows exist ONLY for doomed subjects - storing (False,)
+        # for every key ever seen would grow the store with total
+        # subjects, not purged ones
+        return out, (True,) if doomed else None
 
-    return df.groupBy(key).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType="doomed boolean",
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if use_ttl
-            else GroupStateTimeout.NoTimeout
-        ),
+    return _fold(
+        df, [key], step, _ddl(df, df.columns), "doomed boolean", state_ttl_ms
     )
 
 
@@ -968,31 +833,14 @@ def streaming_running_balance(
     key; ``state_ttl_ms`` ages out idle keys on continuous streams
     (after which a key's balance restarts from zero - use only when
     the ledger is naturally windowed)."""
-    in_schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    k_t = in_schema[key]
     out_schema = (
-        f"{key} {k_t}, n_moves long, min_bal long, max_bal long, "
-        "end_bal long"
+        f"{key} {_types(df)[key]}, n_moves long, min_bal long, "
+        "max_bal long, end_bal long"
     )
-    use_ttl = state_ttl_ms is not None
 
-    def update(
-        key_t: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if len(pdf) == 0:
-            return
-        if state.exists:
-            bal, mn, mx, n = state.get
-        else:
-            bal, mn, mx, n = 0, None, None, 0
-        pdf = pdf.sort_values(seq, ignore_index=True)
-        for d in pdf[delta].tolist():
+    def step(key_t, pdf, prev):
+        bal, mn, mx, n = prev or (0, None, None, 0)
+        for d in pdf.sort_values(seq, ignore_index=True)[delta].tolist():
             if d != int(d):
                 raise ValueError(
                     f"streaming_running_balance: non-integral delta "
@@ -1003,10 +851,7 @@ def streaming_running_balance(
             mn = bal if mn is None else min(mn, bal)
             mx = bal if mx is None else max(mx, bal)
             n += 1
-        state.update((bal, mn, mx, n))
-        if use_ttl:
-            state.setTimeoutDuration(state_ttl_ms)
-        yield pd.DataFrame(
+        out = pd.DataFrame(
             [
                 {
                     key: key_t[0],
@@ -1017,18 +862,36 @@ def streaming_running_balance(
                 }
             ]
         )
+        return out, (bal, mn, mx, n)
 
-    return df.groupBy(key).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType="bal long, mn long, mx long, n long",
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if use_ttl
-            else GroupStateTimeout.NoTimeout
-        ),
+    return _fold(
+        df, [key], step, out_schema, "bal long, mn long, mx long, n long",
+        state_ttl_ms,
     )
+
+
+def _debounce_step(
+    ts: str, gap_us: int, tiebreak: str | None, cols: list[str]
+) -> Step:
+    """The throttle step of both debounce twins: keep an event iff it
+    lands more than ``gap_us`` after the last KEPT event of its key.
+    State is that one int64 anchor (microseconds); out is the kept
+    rows' ``cols``."""
+    sort_cols = [ts] + ([tiebreak] if tiebreak else [])
+
+    def step(key, pdf, prev):
+        pdf = pdf.sort_values(sort_cols, kind="mergesort", ignore_index=True)
+        anchor = int(prev[0]) if prev is not None else None
+        keep = []
+        for v in (pdf[ts].astype("int64") // 1000).tolist():  # ns -> us
+            if anchor is None or v - anchor > gap_us:
+                keep.append(True)
+                anchor = v
+            else:
+                keep.append(False)
+        return pdf.loc[keep, cols], (int(anchor),)
+
+    return step
 
 
 def streaming_debounce(
@@ -1054,49 +917,7 @@ def streaming_debounce(
     on continuous streams set ``state_ttl_ms`` >= the gap to age out
     quiet keys (an expired anchor re-emits the next event, exactly
     what a gap-long silence means)."""
-    in_schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    out_schema = ", ".join(
-        f"{f.name} {in_schema[f.name]}" for f in df.schema.fields
-    )
-    use_ttl = state_ttl_ms is not None
-
-    def update(
-        key_t: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if len(pdf) == 0:
-            return
-        sort_cols = [ts] + ([tiebreak] if tiebreak else [])
-        pdf = pdf.sort_values(sort_cols, kind="mergesort", ignore_index=True)
-        anchor = state.get[0] if state.exists else None
-        us = (pdf[ts].astype("int64") // 1000).tolist()  # ns -> us
-        keep = []
-        for v in us:
-            if anchor is None or v - anchor > gap_us:
-                keep.append(True)
-                anchor = v
-            else:
-                keep.append(False)
-        state.update((int(anchor),))
-        if use_ttl:
-            state.setTimeoutDuration(state_ttl_ms)
-        out = pdf[pd.Series(keep, index=pdf.index)]
-        if len(out):
-            yield out
-
-    return df.groupBy(*key_cols).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType="anchor_us long",
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if use_ttl
-            else GroupStateTimeout.NoTimeout
-        ),
+    return _fold(
+        df, key_cols, _debounce_step(ts, gap_us, tiebreak, df.columns),
+        _ddl(df, df.columns), "anchor_us long", state_ttl_ms,
     )

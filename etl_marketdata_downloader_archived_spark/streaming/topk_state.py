@@ -30,6 +30,8 @@ from pyspark.sql.streaming.stateful_processor import (
     StatefulProcessorHandle,
 )
 
+from .stateful import _apply, _ddl, _debounce_step, _sessionize_step
+
 __all__ = [
     "streaming_topk_per_key",
     "streaming_debounce_tws",
@@ -121,20 +123,18 @@ def streaming_topk_per_key(
 class _DebounceProcessor(StatefulProcessor):
     """transformWithState port of streaming/stateful.streaming_debounce
     (the smallest applyInPandasWithState twin: one int64 anchor per
-    key). Same fold: rows sort by (ts, tiebreak) within the batch, an
-    event is kept iff it lands more than gap_us after the last KEPT
-    event of its key, and the anchor carries across micro-batches.
-    State TTL replaces the old API's ProcessingTimeTimeout: an expired
-    anchor reads None and the next event re-emits - exactly what a
-    gap-long silence means."""
+    key). It runs that twin's own step (``stateful._debounce_step``):
+    rows sort stably by (ts, tiebreak) within the batch, an event is
+    kept iff it lands more than gap_us after the last KEPT event of
+    its key, and the anchor carries across micro-batches. State TTL
+    replaces the old API's ProcessingTimeTimeout: an expired anchor
+    reads None and the next event re-emits - exactly what a gap-long
+    silence means."""
 
     def __init__(
         self, ts_col: str, gap_us: int, tiebreak, out_cols, ttl_ms
     ) -> None:
-        self._ts = ts_col
-        self._gap = gap_us
-        self._tiebreak = tiebreak
-        self._out_cols = list(out_cols)
+        self._step = _debounce_step(ts_col, gap_us, tiebreak, list(out_cols))
         self._ttl = ttl_ms
 
     def init(self, handle: StatefulProcessorHandle) -> None:
@@ -143,25 +143,9 @@ class _DebounceProcessor(StatefulProcessor):
         )
 
     def handleInputRows(self, key, rows, timerValues):
-        pdf = pd.concat(list(rows), ignore_index=True)
-        if len(pdf) == 0:
-            return
-        sort_cols = [self._ts] + ([self._tiebreak] if self._tiebreak else [])
-        pdf = pdf.sort_values(sort_cols, kind="mergesort", ignore_index=True)
-        cur = self._anchor.get()
-        anchor = int(cur[0]) if cur is not None else None
-        us = (pdf[self._ts].astype("int64") // 1000).tolist()  # ns -> us
-        keep = []
-        for v in us:
-            if anchor is None or v - anchor > self._gap:
-                keep.append(True)
-                anchor = v
-            else:
-                keep.append(False)
-        self._anchor.update((int(anchor),))
-        out = pdf[pd.Series(keep, index=pdf.index)]
-        if len(out):
-            yield out[self._out_cols]
+        return _apply(
+            self._step, key, rows, self._anchor.get(), self._anchor.update
+        )
 
     def close(self) -> None:
         pass
@@ -185,13 +169,10 @@ def streaming_debounce_tws(
     live leg is protobuf-gated in this sandbox and the processor
     kernel test carries the fold semantics (same posture as the
     top-k processor)."""
-    in_schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    out_cols = [f.name for f in df.schema.fields]
-    out_schema = ", ".join(f"{c} {in_schema[c]}" for c in out_cols)
-    proc = _DebounceProcessor(ts, gap_us, tiebreak, out_cols, state_ttl_ms)
+    proc = _DebounceProcessor(ts, gap_us, tiebreak, df.columns, state_ttl_ms)
     return df.groupBy(*key_cols).transformWithStateInPandas(
         statefulProcessor=proc,
-        outputStructType=out_schema,
+        outputStructType=_ddl(df, df.columns),
         outputMode="Append",
         timeMode="ProcessingTime" if state_ttl_ms is not None else "None",
     )
@@ -201,20 +182,18 @@ class _SessionizeProcessor(StatefulProcessor):
     """transformWithState port of streaming/stateful
     .streaming_sessionize (VERDICT r14 item 7: the third
     applyInPandasWithState twin migrated to the new contract behind
-    the same stream==batch test). Same fold as the old twin: a key's
-    rows sort by (ts, tiebreak) within the batch, a session breaks
-    where the gap since the previous event exceeds ``gap_s``, and TWO
-    scalars carry across micro-batches (last event time + running
-    session seq) as one named ValueState row. Native TTL replaces the
-    old ProcessingTimeTimeout: an expired state reads None and the
-    next event restarts at session 1 - exactly what a quiet user's
-    eviction means."""
+    the same stream==batch test). It runs that twin's own step
+    (``stateful._sessionize_step``): a key's rows sort stably by (ts,
+    tiebreak) within the batch, a session breaks where the gap since
+    the previous event exceeds ``gap`` (an interval string or
+    seconds), and TWO scalars carry across micro-batches (last event
+    time + running session seq) as one named ValueState row. Native
+    TTL replaces the old ProcessingTimeTimeout: an expired state reads
+    None and the next event restarts at session 1 - exactly what a
+    quiet user's eviction means."""
 
-    def __init__(self, ts_col, gap_s, tiebreak, out_cols, ttl_ms) -> None:
-        self._ts = ts_col
-        self._gap_ns = gap_s * 1e9
-        self._tiebreak = tiebreak
-        self._out_cols = list(out_cols)
+    def __init__(self, ts_col, gap, tiebreak, out_cols, ttl_ms) -> None:
+        self._step = _sessionize_step(ts_col, gap, tiebreak, list(out_cols))
         self._ttl = ttl_ms
 
     def init(self, handle: StatefulProcessorHandle) -> None:
@@ -224,25 +203,9 @@ class _SessionizeProcessor(StatefulProcessor):
         )
 
     def handleInputRows(self, key, rows, timerValues):
-        pdf = pd.concat(list(rows), ignore_index=True)
-        if len(pdf) == 0:
-            return
-        sort_cols = [self._ts] + ([self._tiebreak] if self._tiebreak else [])
-        pdf = pdf.sort_values(sort_cols, kind="mergesort", ignore_index=True)
-        cur = self._state.get()
-        last_ns, seq = (
-            (int(cur[0]), int(cur[1])) if cur is not None else (None, 0)
+        return _apply(
+            self._step, key, rows, self._state.get(), self._state.update
         )
-        t_ns = pdf[self._ts].astype("int64")
-        prev = t_ns.shift(1)
-        if last_ns is not None:
-            prev.iloc[0] = last_ns
-        is_new = prev.isna() | ((t_ns - prev) > self._gap_ns)
-        pdf["session_seq"] = seq + is_new.cumsum().astype("int64")
-        self._state.update(
-            (int(t_ns.iloc[-1]), int(pdf["session_seq"].iloc[-1]))
-        )
-        yield pdf[self._out_cols + ["session_seq"]]
 
     def close(self) -> None:
         pass
@@ -264,20 +227,11 @@ def streaming_sessionize_tws(
     this sandbox and the processor kernel test carries the fold
     semantics against the batch ``operators.sessions.sessionize``
     (the debounce-port posture)."""
-    gap_n, gap_unit = gap.split()
-    gap_s = float(gap_n) * {
-        "seconds": 1, "second": 1, "minutes": 60, "minute": 60,
-        "hours": 3600, "hour": 3600,
-    }[gap_unit]
-    in_schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     cols = [user, ts] + ([tiebreak] if tiebreak else [])
-    out_schema = ", ".join(
-        f"{c} {in_schema[c]}" for c in cols
-    ) + ", session_seq long"
-    proc = _SessionizeProcessor(ts, gap_s, tiebreak, cols, state_ttl_ms)
+    proc = _SessionizeProcessor(ts, gap, tiebreak, cols, state_ttl_ms)
     return df.select(*cols).groupBy(user).transformWithStateInPandas(
         statefulProcessor=proc,
-        outputStructType=out_schema,
+        outputStructType=_ddl(df, cols) + ", session_seq long",
         outputMode="Append",
         timeMode="ProcessingTime" if state_ttl_ms is not None else "None",
     )

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .file_source import _start
+
 __all__ = ["start_join_view_maintenance"]
 
 
@@ -148,9 +150,4 @@ def start_join_view_maintenance(
             n_buckets=n_buckets,
         )
 
-    return (
-        updates.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(updates, fold, checkpoint)

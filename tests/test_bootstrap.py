@@ -219,6 +219,28 @@ def test_incremental_rollup_matches_oneshot_and_scopes_rewrites(
     assert est(got) == est(oneshot)
 
 
+def test_incremental_rollup_into_a_uri_path(spark, tmp_path) -> None:
+    """A ``file://`` rollup path is found again by the next increment,
+    which merges into it instead of re-creating it."""
+    from etl_marketdata_downloader_archived_spark.io import incremental_rollup
+
+    path = (tmp_path / "rollup").as_uri()
+    facts = spark.createDataFrame(
+        [("d1", "a", 10.0), ("d2", "a", 5.0)], ["day", "source", "amount"]
+    )
+    spec = [("amount", "sum"), ("amount", "count")]
+    for day in ("d1", "d2", "d1"):
+        incremental_rollup(
+            spark, path, facts.filter(f"day = '{day}'"),
+            ["day", "source"], "day", spec,
+        )
+    got = {
+        (r.day, r.source): (r.amount_sum, r.amount_count)
+        for r in spark.read.parquet(path).collect()
+    }
+    assert got == {("d1", "a"): (20.0, 2), ("d2", "a"): (5.0, 1)}
+
+
 def test_streaming_ingest_maintains_incremental_rollup(spark, tmp_path) -> None:
     """foreachBatch + incremental_rollup: a file stream lands two
     micro-batches and the persistent rollup table ends exactly where a

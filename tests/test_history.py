@@ -167,6 +167,31 @@ def test_streaming_scd2_sink_equals_full_rebuild(spark, tmp_path) -> None:
     assert key(spark.read.parquet(hist_path)) == key(full)
 
 
+def test_scd2_sink_folds_into_a_uri_path(spark, tmp_path) -> None:
+    """A ``file://`` history path is found again on the next batch:
+    the fold merges into it instead of re-bootstrapping over it, and
+    the publish leaves no stage or aside copy behind."""
+    from etl_marketdata_downloader_archived_spark.operators.history import (
+        scd2_foreach_batch,
+    )
+
+    hist = tmp_path / "hist"
+    attrs = ["status", "score"]
+    fold = scd2_foreach_batch(hist.as_uri(), ["k"], "ts", attrs)
+    rows_a = [r for r in LOG if r[0] == "A"]
+    fold(spark.createDataFrame(rows_a[:3], COLS), 0)
+    fold(spark.createDataFrame(rows_a[3:], COLS), 1)
+
+    key = lambda df: sorted(  # noqa: E731
+        (r.version, r.status, r.valid_from, r.valid_to, r.is_current)
+        for r in df.collect()
+    )
+    full = scd2_history(spark.createDataFrame(rows_a, COLS), ["k"], "ts", attrs)
+    assert key(spark.read.parquet(hist.as_uri())) == key(full)
+    assert len(key(full)) == 3
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["hist"]
+
+
 def test_scd2_randomized_differential_vs_brute_force(spark) -> None:
     """Randomized logs (duplicate states, ties, nulls, many keys) vs a
     per-key python replay of the SCD2 semantics."""

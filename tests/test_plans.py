@@ -477,6 +477,32 @@ def test_hadoop_fs_accessor_is_single() -> None:
     assert hits == {"io.py"}
 
 
+def test_group_state_fold_is_single() -> None:
+    """Every applyInPandasWithState operator runs through
+    ``streaming.stateful._fold``: the call and the timeout choice
+    appear once in the package, inside stateful.py."""
+    from pathlib import Path
+
+    pkg = (
+        Path(__file__).resolve().parents[1]
+        / "etl_marketdata_downloader_archived_spark"
+    )
+    needles = (
+        "applyInPandasWithState(",
+        "GroupStateTimeout.ProcessingTimeTimeout",
+        "GroupStateTimeout.NoTimeout",
+    )
+    hits = {
+        (str(p.relative_to(pkg)), needle): p.read_text(
+            encoding="utf-8"
+        ).count(needle)
+        for p in pkg.rglob("*.py")
+        for needle in needles
+        if needle in p.read_text(encoding="utf-8")
+    }
+    assert hits == {("streaming/stateful.py", n): 1 for n in needles}
+
+
 def test_sloc_counts_lines_by_kind() -> None:
     """tools/sloc.py puts every line in exactly one bucket: docstring,
     blank, comment-only, or code."""

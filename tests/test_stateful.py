@@ -172,6 +172,203 @@ def test_streaming_sessionize_carries_sessions_across_batches(
     assert expected[5] == 2 and expected[6] == 2  # the cross-batch splits
 
 
+def test_streaming_sessionize_day_gap_equals_batch(spark, tmp_path) -> None:
+    """``gap`` takes any interval string the batch twin's INTERVAL
+    takes: a "1 day" stream labels events like one batch pass (a gap
+    of exactly one day stays in-session, a longer one breaks), and the
+    transformWithState port's step parses the same gap."""
+    import pandas as pd
+
+    from etl_marketdata_downloader_archived_spark.operators.sessions import (
+        sessionize,
+    )
+    from etl_marketdata_downloader_archived_spark.streaming.stateful import (
+        streaming_sessionize,
+    )
+    from etl_marketdata_downloader_archived_spark.streaming.topk_state import (
+        _SessionizeProcessor,
+    )
+
+    b1 = [(1, 1, "2024-03-01 09:00:00"), (1, 2, "2024-03-01 20:00:00"),
+          (2, 3, "2024-03-01 00:00:00")]
+    b2 = [(1, 4, "2024-03-02 10:00:00"),   # 14 h: user1 session 1
+          (1, 5, "2024-03-03 11:00:00"),   # 25 h: session 2
+          (2, 6, "2024-03-02 00:00:00"),   # exactly 1 day: session 1
+          (2, 7, "2024-03-03 00:00:01")]   # 1 day + 1 s: session 2
+
+    src = tmp_path / "ev"
+    src.mkdir()
+    for i, rows in enumerate((b1, b2), 1):
+        (src / f"b{i}.json").write_text(
+            "\n".join(
+                json.dumps({"user_id": u, "event_id": e, "ts": t})
+                for u, e, t in rows
+            )
+        )
+        time.sleep(1.1)
+
+    ev = (
+        spark.readStream.format("text")
+        .option("maxFilesPerTrigger", "1")
+        .load(str(src))
+        .select(
+            F.from_json(
+                "value", "user_id LONG, event_id LONG, ts TIMESTAMP"
+            ).alias("j")
+        )
+        .select("j.*")
+    )
+    q = (
+        streaming_sessionize(ev, "user_id", "ts", gap="1 day")
+        .writeStream.format("memory")
+        .queryName("sess_day_out")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    rows = spark.sql("select * from sess_day_out").collect()
+    streamed = {(r.user_id, r.ts): r.session_seq for r in rows}
+
+    both = spark.createDataFrame(
+        b1 + b2, ["user_id", "event_id", "ts_s"]
+    ).select("user_id", F.col("ts_s").cast("timestamp").alias("ts"))
+    expected = {
+        (r.user_id, r.ts): r.session_seq
+        for r in sessionize(both, "user_id", "ts", gap="1 day").collect()
+    }
+    assert streamed == expected
+    assert sorted(expected.values()) == [1, 1, 1, 1, 1, 2, 2]
+
+    proc = _SessionizeProcessor("ts", "1 day", None, ["user_id", "ts"], None)
+    proc.init(_FakeTWSHandle())
+    labels = []
+    for batch in (b1, b2):
+        pdf = pd.DataFrame(
+            [(u, t) for u, _e, t in batch if u == 2], columns=["user_id", "ts"]
+        )
+        pdf["ts"] = pd.to_datetime(pdf["ts"])
+        for out in proc.handleInputRows((2,), iter([pdf]), None):
+            labels.extend(out["session_seq"])
+    assert labels == [1, 1, 2]
+
+
+class _FakeGroupState:
+    """applyInPandasWithState's GroupState, recorded: what the fold
+    stores, removes and re-arms."""
+
+    def __init__(self, value=None, timed_out=False):
+        self.value = value
+        self.hasTimedOut = timed_out
+        self.timeouts: list = []
+        self.removed = False
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return self.value
+
+    def update(self, value):
+        self.value = tuple(value)
+
+    def remove(self):
+        self.value, self.removed = None, True
+
+    def setTimeoutDuration(self, ms):
+        self.timeouts.append(ms)
+
+
+class _GroupedFrame:
+    """Stands in for a DataFrame: keeps what ``_fold`` hands to
+    ``groupBy(...).applyInPandasWithState``."""
+
+    def groupBy(self, *keys):
+        self.keys = keys
+        return self
+
+    def applyInPandasWithState(self, func, **kwargs):
+        self.func, self.kwargs = func, kwargs
+        return self
+
+
+def test_fold_group_state_protocol() -> None:
+    """The one GroupState protocol every applyInPandasWithState
+    operator runs through: a timed-out key is removed and emits
+    nothing; a key's frames reach ``step`` concatenated with its
+    carried state; a None new state leaves store and timeout alone;
+    the TTL re-arms only on a stored update; an empty ``out`` is not
+    emitted; an empty batch never reaches ``step``."""
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from etl_marketdata_downloader_archived_spark.streaming.stateful import (
+        _fold,
+    )
+
+    calls: list = []
+    replies: dict = {}
+
+    def step(key, pdf, prev):
+        calls.append((key, pdf["v"].tolist(), prev))
+        return replies[key]
+
+    frame = _fold(
+        _GroupedFrame(), ["k"], step, "k string", "n long", 500,
+        output_mode="update",
+    )
+    assert frame.keys == ("k",)
+    assert frame.kwargs == {
+        "outputStructType": "k string",
+        "stateStructType": "n long",
+        "outputMode": "update",
+        "timeoutConf": GroupStateTimeout.ProcessingTimeTimeout,
+    }
+    run = lambda key, frames, state: list(  # noqa: E731
+        frame.func(key, iter(frames), state)
+    )
+    emitted = pd.DataFrame({"k": ["a"]})
+
+    # a new key: concatenated frames, prev None, state stored, TTL armed
+    replies[("a",)] = (emitted, (6,))
+    new = _FakeGroupState()
+    outs = run(
+        ("a",), [pd.DataFrame({"v": [1, 2]}), pd.DataFrame({"v": [3]})], new
+    )
+    assert calls[-1] == (("a",), [1, 2, 3], None)
+    assert new.value == (6,) and new.timeouts == [500]
+    assert len(outs) == 1 and outs[0] is emitted
+
+    # None new state + empty out: store and timeout untouched, no emit
+    replies[("b",)] = (emitted.iloc[:0], None)
+    kept = _FakeGroupState(value=(4,))
+    assert run(("b",), [pd.DataFrame({"v": [9]})], kept) == []
+    assert calls[-1] == (("b",), [9], (4,))
+    assert kept.value == (4,) and kept.timeouts == [] and not kept.removed
+
+    # a timed-out key is removed, emits nothing, never reaches step
+    n_calls = len(calls)
+    expired = _FakeGroupState(value=(4,), timed_out=True)
+    assert run(("b",), [], expired) == []
+    assert expired.removed and not expired.exists and expired.timeouts == []
+    assert len(calls) == n_calls
+
+    # an empty batch is a no-op
+    idle = _FakeGroupState(value=(4,))
+    assert run(("b",), [pd.DataFrame({"v": []})], idle) == []
+    assert len(calls) == n_calls and idle.value == (4,)
+
+    # no TTL: NoTimeout, and an update stores without arming anything
+    plain = _fold(_GroupedFrame(), ["k"], step, "k string", "n long", None)
+    assert plain.kwargs["timeoutConf"] == GroupStateTimeout.NoTimeout
+    assert plain.kwargs["outputMode"] == "append"
+    fresh = _FakeGroupState()
+    list(plain.func(("a",), iter([pd.DataFrame({"v": [1]})]), fresh))
+    assert fresh.value == (6,) and fresh.timeouts == []
+
+
 def test_streaming_attribution_equals_batch(spark, tmp_path) -> None:
     """Streaming last-touch attribution over two micro-batches ==
     the batch operator over the concatenated events - including a
