@@ -49,7 +49,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
-from .io import _vfs
+from .io import _publish_table, _vfs
 
 __all__ = [
     "corpus_bucket_expr",
@@ -192,15 +192,10 @@ def bucket_corpus(
 ) -> int:
     """One-shot migration: rewrite a LEGACY (unpartitioned) corpus
     ``partitionBy("_ck")`` with its ``_meta`` sidecar, in place,
-    crash-safe - the ``compact_postings`` stage-and-swap (stage the
-    partitioned copy at ``__stage``, rename live -> ``__old``, stage
-    -> live, drop ``__old``). The previous snapshot survives a crash
-    at any point; the ingests run ``io.recover_small_table`` on the
-    corpus dir at batch entry, so the one window where the live dir is
-    absent (between the two renames) heals on the next batch. STOP the
-    ingest before migrating - the corpus has exactly one appender and
-    this tool assumes it is not running (same single-writer contract
-    as compact_postings; wrap in io.maintenance_lock to enforce).
+    through the whole-table swap (``io`` module docstring); the
+    ingests heal a crashed swap at batch entry. STOP the ingest before
+    migrating - the corpus has exactly one appender and this tool
+    assumes it is not running.
 
     Returns the row count migrated. Refuses an already-bucketed corpus
     (its layout and sidecar are authoritative - rebucketing to a new B
@@ -218,25 +213,19 @@ def bucket_corpus(
     forbid_sheared_corpus(spark, root, "bucket_corpus")
     df = spark.read.parquet(root)
     n = df.count()
-    stage = root + "__stage"
-    fs.delete(jvm_path(stage), True)
-    (
-        df.withColumn("_ck", corpus_bucket_expr(id_col, buckets))
-        .repartition("_ck")
-        .write.mode("overwrite")
-        .partitionBy("_ck")
-        .parquet(stage)
-    )
-    # sidecar rides the staged copy so the swap is atomic for BOTH
-    spark.createDataFrame([(buckets,)], "_cbuckets int").coalesce(
-        1
-    ).write.mode("overwrite").parquet(stage + _META)
-    old = jvm_path(root + "__old")
-    fs.delete(old, True)
-    if not fs.rename(jvm_path(root), old):
-        raise IOError(f"bucket_corpus: live -> __old failed for {root!r}")
-    if not fs.rename(jvm_path(stage), jvm_path(root)):
-        fs.rename(old, jvm_path(root))
-        raise IOError(f"bucket_corpus: stage -> live failed for {root!r}")
-    fs.delete(old, True)
+
+    def write(stage: str) -> None:
+        (
+            df.withColumn("_ck", corpus_bucket_expr(id_col, buckets))
+            .repartition("_ck")
+            .write.mode("overwrite")
+            .partitionBy("_ck")
+            .parquet(stage)
+        )
+        # sidecar rides the staged copy so the swap is atomic for BOTH
+        spark.createDataFrame([(buckets,)], "_cbuckets int").coalesce(
+            1
+        ).write.mode("overwrite").parquet(stage + _META)
+
+    _publish_table(spark, root, write)
     return n

@@ -4,6 +4,40 @@ Readers take explicit paths (the driver passes an sf_dir); writers encode
 the partitioned-lake layout the reference lands into by source-type
 prefix (reference: data-downloader/data_downloader.py:104,107,132,170,195)
 - re-expressed as `partitionBy` so Spark partition pruning works for free.
+
+The publish protocol, shared by every table mutator in the package.
+Readers see a table (or a partition) wholly old or wholly new, and a
+crash at any point leaves every byte recoverable:
+
+- Stage beside the live path, never inside it (a sibling is invisible
+  to partition discovery): ``<path>__stage``, or ``<path>__compact``
+  for ``compact_lake``. The stage write also runs the read of the live
+  files to completion before anything moves.
+- Whole-table swap (``_publish_table``: ``publish_small_table``,
+  ``compact_lake``, ``corpus_store.bucket_corpus``,
+  ``fuzzy.compact_postings``): rename live -> ``<path>__old``, stage
+  -> live, then drop ``__old``. If stage -> live fails, ``__old`` is
+  renamed back, so the live path keeps its old rows.
+- Partition swap (``publish_partitions``, and ``_stage_and_publish``
+  for ``merge_partitioned``, ``incremental_rollup``, ``compact_files``,
+  ``purge_keys``, ``refresh_join_view``): per staged partition dir,
+  live -> ``<path>__backup/<dir>``, staged -> live (rolled back on
+  failure), drop the backup. An affected partition that staged no
+  rows is deleted the same way, by renaming it aside.
+- Recovery, run by the NEXT mutator at entry, before it reads: a live
+  table missing beside an intact ``__old`` is a swap that died between
+  its renames, so ``__old`` is renamed back (``recover_small_table``,
+  which raises if that rename fails); an ``__old`` beside a live table
+  is superseded and dropped. ``vacuum_maintenance`` does the same and
+  also restores a ``__backup/<dir>`` whose live partition is missing
+  and drops stale stages. Readers that fold a table they later publish
+  read it through ``_read_recovered``. The posting store keeps its own
+  rule for a live store beside ``__old`` (``fuzzy.recover_posting_store``
+  merges the data files in instead of dropping them).
+- The remaining race is the renames themselves: for that instant one
+  table or partition can list as absent. One maintenance writer per
+  table is assumed (``maintenance_lock`` enforces it where two
+  schedulers could race).
 """
 
 from __future__ import annotations
@@ -233,30 +267,16 @@ def compact_lake(
 ) -> None:
     """Physically rewrite the append-log lake down to its current state
     (latest row per key) - the periodic maintenance pass that keeps the
-    replace-semantics log from growing unboundedly. Writes the compact
-    copy to a sibling directory first, then RENAME-swaps: the live lake
-    is renamed aside (never deleted while it is the only copy), the
-    compact copy renamed in, and only then is the old data removed. A
-    crash at any point leaves at least one full copy on disk: before
-    the first rename the original is untouched; between the renames the
-    data lives in __old and __compact (recover by renaming either back);
-    after the swap the old copy is garbage. A half-built __compact from
-    a previous crash is simply overwritten."""
+    replace-semantics log from growing unboundedly. Published by the
+    whole-table swap, staged at ``__compact`` (module docstring)."""
     vacuum_maintenance(spark, lake_dir)  # restore crashed-publish state first
     cur = latest_per_key(spark.read.parquet(lake_dir), list(keys), ts_col)
-    tmp = lake_dir.rstrip("/") + "__compact"
-    old = lake_dir.rstrip("/") + "__old"
-    cur.write.mode("overwrite").partitionBy(*partition_cols).parquet(tmp)
-
-    jvm_path, fs = _vfs(spark, lake_dir)
-    fs.delete(jvm_path(old), True)  # leftover from a prior crashed swap
-    if not fs.rename(jvm_path(lake_dir), jvm_path(old)):
-        raise IOError(f"compact_lake: could not rename {lake_dir} aside")
-    if not fs.rename(jvm_path(tmp), jvm_path(lake_dir)):
-        # roll back so the lake path stays valid
-        fs.rename(jvm_path(old), jvm_path(lake_dir))
-        raise IOError(f"compact_lake: could not swap {tmp} into {lake_dir}")
-    fs.delete(jvm_path(old), True)
+    _publish_table(
+        spark,
+        lake_dir,
+        cur.write.mode("overwrite").partitionBy(*partition_cols).parquet,
+        stage_suffix="__compact",
+    )
 
 
 def write_bucketed(
@@ -282,31 +302,49 @@ def write_bucketed(
     w.saveAsTable(table)
 
 
-def overwrite_small_table(df: DataFrame, path: str) -> None:
-    """Full-rewrite update for small control tables.
+def _old(path: str) -> str:
+    """Where the whole-table swap keeps the previous snapshot of
+    ``path`` between its two renames."""
+    return path.rstrip("/") + "__old"
 
-    Plain parquet has no point update; the reference's catalog error
-    flagging re-writes the whole CSV (reference:
-    data-downloader/data_downloader.py:40-48). For a catalog-sized table
-    a coalesced single-file overwrite is the right call; at lake scale
-    use a transactional table format (Delta/Iceberg - not in this
-    environment) and MERGE INTO instead.
-    """
-    # Write-to-temp-then-swap is handled by Spark's overwrite mode; the
-    # catalog is tiny so coalesce(1) keeps it a single file.
-    df.coalesce(1).write.mode("overwrite").parquet(path)
+
+def _publish_table(
+    spark: SparkSession,
+    path: str,
+    write,
+    stage_suffix: str = "__stage",
+    rescue=None,
+) -> None:
+    """The whole-table swap (module docstring): ``write(stage)`` lands
+    the new snapshot beside ``path``; then live -> ``__old``, stage ->
+    live (rolled back on failure), ``rescue(old)`` when given, and
+    ``__old`` is dropped."""
+    jvm_path, fs = _vfs(spark, path)
+    root = path.rstrip("/")
+    stage, live, old = root + stage_suffix, jvm_path(root), jvm_path(_old(root))
+    fs.delete(jvm_path(stage), True)
+    write(stage)
+    fs.delete(old, True)
+    had_live = fs.exists(live)
+    if had_live and not fs.rename(live, old):
+        raise IOError(f"stage swap (live -> __old) failed for {root!r}")
+    if not fs.rename(jvm_path(stage), live):
+        if had_live and not fs.rename(old, live):
+            raise IOError(f"stage swap rollback failed for {root!r}")
+        raise IOError(f"stage swap (stage -> live) failed for {root!r}")
+    if rescue is not None:
+        rescue(_old(root))
+    fs.delete(old, True)
 
 
 def recover_small_table(spark: SparkSession, path: str) -> bool:
-    """Self-recovery half of ``publish_small_table``: if a prior swap
-    crashed between its two renames (live dir missing, ``__old``
-    intact), restore the previous snapshot; a superseded ``__old``
-    next to a live dir is deleted. Callers that READ the table before
-    publishing must run this first - the mutator self-recovery rule.
-    Returns True if a restore happened."""
+    """Heal a crashed whole-table swap of ``path`` (module docstring):
+    restore ``__old`` when the live dir is missing, drop it when the
+    live dir exists. A mutator that reads the table before publishing
+    runs this first. Returns True if a restore happened."""
     jvm_path, fs = _vfs(spark, path)
     root = path.rstrip("/")
-    old = jvm_path(root + "__old")
+    old = jvm_path(_old(root))
     if not fs.exists(old):
         return False
     if not fs.exists(jvm_path(root)):
@@ -317,30 +355,27 @@ def recover_small_table(spark: SparkSession, path: str) -> bool:
     return False
 
 
-def publish_small_table(df: DataFrame, path: str) -> None:
-    """Crash-safe ``overwrite_small_table``: Spark's overwrite mode is
-    delete-then-write, so a crash mid-overwrite removes the table
-    entirely - and a caller that treats absence as "first write" (the
-    streaming view-maintenance fold) would then silently rebuild from
-    partial state. This variant stages the new snapshot to
-    ``<path>__stage`` and swaps via rename (live -> ``__old``, stage
-    -> live, drop ``__old``), so the previous snapshot survives a
-    crash at ANY point and absence is genuinely distinguishable from
-    loss. Recovery is ``recover_small_table`` (also folded into
-    ``vacuum_maintenance``'s ``__old`` handling convention)."""
-    spark = df.sparkSession
+def _read_recovered(spark: SparkSession, path: str, read=None):
+    """``read(path)`` (default ``spark.read.parquet``) of a table that
+    is published by the whole-table swap, after ``recover_small_table``
+    healed any crashed swap; None when the table does not exist yet -
+    so absence means a first write, never a swap caught mid-rename."""
     recover_small_table(spark, path)
     jvm_path, fs = _vfs(spark, path)
-    root = path.rstrip("/")
-    stage = root + "__stage"
-    df.coalesce(1).write.mode("overwrite").parquet(stage)
-    old = jvm_path(root + "__old")
-    live = jvm_path(root)
-    if fs.exists(live) and not fs.rename(live, old):
-        raise IOError(f"stage swap (live -> __old) failed for {root!r}")
-    if not fs.rename(jvm_path(stage), live):
-        raise IOError(f"stage swap (stage -> live) failed for {root!r}")
-    fs.delete(old, True)
+    if not fs.exists(jvm_path(path.rstrip("/"))):
+        return None
+    return (read or spark.read.parquet)(path)
+
+
+def publish_small_table(df: DataFrame, path: str) -> None:
+    """Replace the small table at ``path`` with ``df`` as one file,
+    through the whole-table swap (module docstring). Unlike Spark's
+    overwrite mode, which deletes before it writes, the previous
+    snapshot survives a failed or crashed publish, so absence is never
+    mistaken for loss."""
+    spark = df.sparkSession
+    recover_small_table(spark, path)
+    _publish_table(spark, path, df.coalesce(1).write.mode("overwrite").parquet)
 
 
 def analyze_table(spark: SparkSession, table: str, columns: list[str] | None = None) -> None:
@@ -584,92 +619,105 @@ def publish_partitions(
     spark: SparkSession, path: str, stage: str, partition_col: str
 ) -> None:
     """Swap every partition directory staged under ``stage`` into the
-    live table at ``path`` by RENAME - the shared publish discipline of
-    the partition-scoped mutators (merge_partitioned,
-    incremental_rollup; compact_lake does the same at whole-table
-    granularity).
-
-    Why not dynamic partition overwrite: that deletes the live files
-    DURING the write job, so a concurrent reader can list a partition
-    mid-replacement and read half old, half new files for the whole
-    duration of the job. Here the new data is fully written to a
-    sibling staging dir first (readers of ``path`` still see exactly
-    the old table), then each staged partition dir is renamed in:
-    live -> ``<path>__backup/<dir>``, staged -> live, backup deleted.
-    The backup parent is a SIBLING of the table root - never inside
-    it, where its files would feed partition discovery (a reader
-    listing a ``part=``-shaped leftover mid-swap would crash on
-    conflicting partition columns, worse than stale data). A reader
-    therefore sees each partition wholly old or wholly new, never a
-    mixed file set - the remaining race is the two metadata renames,
-    during which that one partition can briefly list as absent.
-
-    Crash safety: before its first rename a partition is untouched;
-    between renames its previous content survives under
-    ``<path>__backup/`` (recover by renaming back). Every mutator
-    calls ``vacuum_maintenance`` at entry, BEFORE reading the live
-    table, so a rerun after a crash restores the stranded copy first
-    - rerunning the mutation is the documented recovery.
-    Partition dir names travel verbatim (URL-escaped values
-    included). Single maintenance writer per lake assumed, as
-    compact_lake."""
+    live table at ``path`` by rename (the partition swap, module
+    docstring). Unlike dynamic partition overwrite, which deletes live
+    files during the write job, a reader never lists a partition with
+    half old, half new files. Partition dir names travel verbatim
+    (URL-escaped values included)."""
     jvm_path, fs = _vfs(spark, path)
-    backup = path.rstrip("/") + "__backup"
-    fs.mkdirs(jvm_path(backup))
     prefix = partition_col + "="
-    for status in fs.listStatus(jvm_path(stage)):
-        name = status.getPath().getName()
-        if not name.startswith(prefix):
-            continue  # _SUCCESS and friends
-        live = jvm_path(path.rstrip("/") + "/" + name)
-        old = jvm_path(backup + "/" + name)
-        fs.delete(old, True)  # leftover from a prior crashed publish
-        had_old = fs.exists(live)
-        if had_old and not fs.rename(live, old):
-            raise IOError(f"publish_partitions: could not rename {name} aside")
-        if not fs.rename(status.getPath(), live):
-            if had_old:
-                fs.rename(old, live)  # roll back; live stays valid
-            raise IOError(f"publish_partitions: could not publish {name}")
-        fs.delete(old, True)
+    _swap_partitions(spark, path, {
+        st.getPath().getName(): st.getPath()
+        for st in fs.listStatus(jvm_path(stage))
+        if st.getPath().getName().startswith(prefix)  # not _SUCCESS
+    })
     fs.delete(jvm_path(stage), True)
+
+
+def _swap_partitions(spark: SparkSession, path: str, moves: dict) -> None:
+    """Per partition dir name -> staged ``Path`` (or None to delete
+    it): live -> ``__backup/<dir>``, staged -> live (rolled back on
+    failure), backup dropped."""
+    jvm_path, fs = _vfs(spark, path)
+    root = path.rstrip("/")
+    backup = root + "__backup"
+    fs.mkdirs(jvm_path(backup))
+    for name, staged in moves.items():
+        live = jvm_path(root + "/" + name)
+        aside = jvm_path(backup + "/" + name)
+        fs.delete(aside, True)  # leftover from a prior crashed publish
+        had_live = fs.exists(live)
+        if had_live and not fs.rename(live, aside):
+            raise IOError(f"partition swap: could not rename {name} aside")
+        if staged is not None and not fs.rename(staged, live):
+            if had_live:
+                fs.rename(aside, live)  # roll back; live stays valid
+            raise IOError(f"partition swap: could not publish {name}")
+        fs.delete(aside, True)
     fs.delete(jvm_path(backup), True)
 
 
+def _partition_dir(spark: SparkSession, col: str, value) -> str:
+    """The directory name Spark's partitioned writer gives ``value``."""
+    if value is None:
+        return f"{col}=__HIVE_DEFAULT_PARTITION__"
+    try:
+        esc = (
+            spark._jvm.org.apache.spark.sql.catalyst.catalog
+            .ExternalCatalogUtils.escapePathName
+        )
+        # py4j fails at CALL time, not lookup - an unreachable class
+        # returns a JavaPackage silently
+        return f"{col}={esc(str(value))}"
+    except Exception:  # pragma: no cover - jvm surface drift
+        return f"{col}={value}"
+
+
+def _stage_and_publish(
+    spark: SparkSession,
+    path: str,
+    df: DataFrame,
+    partition_col: str,
+    affected=(),
+    max_records_per_file: int | None = None,
+) -> None:
+    """The partition-scoped mutators' publish (module docstring): write
+    ``df`` partitioned to ``<path>__stage``, rename each staged
+    partition in, and delete by rename every ``affected`` partition
+    value that staged no rows (the swap alone would keep its stale
+    files)."""
+    stage = path.rstrip("/") + "__stage"
+    w = df.write.mode("overwrite").partitionBy(partition_col)
+    if max_records_per_file:
+        w = w.option("maxRecordsPerFile", max_records_per_file)
+    w.parquet(stage)
+    jvm_path, fs = _vfs(spark, path)
+    staged = {st.getPath().getName() for st in fs.listStatus(jvm_path(stage))}
+    publish_partitions(spark, path, stage, partition_col)
+    emptied = {_partition_dir(spark, partition_col, v) for v in affected} - staged
+    if emptied:
+        _swap_partitions(spark, path, dict.fromkeys(sorted(emptied)))
+
+
 def vacuum_maintenance(spark: SparkSession, path: str) -> dict:
-    """Recover-then-clean after a crashed maintenance pass: the swap
-    disciplines (``publish_partitions``, ``compact_lake``) guarantee a
-    crash leaves every byte recoverable in a sibling dir - this is the
-    tool that performs that recovery and removes what is genuinely
-    garbage.
+    """Recover-then-clean after a crashed maintenance pass (the
+    recovery rules are in the module docstring): a missing live table
+    comes back from ``__old`` (``recover_small_table``, raising if the
+    restore fails), a missing partition from ``__backup/<dir>``;
+    superseded ``__old``/``__backup`` copies and never-published
+    ``__stage``/``__compact`` dirs are deleted.
 
-    Rules, per sibling of ``path``:
-    - ``<path>__backup/<dir>``: if the live table LACKS that partition
-      dir, a publish died between its two renames - rename the backup
-      copy back in (recover). If the live dir exists, the backup is a
-      superseded copy - delete.
-    - ``<path>__old`` (compact_lake's whole-table copy): if the live
-      table dir itself is missing, the swap died mid-rename - restore
-      it. Otherwise delete.
-    - ``<path>__stage`` / ``<path>__compact``: half-written staging
-      output, never published - always safe to delete (the write that
-      produces them is atomic-by-rename only at publish).
-
-    Returns {"recovered": [...], "removed": [...]} of paths acted on.
-    Single maintenance writer per lake assumed, as everywhere."""
+    Returns {"recovered": [...], "removed": [...]} of paths acted on."""
     jvm_path, fs = _vfs(spark, path)
     root = path.rstrip("/")
     recovered: list[str] = []
     removed: list[str] = []
 
-    old = jvm_path(root + "__old")
-    if fs.exists(old):
-        if not fs.exists(jvm_path(root)):
-            fs.rename(old, jvm_path(root))
+    if fs.exists(jvm_path(_old(root))):
+        if recover_small_table(spark, root):
             recovered.append(root)
         else:
-            fs.delete(old, True)
-            removed.append(root + "__old")
+            removed.append(_old(root))
 
     backup = jvm_path(root + "__backup")
     if fs.exists(backup):
@@ -708,23 +756,15 @@ def merge_partitioned(
     set) prune the current-state read; current rows in those partitions
     union with the updates and collapse to one row per key (updates win
     - via ``ts_col`` ordering when given, else unconditionally); the
-    result is staged to a sibling directory (which also fully executes
-    the read of the live files before anything moves) and then
-    rename-published per partition (``publish_partitions``), so a
-    concurrent reader sees each partition wholly old or wholly new and
+    result publishes through the partition swap (module docstring), so
     every other partition's files stay untouched (tested by file
     identity).
 
-    Caveats: a key's partition value must be stable (a row that MOVES
+    Caveat: a key's partition value must be stable (a row that MOVES
     partitions needs a delete from the old one - that is table-format
-    territory); concurrent writers to the SAME partition race (single
-    maintenance writer per lake, like compact_lake).
+    territory).
     """
-    # Self-recover before READING: a prior publish may have died with a
-    # partition renamed aside - the merge must see the restored state,
-    # or the stage read would miss that partition's rows and the
-    # publish below would then discard the only remaining copy.
-    vacuum_maintenance(spark, path)
+    vacuum_maintenance(spark, path)  # recover before reading
     touched = [r[0] for r in updates.select(partition_col).distinct().collect()]
     current = spark.read.parquet(path).filter(F.col(partition_col).isin(touched))
     updates = updates.select(*current.columns)  # align column order
@@ -743,14 +783,7 @@ def merge_partitioned(
             .filter(F.col("_rn") == 1)
             .drop("_rn", "_prec")
         )
-    # Stage-then-publish: the stage write is itself the materialization
-    # barrier (it executes the read of the live files to completion
-    # before any live path is touched), and the rename publish means a
-    # crash at any point leaves every partition recoverable - no
-    # half-replaced partition can exist.
-    stage = path.rstrip("/") + "__stage"
-    merged.write.mode("overwrite").partitionBy(partition_col).parquet(stage)
-    publish_partitions(spark, path, stage, partition_col)
+    _stage_and_publish(spark, path, merged, partition_col)
 
 
 # Re-aggregatable measure algebra for incremental rollups: how a
@@ -796,10 +829,8 @@ def incremental_rollup(
     """Maintain a persistent rollup table incrementally: aggregate ONLY
     the newly-arrived facts, combine with current rollup state in the
     partitions the delta touches, and rewrite just those partitions
-    (stage + rename publish via ``publish_partitions`` - untouched
-    partitions keep their files, and a concurrent reader sees each
-    partition wholly old or wholly new).
-    The fact history is never rescanned; a daily append costs
+    through the partition swap (module docstring; untouched partitions
+    keep their files). The fact history is never rescanned; a daily append costs
     one delta aggregation + a partition-scoped merge, regardless of
     table age. ``partition_col`` must be one of ``keys`` (day, source,
     ...). Distinct-count measures must be ``hll`` sketches - raw
@@ -829,12 +860,7 @@ def incremental_rollup(
         .groupBy(*keys)
         .agg(*combine)
     )
-    # Same stage-then-publish discipline as merge_partitioned: the
-    # stage write executes the read of the live rollup to completion,
-    # then each touched partition rename-swaps in atomically-per-dir.
-    stage = path.rstrip("/") + "__stage"
-    merged.write.mode("overwrite").partitionBy(partition_col).parquet(stage)
-    publish_partitions(spark, path, stage, partition_col)
+    _stage_and_publish(spark, path, merged, partition_col)
 
 
 def compact_files(
@@ -846,8 +872,8 @@ def compact_files(
 ) -> dict:
     """Small-file compaction: rewrite only the partitions whose file
     count exceeds what their bytes need at ``target_mb``/file, leaving
-    right-sized partitions' files untouched (dynamic partition
-    overwrite scopes the rewrite, same mechanism as merge_partitioned).
+    right-sized partitions' files untouched (the partition swap scopes
+    the rewrite, module docstring).
 
     The companion to compact_lake (which collapses KEYS): streaming /
     incremental appends land one file per micro-batch per partition,
@@ -858,7 +884,6 @@ def compact_files(
     per-partition-value shuffle + a task-side maxRecordsPerFile cap.
 
     Returns {"partitions_compacted": n, "files_before": a, "files_after": b}.
-    Single maintenance writer per lake assumed (as compact_lake).
 
     ``index_dir``: the table's min/max skipping index, when it has
     one - compaction replaces files, which would otherwise degrade
@@ -928,19 +953,13 @@ def compact_files(
         if f.getPath().getName().endswith(".parquet")
     )
     rows_per_file = max(1, int(n_rows * target_bytes / max(1, n_bytes)))
-    # Same stage-then-publish discipline as merge_partitioned: the
-    # stage write executes the read of the files being replaced, and
-    # the rename publish keeps concurrent readers on wholly-old or
-    # wholly-new per-partition file sets.
-    stage = path.rstrip("/") + "__stage"
-    (
-        sub.repartition(F.col(partition_col))
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", rows_per_file)
-        .partitionBy(partition_col)
-        .parquet(stage)
+    _stage_and_publish(
+        spark,
+        path,
+        sub.repartition(F.col(partition_col)),
+        partition_col,
+        max_records_per_file=rows_per_file,
     )
-    publish_partitions(spark, path, stage, partition_col)
 
     files_after = sum(
         1
@@ -1473,15 +1492,11 @@ def purge_keys(
     doomed key - the GDPR/CCPA deletion primitive a 100 TB lake needs,
     where "filter and rewrite the table" is a non-starter.
 
-    Mechanics (merge_partitioned's stage-then-publish discipline):
-    self-recover at entry (vacuum_maintenance restores any stranded
-    backup BEFORE state is read), one narrow scan (keys +
-    partition column, columnar) semi-joined against the broadcast
-    erasure list finds the touched partitions, an anti-join builds
-    each touched partition's surviving rows, the stage write fully
-    materializes them before any live path moves, and
-    ``publish_partitions`` renames per partition - readers see each
-    partition wholly old or wholly new, untouched partitions keep
+    Mechanics: one narrow scan (keys + partition column, columnar)
+    joined against the broadcast erasure list finds the touched
+    partitions, an anti-join builds their surviving rows, and those
+    publish through the partition swap (module docstring) - a
+    partition with no survivor is deleted, untouched partitions keep
     their exact files. Erasure lists are subject-sized (thousands),
     so the join side always broadcasts.
 
@@ -1523,19 +1538,13 @@ def purge_keys(
     ):
         return []
     erasure = doomed.select(*key_cols).distinct()
-    # one narrow scan decides everything: per-partition total vs
-    # doomed-row counts (the left join cannot inflate - the erasure
-    # list is key-distinct). A partition whose EVERY row is doomed
-    # writes no stage output, so the swap below would silently keep
-    # it - those are deleted explicitly instead.
+    # one narrow scan decides everything: the doomed rows per
+    # partition (the join cannot inflate - the erasure list is
+    # key-distinct)
     tagged = (
         spark.read.parquet(path)
         .select(partition_col, *key_cols)
-        .join(
-            F.broadcast(erasure.withColumn("_doom", F.lit(1))),
-            key_cols,
-            "left",
-        )
+        .join(F.broadcast(erasure), key_cols)
     )
     if audit_path is not None:
         # the audit aggregate below re-reads the same narrow
@@ -1546,11 +1555,7 @@ def purge_keys(
         tagged = tagged.persist(StorageLevel.DISK_ONLY)
     per_part = (
         tagged.groupBy(partition_col)
-        .agg(
-            F.count(F.lit(1)).alias("_total"),
-            F.count("_doom").alias("_purged"),
-        )
-        .filter(F.col("_purged") > 0)
+        .agg(F.count(F.lit(1)).alias("_purged"))
         .orderBy(partition_col)
         .collect()
     )
@@ -1561,8 +1566,7 @@ def purge_keys(
         # moves (erasure lists are subject-sized: thousands of rows)
         if per_part:
             audit_rows = (
-                tagged.filter(F.col("_doom").isNotNull())
-                .groupBy(*key_cols, partition_col)
+                tagged.groupBy(*key_cols, partition_col)
                 .agg(F.count(F.lit(1)).alias("rows_purged"))
                 .collect()
             )
@@ -1571,46 +1575,20 @@ def purge_keys(
         if index_dir is not None:
             refresh_skipping_index(spark, path, index_dir)
         return []
-    partial = [r[0] for r in per_part if r["_purged"] < r["_total"]]
-    full = [r[0] for r in per_part if r["_purged"] == r["_total"]]
-    if partial:
-        # a NULL partition value (read back from the Hive default
-        # dir) never matches isin() - it needs the explicit isNull
-        # branch or its doomed rows would survive while the audit
-        # claims them purged
-        non_null = [v for v in partial if v is not None]
-        cond = F.col(partition_col).isin(non_null) if non_null else F.lit(False)
-        if any(v is None for v in partial):
-            cond = cond | F.col(partition_col).isNull()
-        survivors = (
-            spark.read.parquet(path)
-            .filter(cond)
-            .join(F.broadcast(erasure), key_cols, "left_anti")
-        )
-        stage = path.rstrip("/") + "__stage"
-        survivors.write.mode("overwrite").partitionBy(
-            partition_col
-        ).parquet(stage)
-        publish_partitions(spark, path, stage, partition_col)
-    if full:
-        try:
-            esc = (
-                spark._jvm.org.apache.spark.sql.catalyst.catalog
-                .ExternalCatalogUtils.escapePathName
-            )
-            esc("probe")  # py4j fails at CALL time, not lookup -
-            # an unreachable class returns a JavaPackage silently
-        except Exception:  # pragma: no cover - jvm surface drift
-            esc = str
-        names = [
-            # NULLs land in the Hive default-partition dir;
-            # escapePathName does not do that mapping
-            f"{partition_col}=__HIVE_DEFAULT_PARTITION__"
-            if value is None
-            else f"{partition_col}={esc(str(value))}"
-            for value in full
-        ]
-        _delete_partitions_by_rename(spark, path, names, "purge_keys")
+    touched = [r[0] for r in per_part]
+    # a NULL partition value (read back from the Hive default dir)
+    # never matches isin() - it needs the explicit isNull branch or
+    # its doomed rows would survive while the audit claims them purged
+    non_null = [v for v in touched if v is not None]
+    cond = F.col(partition_col).isin(non_null) if non_null else F.lit(False)
+    if None in touched:
+        cond = cond | F.col(partition_col).isNull()
+    survivors = (
+        spark.read.parquet(path)
+        .filter(cond)
+        .join(F.broadcast(erasure), key_cols, "left_anti")
+    )
+    _stage_and_publish(spark, path, survivors, partition_col, affected=touched)
     if audit_rows:
         audit_df = spark.createDataFrame(
             [tuple(r) for r in audit_rows],
@@ -1622,28 +1600,6 @@ def purge_keys(
     if index_dir is not None:
         refresh_skipping_index(spark, path, index_dir)
     return [(r[0], r["_purged"]) for r in per_part]
-
-
-def _delete_partitions_by_rename(
-    spark: SparkSession, path: str, names: list[str], who: str
-) -> None:
-    """Crash-safe whole-partition deletion, shared by purge_keys and
-    refresh_join_view: rename each live dir aside into ``__backup``
-    (a reader never lists a half-deleted dir), then drop the backup.
-    A crash between rename and cleanup leaves the copy in __backup,
-    which vacuum_maintenance RESTORES - rerunning the mutation (the
-    documented recovery) re-deletes it."""
-    jvm_path, fs = _vfs(spark, path)
-    root = path.rstrip("/")
-    backup = root + "__backup"
-    fs.mkdirs(jvm_path(backup))
-    for name in names:
-        live = jvm_path(root + "/" + name)
-        aside = jvm_path(backup + "/" + name)
-        fs.delete(aside, True)
-        if fs.exists(live) and not fs.rename(live, aside):
-            raise IOError(f"{who}: could not rename {name} aside")
-    fs.delete(jvm_path(backup), True)
 
 
 def build_join_view(
@@ -1688,13 +1644,11 @@ def refresh_join_view(
     (anti-join against the broadcast key list), changed keys' rows
     rebuild fresh from the CURRENT inputs (both sides semi-filtered
     to the key list first, so the repair join is delta-sized), and
-    the bucket publishes by rename (stage-then-publish, the
-    engine-wide mutator discipline - readers see each bucket wholly
-    old or wholly new). A bucket whose repair comes out EMPTY (every
-    key in it changed and now joins to nothing) is deleted
-    explicitly - the swap alone would keep its stale files
-    (purge_keys' lesson). Returns the repaired bucket ids;
-    `n_buckets` must match the build. Correct under all change
+    the bucket publishes through the partition swap (module
+    docstring), which deletes a bucket whose repair comes out EMPTY
+    (every key in it changed and now joins to nothing). Returns the
+    repaired bucket ids; `n_buckets` must match the build. Correct
+    under all change
     classes because changed keys rebuild from scratch: an
     added/updated/removed row on either side lands as the fresh
     join's output for that key, whatever the old view held."""
@@ -1743,24 +1697,7 @@ def refresh_join_view(
         # the root to exist
         fs.mkdirs(jvm_path(view_path.rstrip("/")))
         out = fresh
-    stage = view_path.rstrip("/") + "__stage"
-    out.write.mode("overwrite").partitionBy("_bucket").parquet(stage)
-    # publish what staged, then delete affected buckets the stage
-    # came out EMPTY for (no dir staged -> rename swaps nothing)
-    staged = {
-        st.getPath().getName()
-        for st in fs.listStatus(jvm_path(stage))
-        if st.getPath().getName().startswith("_bucket=")
-    }
-    publish_partitions(spark, view_path, stage, "_bucket")
-    emptied = [b for b in buckets if f"_bucket={b}" not in staged]
-    if emptied:
-        _delete_partitions_by_rename(
-            spark,
-            view_path,
-            [f"_bucket={b}" for b in emptied],
-            "refresh_join_view",
-        )
+    _stage_and_publish(spark, view_path, out, "_bucket", affected=buckets)
     return buckets
 
 

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..io import _vfs
+from ..io import _old, _publish_table, _vfs, recover_small_table
 
 __all__ = [
     "compact_postings",
@@ -1101,36 +1101,27 @@ def _move_data_files(fs, jvm_path, files: dict, dest_root: str) -> int:
 
 def recover_posting_store(spark, postings_dir: str) -> bool:
     """Entry-time crash recovery for a posting store's compaction
-    leftovers - the mutator self-recovery rule, specialized from
-    ``io.recover_small_table`` because a posting store's ``__old`` may
-    hold CONCURRENTLY APPENDED postings that were never rescued (a
-    crash between compact_postings' swap and its rescue pass):
-
-    - live missing, ``__old`` intact: restore the snapshot (rename).
-    - live present AND ``__old`` present: the swap completed but
-      cleanup didn't - move every ``__old`` data file into the live
-      store before deleting it. Recall can only gain (worst case the
-      whole pre-compaction store re-appends as duplicate postings,
-      which screens absorb and the in-progress compaction immediately
-      collapses); deleting blind could lose a concurrent append
-      forever, the module's worst failure mode.
+    leftovers. A live store missing beside ``__old`` is restored by
+    ``io.recover_small_table``. A live store beside ``__old`` is the
+    posting store's own rule: the swap completed but cleanup didn't,
+    and ``__old`` may hold CONCURRENTLY APPENDED postings that were
+    never rescued, so every ``__old`` data file moves into the live
+    store before ``__old`` is deleted. Recall can only gain (worst case
+    the whole pre-compaction store re-appends as duplicate postings,
+    which screens absorb and the next compaction collapses); deleting
+    blind could lose a concurrent append forever, the module's worst
+    failure mode.
 
     Returns True if any recovery action ran. Both streaming ingests
     and compact_postings call this at entry, so the crash window heals
     on the NEXT batch/maintenance pass without operator action."""
     root = postings_dir.rstrip("/")
     jvm_path, fs = _vfs(spark, root)
-    old = jvm_path(root + "__old")
-    if not fs.exists(old):
-        return False
-    if not fs.exists(jvm_path(root)):
-        if not fs.rename(old, jvm_path(root)):
-            raise IOError(f"posting-store crash recovery failed for {root!r}")
-        return True
-    _move_data_files(
-        fs, jvm_path, _list_data_files(fs, jvm_path, root + "__old"), root
-    )
-    fs.delete(old, True)
+    old = _old(root)
+    if not (fs.exists(jvm_path(root)) and fs.exists(jvm_path(old))):
+        return recover_small_table(spark, root)
+    _move_data_files(fs, jvm_path, _list_data_files(fs, jvm_path, old), root)
+    fs.delete(jvm_path(old), True)
     return True
 
 
@@ -1158,20 +1149,10 @@ def compact_postings(
     the right compaction because posting rows carry no payload beyond
     their identity (_id, _n, _hk, _p [, _bk]).
 
-    Publishes via the stage-and-swap rename (the publish_small_table
-    discipline - never delete-then-write: the previous snapshot is
-    never deleted before the new one is live). The swap's two renames
-    leave ONE crash window where the store is absent at its path with
-    the snapshot intact at ``__old``; this function runs
-    ``recover_posting_store`` at entry, so the NEXT maintenance pass
-    restores it - and note that helper's live+__old rule differs from
-    ``io.recover_small_table``'s: a leftover ``__old`` beside a live
-    store is MERGED in (possible duplicate postings, reclaimed right
-    here), never deleted blind, because it may hold a concurrent
-    append the crashed pass never rescued. The ingests' loud
-    missing-store guard means the gap is noisy, never silent
-    (review finding: the first cut's docstring overclaimed
-    crash-at-any-point safety and shipped no recovery path).
+    Publishes through the whole-table swap (``io`` module docstring);
+    ``recover_posting_store`` runs at entry and heals a crashed swap.
+    The ingests' loud missing-store guard means the swap's rename
+    window is noisy, never silent.
 
     Preserves the ``_bk`` partitioning layout and carries the
     ``_meta`` sidecar into the new snapshot VERBATIM (schema-agnostic
@@ -1183,9 +1164,9 @@ def compact_postings(
     the legitimate all-unshingleable-admissions state) is already
     compact: returns (0, 0) without touching it (review finding: the
     schemaless read crashed on inference). Single maintenance writer
-    per store assumed (wrap in io.maintenance_lock to enforce) - that
-    lock covers maintenance-vs-maintenance only; the ingests' appends
-    take no lock, so compaction must tolerate a CONCURRENT APPEND.
+    per store assumed - the maintenance lock covers
+    maintenance-vs-maintenance only; the ingests' appends take no
+    lock, so compaction must tolerate a CONCURRENT APPEND.
 
     Concurrent-append safety (review finding - the worst failure mode
     was real): an append landing between this function's snapshot
@@ -1222,8 +1203,6 @@ def compact_postings(
     before = store.count()
     has_meta = fs.exists(jvm_path(root + "/_meta"))
     meta_df = spark.read.parquet(root + "/_meta") if has_meta else None
-    stage = root + "__stage"
-    fs.delete(jvm_path(stage), True)
     # BOUND the compacted snapshot's file count: one file per bucket
     # (repartition on the partition column) or defaultParallelism for
     # the unbucketed flavor. Without this, a wide shuffle writes up to
@@ -1239,34 +1218,29 @@ def compact_postings(
             spark.sparkContext.defaultParallelism
         )
         writer = compacted.write.mode("overwrite")
-    writer.parquet(stage)
-    if meta_df is not None:
-        # materialized BEFORE the swap below unlinks its source files
-        meta_df.coalesce(1).write.mode("overwrite").parquet(
-            stage + "/_meta"
-        )
-    if _pre_swap_hook is not None:
-        _pre_swap_hook()
-    old = jvm_path(root + "__old")
-    fs.delete(old, True)
-    if not fs.rename(jvm_path(root), old):
-        raise IOError(f"compact_postings: live -> __old failed for {root!r}")
-    if not fs.rename(jvm_path(stage), jvm_path(root)):
-        # roll the live store back so readers never see absence
-        fs.rename(old, jvm_path(root))
-        raise IOError(f"compact_postings: stage -> live failed for {root!r}")
-    # rescue concurrent appends: any data file in __old that was NOT
-    # in the pre-read snapshot landed after it and is NOT covered by
-    # the distinct rewrite - move it into the live store (same rel
-    # path, so the _bk= layout is preserved) BEFORE deleting __old
-    late = {
-        rel: full
-        for rel, full in _list_data_files(
-            fs, jvm_path, root + "__old"
-        ).items()
-        if rel not in snapshot
-    }
-    _move_data_files(fs, jvm_path, late, root)
-    fs.delete(old, True)
+
+    def write(stage: str) -> None:
+        writer.parquet(stage)
+        if meta_df is not None:
+            # materialized BEFORE the swap unlinks its source files
+            meta_df.coalesce(1).write.mode("overwrite").parquet(
+                stage + "/_meta"
+            )
+        if _pre_swap_hook is not None:
+            _pre_swap_hook()
+
+    def rescue(old: str) -> None:
+        # any data file in __old that was NOT in the pre-read snapshot
+        # landed after it and is NOT covered by the distinct rewrite -
+        # move it into the live store (same rel path, so the _bk=
+        # layout is preserved) BEFORE __old is deleted
+        late = {
+            rel: full
+            for rel, full in _list_data_files(fs, jvm_path, old).items()
+            if rel not in snapshot
+        }
+        _move_data_files(fs, jvm_path, late, root)
+
+    _publish_table(spark, root, write, rescue=rescue)
     after = spark.read.parquet(root).count()
     return before, after

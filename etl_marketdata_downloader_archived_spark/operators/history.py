@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from ..io import _vfs, publish_small_table, read_version, recover_small_table
+from ..io import _read_recovered, publish_small_table, read_version
 
 
 def scd2_history(
@@ -158,14 +158,11 @@ def scd2_foreach_batch(
     """
     def fold(batch_df: DataFrame, _epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        recover_small_table(spark, path)
-        jvm_path, fs = _vfs(spark, path)
-        if fs.exists(jvm_path(path)):
-            merged = scd2_merge(
-                spark.read.parquet(path), batch_df, keys, ts_col, attrs
-            )
-        else:
+        cur = _read_recovered(spark, path)
+        if cur is None:
             merged = scd2_history(batch_df, keys, ts_col, attrs)
+        else:
+            merged = scd2_merge(cur, batch_df, keys, ts_col, attrs)
         publish_small_table(merged, path)
 
     return fold

@@ -63,7 +63,7 @@ from pyspark.sql import types as T
 
 from ..functions.globs import glob_to_regex
 from ..functions.urls import last_segment, last_ws_token, url_join
-from ..io import latest_per_key
+from ..io import latest_per_key, recover_small_table
 from ..schemas import MANIFEST, TASK
 from ..sources.transport import TransportError, fetch_bytes, fetch_listing, fetch_text
 
@@ -647,15 +647,16 @@ def run_downloader(
         quarantine.write.mode("append").parquet(quarantine_dir)
 
     # composed catalog error path: flag every failing source active=2
-    # (reference handle_error writes the whole catalog back;
-    # localCheckpoint breaks lineage so the overwrite of the path we
-    # just read from is safe)
+    # (reference handle_error writes the whole catalog back; recover a
+    # crashed swap before reading, and localCheckpoint breaks lineage
+    # so the publish over the path we just read from is safe)
     catalog_out = None
     if catalog_path is not None:
         from ..sources.catalog import flag_broken, read_catalog, valid_rows, write_catalog
 
         broken = [r.ID for r in quarantine.select("ID").distinct().collect()]
         if broken:
+            recover_small_table(spark, catalog_path)
             cat = valid_rows(read_catalog(spark, catalog_path, fmt="parquet"))
             catalog_out = flag_broken(cat, broken).localCheckpoint()
             pinned.append(catalog_out)

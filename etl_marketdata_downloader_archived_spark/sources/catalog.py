@@ -6,8 +6,10 @@ point-updated on error by re-reading + rewriting the whole file
 (data-downloader/data_downloader.py:40-48). This engine reads it with
 an explicit schema in PERMISSIVE mode (malformed rows land in
 ``_corrupt_record`` instead of crashing the job) and expresses the
-point update as a conditional projection + atomic overwrite - the
-right call for a catalog-sized table. At lake scale the same operation
+point update as a conditional projection + a whole-table rewrite that
+publishes by rename (``io.publish_small_table``), so a failed or
+crashed write keeps the previous catalog - the right call for a
+catalog-sized table. At lake scale the same operation
 is a transactional MERGE INTO (Delta/Iceberg; not in this
 environment).
 """
@@ -20,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..io import publish_small_table
 from ..schemas import SOURCES
 
 # PERMISSIVE read needs the corrupt-record column declared in-schema
@@ -68,10 +71,13 @@ def valid_rows(catalog: DataFrame) -> DataFrame:
 
 
 def write_catalog(catalog: DataFrame, path: str) -> None:
-    """Atomic whole-table overwrite (catalog is control-table sized;
-    coalesce(1) keeps one file like the reference's single CSV)."""
+    """Replace the catalog at ``path`` with one file (like the
+    reference's single CSV) through ``io.publish_small_table``: the
+    previous catalog stays readable if the write fails, and a swap
+    caught mid-rename is healed by the next mutator (``io`` module
+    docstring)."""
     cols = [f.name for f in SOURCES.fields]
-    catalog.select(*cols).coalesce(1).write.mode("overwrite").parquet(path)
+    publish_small_table(catalog.select(*cols), path)
 
 
 def flag_broken(catalog: DataFrame, broken_ids: Iterable[str]) -> DataFrame:

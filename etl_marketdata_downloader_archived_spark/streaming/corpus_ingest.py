@@ -65,7 +65,7 @@ from ..corpus_store import (
     read_corpus_meta,
     write_corpus_meta,
 )
-from ..io import _vfs, publish_small_table, recover_small_table
+from ..io import _read_recovered, _vfs, publish_small_table
 from ..operators.dedup import (
     band_postings,
     greedy_admission_drops,
@@ -179,10 +179,14 @@ def _corpus_layout(
     full scans, unpartitioned appends - unless its on-disk layout is
     ``_ck``-partitioned (sheared: fail loud). A new corpus takes
     ``corpus_bucket_count``."""
-    recover_small_table(spark, corpus_dir)
-    if not _dir_exists(spark, corpus_dir):
+    # read only the sidecar (None for a legacy corpus), in a list so an
+    # existing legacy corpus is not mistaken for a missing one
+    found = _read_recovered(
+        spark, corpus_dir, lambda p: [read_corpus_meta(spark, p)]
+    )
+    if found is None:
         return False, corpus_bucket_count
-    buckets = read_corpus_meta(spark, corpus_dir)
+    [buckets] = found
     if buckets is None:
         forbid_sheared_corpus(spark, corpus_dir, fn_name)
     return True, buckets
@@ -842,9 +846,11 @@ def start_corpus_ingest_dsir(
     raw_dir = model_dir.rstrip("/") + "/raw"
     target_dir = model_dir.rstrip("/") + "/target"
     marker_dir = corpus_dir.rstrip("/") + "/_append_marker"
+    tgt_schema = "bucket bigint, c_t bigint"
     spark0 = target.sparkSession
-    recover_small_table(spark0, target_dir)
-    if refresh_target or not _dir_exists(spark0, target_dir):
+    if refresh_target or _read_recovered(
+        spark0, target_dir, spark0.read.schema(tgt_schema).parquet
+    ) is None:
         tgt = (
             hashed_ngram_buckets(target, id_col, text_col, m, seed, algo)
             .groupBy("bucket")
@@ -863,17 +869,13 @@ def start_corpus_ingest_dsir(
         )
         if gated.isEmpty():
             return
-        recover_small_table(spark, raw_dir)
-        tgt = spark.read.schema("bucket bigint, c_t bigint").parquet(target_dir)
-        raw_exists = _dir_exists(spark, raw_dir)
-        if raw_exists:
-            raw_model = spark.read.schema(
-                "bucket bigint, c_r bigint, _applied_batch bigint"
-            ).parquet(raw_dir)
-        else:
-            raw_model = spark.createDataFrame(
-                [], "bucket bigint, c_r bigint, _applied_batch bigint"
-            )
+        tgt = spark.read.schema(tgt_schema).parquet(target_dir)
+        raw_schema = "bucket bigint, c_r bigint, _applied_batch bigint"
+        raw_model = _read_recovered(
+            spark, raw_dir, spark.read.schema(raw_schema).parquet
+        )
+        if raw_model is None:
+            raw_model = spark.createDataFrame([], raw_schema)
         raw_model = raw_model.localCheckpoint()  # consumed 3x below
         applied = [
             r[0]
@@ -951,12 +953,10 @@ def start_corpus_ingest_dsir(
         corpus_exists, cbuckets = _corpus_layout(
             spark, corpus_dir, corpus_bucket_count, fn
         )
-        recover_small_table(spark, marker_dir)
-        marked = None
-        if _dir_exists(spark, marker_dir):
-            marked = spark.read.schema("_b bigint").parquet(
-                marker_dir
-            ).first()
+        marker = _read_recovered(
+            spark, marker_dir, spark.read.schema("_b bigint").parquet
+        )
+        marked = None if marker is None else marker.first()
         if marked is not None and marked["_b"] >= batch_id:
             # crash replay: the marker landed, so this batch's append
             # MAY have too

@@ -61,7 +61,7 @@ def start_purge_with_audit(
     set between batches (subject-sized; retention sweep once the
     deletion obligation expires, like the views.py tombstones).
     Returns the StreamingQuery."""
-    from ..io import publish_small_table, recover_small_table, _vfs
+    from ..io import _read_recovered, publish_small_table
 
     data_cols = [c for c in df.columns]
 
@@ -74,11 +74,8 @@ def start_purge_with_audit(
             .groupBy(key)
             .agg(F.min(ts).alias("_doom_ts"))
         )
-        recover_small_table(spark, store_path)
-        jvm_path, fs = _vfs(spark, store_path)
-        if fs.exists(jvm_path(store_path.rstrip("/"))):
-            stored = spark.read.parquet(store_path)
-        else:
+        stored = _read_recovered(spark, store_path)
+        if stored is None:
             stored = spark.createDataFrame(
                 [],
                 batch.select(

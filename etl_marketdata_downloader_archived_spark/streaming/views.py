@@ -66,12 +66,7 @@ def start_join_view_maintenance(
     leaves the previous snapshot restorable, never an absent dir that
     a replay would mistake for first-batch. Returns the
     StreamingQuery."""
-    from ..io import (
-        _vfs,
-        publish_small_table,
-        recover_small_table,
-        refresh_join_view,
-    )
+    from ..io import _read_recovered, publish_small_table, refresh_join_view
 
     left_cols = [c for c in updates.columns if c not in (op_col, seq_col)]
 
@@ -96,14 +91,8 @@ def start_join_view_maintenance(
             .localCheckpoint(eager=True)
         )
         keys = winners.select(on).distinct()
-        # self-recover a crashed swap BEFORE the existence probe: with
-        # __old intact and live missing, absence means mid-swap crash,
-        # not first-batch (the mutator self-recovery rule)
-        recover_small_table(spark, left_path)
-        jvm_path, fs = _vfs(spark, left_path)
-        store_exists = fs.exists(jvm_path(left_path.rstrip("/")))
-        if store_exists:
-            cur = spark.read.parquet(left_path)
+        cur = _read_recovered(spark, left_path)
+        if cur is not None:
             # a pre-existing plain snapshot (no ordinal columns)
             # participates as older-than-everything, live
             if "_seq" not in cur.columns:

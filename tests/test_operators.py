@@ -5,11 +5,16 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
+from etl_marketdata_downloader_archived_spark import io
+from etl_marketdata_downloader_archived_spark.corpus_store import bucket_corpus
+from etl_marketdata_downloader_archived_spark.io import compact_lake, publish_small_table
 from etl_marketdata_downloader_archived_spark.operators import dedup as D
 from etl_marketdata_downloader_archived_spark.operators import similarity as S
 from etl_marketdata_downloader_archived_spark.operators import text as X
+from etl_marketdata_downloader_archived_spark.operators.fuzzy import compact_postings
 from etl_marketdata_downloader_archived_spark.operators.multimodal import (
     decode_assets,
     frame_sample_plan,
@@ -1793,6 +1798,87 @@ def test_publish_small_table_crash_recovery(spark, tmp_path) -> None:
     publish_small_table(mk("c"), path)
     assert {r.tag for r in spark.read.parquet(path).collect()} == {"c"}
     assert not os.path.exists(path + "__old")
+
+
+class _RenameFails:
+    """A Hadoop FileSystem whose renames out of a dir named with one of
+    ``suffixes`` return False (as HDFS does on a failed rename); every
+    other call passes through."""
+
+    def __init__(self, fs, suffixes):
+        self._fs = fs
+        self._suffixes = suffixes
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+    def rename(self, src, dst):
+        if src.getName().endswith(self._suffixes):
+            return False
+        return self._fs.rename(src, dst)
+
+
+def _fail_renames(monkeypatch, *suffixes) -> None:
+    real_vfs = io._vfs
+
+    def vfs(spark, path):
+        jvm_path, fs = real_vfs(spark, path)
+        return jvm_path, _RenameFails(fs, suffixes)
+
+    monkeypatch.setattr(io, "_vfs", vfs)
+
+
+def _publish_small(spark, path):
+    publish_small_table(spark.createDataFrame([(9, "new")], "id long, tag string"), path)
+
+
+def _compact_lake(spark, path):
+    compact_lake(spark, path, keys=("id",), ts_col="ts", partition_cols=("tag",))
+
+
+def _bucket_corpus(spark, path):
+    bucket_corpus(spark, path, "id", buckets=4)
+
+
+@pytest.mark.parametrize(
+    "publish",
+    [_publish_small, _compact_lake, _bucket_corpus, compact_postings],
+    ids=["publish_small_table", "compact_lake", "bucket_corpus", "compact_postings"],
+)
+def test_whole_table_publish_rolls_back_a_failed_swap(
+    spark, tmp_path, monkeypatch, publish
+) -> None:
+    """Every whole-table publisher leaves the live table readable, with
+    its old rows, when the stage -> live rename fails: the live table
+    renamed aside comes back before the error is raised."""
+    path = str(tmp_path / "table")
+    spark.createDataFrame(
+        [(1, "a", 10), (1, "a", 10), (2, "b", 20)], "id long, tag string, ts long"
+    ).write.parquet(path)
+    _fail_renames(monkeypatch, "__stage", "__compact")
+    with pytest.raises(IOError):
+        publish(spark, path)
+    monkeypatch.undo()
+
+    got = sorted(tuple(r) for r in spark.read.parquet(path).collect())
+    assert got == [(1, "a", 10), (1, "a", 10), (2, "b", 20)]
+
+
+def test_vacuum_maintenance_raises_on_a_failed_restore(
+    spark, tmp_path, monkeypatch
+) -> None:
+    """A table left mid-swap whose __old cannot be renamed back is an
+    error, not a silently empty report."""
+    import os
+
+    path = str(tmp_path / "table")
+    spark.createDataFrame([(1, "a")], "id long, tag string").write.parquet(path)
+    os.rename(path, path + "__old")
+    _fail_renames(monkeypatch, "__old")
+    with pytest.raises(IOError):
+        io.vacuum_maintenance(spark, path)
+    monkeypatch.undo()
+    assert io.vacuum_maintenance(spark, path)["recovered"] == [path]
 
 
 def test_version_cdc_between_snapshots(spark, tmp_path) -> None:

@@ -260,6 +260,51 @@ def test_catalog_flagging_is_composed(spark, tmp_path, catalog_csv) -> None:
     assert flags["1"] == 1  # healthy source untouched
 
 
+def test_write_catalog_failure_keeps_previous_catalog(
+    spark, tmp_path, catalog_csv
+) -> None:
+    """A catalog write whose frame fails while it is evaluated leaves
+    the previous catalog readable: the new catalog is staged and
+    renamed in, never written over the live one."""
+    from pyspark.sql.functions import udf
+
+    cat_dir = str(tmp_path / "catalog_parquet")
+    write_catalog(valid_rows(read_catalog(spark, catalog_csv)), cat_dir)
+    before = sorted(read_catalog(spark, cat_dir, fmt="parquet").collect())
+
+    @udf("int")
+    def boom(_active):
+        raise ValueError("catalog row failed to evaluate")
+
+    bad = valid_rows(read_catalog(spark, catalog_csv)).withColumn(
+        "active", boom("active")
+    )
+    with pytest.raises(Exception, match="failed to evaluate"):
+        write_catalog(bad, cat_dir)
+    assert sorted(read_catalog(spark, cat_dir, fmt="parquet").collect()) == before
+
+
+def test_failing_batch_restores_and_flags_a_mid_swap_catalog(
+    spark, tmp_path, catalog_csv
+) -> None:
+    """A catalog left between the swap's two renames (live missing,
+    __old intact) is restored by the next batch that flags a source,
+    and the flag lands on the restored catalog."""
+    import os
+
+    cat_dir = str(tmp_path / "catalog_parquet")
+    write_catalog(valid_rows(read_catalog(spark, catalog_csv)), cat_dir)
+    tasks = harvest_tasks(read_catalog(spark, catalog_csv), "hourly", NOW)
+    os.rename(cat_dir, cat_dir + "__old")
+
+    run_downloader(spark, tasks, str(tmp_path / "lake"), catalog_path=cat_dir)
+    flags = {r.id: r.active for r in read_catalog(spark, cat_dir, fmt="parquet").collect()}
+    assert flags["4"] == 2  # missing.html source flagged broken
+    assert flags["1"] == 1
+    assert len(flags) == 6  # every valid row survived the restore
+    assert not os.path.exists(cat_dir + "__old")
+
+
 def test_overwrite_route_replaces_not_duplicates(spark, tmp_path, remote) -> None:
     """LINKS_OVERWRITE re-fetches REPLACE the logical file (reference:
     each S3 put overwrites the object): the append log grows, but the

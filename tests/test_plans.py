@@ -477,6 +477,26 @@ def test_hadoop_fs_accessor_is_single() -> None:
     assert hits == {"io.py"}
 
 
+def test_table_swap_is_single() -> None:
+    """The stage-and-swap publish and its crash recovery are written
+    once, in io.py: the sibling-suffix literals of the whole-table and
+    partition swaps appear in no other package module, so the rename
+    order and the recovery rule cannot drift between copies."""
+    from pathlib import Path
+
+    pkg = (
+        Path(__file__).resolve().parents[1]
+        / "etl_marketdata_downloader_archived_spark"
+    )
+    hits = {
+        str(p.relative_to(pkg))
+        for p in pkg.rglob("*.py")
+        for needle in ('"__old"', '"__stage"', '"__backup"')
+        if needle in p.read_text(encoding="utf-8")
+    }
+    assert hits == {"io.py"}
+
+
 def test_group_state_fold_is_single() -> None:
     """Every applyInPandasWithState operator runs through
     ``streaming.stateful._fold``: the call and the timeout choice
