@@ -321,7 +321,8 @@ def _publish_table(
     ``__old`` is dropped."""
     jvm_path, fs = _vfs(spark, path)
     root = path.rstrip("/")
-    stage, live, old = root + stage_suffix, jvm_path(root), jvm_path(_old(root))
+    stage = root + stage_suffix
+    live, old = jvm_path(root), jvm_path(_old(root))
     fs.delete(jvm_path(stage), True)
     write(stage)
     fs.delete(old, True)
