@@ -49,7 +49,13 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
-from .io import _publish_table, _vfs
+from .io import (
+    _partition_dirs,
+    _publish_table,
+    _read_meta,
+    _vfs,
+    _write_meta,
+)
 
 __all__ = [
     "corpus_bucket_expr",
@@ -61,8 +67,6 @@ __all__ = [
     "bucket_corpus",
 ]
 
-_META = "/_meta"
-
 
 def corpus_bucket_expr(id_col: str | Column, buckets: int) -> Column:
     """``_ck = pmod(xxhash64(id), B)`` - deterministic in the id VALUE
@@ -73,32 +77,26 @@ def corpus_bucket_expr(id_col: str | Column, buckets: int) -> Column:
 
 
 def write_corpus_meta(spark: SparkSession, corpus_dir: str, buckets: int) -> None:
-    """One-row parquet sidecar at ``<corpus_dir>/_meta`` recording the
-    bucket count - written BEFORE the first data append (a crash right
-    after leaves an empty corpus that already carries its contract,
-    the posting-store ordering)."""
+    """Record the bucket count in the corpus's ``_meta`` sidecar
+    (Layout, ``io`` module docstring) - written BEFORE the first data
+    append (a crash right after leaves an empty corpus that already
+    carries its contract, the posting-store ordering)."""
     if buckets < 1:
         raise ValueError(f"buckets must be >= 1, got {buckets}")
-    spark.createDataFrame(
-        [(buckets,)], "_cbuckets int"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        corpus_dir.rstrip("/") + _META
-    )
+    _write_meta(spark, corpus_dir, {"_cbuckets": buckets})
 
 
 def read_corpus_meta(spark: SparkSession, corpus_dir: str) -> int | None:
     """The corpus bucket count from its sidecar, or None for a legacy
-    (pre-bucketing) corpus. A present-but-unreadable sidecar raises -
-    corruption, not absence."""
-    jvm_path, fs = _vfs(spark, corpus_dir)
-    if not fs.exists(jvm_path(corpus_dir.rstrip("/") + _META)):
+    (pre-bucketing) corpus."""
+    meta = _read_meta(spark, corpus_dir)
+    if meta is None:
         return None
-    row = spark.read.parquet(corpus_dir.rstrip("/") + _META).first()
-    if row is None or row["_cbuckets"] is None or row["_cbuckets"] < 1:
+    if (meta.get("_cbuckets") or 0) < 1:
         raise ValueError(
-            f"corpus _meta sidecar at {corpus_dir} is corrupt: {row}"
+            f"corpus _meta sidecar at {corpus_dir} is corrupt: {meta}"
         )
-    return int(row["_cbuckets"])
+    return int(meta["_cbuckets"])
 
 
 def forbid_sheared_corpus(
@@ -110,11 +108,7 @@ def forbid_sheared_corpus(
     is restored, every partition-pruned read would silently skip them.
     Fail loud with the restore instruction (the posting stores'
     ``_forbid_sheared_bucketed_store`` rule)."""
-    jvm_path, fs = _vfs(spark, corpus_dir)
-    if any(
-        st.getPath().getName().startswith("_ck=")
-        for st in fs.listStatus(jvm_path(corpus_dir))
-    ):
+    if _partition_dirs(spark, corpus_dir, "_ck"):
         raise ValueError(
             f"{fn_name}: corpus at {corpus_dir} is _ck-partitioned but "
             "its _meta sidecar is missing - restore it "
@@ -223,9 +217,7 @@ def bucket_corpus(
             .parquet(stage)
         )
         # sidecar rides the staged copy so the swap is atomic for BOTH
-        spark.createDataFrame([(buckets,)], "_cbuckets int").coalesce(
-            1
-        ).write.mode("overwrite").parquet(stage + _META)
+        write_corpus_meta(spark, stage, buckets)
 
     _publish_table(spark, root, write)
     return n

@@ -5,6 +5,17 @@ the partitioned-lake layout the reference lands into by source-type
 prefix (reference: data-downloader/data_downloader.py:104,107,132,170,195)
 - re-expressed as `partitionBy` so Spark partition pruning works for free.
 
+Layout, shared by every reader and mutator of a lake dir. A path part
+is hidden when it starts with ``.``, or with ``_`` and has no ``=``
+(Spark's rule: ``_SUCCESS``, ``_temporary/``, ``.hive-staging`` and
+``_meta`` are hidden, a ``_bk=3`` partition dir is not); every other
+file under the dir is data (``_list_data_files``). A partition dir is
+a ``col=value`` child of the table dir (``_partition_dirs``). A dir's
+build parameters live in a one-row parquet sidecar of int fields at
+``<dir>/_meta`` (``_write_meta``/``_read_meta``): hidden from data
+reads, it travels with the dir. An absent sidecar means a legacy dir
+written before it; a present but empty one is corrupt and raises.
+
 The publish protocol, shared by every table mutator in the package.
 Readers see a table (or a partition) wholly old or wholly new, and a
 crash at any point leaves every byte recoverable:
@@ -73,6 +84,78 @@ def _vfs(spark: SparkSession, path: str):
     return jvm_path, jvm_path(path).getFileSystem(
         spark._jsc.hadoopConfiguration()
     )
+
+
+def _list_data_files(spark: SparkSession, root: str) -> dict:
+    """rel-path -> (full path, length) of every data file under
+    ``root``, recursively (the Layout rule in the module docstring);
+    empty when ``root`` is missing."""
+    jvm_path, fs = _vfs(spark, root)
+    base = jvm_path(root.rstrip("/"))
+    out: dict = {}
+    if not fs.exists(base):
+        return out
+    qbase = fs.makeQualified(base).toString().rstrip("/")
+    it = fs.listFiles(base, True)
+    while it.hasNext():
+        st = it.next()
+        f = st.getPath().toString()
+        rel = f[len(qbase):].lstrip("/") if f.startswith(qbase) else f
+        if not any(
+            p.startswith(("_", ".")) and "=" not in p for p in rel.split("/")
+        ):
+            out[rel] = (f, st.getLen())
+    return out
+
+
+def _move_data_files(spark: SparkSession, files: dict, dest_root: str) -> None:
+    """Move ``_list_data_files`` entries under ``dest_root`` at the same
+    rel paths (partition dirs kept). Part-file names carry a writer
+    UUID, so they do not collide; a failed rename raises."""
+    jvm_path, fs = _vfs(spark, dest_root)
+    for rel, (full, _) in files.items():
+        dest = jvm_path(dest_root.rstrip("/") + "/" + rel)
+        fs.mkdirs(dest.getParent())
+        if not fs.rename(jvm_path(full), dest):
+            raise IOError(
+                f"data file move of {rel!r} into {dest_root!r} failed; "
+                "source retained"
+            )
+
+
+def _partition_dirs(spark: SparkSession, path: str, col: str) -> dict:
+    """dir name -> ``Path`` of each ``col=`` partition dir directly
+    under ``path``; empty when ``path`` is missing."""
+    jvm_path, fs = _vfs(spark, path)
+    root = jvm_path(path.rstrip("/"))
+    if not fs.exists(root):
+        return {}
+    return {
+        st.getPath().getName(): st.getPath()
+        for st in fs.listStatus(root)
+        if st.isDirectory() and st.getPath().getName().startswith(col + "=")
+    }
+
+
+def _write_meta(spark: SparkSession, dir_: str, fields: dict) -> None:
+    """Write ``fields`` as the one-row ``<dir_>/_meta`` sidecar, each
+    an int column (Layout, module docstring)."""
+    spark.createDataFrame(
+        [tuple(fields.values())], ", ".join(f"{k} int" for k in fields)
+    ).coalesce(1).write.mode("overwrite").parquet(dir_.rstrip("/") + "/_meta")
+
+
+def _read_meta(spark: SparkSession, dir_: str) -> dict | None:
+    """The ``<dir_>/_meta`` sidecar's fields, or None when it is absent;
+    raises when it is present but empty (Layout, module docstring)."""
+    meta = dir_.rstrip("/") + "/_meta"
+    jvm_path, fs = _vfs(spark, meta)
+    if not fs.exists(jvm_path(meta)):
+        return None
+    row = spark.read.parquet(meta).first()
+    if row is None:
+        raise ValueError(f"_meta sidecar at {dir_} is corrupt: no row")
+    return row.asDict()
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -625,13 +708,8 @@ def publish_partitions(
     files during the write job, a reader never lists a partition with
     half old, half new files. Partition dir names travel verbatim
     (URL-escaped values included)."""
-    jvm_path, fs = _vfs(spark, path)
-    prefix = partition_col + "="
-    _swap_partitions(spark, path, {
-        st.getPath().getName(): st.getPath()
-        for st in fs.listStatus(jvm_path(stage))
-        if st.getPath().getName().startswith(prefix)  # not _SUCCESS
-    })
+    _swap_partitions(spark, path, _partition_dirs(spark, stage, partition_col))
+    jvm_path, fs = _vfs(spark, stage)
     fs.delete(jvm_path(stage), True)
 
 
@@ -692,8 +770,7 @@ def _stage_and_publish(
     if max_records_per_file:
         w = w.option("maxRecordsPerFile", max_records_per_file)
     w.parquet(stage)
-    jvm_path, fs = _vfs(spark, path)
-    staged = {st.getPath().getName() for st in fs.listStatus(jvm_path(stage))}
+    staged = set(_partition_dirs(spark, stage, partition_col))
     publish_partitions(spark, path, stage, partition_col)
     emptied = {_partition_dir(spark, partition_col, v) for v in affected} - staged
     if emptied:
@@ -895,14 +972,22 @@ def compact_files(
     index current with whatever appends preceded it).
     """
     import math
-
-    vacuum_maintenance(spark, path)  # restore any crashed-publish state first
-
-    jvm_path, fs = _vfs(spark, path)
-    target_bytes = target_mb * 1024 * 1024
-
     from urllib.parse import unquote
 
+    vacuum_maintenance(spark, path)  # restore any crashed-publish state first
+    target_bytes = target_mb * 1024 * 1024
+
+    def sizes() -> dict:
+        # partition dir -> sizes of the data files directly inside it
+        out: dict = {}
+        for rel, (_, n) in _list_data_files(spark, path).items():
+            parts = rel.split("/")
+            if len(parts) == 2 and parts[0].startswith(f"{partition_col}="):
+                out.setdefault(parts[0], []).append(n)
+        return out
+
+    before = sizes()
+    files_before = sum(map(len, before.values()))
     # (dir_name, value) pairs needing a rewrite: dir_name addresses the
     # physical path, value matches the typed column. Spark URL-escapes
     # partition values in directory names (space, ':', '%', ...), so
@@ -910,20 +995,8 @@ def compact_files(
     # comparing the raw name silently skips every escaped partition.
     todo: list[tuple[str, str]] = []
     null_part = False  # __HIVE_DEFAULT_PARTITION__ fragmented?
-    files_before = 0
-    for st in fs.listStatus(jvm_path(path)):
-        name = st.getPath().getName()
-        if not (st.isDirectory() and name.startswith(f"{partition_col}=")):
-            continue
-        parts = [
-            f
-            for f in fs.listStatus(st.getPath())
-            if f.getPath().getName().endswith(".parquet")
-        ]
-        nbytes = sum(f.getLen() for f in parts)
-        need = max(1, math.ceil(nbytes / target_bytes))
-        files_before += len(parts)
-        if len(parts) > need:
+    for name, lens in before.items():
+        if len(lens) > max(1, math.ceil(sum(lens) / target_bytes)):
             raw = name.split("=", 1)[1]
             if raw == "__HIVE_DEFAULT_PARTITION__":
                 null_part = True
@@ -947,12 +1020,7 @@ def compact_files(
     dirs = [d for d, _ in todo] + (
         [f"{partition_col}=__HIVE_DEFAULT_PARTITION__"] if null_part else []
     )
-    n_bytes = sum(
-        f.getLen()
-        for d in dirs
-        for f in fs.listStatus(jvm_path(f"{path}/{d}"))
-        if f.getPath().getName().endswith(".parquet")
-    )
+    n_bytes = sum(sum(before[d]) for d in dirs)
     rows_per_file = max(1, int(n_rows * target_bytes / max(1, n_bytes)))
     _stage_and_publish(
         spark,
@@ -962,13 +1030,7 @@ def compact_files(
         max_records_per_file=rows_per_file,
     )
 
-    files_after = sum(
-        1
-        for st in fs.listStatus(jvm_path(path))
-        if st.isDirectory() and st.getPath().getName().startswith(f"{partition_col}=")
-        for f in fs.listStatus(st.getPath())
-        if f.getPath().getName().endswith(".parquet")
-    )
+    files_after = sum(map(len, sizes().values()))
     if index_dir is not None:
         refresh_skipping_index(spark, path, index_dir)
     return {
@@ -1042,40 +1104,18 @@ def write_audit_publish(
 
     jvm_path, fs = _vfs(spark, path)
     fs.mkdirs(jvm_path(path))
-
-    def _move(src_dir: str, dst_dir: str) -> None:
-        entries = list(fs.listStatus(jvm_path(src_dir)))
-        if (
-            mode == "replace"
-            and any(
-                not e.isDirectory()
-                and e.getPath().getName().endswith(".parquet")
-                for e in entries
-            )
-            and fs.exists(jvm_path(dst_dir))
-        ):
-            # replace semantics: clear the live files this directory
-            # is about to receive replacements for (leaf level only -
-            # partitions with no staged files are untouched)
-            for e in fs.listStatus(jvm_path(dst_dir)):
-                if not e.isDirectory() and e.getPath().getName().endswith(
-                    ".parquet"
-                ):
-                    fs.delete(e.getPath(), False)
-        for st in entries:
-            name = st.getPath().getName()
-            if st.isDirectory():  # partition dir: recurse, merging
-                fs.mkdirs(jvm_path(f"{dst_dir}/{name}"))
-                _move(f"{src_dir}/{name}", f"{dst_dir}/{name}")
-            elif name.endswith(".parquet"):
-                if not fs.rename(
-                    st.getPath(), jvm_path(f"{dst_dir}/{name}")
-                ):
-                    raise IOError(
-                        f"write_audit_publish: rename failed for {name}"
-                    )
-
-    _move(staging, path)
+    files = _list_data_files(spark, staging)
+    if mode == "replace":
+        # clear the live files of each dir about to receive staged
+        # ones (leaf level only - partitions with no staged files are
+        # untouched)
+        for d in {rel.rpartition("/")[0] for rel in files}:
+            dst = jvm_path(path.rstrip("/") + ("/" + d if d else ""))
+            if fs.exists(dst):
+                for e in fs.listStatus(dst):
+                    if e.isFile() and e.getPath().getName().endswith(".parquet"):
+                        fs.delete(e.getPath(), False)
+    _move_data_files(spark, files, path)
     fs.delete(jvm_path(staging), True)
     return {
         "published": True,
@@ -1531,12 +1571,7 @@ def purge_keys(
     # a purge that emptied the whole lake leaves a dir with no
     # partition children; the rerun must be the documented no-op,
     # not a schema-inference crash
-    jvm_path, fs = _vfs(spark, path)
-    prefix = partition_col + "="
-    if not fs.exists(jvm_path(path.rstrip("/"))) or not any(
-        st.getPath().getName().startswith(prefix)
-        for st in fs.listStatus(jvm_path(path.rstrip("/")))
-    ):
+    if not _partition_dirs(spark, path, partition_col):
         return []
     erasure = doomed.select(*key_cols).distinct()
     # one narrow scan decides everything: the doomed rows per
@@ -1680,12 +1715,7 @@ def refresh_join_view(
             "_bucket", F.pmod(F.xxhash64(F.col(on)), F.lit(int(n_buckets)))
         )
     )
-    jvm_path, fs = _vfs(spark, view_path)
-    has_live = fs.exists(jvm_path(view_path.rstrip("/"))) and any(
-        st.getPath().getName().startswith("_bucket=")
-        for st in fs.listStatus(jvm_path(view_path.rstrip("/")))
-    )
-    if has_live:
+    if _partition_dirs(spark, view_path, "_bucket"):
         cur = spark.read.parquet(view_path).filter(
             F.col("_bucket").isin(buckets)
         )
@@ -1696,6 +1726,7 @@ def refresh_join_view(
         # rebuilds the affected keys from scratch - an empty dir has
         # no parquet schema to read; the rename publish below needs
         # the root to exist
+        jvm_path, fs = _vfs(spark, view_path)
         fs.mkdirs(jvm_path(view_path.rstrip("/")))
         out = fresh
     _stage_and_publish(spark, view_path, out, "_bucket", affected=buckets)
@@ -1763,29 +1794,15 @@ class AmbiguousFileIdentityError(ValueError):
 
 
 def _list_live_files(spark: SparkSession, table_dir: str) -> dict:
-    """One recursive listing of the table's COMMITTED parquet files:
-    {canonical URI -> raw path string}. A file whose table-relative
-    path contains ANY hidden component ('_'/'.'-prefixed directory
-    or basename - `_temporary/` from an in-flight append,
-    `.hive-staging`, `_SUCCESS`) is excluded, mirroring the
-    hidden-path filter ``spark.read.parquet`` applies; filtering only
-    the basename treated files under such dirs as live data the full
-    scan never sees (ADVICE r11 medium). One listing stream replaces
-    the per-file exists() RPCs the read-path staleness guard used to
-    issue (O(N) namenode round trips at million-file scale)."""
-    jvm_path, fs = _vfs(spark, table_dir)
-    root = table_dir.rstrip("/")
-    qroot = fs.makeQualified(jvm_path(root)).toString().rstrip("/")
+    """The table's committed data files, {canonical URI -> raw path
+    string}, from one ``_list_data_files`` listing (so a file under
+    ``_temporary/`` or ``.hive-staging`` is not live, and one under a
+    ``_bucket=`` partition is, exactly as ``spark.read.parquet``
+    decides). One listing stream replaces the per-file exists() RPCs
+    the read-path staleness guard used to issue (O(N) namenode round
+    trips at million-file scale)."""
     live = {}
-    it = fs.listFiles(jvm_path(root), True)
-    while it.hasNext():
-        f = it.next().getPath().toString()
-        rel = f[len(qroot) :].lstrip("/") if f.startswith(qroot) else f
-        parts = rel.split("/")
-        if not parts[-1].endswith(".parquet"):
-            continue
-        if any(p.startswith(("_", ".")) for p in parts):
-            continue
+    for f, _ in _list_data_files(spark, table_dir).values():
         canon = _canon_file_uri(f)
         if canon in live and live[canon] != f:
             # two distinct on-disk files collapsing to one canonical
@@ -1803,6 +1820,26 @@ def _list_live_files(spark: SparkSession, table_dir: str) -> dict:
             )
         live[canon] = f
     return live
+
+
+def _file_stats(df: DataFrame, types: dict) -> DataFrame:
+    """One skipping-index row per file of ``df``: for each column of
+    ``types`` (name -> Spark type name), its min, max and has-null
+    flag after a cast to that type, and the type name itself. Stats
+    are strings; one literal type column PER indexed column, because
+    type names like decimal(10,2) contain commas, so a joined-CSV
+    encoding shears."""
+    aggs = []
+    for c, t in types.items():
+        typed = F.col(c).cast(t)
+        aggs += [
+            F.min(typed).cast("string").alias(f"_min_{c}"),
+            F.max(typed).cast("string").alias(f"_max_{c}"),
+            F.max(typed.isNull().cast("int")).alias(f"_hasnull_{c}"),
+        ]
+    return df.groupBy(F.input_file_name().alias("_file")).agg(*aggs).select(
+        "*", *[F.lit(t).alias(f"_type_{c}") for c, t in types.items()]
+    )
 
 
 def build_skipping_index(
@@ -1835,19 +1872,7 @@ def build_skipping_index(
     if missing:
         raise ValueError(f"skipping index: unknown columns {missing}")
     _check_indexable(types, columns)
-    aggs = []
-    for c in columns:
-        aggs.append(F.min(c).cast("string").alias(f"_min_{c}"))
-        aggs.append(F.max(c).cast("string").alias(f"_max_{c}"))
-        aggs.append(
-            F.max(F.col(c).isNull().cast("int")).alias(f"_hasnull_{c}")
-        )
-    # one literal type column PER indexed column: type names like
-    # decimal(10,2) contain commas, so a joined-CSV encoding shears
-    stats = df.groupBy(F.input_file_name().alias("_file")).agg(*aggs)
-    for c in columns:
-        stats = stats.withColumn(f"_type_{c}", F.lit(types[c]))
-    publish_small_table(stats, index_dir)
+    publish_small_table(_file_stats(df, {c: types[c] for c in columns}), index_dir)
     return spark.read.parquet(index_dir).count()
 
 
@@ -2028,23 +2053,12 @@ def refresh_skipping_index(
     removed = len(known.keys() - live.keys())
     if new_files:
         df = spark.read.option("basePath", table_dir).parquet(*new_files)
-        have = {f.name for f in df.schema.fields}
-        aggs = []
-        for c in idx_cols:
-            if c not in have:
-                raise ValueError(
-                    f"appended files lack indexed column {c!r}"
-                )
-            typed = F.col(c).cast(stored_types[c])
-            aggs.append(F.min(typed).cast("string").alias(f"_min_{c}"))
-            aggs.append(F.max(typed).cast("string").alias(f"_max_{c}"))
-            aggs.append(
-                F.max(typed.isNull().cast("int")).alias(f"_hasnull_{c}")
+        lacking = [c for c in idx_cols if c not in df.columns]
+        if lacking:
+            raise ValueError(
+                f"appended files lack indexed column {lacking[0]!r}"
             )
-        add = df.groupBy(F.input_file_name().alias("_file")).agg(*aggs)
-        for c in idx_cols:
-            add = add.withColumn(f"_type_{c}", F.lit(stored_types[c]))
-        merged = old_rows.unionByName(add)
+        merged = old_rows.unionByName(_file_stats(df, stored_types))
     else:
         merged = old_rows
     publish_small_table(merged, index_dir)

@@ -23,7 +23,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..io import _vfs
+from ..io import _read_meta, _write_meta
 from .text import fingerprint
 
 
@@ -293,9 +293,8 @@ def write_band_meta(
     jaccard_threshold: float,
     buckets: int | None = None,
 ) -> None:
-    """Persist a band-posting store's build parameters as a one-row
-    parquet sidecar at ``<postings_dir>/_meta`` (underscore-hidden
-    from store reads, travels with the directory) - the LSH twin of
+    """Persist a band-posting store's build parameters in its ``_meta``
+    sidecar (Layout, ``io`` module docstring) - the LSH twin of
     ``operators.fuzzy.write_postings_meta``. Band postings are only
     comparable when BOTH sides hash with the same (num_hashes, bands,
     shingle_n): screening a store built under different parameters
@@ -303,41 +302,35 @@ def write_band_meta(
     duplicates of the whole corpus, which is strictly worse than
     failing. The ingest validates this sidecar every batch (one tiny
     parquet footer, never a store scan)."""
-    q_den = 1_000_000
-    p_num = round(jaccard_threshold * q_den)
-    spark.createDataFrame(
-        [(num_hashes, bands, shingle_n, p_num, q_den, buckets)],
-        "_num_hashes int, _bands int, _shingle_n int, _p int, _q int,"
-        " _buckets int",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        postings_dir.rstrip("/") + "/_meta"
-    )
+    _write_meta(spark, postings_dir, {
+        "_num_hashes": num_hashes,
+        "_bands": bands,
+        "_shingle_n": shingle_n,
+        "_p": round(jaccard_threshold * 1_000_000),
+        "_q": 1_000_000,
+        "_buckets": buckets,
+    })
 
 
 def read_band_meta(spark, postings_dir: str) -> dict | None:
-    """Read the band-store ``_meta`` sidecar, or None when the store
-    predates it (legacy - the caller may write it forward). A
-    present-but-unreadable sidecar raises: corruption, not absence."""
-    jvm_path, fs = _vfs(spark, postings_dir)
-    if not fs.exists(jvm_path(postings_dir.rstrip("/") + "/_meta")):
+    """Read the band-store ``_meta`` sidecar, or None for a legacy
+    store (the caller may write it forward)."""
+    meta = _read_meta(spark, postings_dir)
+    if meta is None:
         return None
-    row = spark.read.parquet(postings_dir.rstrip("/") + "/_meta").first()
-    if row is None or row["_q"] != 1_000_000:
+    if meta.get("_q") != 1_000_000:
         raise ValueError(
-            f"band-store _meta at {postings_dir} is corrupt: {row}"
+            f"band-store _meta at {postings_dir} is corrupt: {meta}"
         )
-    out = {
-        "num_hashes": row["_num_hashes"],
-        "bands": row["_bands"],
-        "shingle_n": row["_shingle_n"],
-        "p_num": row["_p"],
-    }
-    # sidecars written before r13's bucketing lack the column: an
+    # sidecars written before r13's bucketing lack _buckets: an
     # unbucketed legacy store, not corruption
-    out["buckets"] = (
-        row["_buckets"] if "_buckets" in row.__fields__ else None
-    )
-    return out
+    return {
+        "num_hashes": meta["_num_hashes"],
+        "bands": meta["_bands"],
+        "shingle_n": meta["_shingle_n"],
+        "p_num": meta["_p"],
+        "buckets": meta.get("_buckets"),
+    }
 
 
 def incremental_minhash_dedup(

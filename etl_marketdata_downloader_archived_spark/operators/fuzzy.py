@@ -32,7 +32,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..io import _old, _publish_table, _vfs, recover_small_table
+from ..io import (
+    _list_data_files,
+    _move_data_files,
+    _old,
+    _publish_table,
+    _read_meta,
+    _vfs,
+    _write_meta,
+    recover_small_table,
+)
 
 __all__ = [
     "compact_postings",
@@ -1014,43 +1023,35 @@ def jaccard_screen_vs_postings(
 def write_postings_meta(
     spark, postings_dir: str, threshold: float, buckets: int | None = None
 ) -> None:
-    """Persist the posting store's build parameters as a one-row
-    parquet sidecar at ``<postings_dir>/_meta`` - underscore-hidden,
-    so ``spark.read.parquet(postings_dir)`` never sees it, but it
-    travels with the store (copy/compact the directory and the
-    contract comes along). Written once at store creation; every
-    append goes through the same threshold, so consumers can trust it
-    instead of scanning the store's ``_p`` column per batch (ADVICE
-    r12: the distinct-_p guard was a second full store scan on the
-    hot ingest path)."""
+    """Persist the posting store's build parameters in its ``_meta``
+    sidecar (Layout, ``io`` module docstring). Written once at store
+    creation; every append goes through the same threshold, so
+    consumers can trust it instead of scanning the store's ``_p``
+    column per batch (ADVICE r12: the distinct-_p guard was a second
+    full store scan on the hot ingest path)."""
     if not (0.0 < threshold <= 1.0):
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     q_den = 1_000_000
     p_num = round(threshold * q_den)
     if p_num == 0:
         raise ValueError(f"threshold {threshold} quantizes to 0/1e6")
-    spark.createDataFrame(
-        [(p_num, q_den, buckets)], "_p int, _q int, _buckets int"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        postings_dir.rstrip("/") + "/_meta"
+    _write_meta(
+        spark, postings_dir, {"_p": p_num, "_q": q_den, "_buckets": buckets}
     )
 
 
 def read_postings_meta(spark, postings_dir: str) -> dict | None:
     """Read the ``_meta`` sidecar: ``{"p_num": int, "buckets":
-    int | None}``, or None when the store predates the sidecar (the
-    caller then falls back to the distinct-_p scan and may write the
-    sidecar forward). A present-but-unreadable sidecar raises - that
-    is corruption, not absence."""
-    jvm_path, fs = _vfs(spark, postings_dir)
-    if not fs.exists(jvm_path(postings_dir.rstrip("/") + "/_meta")):
+    int | None}``, or None for a legacy store (the caller then falls
+    back to the distinct-_p scan and may write the sidecar forward)."""
+    meta = _read_meta(spark, postings_dir)
+    if meta is None:
         return None
-    row = spark.read.parquet(postings_dir.rstrip("/") + "/_meta").first()
-    if row is None or row["_q"] != 1_000_000:
+    if meta.get("_q") != 1_000_000:
         raise ValueError(
-            f"posting-store _meta at {postings_dir} is corrupt: {row}"
+            f"posting-store _meta at {postings_dir} is corrupt: {meta}"
         )
-    return {"p_num": row["_p"], "buckets": row["_buckets"]}
+    return {"p_num": meta["_p"], "buckets": meta["_buckets"]}
 
 
 def read_postings_threshold(spark, postings_dir: str) -> int | None:
@@ -1058,45 +1059,6 @@ def read_postings_threshold(spark, postings_dir: str) -> int | None:
     or None when absent."""
     meta = read_postings_meta(spark, postings_dir)
     return None if meta is None else meta["p_num"]
-
-
-def _list_data_files(fs, jvm_path, base: str) -> dict:
-    """rel-path -> full-path of every DATA file under ``base``. A
-    component is hidden to spark.read iff it starts with _ or . AND
-    carries no '=' (partition directories like _bk=3 are exempt -
-    Spark's own hidden-path rule)."""
-    out: dict = {}
-    if not fs.exists(jvm_path(base)):
-        return out
-    qbase = fs.makeQualified(jvm_path(base)).toString().rstrip("/")
-    it = fs.listFiles(jvm_path(base), True)
-    while it.hasNext():
-        f = it.next().getPath().toString()
-        rel = f[len(qbase):].lstrip("/") if f.startswith(qbase) else f
-        if not any(
-            p.startswith(("_", ".")) and "=" not in p
-            for p in rel.split("/")
-        ):
-            out[rel] = f
-    return out
-
-
-def _move_data_files(fs, jvm_path, files: dict, dest_root: str) -> int:
-    """Move data files (rel -> full) under ``dest_root`` at the same
-    relative paths (preserving any _bk= layout). Part-file names are
-    writer-UUID-unique, so collisions don't occur in practice; a
-    failed rename is loud."""
-    moved = 0
-    for rel, full in files.items():
-        dest = jvm_path(dest_root.rstrip("/") + "/" + rel)
-        fs.mkdirs(dest.getParent())
-        if not fs.rename(jvm_path(full), dest):
-            raise IOError(
-                f"posting-store file move of {rel!r} into "
-                f"{dest_root!r} failed; source retained"
-            )
-        moved += 1
-    return moved
 
 
 def recover_posting_store(spark, postings_dir: str) -> bool:
@@ -1120,7 +1082,7 @@ def recover_posting_store(spark, postings_dir: str) -> bool:
     old = _old(root)
     if not (fs.exists(jvm_path(root)) and fs.exists(jvm_path(old))):
         return recover_small_table(spark, root)
-    _move_data_files(fs, jvm_path, _list_data_files(fs, jvm_path, old), root)
+    _move_data_files(spark, _list_data_files(spark, old), root)
     fs.delete(jvm_path(old), True)
     return True
 
@@ -1131,9 +1093,7 @@ def posting_store_file_count(spark, postings_dir: str) -> int:
     File count grows on every append and every at-least-once replay;
     row-level duplication is invisible to it, but both problems have
     the same cure (compact_postings) and the same growth source."""
-    root = postings_dir.rstrip("/")
-    jvm_path, fs = _vfs(spark, root)
-    return len(_list_data_files(fs, jvm_path, root))
+    return len(_list_data_files(spark, postings_dir))
 
 
 def compact_postings(
@@ -1155,8 +1115,8 @@ def compact_postings(
     window is noisy, never silent.
 
     Preserves the ``_bk`` partitioning layout and carries the
-    ``_meta`` sidecar into the new snapshot VERBATIM (schema-agnostic
-    one-row copy, so the same maintenance op serves BOTH posting-store
+    ``_meta`` sidecar into the new snapshot VERBATIM (field-for-field
+    copy, so the same maintenance op serves BOTH posting-store
     flavors - the exact hash-order store and the near-dup band store,
     whose sidecars carry different parameters; posting rows of either
     flavor are identity-only, so distinct is the right compaction for
@@ -1196,13 +1156,12 @@ def compact_postings(
     # snapshot the listing BEFORE the compaction read: every data file
     # in this set is guaranteed covered by the distinct rewrite below;
     # anything that appears later is a concurrent append to rescue
-    snapshot = set(_list_data_files(fs, jvm_path, root))
+    snapshot = set(_list_data_files(spark, root))
     if not snapshot:
         return 0, 0
     store = spark.read.parquet(root)
     before = store.count()
-    has_meta = fs.exists(jvm_path(root + "/_meta"))
-    meta_df = spark.read.parquet(root + "/_meta") if has_meta else None
+    meta = _read_meta(spark, root)
     # BOUND the compacted snapshot's file count: one file per bucket
     # (repartition on the partition column) or defaultParallelism for
     # the unbucketed flavor. Without this, a wide shuffle writes up to
@@ -1221,11 +1180,8 @@ def compact_postings(
 
     def write(stage: str) -> None:
         writer.parquet(stage)
-        if meta_df is not None:
-            # materialized BEFORE the swap unlinks its source files
-            meta_df.coalesce(1).write.mode("overwrite").parquet(
-                stage + "/_meta"
-            )
+        if meta is not None:
+            _write_meta(spark, stage, meta)
         if _pre_swap_hook is not None:
             _pre_swap_hook()
 
@@ -1235,11 +1191,11 @@ def compact_postings(
         # move it into the live store (same rel path, so the _bk=
         # layout is preserved) BEFORE __old is deleted
         late = {
-            rel: full
-            for rel, full in _list_data_files(fs, jvm_path, old).items()
+            rel: f
+            for rel, f in _list_data_files(spark, old).items()
             if rel not in snapshot
         }
-        _move_data_files(fs, jvm_path, late, root)
+        _move_data_files(spark, late, root)
 
     _publish_table(spark, root, write, rescue=rescue)
     after = spark.read.parquet(root).count()

@@ -65,7 +65,7 @@ from ..corpus_store import (
     read_corpus_meta,
     write_corpus_meta,
 )
-from ..io import _read_recovered, _vfs, publish_small_table
+from ..io import _partition_dirs, _read_recovered, _vfs, publish_small_table
 from ..operators.dedup import (
     band_postings,
     greedy_admission_drops,
@@ -246,11 +246,7 @@ def _forbid_sheared_bucketed_store(spark, ing: _PostingIngest) -> None:
     appending unbucketed rows would shear the layout (and, once the
     true sidecar is restored, be pruned out of every screen's
     partition filter). Fail loud with the restore instruction."""
-    jvm_path, fs = _vfs(spark, ing.postings_dir)
-    if any(
-        st.getPath().getName().startswith("_bk=")
-        for st in fs.listStatus(jvm_path(ing.postings_dir))
-    ):
+    if _partition_dirs(spark, ing.postings_dir, "_bk"):
         raise ValueError(
             f"{ing.fn}: posting store at {ing.postings_dir} is "
             "_bk-partitioned but its _meta sidecar is missing - "

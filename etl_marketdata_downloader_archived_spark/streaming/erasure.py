@@ -162,10 +162,6 @@ def start_purge_with_audit(
             )
         )
         if new_keys.limit(1).count() > 0:
-            new_store = spark.createDataFrame(
-                stored.unionByName(new_keys).collect(),
-                stored.schema,
-            )
-            publish_small_table(new_store, store_path)
+            publish_small_table(stored.unionByName(new_keys), store_path)
 
     return _start(df, fold, checkpoint)

@@ -121,13 +121,6 @@ def start_join_view_maintenance(
             new_store = others.unionByName(merged).drop("_src")
         else:
             new_store = winners.drop("_src")
-        # materialize DRIVER-SIDE before the overwrite: the plan
-        # reads left_path and the write replaces it - and a cached/
-        # checkpointed plan would still key on the mutable path
-        # (the engine-wide control-table rule)
-        new_store = spark.createDataFrame(
-            new_store.collect(), new_store.schema
-        )
         publish_small_table(new_store, left_path)
         left_now = (
             spark.read.parquet(left_path)

@@ -4197,6 +4197,32 @@ def test_skipping_index_ambiguous_names_degrade_read_only(spark, tmp_path) -> No
     with _pytest.raises(AmbiguousFileIdentityError, match="ambiguous"):
         refresh_skipping_index(spark, str(table), idx)
 
+
+def test_skipping_index_underscore_partitions(spark, tmp_path) -> None:
+    """A ``_bucket=`` partition dir (the layout build_join_view writes)
+    is data, not hidden: refresh keeps every index row and a pruned
+    read opens as few files as on a ``p=``-partitioned twin."""
+    from etl_marketdata_downloader_archived_spark.io import (
+        build_skipping_index,
+        read_with_skipping,
+        refresh_skipping_index,
+    )
+
+    opened = {}
+    for col in ("_bucket", "p"):
+        table = str(tmp_path / f"tbl{col}")
+        idx = str(tmp_path / f"idx{col}")
+        spark.createDataFrame(
+            [(k, k // 10) for k in range(80)], f"k long, {col} int"
+        ).repartition(col).write.partitionBy(col).parquet(table)
+        assert build_skipping_index(spark, table, idx, ["k"]) == 8
+        out = refresh_skipping_index(spark, table, idx)
+        assert out == {"added": 0, "removed": 0, "total": 8}
+        got = read_with_skipping(spark, table, idx, "k", 0, 35)
+        assert sorted(r.k for r in got.collect()) == list(range(36))
+        opened[col] = len(got.inputFiles())
+    assert opened == {"_bucket": 4, "p": 4}
+
 def test_incremental_minhash_bucketed_store_identity(spark, tmp_path) -> None:
     """Bucketed band store (r13, the near-dup twin of the exact
     store's _bk pruning): the pruned incremental screen equals the

@@ -497,6 +497,27 @@ def test_table_swap_is_single() -> None:
     assert hits == {"io.py"}
 
 
+def test_lake_listing_is_single() -> None:
+    """The lake's file-layout rules are written once, in io.py: the
+    recursive data-file listing (``listFiles(``) and the ``_meta``
+    sidecar path appear in no other package module, so the
+    hidden-path rule and the sidecar format cannot drift between
+    copies."""
+    from pathlib import Path
+
+    pkg = (
+        Path(__file__).resolve().parents[1]
+        / "etl_marketdata_downloader_archived_spark"
+    )
+    hits = {
+        str(p.relative_to(pkg))
+        for p in pkg.rglob("*.py")
+        for needle in ("listFiles(", '"/_meta"')
+        if needle in p.read_text(encoding="utf-8")
+    }
+    assert hits == {"io.py"}
+
+
 def test_group_state_fold_is_single() -> None:
     """Every applyInPandasWithState operator runs through
     ``streaming.stateful._fold``: the call and the timeout choice
