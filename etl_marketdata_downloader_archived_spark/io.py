@@ -26,12 +26,14 @@ crash at any point leaves every byte recoverable:
   files to completion before anything moves.
 - Whole-table swap (``_publish_table``: ``publish_small_table``,
   ``compact_lake``, ``corpus_store.bucket_corpus``,
-  ``fuzzy.compact_postings``): rename live -> ``<path>__old``, stage
+  ``fuzzy.compact_postings``, and ``write_audit_publish``'s replace
+  mode on an unpartitioned table): rename live -> ``<path>__old``, stage
   -> live, then drop ``__old``. If stage -> live fails, ``__old`` is
   renamed back, so the live path keeps its old rows.
 - Partition swap (``publish_partitions``, and ``_stage_and_publish``
   for ``merge_partitioned``, ``incremental_rollup``, ``compact_files``,
-  ``purge_keys``, ``refresh_join_view``): per staged partition dir,
+  ``purge_keys``, ``refresh_join_view``; ``write_audit_publish``'s
+  replace mode on a partitioned table): per staged partition dir,
   live -> ``<path>__backup/<dir>``, staged -> live (rolled back on
   failure), drop the backup. An affected partition that staged no
   rows is deleted the same way, by renaming it aside.
@@ -725,10 +727,13 @@ def _swap_partitions(spark: SparkSession, path: str, moves: dict) -> None:
         live = jvm_path(root + "/" + name)
         aside = jvm_path(backup + "/" + name)
         fs.delete(aside, True)  # leftover from a prior crashed publish
+        fs.mkdirs(aside.getParent())  # a nested dir name's parents
         had_live = fs.exists(live)
         if had_live and not fs.rename(live, aside):
             raise IOError(f"partition swap: could not rename {name} aside")
-        if staged is not None and not fs.rename(staged, live):
+        if staged is not None and not (
+            fs.mkdirs(live.getParent()) and fs.rename(staged, live)
+        ):
             if had_live:
                 fs.rename(aside, live)  # roll back; live stays valid
             raise IOError(f"partition swap: could not publish {name}")
@@ -1062,16 +1067,17 @@ def write_audit_publish(
       existing ones - publish is an audited append, one publish per
       batch. Publishing the same batch twice duplicates its rows, by
       design (same contract as ``df.write.mode("append")``).
-    - ``"replace"``: before the rename pass, every live data file in
-      each directory the staging tree is about to land files into
-      (the table root when unpartitioned, else exactly the staged
-      partitions) is deleted - per-partition overwrite semantics;
-      partitions absent from the staged write keep their files.
+    - ``"replace"``: each directory the staging tree lands files into
+      (the table when unpartitioned, else exactly the staged
+      partitions) replaces its live twin through the whole-table or
+      the partition swap (module docstring) - per-partition overwrite
+      semantics; partitions absent from the staged write keep their
+      files, and a failed publish leaves the live rows in place.
 
     The audit reads back what parquet will actually serve (post
-    encoding/type coercion), not the in-memory frame. Publish is
-    per-file rename (no data copy); Spark part-file names carry a
-    write-UUID, so staged names cannot collide with live ones. Returns
+    encoding/type coercion), not the in-memory frame. Publish renames,
+    never copies; Spark part-file names carry a write-UUID, so staged
+    names cannot collide with live ones. Returns
     {"published": bool, "n_rows": int, "n_violations": int,
     "staging": path} - on a refused publish the caller inspects/
     repairs the staging dir.
@@ -1105,17 +1111,17 @@ def write_audit_publish(
     jvm_path, fs = _vfs(spark, path)
     fs.mkdirs(jvm_path(path))
     files = _list_data_files(spark, staging)
-    if mode == "replace":
-        # clear the live files of each dir about to receive staged
-        # ones (leaf level only - partitions with no staged files are
-        # untouched)
-        for d in {rel.rpartition("/")[0] for rel in files}:
-            dst = jvm_path(path.rstrip("/") + ("/" + d if d else ""))
-            if fs.exists(dst):
-                for e in fs.listStatus(dst):
-                    if e.isFile() and e.getPath().getName().endswith(".parquet"):
-                        fs.delete(e.getPath(), False)
-    _move_data_files(spark, files, path)
+    dirs = {rel.rpartition("/")[0] for rel in files}
+    if mode == "append":
+        _move_data_files(spark, files, path)
+    elif dirs == {""}:  # unpartitioned: the table itself is replaced
+        _publish_table(
+            spark, path, lambda stage: _move_data_files(spark, files, stage)
+        )
+    else:
+        _swap_partitions(
+            spark, path, {d: jvm_path(f"{staging}/{d}") for d in sorted(dirs)}
+        )
     fs.delete(jvm_path(staging), True)
     return {
         "published": True,

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..io import _read_meta, _write_meta
+from .fuzzy import _Q, _quantize
 from .text import fingerprint
 
 
@@ -306,8 +307,8 @@ def write_band_meta(
         "_num_hashes": num_hashes,
         "_bands": bands,
         "_shingle_n": shingle_n,
-        "_p": round(jaccard_threshold * 1_000_000),
-        "_q": 1_000_000,
+        "_p": _quantize(jaccard_threshold),
+        "_q": _Q,
         "_buckets": buckets,
     })
 
@@ -318,7 +319,7 @@ def read_band_meta(spark, postings_dir: str) -> dict | None:
     meta = _read_meta(spark, postings_dir)
     if meta is None:
         return None
-    if meta.get("_q") != 1_000_000:
+    if meta.get("_q") != _Q:
         raise ValueError(
             f"band-store _meta at {postings_dir} is corrupt: {meta}"
         )

@@ -1,35 +1,77 @@
-"""Fuzzy string matching: exact-complete edit-distance self-join.
+"""Fuzzy matching: the edit-distance join and the exact-Jaccard family.
 
-Near-dup detection on SHORT KEYS (titles, URLs, file names, entity
-names) where the right metric is character edit distance, not the
-token/hash similarity of operators.dedup. The classic use: collapse
-catalog rows whose URL or landed file name differs by one typo - the
-reference's catalog keys on raw URL strings with no notion of
-near-equality at all (data-harvester/data_harvester.py:35).
+Near-dup detection with exact, recall-1.0 joins - the deterministic
+complement to the MinHash/SimHash candidates of operators.dedup, and
+the implemented form of the reference's four dedup-before-write
+TODOs (data-downloader/data_downloader.py:106,131,169,194).
 
-Algorithm (deletion-variant blocking, the SymSpell/FastSS family):
-for edit distance <= 1, two strings must share a member of
-{s} ∪ {s minus one character}. Proof by case: substitution at i ->
-both sides' delete-at-i variants coincide; insertion/deletion ->
-the shorter string IS a deletion variant of the longer; equality ->
-s itself. So joining the variant sets is COMPLETE (no missed pair),
-and a final levenshtein() verify removes the false positives. This
-exactness is certified against a brute-force all-pairs DuckDB oracle
-(tools/parity.py `fuzzy_join`).
+Edit distance (``edit_distance_join``) on SHORT KEYS (titles, URLs,
+file names) where the metric is character edits - the reference's
+catalog keys on raw URL strings with no notion of near-equality
+(data-harvester/data_harvester.py:35). Deletion-variant blocking (the
+SymSpell/FastSS family): for edit distance <= 1, two strings must
+share a member of {s} ∪ {s minus one character}. Proof by case:
+substitution at i -> both sides' delete-at-i variants coincide;
+insertion/deletion -> the shorter string IS a deletion variant of the
+longer; equality -> s itself. So joining the variant sets is
+complete, and a final levenshtein() verify removes the false
+positives (certified against a brute-force DuckDB oracle,
+tools/parity.py `fuzzy_join`). The explode factor is len(s)+1,
+bounded by the key length, never by corpus size; variants shuffle as
+xxhash64 keys, and a hash collision can only ADD a candidate the
+verify then discards.
 
-Scale posture: the explode factor is len(s)+1 - bounded by the KEY
-length (use on short keys by construction), never by corpus size.
-Candidates shuffle on the variant hash; the all-pairs kernel never
-materializes (pairs exist only where variants collide), and the
-verify is output-bound. Hash the variant to a 64-bit key
-(xxhash64) so the shuffle moves 8-byte keys, not strings - a hash
-collision can only ADD a candidate pair, which the levenshtein verify
-then discards, so completeness and exactness survive hashing.
+Exact Jaccard (``jaccard_prefix_join``, ``jaccard_prefix_join_rs``,
+``jaccard_prefix_postings``, ``jaccard_screen_vs_postings``): the
+PPJoin/AllPairs prefix-filter line. One contract serves all four:
+
+- Rational threshold. A threshold t in (0, 1] is quantized once to
+  p/q, q = 1e6, p = round(t*q) >= 1 (``_quantize``). The similarity
+  cut q*inter >= p*union, the prefix lengths, the length filter and
+  the pair bound are all bigint cross-multiplied arithmetic on that
+  rational, so no float decides membership (the
+  float form dropped the exact-boundary pair t=0.55, |a|=55 inside
+  |b|=100). Token arrays are read as sets; set sizes are capped at
+  1e9 (p*n must fit a bigint) and a larger set fails loudly. Empty
+  and NULL sets never pair.
+- Prefix lemma. Fix one total order on tokens, shared by every set.
+  Jaccard >= p/q needs an overlap of at least ceil(p*n/q) with a set
+  of size n, so a qualifying pair shares a token among the first
+  n - ceil(p*n/q) + 1 tokens (the PREFIX) of each set - else the
+  overlap would fit in the shorter suffix. An equi-join of prefix
+  postings generates every qualifying pair; an exact array_intersect
+  verify drops the false positives. Postings carry xxhash64(token)
+  (8-byte shuffle keys); a collision only adds a candidate.
+- Candidate bounds, inside the posting join. Length filter
+  (AllPairs): Jaccard >= p/q forces q*min(n_a, n_b) >= p*max(n_a, n_b).
+  Pair bound (PPJoin): q*I >= p*(n_a + n_b - I) gives the pair's own
+  required overlap alpha = ceil(p*(n_a+n_b)/(p+q)), and the pair must
+  share a token within the first n - alpha + 1 ranks of BOTH sides
+  (if every shared token sat past that rank in a, a would hold at
+  most alpha - 1 of them). A qualifying pair keeps every generating
+  token, so recall stays 1.0; the classic positional filter is implied
+  by the two rank bounds and is not added.
+- Two orders. The in-memory joins rank tokens by frequency, rarest
+  first (ties by hash, then token) - over the corpus, or over the
+  union of both sides in the R-S join - which keeps posting lists
+  short. A persisted posting store ranks by (hash, token): fixed
+  forever, so postings of admitted sets are appended and never
+  recomputed, at the cost of longer candidate lists.
+- Unique ids. Each id names one token set. A replayed row (same id,
+  same set) is harmless: the collapse tier keeps distinct member ids,
+  per-set ranks are dense (the replay's repeated tokens share a rank)
+  and pairs are deduplicated on ids after the verify, so every tier
+  emits each pair once. An id carried by two DIFFERENT sets is out of
+  contract: whose counts survive that dedup is unspecified.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import reduce
+
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..io import (
@@ -165,8 +207,6 @@ def sorted_neighborhood_pairs(
     candidate-bound. Memory per task is row-sized throughout."""
     if window < 1:
         raise ValueError(f"window must be >= 1, got {window}")
-    from pyspark.sql import Window as W
-
     base = df.select(
         F.col(id_col).alias("_id"),
         F.col(key_col).alias("_key"),
@@ -202,12 +242,26 @@ def sorted_neighborhood_pairs(
     return out
 
 
+_Q = 1_000_000  # denominator of the rational threshold (module docstring)
+
+
+def _quantize(threshold: float) -> int:
+    """Numerator p of the rational threshold p/_Q (module docstring);
+    raises outside (0, 1] and when p rounds to 0."""
+    if not (0.0 < threshold <= 1.0):
+        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
+    p = round(threshold * _Q)
+    if p == 0:
+        raise ValueError(f"threshold {threshold} quantizes to 0/1e6")
+    return p
+
+
 def _tokenize_sets(
     df: DataFrame, id_col: str, tokens_col: str, op_name: str
 ) -> DataFrame:
-    """Shared input canonicalization for both Jaccard joins: distinct
-    the token array (set semantics) and fail loud past the 1e9
-    exact-arithmetic cap (p*n must fit a bigint).
+    """Shared input canonicalization for the Jaccard family: (_id, _t)
+    with the token array distinct (set semantics), failing loud past
+    the 1e9 exact-arithmetic cap (p*n must fit a bigint).
 
     Empty/NULL token sets are NOT filtered here (r16): a filter on the
     derived ``size(array_distinct(tokens))`` gets pushed below the
@@ -248,121 +302,81 @@ def _tokenize_sets(
     )
 
 
-def _prefix_filter_pairs(tok: DataFrame, p_num: int, q_den: int) -> DataFrame:
-    """PPJoin/AllPairs kernel over a frame of (_id, _t) with DISTINCT
-    non-empty token arrays per row assumed bounded: candidates from
-    rare-prefix postings with the length filter inside the join,
-    exact in-row verify. Shared by both tiers of
-    ``jaccard_prefix_join``; see it for the filter proof."""
-    from pyspark.sql import Window as W
-
-    # candidate generation runs on xxhash64 keys (8-byte shuffle and
-    # compare instead of full token strings); the VERIFY below uses
-    # the original arrays, so a hash collision can only add a
-    # candidate, never a wrong pair - exactness holds. The global
-    # order is (freq, hash, token): total and identical across sets,
-    # which is all the prefix lemma requires.
-    flat = tok.select(
+def _flat(tok: DataFrame) -> DataFrame:
+    """(_id, _n, _tk, _hk): one row per token of each set of ``tok``."""
+    return tok.select(
         "_id", F.size("_t").alias("_n"), F.explode("_t").alias("_tk")
     ).withColumn("_hk", F.xxhash64("_tk"))
-    freq = flat.groupBy("_hk").agg(F.count(F.lit(1)).alias("_f"))
-    ranked = flat.join(freq, "_hk").withColumn(
-        "_rn",
-        F.row_number().over(
-            W.partitionBy("_id").orderBy("_f", "_hk", "_tk")
-        ),
+
+
+def _token_freq(*flats: DataFrame) -> DataFrame:
+    """(_hk, _f): each token hash's posting count over ``flats`` - the
+    rarest-first order's key."""
+    hks = reduce(DataFrame.unionAll, [f.select("_hk") for f in flats])
+    return hks.groupBy("_hk").agg(F.count(F.lit(1)).alias("_f"))
+
+
+def _prefix_postings(
+    flat: DataFrame, p: int, freq: DataFrame | None = None
+) -> DataFrame:
+    """(_id, _n, _hk, _rn) for the prefix tokens of each set of ``flat``
+    (``_flat`` rows), ``_rn`` the token's rank in its set: the first
+    n - ceil(p*n/q) + 1 tokens under the rarest-first order of ``freq``
+    (``_token_freq``), or under the hash order when ``freq`` is None
+    (module docstring)."""
+    order = ["_hk", "_tk"]
+    if freq is not None:
+        flat, order = flat.join(freq, "_hk"), ["_f", *order]
+    # dense: a replayed row's repeated tokens share their rank, so its
+    # prefix is the set's own (a row number cuts it short and loses
+    # pairs)
+    ranked = flat.withColumn(
+        "_rn", F.dense_rank().over(W.partitionBy("_id").orderBy(*order))
     )
     # exact integer ceil(p*n/q) = (p*n + q - 1) div q
-    min_overlap = F.expr(
-        f"(CAST({p_num} AS BIGINT) * _n + {q_den - 1}) div {q_den}"
-    )
-    prefix = ranked.filter(
+    min_overlap = F.expr(f"(CAST({p} AS BIGINT) * _n + {_Q - 1}) div {_Q}")
+    return ranked.filter(
         F.col("_rn") <= F.col("_n") - min_overlap + 1
     ).select("_id", "_n", "_hk", "_rn")
-    # lazy localCheckpoint (r16): the self-join consumes `prefix` on
-    # BOTH sides, and the freq-join + per-doc rank window underneath
-    # it is the kernel's most expensive subtree - without the snapshot
-    # each side re-runs it (AQE reuses the exchange below the window
-    # but re-executes the window itself). Materialized once at first
-    # action, prefix rows are (_id,_n,_hk,_rn) - a few ints per
-    # surviving token, never payload-sized. eager=False so building
-    # the plan stays action-free (interleaved min-of-5 at sf0.1:
-    # 2.89 -> 2.61 s on the registered query).
-    prefix = prefix.localCheckpoint(eager=False)
-    # the PAIR's exact required overlap (PPJoin's alpha): q*I >= p*U
-    # with U = n_a + n_b - I gives I*(p+q) >= p*(n_a+n_b), so
-    # alpha = ceil(p*(n_a+n_b)/(p+q)) - exact integer arithmetic
-    req = F.expr(
-        f"(CAST({p_num} AS BIGINT) * (a._n + b._n) + {p_num + q_den - 1})"
-        f" div {p_num + q_den}"
+
+
+def _length_ok(p: int) -> Column:
+    """AllPairs length filter on a posting join of sides ``a`` and
+    ``b``: q*min(n_a, n_b) >= p*max(n_a, n_b) (module docstring)."""
+    na, nb = F.col("a._n"), F.col("b._n")
+    q_, p_ = F.lit(_Q).cast("bigint"), F.lit(p).cast("bigint")
+    return q_ * F.least(na, nb) >= p_ * F.greatest(na, nb)
+
+
+def _pair_prefix_ok(p: int) -> Column:
+    """PPJoin pair bound on a posting join of sides ``a`` and ``b``:
+    the generating token ranks within n - alpha + 1 on both sides,
+    alpha the pair's own required overlap (module docstring). It drops
+    candidates before the verify (at sf0.1: 104331 -> 33250 candidate
+    pairs, kernel 1.67 -> 0.91 s, pair set identical)."""
+    alpha = F.expr(
+        f"(CAST({p} AS BIGINT) * (a._n + b._n) + {p + _Q - 1}) div {p + _Q}"
     )
-    cand = (
-        prefix.alias("a")
-        .join(prefix.alias("b"), "_hk")
-        .filter(
-            (F.col("a._id") < F.col("b._id"))
-            # AllPairs LENGTH filter, applied INSIDE the candidate
-            # join before the distinct shuffle: Jaccard >= t forces
-            # t*|a| <= |b| <= |a|/t (intersection <= min size, union
-            # >= max size), so size-incompatible postings never
-            # become pair rows - exact cross-multiplied form:
-            # q*min >= p*max
-            & (
-                F.lit(q_den).cast("bigint")
-                * F.least(F.col("a._n"), F.col("b._n"))
-                >= F.lit(p_num).cast("bigint")
-                * F.greatest(F.col("a._n"), F.col("b._n"))
-            )
-            # PAIRWISE-TIGHTENED prefix filter (r16, the PPJoin
-            # positional family, guide section 3): the static per-row
-            # prefix length n - ceil(p*n/q) + 1 assumes the WORST
-            # partner (one at the length-filter floor); for the
-            # concrete pair the two-sided prefix lemma requires a
-            # shared token within the first n - alpha + 1 positions
-            # of BOTH sides, with alpha the pair's own required
-            # overlap above. Proof: if every shared token sat at rank
-            # > n_a - alpha + 1 in a, then a has at most
-            # n_a - (n_a - alpha + 2) + 1 = alpha - 1 shared tokens -
-            # contradiction; symmetrically for b. Qualifying pairs
-            # keep every generating occurrence (the bound holds at
-            # ALL their shared prefix tokens), so recall stays 1.0;
-            # non-qualifying candidates whose generating token sits
-            # past the pairwise bound are dropped BEFORE the distinct
-            # shuffle and the array verify (measured at sf0.1:
-            # 104331 -> 33250 candidate pairs, kernel 1.67 -> 0.91 s,
-            # pair set identical). The classic positional filter
-            # (min(r_a,r_b) + min(n_a-r_a, n_b-r_b) >= alpha) is
-            # IMPLIED by these two rank bounds plus r >= 1, so it is
-            # deliberately not added on top.
-            & (F.col("a._rn") <= F.col("a._n") - req + 1)
-            & (F.col("b._rn") <= F.col("b._n") - req + 1)
-        )
-        .select(
-            F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b")
-        )
+    return (F.col("a._rn") <= F.col("a._n") - alpha + 1) & (
+        F.col("b._rn") <= F.col("b._n") - alpha + 1
     )
-    # candidate dedup happens AFTER the verify (dropDuplicates at the
-    # bottom), not here (r16): a pre-verify distinct is a full
-    # exchange+aggregate over every candidate occurrence, while the
-    # post-verify dedup exchanges only the TRUE pairs (output-bound).
-    # Per-occurrence verify work is identical per pair (deterministic
-    # exact arithmetic), and occurrence multiplicity is bounded by the
-    # pair's shared-prefix-token count, which the pairwise bounds
-    # above cap at the pair's own prefix length - so the redundant
-    # verify volume is (multiplicity-1) in-row intersects, cheaper
-    # than the saved 33K-row shuffle at every tested scale.
+
+
+def _verify(
+    cand: DataFrame, tok_a: DataFrame, tok_b: DataFrame, p: int,
+    a: str, b: str,
+) -> DataFrame:
+    """The exact verify every Jaccard join ends in: join each candidate
+    (``a``, ``b``) back to its side's token array, compute the exact
+    bigint intersection/union, keep pairs passing q*inter >= p*union.
+    Returns (a, b, inter, union_n, jaccard); ``jaccard`` is one IEEE
+    division of the exact bigints, for display and downstream use."""
     pairs = (
         cand.join(
-            tok.select(
-                F.col("_id").alias("id_a"), F.col("_t").alias("_ta")
-            ),
-            "id_a",
+            tok_a.select(F.col("_id").alias(a), F.col("_t").alias("_ta")), a
         )
         .join(
-            tok.select(
-                F.col("_id").alias("id_b"), F.col("_t").alias("_tb")
-            ),
-            "id_b",
+            tok_b.select(F.col("_id").alias(b), F.col("_t").alias("_tb")), b
         )
         .withColumn(
             "inter",
@@ -374,15 +388,142 @@ def _prefix_filter_pairs(tok: DataFrame, p_num: int, q_den: int) -> DataFrame:
             - F.col("inter"),
         )
         .withColumn("jaccard", F.col("inter") / F.col("union_n"))
-        # exact membership: q*inter >= p*union, never a float compare
         .filter(
-            F.lit(q_den).cast("bigint") * F.col("inter")
-            >= F.lit(p_num).cast("bigint") * F.col("union_n")
+            F.lit(_Q).cast("bigint") * F.col("inter")
+            >= F.lit(p).cast("bigint") * F.col("union_n")
         )
     )
-    return pairs.select(
-        "id_a", "id_b", "inter", "union_n", "jaccard"
-    ).dropDuplicates(["id_a", "id_b"])
+    return pairs.select(a, b, "inter", "union_n", "jaccard")
+
+
+def _prefix_filter_pairs(tok: DataFrame, p: int) -> DataFrame:
+    """Self-join kernel over (_id, _t), frequency order: (id_a, id_b,
+    inter, union_n, jaccard) with id_a < id_b."""
+    flat = _flat(tok)
+    # lazy localCheckpoint (r16): the self-join consumes `prefix` on
+    # BOTH sides, and the freq-join + per-doc rank window underneath
+    # it is the kernel's most expensive subtree - without the snapshot
+    # each side re-runs it (AQE reuses the exchange below the window
+    # but re-executes the window itself). Materialized once at first
+    # action, prefix rows are a few ints per surviving token.
+    # eager=False keeps building the plan action-free (interleaved
+    # min-of-5 at sf0.1: 2.89 -> 2.61 s on the registered query).
+    prefix = _prefix_postings(flat, p, _token_freq(flat)).localCheckpoint(
+        eager=False
+    )
+    cand = (
+        prefix.alias("a")
+        .join(prefix.alias("b"), "_hk")
+        .filter(
+            (F.col("a._id") < F.col("b._id"))
+            & _length_ok(p)
+            & _pair_prefix_ok(p)
+        )
+        .select(
+            F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b")
+        )
+    )
+    # candidates dedup AFTER the verify (r16): a pre-verify distinct is
+    # a full exchange+aggregate over every candidate occurrence, while
+    # the post-verify dedup exchanges only the true pairs. An
+    # occurrence's verify is deterministic, and the pair bound caps its
+    # multiplicity at the pair's own prefix length, so the redundant
+    # verify work is cheaper than the saved shuffle at every tested
+    # scale.
+    return _verify(cand, tok, tok, p, "id_a", "id_b").dropDuplicates(
+        ["id_a", "id_b"]
+    )
+
+
+def _prefix_filter_pairs_rs(
+    tok_l: DataFrame, tok_r: DataFrame, p: int
+) -> DataFrame:
+    """Two-corpus kernel: frequency order over the UNION of both sides,
+    postings join LEFT x RIGHT with no id order (ids may collide across
+    the two corpora). Returns (left_id, right_id, inter, union_n,
+    jaccard)."""
+    fl, fr = _flat(tok_l), _flat(tok_r)
+    # lazy localCheckpoint (r16): the union-order frequency table
+    # feeds BOTH sides' prefix windows; without the snapshot each side
+    # re-runs the two-corpus explode + aggregate. Rows are (hash,
+    # count) - 16 bytes per distinct token, never corpus-sized.
+    freq = _token_freq(fl, fr).localCheckpoint(eager=False)
+    cand = (
+        _prefix_postings(fl, p, freq)
+        .alias("a")
+        .join(_prefix_postings(fr, p, freq).alias("b"), "_hk")
+        .filter(_length_ok(p) & _pair_prefix_ok(p))
+        .select(
+            F.col("a._id").alias("left_id"),
+            F.col("b._id").alias("right_id"),
+        )
+    )
+    # post-verify dedup, as in the self kernel
+    return _verify(cand, tok_l, tok_r, p, "left_id", "right_id").dropDuplicates(
+        ["left_id", "right_id"]
+    )
+
+
+def _collapse(
+    tok: DataFrame, cache_registry: list | None, *aggs
+) -> tuple[DataFrame, DataFrame]:
+    """The duplicate-collapse tier's grouping of (_id, _t): one row per
+    distinct token SET - ``_key`` (the sorted set; array equality keeps
+    the grouping exact, where a hash key could merge distinct sets on
+    collision), ``_rid`` (the representative, the least id), ``_ids``
+    (the distinct member ids, so a replayed row is one member) and
+    ``aggs``. Returns (groups, reps), reps being (_id, _t) rows of the
+    representatives for a kernel.
+
+    One aggregation carries the representative AND the member list, so
+    every downstream branch hangs off one exchange; it is persisted
+    DISK_ONLY because each consumer (the kernel's frequency, prefix
+    and verify uses, the re-expansion) would otherwise re-run the
+    scan + tokenize + groupBy chain (the r15 profile: ~4x the needed
+    executor time). Disk, not memory: the joins return lazily and have
+    no release point; ``cache_registry`` hands the handle to the
+    caller."""
+    groups = (
+        tok.groupBy(F.array_sort("_t").alias("_key"))
+        .agg(
+            F.min("_id").alias("_rid"),
+            F.sort_array(F.collect_set("_id")).alias("_ids"),
+            *aggs,
+        )
+        .persist(StorageLevel.DISK_ONLY)
+    )
+    if cache_registry is not None:
+        cache_registry.append(groups)
+    reps = groups.select(
+        F.col("_rid").alias("_id"), F.col("_key").alias("_t")
+    )
+    return groups, reps
+
+
+def _expand(
+    rep_pairs: DataFrame, ga: DataFrame, gb: DataFrame, a: str, b: str
+) -> DataFrame:
+    """Re-expand each representative pair (``a``, ``b``) of
+    ``rep_pairs`` to every member pair of its two ``_collapse`` groups:
+    (_ma, _mb, inter, union_n, jaccard). Two equi-joins on the
+    pair-sized frame and two chained explodes that stream the member
+    pairs - output-bound, never an in-row pair array."""
+    return (
+        rep_pairs.join(
+            ga.select(F.col("_rid").alias(a), F.col("_ids").alias("_ia")), a
+        )
+        .join(
+            gb.select(F.col("_rid").alias(b), F.col("_ids").alias("_ib")), b
+        )
+        .select(
+            "inter", "union_n", "jaccard",
+            F.explode("_ia").alias("_ma"), "_ib",
+        )
+        .select(
+            "inter", "union_n", "jaccard",
+            "_ma", F.explode("_ib").alias("_mb"),
+        )
+    )
 
 
 def jaccard_prefix_join(
@@ -393,120 +534,48 @@ def jaccard_prefix_join(
     collapse_duplicates: bool = True,
     cache_registry: list | None = None,
 ) -> DataFrame:
-    """EXACT set-similarity self-join with prefix filtering (the
-    PPJoin/AllPairs family, Chaudhuri/Ganti/Kaushik's SSJoin line):
-    every unordered pair of rows whose token sets have Jaccard
-    similarity >= ``threshold``, with NO false negatives - the exact
-    complement to the probabilistic MinHash-band candidates in
-    operators.dedup (LSH trades recall for speed; this trades a
-    tunable candidate bound for recall = 1).
+    """EXACT set-similarity self-join with prefix filtering: every
+    unordered pair of rows whose token sets have Jaccard similarity
+    >= ``threshold``, with no false negatives (the PPJoin/AllPairs
+    contract - threshold, prefix lemma, frequency order, unique ids -
+    is in the module docstring).
 
-    The threshold is quantized to an exact rational p / 1e6
-    (round(threshold * 1e6)), and EVERY comparison - the final
-    similarity cut, the prefix lengths, the length filter - runs in
-    bigint cross-multiplied arithmetic on that rational: no float
-    ever decides membership, so there is no rounding boundary where
-    t*n lands an ulp above an integer and silently drops an
-    exact-boundary true pair (a review-caught failure of the float
-    form: t=0.55, |a|=55, |b|=100).
-
-    The filter: order every set by GLOBAL token frequency (rarest
-    first, ties by token), keep each row's first
-    n - ceil(p*n/q) + 1 tokens as its prefix (ceil as the exact
-    integer (p*n + q - 1) div q). Two sets with q*inter >= p*union
-    must share at least one PREFIX token (if they shared none, the
-    overlap is at most the suffix length < ceil(p*n/q) <= the overlap
-    the threshold requires) - so the equi-join on prefix tokens
-    generates every qualifying pair, and an exact in-row
-    array_intersect verify removes the false positives.
-
-    Returns (id_a, id_b, inter, union_n, jaccard) with id_a < id_b;
-    the membership cut is the exact integer test q*inter >= p*union;
-    the ``jaccard`` column is one IEEE division of the exact bigints,
-    for display/downstream use.
-
-    Set sizes are capped at 1e9 tokens (p*n must fit bigint); a
-    larger set fails loudly rather than overflowing.
+    Returns (id_a, id_b, inter, union_n, jaccard) with id_a < id_b,
+    one row per pair.
 
     ``collapse_duplicates`` (default True) is the dedup-first tier -
-    the edit_distance_join two-tier lesson applied one level up, and
-    the implemented form of the reference's own named missing piece
-    (the four dedup-before-write TODOs,
-    data-downloader/data_downloader.py:106,131,169,194): rows with
-    IDENTICAL token sets (compared as sorted arrays - set equality,
-    never a hash whose collision could merge distinct sets) collapse
-    to one representative before the prefix join, so the candidate
-    kernel is bounded by DISTINCT sets; identical-set pairs
-    (jaccard exactly 1) and cross-group pairs then re-expand by
-    membership joins, both output-bound. Without it, a
+    the edit_distance_join two-tier lesson applied one level up: rows
+    with IDENTICAL token sets collapse to one representative before the
+    prefix join, so the candidate kernel is bounded by DISTINCT sets;
+    identical-set pairs (jaccard exactly 1) and cross-group pairs then
+    re-expand by membership, both output-bound. Without it a
     duplicate-heavy corpus (the normal near-dup input) made the
-    CANDIDATE stage - not just the output - quadratic in duplicate
-    multiplicity: the r11 30x probe measured a C(30,2)-shaped pair
-    set at 46x wall. The output contract is still quadratic in
-    multiplicity - that is what pairwise similarity means - but the
-    compute now pays distinct-set cost plus output size, nothing
-    more. Set False only to exercise the raw kernel (tests compare
-    the two tiers for identity).
+    CANDIDATE stage quadratic in duplicate multiplicity (the r11 30x
+    probe: a C(30,2)-shaped pair set at 46x wall). Set False only to
+    exercise the raw kernel (tests compare the two tiers for
+    identity). ``cache_registry`` receives the tier's DISK_ONLY
+    grouping for the caller to unpersist once the pairs materialize.
 
     Scale shape: candidates are bounded by the posting lists of RARE
-    tokens over DISTINCT sets only; the frequency table and the
-    per-row prefix rank are grouped/partitioned aggregations, never
-    global; the verify is in-row on the candidate pairs; re-expansion
-    is two equi-joins sized by the output. The remaining hot spot is
-    a token both rare corpus-wide and shared by a NEAR-duplicate
-    (not identical) cluster - exactly the pairs the join must emit,
-    so output size, not skew, is the bound."""
-    if not (0.0 < threshold <= 1.0):
-        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    q_den = 1_000_000
-    p_num = round(threshold * q_den)
-    if p_num == 0:
-        raise ValueError(f"threshold {threshold} quantizes to 0/1e6")
-
+    tokens over distinct sets; the frequency table and the per-row
+    prefix rank are grouped/partitioned, never global; the verify is
+    in-row on the candidates. The remaining hot spot is a token both
+    rare corpus-wide and shared by a NEAR-duplicate cluster - exactly
+    the pairs the join must emit, so output size is the bound."""
+    p = _quantize(threshold)
     tok = _tokenize_sets(df, id_col, tokens_col, "jaccard_prefix_join")
     if not collapse_duplicates:
-        return _prefix_filter_pairs(tok, p_num, q_den)
-
-    # tier 1: group identical token SETS (sorted array = canonical
-    # set form; array equality keeps this exact - an xxhash group key
-    # could merge distinct sets on collision and emit wrong pairs).
-    # ONE aggregation carries the representative id AND the member-id
-    # list, so every downstream branch (the kernel's three uses, the
-    # within-pairs, both cross expansions) hangs off the SAME
-    # exchange - the first cut of this tier joined a members table
-    # back against the groups and re-evaluated the upstream
-    # tokenization per branch, which cost more than the collapse
-    # saved (measured: the shingle transform alone was ~9 s/pass at
-    # the 10x probe scale). Persisted DISK_ONLY (the
-    # jaccard_prefix_join_rs / minhash_dedup_pairs discipline, r15):
-    # hanging every branch off one exchange still re-runs the
-    # scan+tokenize+groupBy chain once PER CONSUMER - within, the
-    # kernel's freq/rank/verify uses, and both cross expansions
-    # (~7 computations profiled). Disk, not memory: lazy return, no
-    # release point; cache_registry hands the handle to the caller.
-    from pyspark import StorageLevel
-
-    groups = tok.groupBy(F.array_sort("_t").alias("_key")).agg(
-        F.min("_id").alias("_rid"),
-        F.sort_array(F.collect_list("_id")).alias("_ids"),
-        # _nk: the group's set size as an AGGREGATE OUTPUT column - the
-        # empty/NULL-set guard for the within tier below. It must be an
-        # agg output (not size(_key)) so the optimizer cannot push the
-        # guard below this aggregate and re-inline the caller's whole
-        # tokenize chain into a pre-agg filter (the duplication
-        # _tokenize_sets r16 removed).
-        F.max(F.size("_t")).alias("_nk"),
-    ).persist(StorageLevel.DISK_ONLY)
-    if cache_registry is not None:
-        cache_registry.append(groups)
-
-    # within-group pairs: identical sets, jaccard exactly 1 (>= any
-    # threshold in (0, 1]); two chained explodes stream the m^2
-    # candidate rows (never an in-row pair ARRAY, whose C(m,2) bytes
-    # would concentrate a hot group's whole output in one row);
-    # output-bound by contract. _nk > 0 drops the empty/NULL-set
-    # group (empty sets never pair - contract); NULL _nk fails the
-    # predicate too.
+        return _prefix_filter_pairs(tok, p)
+    # _nk: the group's set size as an AGGREGATE OUTPUT column, the
+    # empty/NULL-set guard of `within` below - an agg output so the
+    # optimizer cannot push the guard below the aggregate and re-inline
+    # the caller's tokenize chain (see _tokenize_sets)
+    groups, reps = _collapse(
+        tok, cache_registry, F.max(F.size("_t")).alias("_nk")
+    )
+    # identical sets pair at jaccard exactly 1 (>= any threshold); two
+    # chained explodes stream the m^2 candidate rows; _nk > 0 drops the
+    # empty/NULL-set group (NULL _nk fails the predicate too)
     within = (
         groups.filter((F.size("_ids") >= 2) & (F.col("_nk") > 0))
         .select(
@@ -524,173 +593,15 @@ def jaccard_prefix_join(
             F.lit(1.0).alias("jaccard"),
         )
     )
-
-    # tier 2: the prefix kernel over DISTINCT sets only, then
-    # re-expand each representative pair to its members' id pairs
-    # (two equi-joins on the pair-count-sized frame, two explodes)
-    rep = groups.select(
-        F.col("_rid").alias("_id"), F.col("_key").alias("_t")
-    )
-    rep_pairs = _prefix_filter_pairs(rep, p_num, q_den)
-    cross = (
-        rep_pairs.join(
-            groups.select(
-                F.col("_rid").alias("id_a"), F.col("_ids").alias("_ia")
-            ),
-            "id_a",
-        )
-        .join(
-            groups.select(
-                F.col("_rid").alias("id_b"), F.col("_ids").alias("_ib")
-            ),
-            "id_b",
-        )
-        .select(
-            "inter", "union_n", "jaccard",
-            F.explode("_ia").alias("_ma"), "_ib",
-        )
-        .select(
-            "inter", "union_n", "jaccard",
-            "_ma", F.explode("_ib").alias("_mb"),
-        )
-        .select(
-            F.least("_ma", "_mb").alias("id_a"),
-            F.greatest("_ma", "_mb").alias("id_b"),
-            "inter",
-            "union_n",
-            "jaccard",
-        )
+    rep_pairs = _prefix_filter_pairs(reps, p)
+    cross = _expand(rep_pairs, groups, groups, "id_a", "id_b").select(
+        F.least("_ma", "_mb").alias("id_a"),
+        F.greatest("_ma", "_mb").alias("id_b"),
+        "inter",
+        "union_n",
+        "jaccard",
     )
     return within.unionByName(cross)
-
-
-def _prefix_filter_pairs_rs(
-    tok_l: DataFrame, tok_r: DataFrame, p_num: int, q_den: int
-) -> DataFrame:
-    """Two-corpus PPJoin/AllPairs kernel: same prefix lemma as the
-    self-join kernel, but the GLOBAL token order is computed over the
-    UNION of both sides (the lemma only requires one total order
-    shared by every set; frequency over the union is the standard
-    rarest-first heuristic), postings join LEFT x RIGHT (no id
-    ordering - the sides are distinct corpora and ids may collide
-    across them), and the verify pulls each side's own array."""
-    from pyspark.sql import Window as W
-
-    def flat(tok):
-        return tok.select(
-            "_id", F.size("_t").alias("_n"), F.explode("_t").alias("_tk")
-        ).withColumn("_hk", F.xxhash64("_tk"))
-
-    fl, fr = flat(tok_l), flat(tok_r)
-    freq = (
-        fl.select("_hk")
-        .unionAll(fr.select("_hk"))
-        .groupBy("_hk")
-        .agg(F.count(F.lit(1)).alias("_f"))
-        # lazy localCheckpoint (r16): the union-order frequency table
-        # feeds BOTH sides' prefix windows; without the snapshot each
-        # side re-runs the two-corpus explode + aggregate (the reused
-        # exchange below it still re-executes the final aggregate per
-        # consumer). Rows are (hash, count) - 16 bytes per distinct
-        # token, never corpus-sized.
-        .localCheckpoint(eager=False)
-    )
-    min_overlap = F.expr(
-        f"(CAST({p_num} AS BIGINT) * _n + {q_den - 1}) div {q_den}"
-    )
-
-    def prefix(fd):
-        ranked = fd.join(freq, "_hk").withColumn(
-            "_rn",
-            F.row_number().over(
-                W.partitionBy("_id").orderBy("_f", "_hk", "_tk")
-            ),
-        )
-        return ranked.filter(
-            F.col("_rn") <= F.col("_n") - min_overlap + 1
-        ).select("_id", "_n", "_hk", "_rn")
-
-    # the pair's exact required overlap (see _prefix_filter_pairs for
-    # the derivation and the two-sided pairwise prefix-bound proof -
-    # identical here, the lemma never uses which side is which)
-    req = F.expr(
-        f"(CAST({p_num} AS BIGINT) * (a._n + b._n) + {p_num + q_den - 1})"
-        f" div {p_num + q_den}"
-    )
-    cand = (
-        prefix(fl)
-        .alias("a")
-        .join(prefix(fr).alias("b"), "_hk")
-        .filter(
-            (
-                F.lit(q_den).cast("bigint")
-                * F.least(F.col("a._n"), F.col("b._n"))
-                >= F.lit(p_num).cast("bigint")
-                * F.greatest(F.col("a._n"), F.col("b._n"))
-            )
-            # pairwise-tightened prefix bounds (r16) - candidates
-            # whose generating token sits past the PAIR's own prefix
-            # length drop before the distinct and the array verify
-            & (F.col("a._rn") <= F.col("a._n") - req + 1)
-            & (F.col("b._rn") <= F.col("b._n") - req + 1)
-        )
-        .select(
-            F.col("a._id").alias("left_id"),
-            F.col("b._id").alias("right_id"),
-        )
-    )
-    # post-verify dedup (see _prefix_filter_pairs): the exchange runs
-    # on the output-bound TRUE pairs, not every candidate occurrence
-    return _verify_rs_pairs(cand, tok_l, tok_r, p_num, q_den).dropDuplicates(
-        ["left_id", "right_id"]
-    )
-
-
-def _verify_rs_pairs(
-    cand: DataFrame,
-    tok_l: DataFrame,
-    tok_r: DataFrame,
-    p_num: int,
-    q_den: int,
-) -> DataFrame:
-    """Exact verify shared by the in-memory R-S kernel and the
-    posting-store screen (the two MUST stay bit-identical - the
-    store-screen == rs-join test asserts it): join each candidate
-    (left_id, right_id) back to its side's token array, compute the
-    exact bigint intersection/union, keep pairs passing the
-    cross-multiplied rational cut; the jaccard column is the one IEEE
-    division of the exact bigints."""
-    pairs = (
-        cand.join(
-            tok_l.select(
-                F.col("_id").alias("left_id"), F.col("_t").alias("_ta")
-            ),
-            "left_id",
-        )
-        .join(
-            tok_r.select(
-                F.col("_id").alias("right_id"), F.col("_t").alias("_tb")
-            ),
-            "right_id",
-        )
-        .withColumn(
-            "inter",
-            F.size(F.array_intersect("_ta", "_tb")).cast("bigint"),
-        )
-        .withColumn(
-            "union_n",
-            (F.size("_ta") + F.size("_tb")).cast("bigint")
-            - F.col("inter"),
-        )
-        .withColumn("jaccard", F.col("inter") / F.col("union_n"))
-        .filter(
-            F.lit(q_den).cast("bigint") * F.col("inter")
-            >= F.lit(p_num).cast("bigint") * F.col("union_n")
-        )
-    )
-    return pairs.select(
-        "left_id", "right_id", "inter", "union_n", "jaccard"
-    )
 
 
 def jaccard_prefix_join_rs(
@@ -705,100 +616,41 @@ def jaccard_prefix_join_rs(
     """EXACT two-corpus (R-S) set-similarity join: every pair
     (left_id, right_id) with Jaccard >= ``threshold`` between a row
     of ``left`` and a row of ``right``, recall 1.0 - the
-    incoming-batch-vs-existing-corpus admission shape (the exact tier
-    of the reference's dedup-before-write TODOs,
-    data-downloader/data_downloader.py:106,131,169,194, and the
-    deterministic complement of the probabilistic
-    operators.dedup.neardup_incremental): score a new batch against
-    the accepted corpus without ever joining the corpus to itself.
+    incoming-batch-vs-existing-corpus admission shape, the
+    deterministic complement of operators.dedup.neardup_incremental:
+    score a new batch against the accepted corpus without ever
+    joining the corpus to itself.
 
-    Same exact-rational arithmetic as ``jaccard_prefix_join`` (see it
-    for the prefix-lemma proof and the no-float-decides-membership
-    contract); the shared global token order is frequency over the
-    UNION of both sides. Ids may collide across sides (they are
-    different tables); output columns are left_id / right_id.
+    The contract is the module docstring's; the frequency order is
+    counted over the UNION of both sides. Ids may collide across
+    sides (they are different tables); output columns are left_id /
+    right_id.
 
-    ``collapse_duplicates`` applies the dedup-first tier PER SIDE:
-    identical token sets collapse to representatives before the
-    kernel, and pairs re-expand left-members x right-members,
-    output-bound - identical-set pairs ACROSS sides come out of the
-    kernel itself (J = 1 passes any threshold), so no within tier
-    exists here.
+    ``collapse_duplicates`` applies the dedup-first tier of
+    ``jaccard_prefix_join`` PER SIDE: identical token sets collapse to
+    representatives before the kernel, and pairs re-expand
+    left-members x right-members, output-bound. Identical sets ACROSS
+    sides come out of the kernel itself (J = 1 passes any threshold),
+    so no within tier exists here.
 
-    Scale shape: candidates are bounded by rare-prefix posting lists
-    of the union order with the AllPairs length filter inside the
-    join; when ``right`` is a small incoming batch its posting side
-    is batch-sized, so the join cost tracks the BATCH, not the
+    Scale shape: when ``right`` is a small incoming batch its posting
+    side is batch-sized, so the join cost tracks the BATCH, not the
     corpus (the corpus side contributes only postings whose token
     appears in some batch prefix)."""
-    if not (0.0 < threshold <= 1.0):
-        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    q_den = 1_000_000
-    p_num = round(threshold * q_den)
-    if p_num == 0:
-        raise ValueError(f"threshold {threshold} quantizes to 0/1e6")
-
-    from pyspark import StorageLevel
-
+    p = _quantize(threshold)
     tok_l = _tokenize_sets(left, id_col, tokens_col, "jaccard_prefix_join_rs")
     tok_r = _tokenize_sets(right, id_col, tokens_col, "jaccard_prefix_join_rs")
     if not collapse_duplicates:
-        return _prefix_filter_pairs_rs(tok_l, tok_r, p_num, q_den)
-
-    def group(tok):
-        # persisted DISK_ONLY (the minhash_dedup_pairs discipline): each
-        # grouped side is consumed FOUR times downstream (union-order
-        # freq, its own prefix window, the verify array join, the
-        # representative re-expand) and each consumer would otherwise
-        # re-run the scan + tokenize + groupBy chain - the most
-        # expensive narrow stage of the join (r15 profile: 8 concurrent
-        # single-task tokenize stages, ~4x the necessary executor
-        # time). Disk, not memory: lazy return value, no release point;
-        # pass cache_registry to unpersist once pairs materialize.
-        g = tok.groupBy(F.array_sort("_t").alias("_key")).agg(
-            F.min("_id").alias("_rid"),
-            F.sort_array(F.collect_list("_id")).alias("_ids"),
-        ).persist(StorageLevel.DISK_ONLY)
-        if cache_registry is not None:
-            cache_registry.append(g)
-        return g
-
-    gl, gr = group(tok_l), group(tok_r)
-    rep_pairs = _prefix_filter_pairs_rs(
-        gl.select(F.col("_rid").alias("_id"), F.col("_key").alias("_t")),
-        gr.select(F.col("_rid").alias("_id"), F.col("_key").alias("_t")),
-        p_num,
-        q_den,
-    )
-    return (
-        rep_pairs.join(
-            gl.select(
-                F.col("_rid").alias("left_id"), F.col("_ids").alias("_il")
-            ),
-            "left_id",
-        )
-        .join(
-            gr.select(
-                F.col("_rid").alias("right_id"),
-                F.col("_ids").alias("_ir"),
-            ),
-            "right_id",
-        )
-        .select(
-            "inter", "union_n", "jaccard",
-            F.explode("_il").alias("_ml"), "_ir",
-        )
-        .select(
-            "inter", "union_n", "jaccard",
-            "_ml", F.explode("_ir").alias("_mr"),
-        )
-        .select(
-            F.col("_ml").alias("left_id"),
-            F.col("_mr").alias("right_id"),
-            "inter",
-            "union_n",
-            "jaccard",
-        )
+        return _prefix_filter_pairs_rs(tok_l, tok_r, p)
+    gl, reps_l = _collapse(tok_l, cache_registry)
+    gr, reps_r = _collapse(tok_r, cache_registry)
+    rep_pairs = _prefix_filter_pairs_rs(reps_l, reps_r, p)
+    return _expand(rep_pairs, gl, gr, "left_id", "right_id").select(
+        F.col("_ma").alias("left_id"),
+        F.col("_mb").alias("right_id"),
+        "inter",
+        "union_n",
+        "jaccard",
     )
 
 
@@ -811,17 +663,9 @@ def jaccard_prefix_postings(
 ) -> DataFrame:
     """PERSISTABLE prefix postings for incremental exact-Jaccard
     screening: one row per (set id, prefix-token hash) with the set
-    size, under the corpus-INDEPENDENT total order (xxhash64(token),
-    token). The in-memory joins order by global token frequency
-    (rarest first - the AllPairs performance heuristic), but a
-    frequency order shifts as a corpus grows, which would invalidate
-    stored prefixes; the hash order is fixed forever, so postings of
-    admitted documents can be APPENDED to a store and never
-    recomputed. The prefix lemma only requires that both sides share
-    one total order and the threshold-derived per-set prefix length -
-    both hold - so recall stays 1.0; the trade is larger candidate
-    lists (no rarest-first shrinkage), still bounded by the AllPairs
-    length filter at screen time.
+    size, under the corpus-independent hash order (module docstring),
+    so postings of admitted documents are APPENDED to a store and
+    never recomputed; ``jaccard_screen_vs_postings`` consumes them.
 
     Columns: _id, _n (set size), _hk (prefix-token hash), _p (the
     quantized threshold numerator - a store built at one threshold
@@ -831,32 +675,15 @@ def jaccard_prefix_postings(
     for a persisted store (``partitionBy("_bk")`` on write). Candidates
     only meet on EQUAL posting hashes, so a screen only ever needs the
     store buckets its own batch's prefixes hash into:
-    ``jaccard_screen_vs_postings(prune_store_buckets=True)`` pushes
-    that bucket list as a partition filter, turning the per-batch
-    store scan (the path's last linear term) into a pruned read."""
-    if not (0.0 < threshold <= 1.0):
-        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    from pyspark.sql import Window as W
-
-    q_den = 1_000_000
-    p_num = round(threshold * q_den)
-    if p_num == 0:
-        raise ValueError(f"threshold {threshold} quantizes to 0/1e6")
+    ``jaccard_screen_vs_postings(store_buckets=B)`` pushes that bucket
+    list as a partition filter, turning the per-batch store scan (the
+    path's last linear term) into a pruned read."""
+    p = _quantize(threshold)
     tok = _tokenize_sets(df, id_col, tokens_col, "jaccard_prefix_postings")
-    flat = tok.select(
-        "_id", F.size("_t").alias("_n"), F.explode("_t").alias("_tk")
-    ).withColumn("_hk", F.xxhash64("_tk"))
-    ranked = flat.withColumn(
-        "_rn",
-        F.row_number().over(W.partitionBy("_id").orderBy("_hk", "_tk")),
-    )
-    min_overlap = F.expr(
-        f"(CAST({p_num} AS BIGINT) * _n + {q_den - 1}) div {q_den}"
-    )
     out = (
-        ranked.filter(F.col("_rn") <= F.col("_n") - min_overlap + 1)
+        _prefix_postings(_flat(tok), p)
         .select("_id", "_n", "_hk")
-        .withColumn("_p", F.lit(p_num))
+        .withColumn("_p", F.lit(p))
     )
     if bucket_by is not None:
         if bucket_by < 1:
@@ -931,12 +758,7 @@ def jaccard_screen_vs_postings(
     loader's result, so a loader may over-return rows (bucket
     granularity) without affecting results; ``corpus`` is ignored
     (pass None)."""
-    if not (0.0 < threshold <= 1.0):
-        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    q_den = 1_000_000
-    p_num = round(threshold * q_den)
-    if p_num == 0:
-        raise ValueError(f"threshold {threshold} quantizes to 0/1e6")
+    p_num = _quantize(threshold)
     if store_p_num is not None:
         if store_p_num != p_num:
             raise ValueError(
@@ -985,12 +807,7 @@ def jaccard_screen_vs_postings(
     cand = (
         store_postings.alias("a")
         .join(bp.alias("b"), "_hk")
-        .filter(
-            F.lit(q_den).cast("bigint")
-            * F.least(F.col("a._n"), F.col("b._n"))
-            >= F.lit(p_num).cast("bigint")
-            * F.greatest(F.col("a._n"), F.col("b._n"))
-        )
+        .filter(_length_ok(p_num))
         .select(
             F.col("a._id").alias("left_id"),
             F.col("b._id").alias("right_id"),
@@ -1017,7 +834,9 @@ def jaccard_screen_vs_postings(
     batch_tok = _tokenize_sets(
         batch, id_col, tokens_col, "jaccard_screen_vs_postings"
     )
-    return _verify_rs_pairs(cand, corpus_cand, batch_tok, p_num, q_den)
+    return _verify(
+        cand, corpus_cand, batch_tok, p_num, "left_id", "right_id"
+    )
 
 
 def write_postings_meta(
@@ -1029,14 +848,10 @@ def write_postings_meta(
     consumers can trust it instead of scanning the store's ``_p``
     column per batch (ADVICE r12: the distinct-_p guard was a second
     full store scan on the hot ingest path)."""
-    if not (0.0 < threshold <= 1.0):
-        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    q_den = 1_000_000
-    p_num = round(threshold * q_den)
-    if p_num == 0:
-        raise ValueError(f"threshold {threshold} quantizes to 0/1e6")
     _write_meta(
-        spark, postings_dir, {"_p": p_num, "_q": q_den, "_buckets": buckets}
+        spark,
+        postings_dir,
+        {"_p": _quantize(threshold), "_q": _Q, "_buckets": buckets},
     )
 
 
@@ -1047,7 +862,7 @@ def read_postings_meta(spark, postings_dir: str) -> dict | None:
     meta = _read_meta(spark, postings_dir)
     if meta is None:
         return None
-    if meta.get("_q") != 1_000_000:
+    if meta.get("_q") != _Q:
         raise ValueError(
             f"posting-store _meta at {postings_dir} is corrupt: {meta}"
         )

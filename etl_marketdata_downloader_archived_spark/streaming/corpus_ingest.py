@@ -77,6 +77,7 @@ from ..operators.dedup import (
 )
 from ..operators.dsir import hashed_ngram_buckets
 from ..operators.fuzzy import (
+    _quantize,
     compact_postings,
     jaccard_prefix_join,
     jaccard_prefix_postings,
@@ -517,7 +518,7 @@ def start_corpus_ingest_neardup(
             "num_hashes": num_hashes,
             "bands": bands,
             "shingle_n": shingle_n,
-            "p_num": round(jaccard_threshold * 1_000_000),
+            "p_num": _quantize(jaccard_threshold),
         },
         why="mismatched LSH parameters never collide in bands, which "
         "would silently admit duplicates",
@@ -663,7 +664,7 @@ def start_corpus_ingest_exact(
     the same contract every sequential admission policy has."""
     fn = "start_corpus_ingest_exact"
     _validate_compact_trigger(compact_trigger_files, store_bucket_count, fn)
-    p_req = round(jaccard_threshold * 1_000_000)
+    p_req = _quantize(jaccard_threshold)
 
     def legacy_threshold(legacy: DataFrame) -> None:
         wrong = sorted(

@@ -8,10 +8,12 @@ not scale; parity/bench cover the scale posture.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 SF_DIR = "/root/testdata/sf0.001"
 

@@ -24,6 +24,7 @@ NULLS FIRST/LAST ordering, and outer/null-safe joins over them.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import duckdb
 import pytest
@@ -31,7 +32,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
 from parity import TABLES, row_multiset  # noqa: E402
 
 SF = "/root/testdata/sf0.001"

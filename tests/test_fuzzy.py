@@ -672,3 +672,87 @@ def test_jaccard_join_null_and_empty_sets_inert(spark) -> None:
             ).collect()
         }
         assert got == {(1, 10): (4, 4), (2, 10): (3, 5)}, collapse
+
+
+def test_jaccard_joins_emit_a_replayed_row_once(spark) -> None:
+    """A replayed row (same id, same token set) is one member of its
+    duplicate group: both joins emit each pair exactly once, in the
+    collapse tier and in the raw tier alike."""
+    from etl_marketdata_downloader_archived_spark.operators.fuzzy import (
+        jaccard_prefix_join,
+        jaccard_prefix_join_rs,
+    )
+
+    rows = [
+        (1, ["a", "b", "c", "d"]),
+        (1, ["d", "c", "b", "a"]),   # replay of id 1: same set
+        (2, ["a", "b", "c", "e"]),   # J = 3/5 with 1 and with 3
+        (3, ["a", "b", "d", "e"]),
+    ]
+    df = spark.createDataFrame(rows, "id long, toks array<string>")
+    right = spark.createDataFrame(
+        [(9, ["a", "b", "c", "d"])], "id long, toks array<string>"
+    )
+    for collapse in (True, False):
+        got = sorted(
+            (r.id_a, r.id_b, r.inter, r.union_n)
+            for r in jaccard_prefix_join(
+                df, "id", "toks", 0.5, collapse_duplicates=collapse
+            ).collect()
+        )
+        assert got == [(1, 2, 3, 5), (1, 3, 3, 5), (2, 3, 3, 5)], collapse
+        got = sorted(
+            (r.left_id, r.right_id, r.inter, r.union_n)
+            for r in jaccard_prefix_join_rs(
+                df, right, "id", "toks", 0.5, collapse_duplicates=collapse
+            ).collect()
+        )
+        assert got == [(1, 9, 4, 4), (2, 9, 3, 5), (3, 9, 3, 5)], collapse
+
+
+@pytest.mark.parametrize(
+    "fn",
+    [
+        "jaccard_prefix_join",
+        "jaccard_prefix_join_rs",
+        "jaccard_prefix_postings",
+        "jaccard_screen_vs_postings",
+        "write_postings_meta",
+    ],
+)
+@pytest.mark.parametrize(
+    "threshold, match",
+    [
+        (0, r"threshold must be in \(0, 1\]"),
+        (1.5, r"threshold must be in \(0, 1\]"),
+        (1e-7, "quantizes to 0/1e6"),
+    ],
+)
+def test_jaccard_threshold_rejected(spark, tmp_path, fn, threshold, match):
+    """Every entry point of the exact-Jaccard family rejects a
+    threshold outside (0, 1] and one that quantizes to 0/1e6, before
+    any work runs."""
+    from etl_marketdata_downloader_archived_spark.operators import fuzzy
+
+    df = spark.createDataFrame([(1, ["a"])], "id long, toks array<string>")
+    calls = {
+        "jaccard_prefix_join": lambda t: fuzzy.jaccard_prefix_join(
+            df, "id", "toks", t
+        ),
+        "jaccard_prefix_join_rs": lambda t: fuzzy.jaccard_prefix_join_rs(
+            df, df, "id", "toks", t
+        ),
+        "jaccard_prefix_postings": lambda t: fuzzy.jaccard_prefix_postings(
+            df, "id", "toks", t
+        ),
+        "jaccard_screen_vs_postings": (
+            lambda t: fuzzy.jaccard_screen_vs_postings(
+                df, df, df, "id", "toks", t
+            )
+        ),
+        "write_postings_meta": lambda t: fuzzy.write_postings_meta(
+            spark, str(tmp_path / "postings"), t
+        ),
+    }
+    with pytest.raises(ValueError, match=match):
+        calls[fn](threshold)

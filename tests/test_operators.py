@@ -1818,12 +1818,23 @@ class _RenameFails:
         return self._fs.rename(src, dst)
 
 
-def _fail_renames(monkeypatch, *suffixes) -> None:
+class _RenameUnderFails(_RenameFails):
+    """Renames of anything under a dir named with one of ``suffixes``
+    (the dir itself or a file or dir inside it) return False."""
+
+    def rename(self, src, dst):
+        parts = src.toUri().getPath().split("/")
+        if any(p.endswith(self._suffixes) for p in parts):
+            return False
+        return self._fs.rename(src, dst)
+
+
+def _fail_renames(monkeypatch, *suffixes, fs_cls=_RenameFails) -> None:
     real_vfs = io._vfs
 
     def vfs(spark, path):
         jvm_path, fs = real_vfs(spark, path)
-        return jvm_path, _RenameFails(fs, suffixes)
+        return jvm_path, fs_cls(fs, suffixes)
 
     monkeypatch.setattr(io, "_vfs", vfs)
 
@@ -1862,6 +1873,40 @@ def test_whole_table_publish_rolls_back_a_failed_swap(
 
     got = sorted(tuple(r) for r in spark.read.parquet(path).collect())
     assert got == [(1, "a", 10), (1, "a", 10), (2, "b", 20)]
+
+
+@pytest.mark.parametrize(
+    "partition_cols", [(), ("part",)], ids=["unpartitioned", "partitioned"]
+)
+def test_write_audit_publish_replace_rolls_back_a_failed_publish(
+    spark, tmp_path, monkeypatch, partition_cols
+) -> None:
+    """write_audit_publish(mode="replace") publishes through the swap:
+    when a rename out of the staging tree fails, the error is raised
+    and the live table still reads its old rows."""
+    path = str(tmp_path / "tbl")
+    rules = {"amount_positive": F.col("amount") > 0}
+    cols = ["id", "part", "amount"]
+    old = [(1, "a", 5.0), (2, "b", 3.0)]
+
+    def publish(rows):
+        return io.write_audit_publish(
+            spark,
+            spark.createDataFrame(rows, cols),
+            path,
+            rules,
+            partition_cols=partition_cols,
+            mode="replace",
+        )
+
+    assert publish(old)["published"]
+    _fail_renames(monkeypatch, "__staging", fs_cls=_RenameUnderFails)
+    with pytest.raises(IOError):
+        publish([(1, "a", 7.0)])
+    monkeypatch.undo()
+
+    got = sorted(tuple(r) for r in spark.read.parquet(path).select(*cols).collect())
+    assert got == old
 
 
 def test_vacuum_maintenance_raises_on_a_failed_restore(

@@ -5,9 +5,13 @@ cartesian products."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from etl_marketdata_downloader_archived_spark.io import load_table
+
+ROOT = Path(__file__).resolve().parents[1]
 
 
 def _plan(df) -> str:
@@ -185,7 +189,7 @@ def test_explain_report_covers_every_registered_query() -> None:
 
     from etl_marketdata_downloader_archived_spark.plans import registry
 
-    text = open("/root/repo/EXPLAIN.md").read()
+    text = open(ROOT / "EXPLAIN.md").read()
     m = re.search(r"All-query scan result: (\d+) queries, zero red flags", text)
     assert m, "EXPLAIN.md red-flag scan line missing or reports flags"
     assert int(m.group(1)) == len(registry.all_queries())
@@ -205,7 +209,7 @@ def test_explain_scan_detects_global_windows(spark) -> None:
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(ROOT))
     from tools.explain_report import global_windows
 
     def plan_of(df):
@@ -277,7 +281,7 @@ def test_readme_battery_count_matches_registry() -> None:
         all_queries,
     )
 
-    text = open("/root/repo/README.md", encoding="utf-8").read()
+    text = open(ROOT / "README.md", encoding="utf-8").read()
     m = re.search(r"\((\d+) packed queries", text)
     assert m, "README no longer states the packed-query count"
     assert int(m.group(1)) == len(all_queries())
@@ -298,7 +302,7 @@ def test_explain_scan_detects_forward_frames(spark) -> None:
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(ROOT))
     from tools.explain_report import forward_frames
 
     def plan_of(df):
@@ -350,7 +354,7 @@ def test_every_round8_query_has_a_scale_probe_row() -> None:
         if getattr(r8, fn, None) is not None and callable(getattr(r8, fn))
     }
     assert len(r8_names) >= 13  # the round-8 battery
-    scale = open("/root/repo/SCALE.md", encoding="utf-8").read()
+    scale = open(ROOT / "SCALE.md", encoding="utf-8").read()
     missing = sorted(n for n in r8_names if n not in scale)
     assert missing == [], f"registered without a SCALE.md row: {missing}"
 
@@ -516,6 +520,16 @@ def test_lake_listing_is_single() -> None:
         if needle in p.read_text(encoding="utf-8")
     }
     assert hits == {"io.py"}
+
+
+def test_jaccard_threshold_is_single() -> None:
+    """The exact-Jaccard threshold is quantized once, in
+    operators/fuzzy.py: the range check's message appears once in the
+    package, and no module re-derives the numerator from a float."""
+    pkg = ROOT / "etl_marketdata_downloader_archived_spark"
+    texts = [p.read_text(encoding="utf-8") for p in pkg.rglob("*.py")]
+    assert sum(t.count("threshold must be in (0, 1]") for t in texts) == 1
+    assert not any("jaccard_threshold * 1_000_000" in t for t in texts)
 
 
 def test_group_state_fold_is_single() -> None:

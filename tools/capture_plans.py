@@ -18,10 +18,12 @@ import os
 import sys
 import time
 from contextlib import redirect_stdout
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
-OUT_DIR = os.environ.get("SPARK_GRAFT_PLANS_DIR", "/root/repo/plans/r16")
+OUT_DIR = os.environ.get("SPARK_GRAFT_PLANS_DIR", str(ROOT / "plans" / "r16"))
 
 
 def main() -> None:

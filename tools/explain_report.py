@@ -11,8 +11,10 @@ from __future__ import annotations
 import io
 import sys
 from contextlib import redirect_stdout
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 HEADLINE = [
     "agg_basic",
@@ -607,7 +609,7 @@ def main() -> int:
             f" plans (kept for documentation): {', '.join(stale_udtf)}."
         )
 
-    with open("/root/repo/EXPLAIN.md", "w") as f:
+    with open(ROOT / "EXPLAIN.md", "w") as f:
         f.write("\n".join(out))
     print(
         f"wrote EXPLAIN.md ({len(out)} lines); red-flagged: {flagged or 'none'}; "

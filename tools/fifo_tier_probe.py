@@ -13,9 +13,11 @@ Usage: python tools/fifo_tier_probe.py [n ...]   (default 2000 8000 30000)
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 
 def main() -> None:

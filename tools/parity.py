@@ -22,10 +22,12 @@ import sys
 from collections import Counter
 from datetime import date, datetime
 from decimal import Decimal
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings".split()

@@ -21,9 +21,11 @@ from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 BASE = "/root/testdata/sf0.1"
 
