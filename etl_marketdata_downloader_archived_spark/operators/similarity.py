@@ -1,24 +1,203 @@
 """Similarity search over embedding columns (array<float>).
 
-Two tiers, as a 100 TB engine needs both:
+Three kinds of kernel:
 
-- Brute-force cosine top-k: correct baseline. The dot product is a
-  Catalyst higher-order function (zip_with + aggregate) computed in
-  double - JVM-side, codegen'd, no Python. With the query vector as a
-  literal the scan is a narrow map + TakeOrdered: no shuffle of the
-  embedding column at all.
-- IVF (inverted-file) search: k-means-style coarse quantization ->
-  search only the closest nprobe partitions. Centroid assignment is a
-  broadcast of (tiny) centroids against the vectors; at scale the
-  assignment is precomputed and the table is PARTITIONED BY cluster so
-  probing prunes partitions on read.
+- Literal-query search (``topk_cosine``, ``ivf_search``,
+  ``ivf_search_indexed``): the dot product is a Catalyst higher-order
+  fold (zip_with + aggregate) in double, so a scan against one query
+  literal is a narrow map + TakeOrderedAndProject with no shuffle of
+  the embedding column. IVF ranks the cluster centroids against the
+  literal (``_probe``, a centroid-count collect) and scans only the
+  ``nprobe`` best clusters; on a table PARTITIONED BY cluster that
+  filter prunes partitions on read.
+- Bucketed all-pairs (``cosine_pairs_matmul``, ``lsh_cosine_pairs``,
+  ``embedding_dedup``): one BLAS V @ V.T per bucket (a label, a k-means
+  cluster or an RP-LSH bucket) in applyInPandas.
+- Many-query top-k (``knn_join``, ``knn_join_clustered``,
+  ``pq_search``, ``ivfpq_search``, and ``mine_hard_negatives`` on top
+  of ``knn_join``): numpy scoring in Arrow-batched pandas UDFs, over
+  float vectors or over PQ codes (``pq_train``/``pq_encode``,
+  ``ivfpq_build``). ``mmr_rerank`` diversifies their output.
+
+The many-query kernels share one top-k contract; each piece of it is
+one private helper below:
+
+- The query side is collected on the driver once and broadcast
+  (``_broadcast_topk``), so it must be the small side: Q x dim floats,
+  or Q x m x k doubles of PQ lookup table. The corpus streams through
+  one mapInPandas and never has to fit anywhere. ``knn_join_clustered``
+  is the path for an unbounded query side: queries route to their
+  nearest centroids and meet the corpus in a per-cluster cogroup.
+- Each batch (or cluster) keeps only its LOCAL top-k per query
+  (``_topk``), and ties break toward the smaller id there, before the
+  merge: a boundary tie dropped locally could be the smallest-id
+  candidate, which no merge can restore.
+- One window (``_merge``) ranks the O(queries x k x batches) local
+  candidates of each query_id by (score, neighbor_id), numbers them in
+  ``rank`` and keeps rank <= k.
+- Distances (``adc_dist``) sort ascending, similarities (``cos_sim``)
+  descending.
+- An empty query side gives an empty result with the usual columns.
+- Id columns keep their input types (``_type`` reads them from the
+  input schema): int, long and string ids flow through unchanged.
+
+Numpy cosine runs on unit rows (``_unit_rows``); a zero vector stays
+zero and scores 0 against everything.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from typing import Any
+
+import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def _type(df: DataFrame, col: str) -> str:
+    """Spark SQL type string of ``col`` in ``df``'s schema."""
+    return df.schema[col].dataType.simpleString()
+
+
+def _unit_rows(vecs) -> np.ndarray:
+    """The vectors stacked into a float64 matrix of unit-L2 rows; a zero
+    row stays zero."""
+    v = np.stack(list(vecs)).astype(np.float64)
+    norms = np.linalg.norm(v, axis=1, keepdims=True)
+    norms[norms == 0.0] = 1.0
+    return v / norms
+
+
+def _topk(
+    scores: np.ndarray, ids: np.ndarray, k: int, descending: bool
+) -> np.ndarray:
+    """Column positions of the best ``k`` entries of each row of
+    ``scores`` (one column per id), best first, ties toward the
+    smaller id."""
+    id_rank = np.argsort(np.argsort(ids, kind="stable"))
+    key = -scores if descending else scores
+    return np.lexsort(
+        (np.broadcast_to(id_rank, key.shape), key), axis=-1
+    )[:, :k]
+
+
+def _candidates(
+    q_ids: np.ndarray,
+    c_ids: np.ndarray,
+    scores: np.ndarray,
+    k: int,
+    score_col: str,
+    descending: bool,
+) -> pd.DataFrame:
+    """Local top-k rows (query_id, neighbor_id, ``score_col``) of a
+    Q x B score matrix of queries ``q_ids`` against candidates
+    ``c_ids``."""
+    pos = _topk(scores, c_ids, k, descending)
+    return pd.DataFrame(
+        {
+            "query_id": np.repeat(q_ids, pos.shape[1]),
+            "neighbor_id": c_ids[pos].ravel(),
+            score_col: np.take_along_axis(scores, pos, axis=1).ravel(),
+        }
+    )
+
+
+def _merge(
+    candidates: DataFrame, score_col: str, descending: bool, k: int
+) -> DataFrame:
+    """The global merge: rank each query_id's local candidates by
+    (``score_col``, neighbor_id) and keep rank <= k."""
+    score = F.col(score_col)
+    w = Window.partitionBy("query_id").orderBy(
+        score.desc() if descending else score.asc(), F.col("neighbor_id")
+    )
+    return candidates.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
+def _broadcast_topk(
+    queries: DataFrame,
+    qid: str,
+    vec_col: str,
+    prepare: Callable[[np.ndarray], Any],
+    corpus: DataFrame,
+    id_col: str,
+    cols: list[str],
+    score: Callable[[Any, pd.DataFrame], np.ndarray],
+    score_col: str,
+    descending: bool,
+    k: int,
+) -> DataFrame:
+    """The broadcast-queries top-k: collect the query side's ids and
+    float64 vector matrix once, broadcast ``prepare(matrix)``, and let
+    one mapInPandas over ``corpus[id_col, *cols]`` emit each batch's
+    local top-k of ``score(prepared, batch)`` - a Q x B matrix in which
+    +inf marks a candidate out of the query's reach - before the merge.
+    An empty query side skips ``prepare`` and emits nothing."""
+    rows = queries.select(qid, vec_col).collect()
+    q_ids = np.array([r[0] for r in rows])
+    prepared = (
+        prepare(np.stack([np.asarray(r[1], dtype=np.float64) for r in rows]))
+        if rows
+        else None
+    )
+    bq = queries.sparkSession.sparkContext.broadcast((q_ids, prepared))
+
+    def scan(batches):
+        ids_q, prep = bq.value
+        for pdf in batches:
+            if len(pdf) and len(ids_q):
+                out = _candidates(
+                    ids_q, pdf[id_col].to_numpy(), score(prep, pdf),
+                    k, score_col, descending,
+                )
+                yield out[out[score_col] != np.inf]
+
+    candidates = corpus.select(id_col, *cols).mapInPandas(
+        scan,
+        schema=f"query_id {_type(queries, qid)}, "
+        f"neighbor_id {_type(corpus, id_col)}, {score_col} double",
+    )
+    return _merge(candidates, score_col, descending, k)
+
+
+def _probe(
+    cents: DataFrame, cluster_col: str, query_vec: list[float], nprobe: int
+) -> list:
+    """Ids of the ``nprobe`` centroids most cosine-similar to
+    ``query_vec``, ties toward the smaller id. The collect is
+    centroid-count rows (tiny, bounded by nlist); it parameterizes the
+    partition-pruned probe scan."""
+    qlit = F.array(*[F.lit(float(x)) for x in query_vec])
+    return [
+        r[0]
+        for r in cents.select(
+            cluster_col, cosine(F.col("centroid"), qlit).alias("c")
+        )
+        .orderBy(F.col("c").desc(), F.col(cluster_col))
+        .limit(nprobe)
+        .collect()
+    ]
+
+
+def _pq_table(x: np.ndarray, books: list[np.ndarray]) -> np.ndarray:
+    """(n, m, k) ADC lookup table: squared distance from each row's j-th
+    subvector to each of codebook j's k centroids."""
+    sub = books[0].shape[1]
+    table = np.empty((len(x), len(books), books[0].shape[0]))
+    for j, book in enumerate(books):
+        diff = x[:, None, j * sub : (j + 1) * sub] - book[None, :, :]
+        table[:, j, :] = (diff * diff).sum(axis=2)
+    return table
+
+
+def _adc(table: np.ndarray, codes: np.ndarray) -> np.ndarray:
+    """Asymmetric distance of each code row: the sum of its m table
+    lookups. ``table`` is (m, k) for one query or (Q, m, k) for Q."""
+    return sum(table[..., j, codes[:, j]] for j in range(codes.shape[1]))
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -140,21 +319,15 @@ def cosine_pairs_matmul(
     bucket in one vectorized matmul (~10x measured here). The groupBy
     keys the shuffle on the bucket - same plan shape, faster kernel.
     Buckets must fit in executor memory; that is the LSH/IVF
-    bucketing's job."""
-    import numpy as np
+    bucketing's job. Ids keep their input type."""
 
     def per_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:
-            return pd.DataFrame(
-                {"bucket": [], "id_a": [], "id_b": [], "cos_sim": []}
-            ).astype({"bucket": "int64", "id_a": "int64", "id_b": "int64", "cos_sim": "float64"})
+        # a one-row bucket has no pairs: every column comes out empty,
+        # with the input's dtypes
         ids = pdf[id_col].to_numpy()
         order = np.argsort(ids)
         ids = ids[order]
-        v = np.stack(pdf[vec_col].to_numpy()[order]).astype(np.float64)
-        norms = np.linalg.norm(v, axis=1, keepdims=True)
-        norms[norms == 0.0] = 1.0
-        v = v / norms
+        v = _unit_rows(pdf[vec_col].to_numpy()[order])
         sims = v @ v.T
         ia, ib = np.triu_indices(len(ids), k=1)
         keep = sims[ia, ib] >= threshold
@@ -167,7 +340,8 @@ def cosine_pairs_matmul(
             }
         )
 
-    out_schema = "bucket long, id_a long, id_b long, cos_sim double"
+    id_t = _type(df, id_col)
+    out_schema = f"bucket long, id_a {id_t}, id_b {id_t}, cos_sim double"
     return (
         df.select(F.col(bucket_col).cast("long").alias(bucket_col), id_col, vec_col)
         .groupBy(bucket_col)
@@ -338,16 +512,10 @@ def ivf_search_indexed(
     the query, then scan ONLY the nprobe best clusters (partition
     pruning does the data skipping). ``keep_vec`` carries candidate
     vectors through for a downstream re-ranker (mmr_rerank)."""
-    cents = spark.read.parquet(path.rstrip("/") + "__centroids")
-    qlit = F.array(*[F.lit(float(x)) for x in query_vec])
-    probe = [
-        r[0]
-        for r in cents.select("cluster", cosine(F.col("centroid"), qlit).alias("c"))
-        .orderBy(F.col("c").desc(), "cluster")
-        .limit(nprobe)
-        .select("cluster")
-        .collect()
-    ]
+    probe = _probe(
+        spark.read.parquet(path.rstrip("/") + "__centroids"),
+        "cluster", query_vec, nprobe,
+    )
     data = spark.read.parquet(path).filter(F.col("cluster").isin(probe))
     return topk_cosine(data, query_vec, k, vec_col, id_col, keep_vec=keep_vec)
 
@@ -369,20 +537,9 @@ def ivf_search(
     by cluster the probe is a partition-pruned read of nprobe/N of the
     data.
     """
-    cents = ivf_centroids(df, cluster_col, vec_col)
-    qlit = F.array(*[F.lit(float(x)) for x in query_vec])
-    probe = [
-        r[0]
-        for r in cents.select(
-            cluster_col, cosine(F.col("centroid"), qlit).alias("c")
-        )
-        .orderBy(F.col("c").desc(), F.col(cluster_col))
-        .limit(nprobe)
-        .select(cluster_col)
-        .collect()
-    ]
-    # collect() here is centroid-count rows (tiny, bounded by nlist) -
-    # it parameterizes partition pruning for the probe scan.
+    probe = _probe(
+        ivf_centroids(df, cluster_col, vec_col), cluster_col, query_vec, nprobe
+    )
     return topk_cosine(
         df.filter(F.col(cluster_col).isin(probe)), query_vec, k, vec_col, id_col
     )
@@ -398,76 +555,17 @@ def knn_join(
 ) -> DataFrame:
     """Top-k cosine neighbors in ``corpus`` for EVERY query vector -
     the kNN-graph primitive behind semantic dedup clustering and
-    retrieval eval. Output: (query_id, neighbor_id, cos_sim, rank).
+    retrieval eval. Output: (query_id, neighbor_id, cos_sim, rank),
+    rank 1 = most similar.
 
-    Scale shape: the QUERY side is the small side (an eval set, a
-    probe batch) - it broadcasts to every corpus partition as one
-    normalized numpy matrix; ``mapInPandas`` scores each Arrow batch
-    against all queries with one BLAS matmul and emits only each
-    batch's LOCAL top-k per query. The global window then ranks
-    O(queries x k x batches) candidate rows, never the corpus - the
-    same partial-top-k-then-merge contract TakeOrderedAndProject uses.
-    Corpus-side parallelism is the partition count; nothing about the
-    corpus must fit on one machine (the query matrix must: Q x dim
-    floats). Ties on cos_sim break toward the smaller neighbor id,
-    making the graph deterministic. Id columns keep their input types
-    (int, string, ...) - the output schema is derived from the input
-    schemas, not hardcoded to long."""
-    import numpy as np
-
-    from pyspark.sql import Window as W
-
-    qid = query_id_col or id_col
-    qid_t = queries.schema[qid].dataType.simpleString()
-    nid_t = corpus.schema[id_col].dataType.simpleString()
-    q_rows = queries.select(F.col(qid).alias("qid"), F.col(vec_col)).collect()
-    q_ids = np.array([r[0] for r in q_rows])
-    q_mat = np.stack([np.asarray(r[1], dtype=np.float64) for r in q_rows])
-    q_norms = np.linalg.norm(q_mat, axis=1, keepdims=True)
-    q_norms[q_norms == 0.0] = 1.0
-    q_mat = q_mat / q_norms
-    sc = queries.sparkSession.sparkContext
-    bq = sc.broadcast((q_ids, q_mat))
-
-    def score(batches):
-        ids_q, mat_q = bq.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            c_ids = pdf[id_col].to_numpy()
-            c = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            n = np.linalg.norm(c, axis=1, keepdims=True)
-            n[n == 0.0] = 1.0
-            sims = mat_q @ (c / n).T  # Q x B
-            kk = min(k, sims.shape[1])
-            # local top-k per query with the id tie-break applied
-            # LOCALLY: a boundary tie dropped by plain argpartition
-            # could be the smallest-id candidate, which the global
-            # (cos_sim, neighbor_id) merge can then never restore
-            id_rank = np.argsort(np.argsort(c_ids, kind="stable"))
-            rq, rc, rs = [], [], []
-            for qi in range(sims.shape[0]):
-                order = np.lexsort((id_rank, -sims[qi]))[:kk]
-                rq.append(np.repeat(ids_q[qi], kk))
-                rc.append(c_ids[order])
-                rs.append(sims[qi][order])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(rq),
-                    "neighbor_id": np.concatenate(rc),
-                    "cos_sim": np.concatenate(rs),
-                }
-            )
-
-    candidates = corpus.select(id_col, vec_col).mapInPandas(
-        score, schema=f"query_id {qid_t}, neighbor_id {nid_t}, cos_sim double"
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    Each corpus batch is scored against all queries with one BLAS
+    matmul on unit rows; scale shape, tie-break, empty query side and
+    id types follow the module's top-k contract."""
+    return _broadcast_topk(
+        queries, query_id_col or id_col, vec_col, _unit_rows,
+        corpus, id_col, [vec_col],
+        lambda q, pdf: q @ _unit_rows(pdf[vec_col].to_numpy()).T,
+        "cos_sim", True, k,
     )
 
 
@@ -489,31 +587,26 @@ def knn_join_clustered(
     1. k-means assigns the corpus to ``nlist`` clusters (the offline
        index build; at lake scale the corpus is written PARTITIONED BY
        cluster once and this step is a read).
-    2. Queries fan out to their ``nprobe`` nearest centroids via a
-       broadcast centroid matrix (nlist x dim - always tiny) inside
-       mapInPandas: no shuffle, no driver collect of queries.
+    2. Queries fan out to their ``nprobe`` nearest centroids (ties
+       toward the smaller cluster id) via a broadcast centroid matrix
+       (nlist x dim - always tiny) inside mapInPandas: no shuffle, no
+       driver collect of queries.
     3. A COGROUP on the cluster key hands each (query-batch,
        corpus-cluster) pair to one BLAS matmul emitting local top-k
        per query; the global window merges O(Q x k x nprobe) rows.
 
     Approximate like any IVF probe (recall rises with nprobe;
-    nprobe=nlist is exhaustive and equals knn_join - pytest-pinned).
-    Every stage is bounded: centroids broadcast, one corpus cluster +
-    one query batch per task, candidates k-bounded."""
-    import numpy as np
-
+    nprobe=nlist is exhaustive and equals knn_join, ties included -
+    pytest-pinned). Every stage is bounded: centroids broadcast, one
+    corpus cluster + one query batch per task, candidates k-bounded.
+    Output, tie-break and id types as in the module's top-k contract."""
     qid = query_id_col or id_col
-    qid_t = queries.schema[qid].dataType.simpleString()
-    nid_t = corpus.schema[id_col].dataType.simpleString()
     assigned = kmeans_assign(corpus, k=nlist, vec_col=vec_col, seed=seed)
     cents = ivf_centroids(assigned, "cluster", vec_col=vec_col).collect()
     c_ids = np.array([r["cluster"] for r in cents], dtype=np.int64)
-    c_mat = np.stack([np.asarray(r["centroid"], dtype=np.float64) for r in cents])
-    c_norm = np.linalg.norm(c_mat, axis=1, keepdims=True)
-    c_norm[c_norm == 0.0] = 1.0
-    c_mat = c_mat / c_norm
-    sc = queries.sparkSession.sparkContext
-    bc = sc.broadcast((c_ids, c_mat))
+    bc = queries.sparkSession.sparkContext.broadcast(
+        (c_ids, _unit_rows([r["centroid"] for r in cents]))
+    )
     probe = min(nprobe, len(cents))
 
     def route(batches):
@@ -521,23 +614,20 @@ def knn_join_clustered(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            v = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            n = np.linalg.norm(v, axis=1, keepdims=True)
-            n[n == 0.0] = 1.0
-            sims = (v / n) @ mat_c.T  # Q x nlist
-            near = np.argpartition(-sims, probe - 1, axis=1)[:, :probe]
-            qids = pdf[qid].to_numpy()
-            vecs = pdf[vec_col].to_numpy()
+            sims = _unit_rows(pdf[vec_col].to_numpy()) @ mat_c.T  # Q x nlist
+            near = _topk(sims, ids_c, probe, True)
             yield pd.DataFrame(
                 {
-                    "qid": np.repeat(qids, probe),
+                    "qid": np.repeat(pdf[qid].to_numpy(), probe),
                     "cluster": ids_c[near.ravel()],
-                    "qvec": [v for v in np.repeat(vecs, probe)],
+                    "qvec": list(np.repeat(pdf[vec_col].to_numpy(), probe)),
                 }
             )
 
     routed = queries.select(F.col(qid), F.col(vec_col)).mapInPandas(
-        route, schema=f"qid {qid_t}, cluster long, qvec {queries.schema[vec_col].dataType.simpleString()}"
+        route,
+        schema=f"qid {_type(queries, qid)}, cluster long, "
+        f"qvec {_type(queries, vec_col)}",
     )
 
     def per_cluster(key, qpdf, cpdf):
@@ -551,38 +641,22 @@ def knn_join_clustered(
                     "cos_sim": pd.Series([], dtype="float64"),
                 }
             )
-        qv = np.stack(qpdf["qvec"].to_numpy()).astype(np.float64)
-        qn = np.linalg.norm(qv, axis=1, keepdims=True)
-        qn[qn == 0.0] = 1.0
-        cv = np.stack(cpdf[vec_col].to_numpy()).astype(np.float64)
-        cn = np.linalg.norm(cv, axis=1, keepdims=True)
-        cn[cn == 0.0] = 1.0
-        sims = (qv / qn) @ (cv / cn).T
-        kk = min(k, sims.shape[1])
-        idx = np.argpartition(-sims, kk - 1, axis=1)[:, :kk]
-        c_ids_local = cpdf[id_col].to_numpy()
-        return pd.DataFrame(
-            {
-                "query_id": np.repeat(qpdf["qid"].to_numpy(), kk),
-                "neighbor_id": c_ids_local[idx.ravel()],
-                "cos_sim": np.take_along_axis(sims, idx, axis=1).ravel(),
-            }
+        sims = _unit_rows(qpdf["qvec"].to_numpy()) @ _unit_rows(
+            cpdf[vec_col].to_numpy()
+        ).T
+        return _candidates(
+            qpdf["qid"].to_numpy(), cpdf[id_col].to_numpy(), sims,
+            k, "cos_sim", True,
         )
 
     candidates = routed.groupby("cluster").cogroup(
         assigned.select(id_col, vec_col, "cluster").groupby("cluster")
     ).applyInPandas(
-        per_cluster, schema=f"query_id {qid_t}, neighbor_id {nid_t}, cos_sim double"
+        per_cluster,
+        schema=f"query_id {_type(queries, qid)}, "
+        f"neighbor_id {_type(corpus, id_col)}, cos_sim double",
     )
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _merge(candidates, "cos_sim", True, k)
 
 
 def quantize_embeddings(
@@ -726,9 +800,7 @@ def pq_encode(
     j. Arrow-batched numpy (one (B x k) distance matrix per subspace
     per batch); the codebook broadcasts inside the closure. Ties
     break toward the smaller code (numpy argmin), deterministically."""
-    import numpy as np
-
-    id_t = df.schema[id_col].dataType.simpleString()
+    id_t = _type(df, id_col)
     books = [np.asarray(b, dtype=np.float64) for b in codebooks]
     m = len(books)
     sub = books[0].shape[1]
@@ -781,81 +853,21 @@ def pq_search(
     precomputes one (m x k) lookup table of exact squared distances
     from its subvectors to every centroid, and a candidate's score is
     the SUM of m table lookups - the corpus is never dequantized.
-    Output: (query_id, neighbor_id, adc_dist, rank), rank 1 = nearest,
-    ties toward the smaller neighbor id.
+    Output: (query_id, neighbor_id, adc_dist, rank), rank 1 = nearest.
 
-    Scale shape: the knn_join contract - queries collect driver-side
-    (the small side by construction), the Q x m x k LUT broadcasts,
-    each corpus partition emits its LOCAL top-k per query from int8
-    codes, and the global window merges O(queries x k x partitions)
-    candidates, never the corpus."""
-    import numpy as np
-
-    from pyspark.sql import Window as W
-
-    qid = query_id_col or id_col
-    qid_t = queries.schema[qid].dataType.simpleString()
-    nid_t = encoded.schema[id_col].dataType.simpleString()
+    The Q x m x k table is the broadcast query side; each corpus batch
+    scores its int8 codes against it. Scale shape, tie-break, empty
+    query side and id types follow the module's top-k contract."""
     books = [np.asarray(b, dtype=np.float64) for b in codebooks]
-    m = len(books)
-    sub = books[0].shape[1]
-    q_rows = queries.select(F.col(qid).alias("qid"), F.col(vec_col)).collect()
-    q_ids = np.array([r[0] for r in q_rows])
-    q_mat = np.stack([np.asarray(r[1], dtype=np.float64) for r in q_rows])
-    nq = len(q_ids)
-    lut = np.empty((nq, m, books[0].shape[0]), dtype=np.float64)
-    for j in range(m):
-        qs = q_mat[:, j * sub : (j + 1) * sub]
-        diff = qs[:, None, :] - books[j][None, :, :]
-        lut[:, j, :] = (diff * diff).sum(axis=2)
-    sc = queries.sparkSession.sparkContext
-    blut = sc.broadcast((q_ids, lut))
-
-    def score(batches):
-        import pandas as pd
-
-        ids_q, tables = blut.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            c_ids = pdf[id_col].to_numpy()
-            codes = np.stack(
-                [np.asarray(c, dtype=np.int64) for c in pdf["codes"]]
-            )
-            dist = np.zeros((len(ids_q), len(c_ids)), dtype=np.float64)
-            for j in range(codes.shape[1]):
-                dist += tables[:, j, codes[:, j]]
-            kk = min(k, dist.shape[1])
-            # LOCAL selection must already tie-break on id: identical
-            # codes tie exactly on ADC distance, and argpartition at
-            # the kk-th boundary could drop the smallest-id candidate
-            # - a candidate never emitted cannot be restored by the
-            # global (adc_dist, neighbor_id) merge (review catch)
-            id_rank = np.argsort(np.argsort(c_ids, kind="stable"))
-            rows_q, rows_c, rows_d = [], [], []
-            for qi in range(dist.shape[0]):
-                order = np.lexsort((id_rank, dist[qi]))[:kk]
-                rows_q.append(np.repeat(ids_q[qi], kk))
-                rows_c.append(c_ids[order])
-                rows_d.append(dist[qi][order])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(rows_q),
-                    "neighbor_id": np.concatenate(rows_c),
-                    "adc_dist": np.concatenate(rows_d),
-                }
-            )
-
-    candidates = encoded.select(id_col, "codes").mapInPandas(
-        score,
-        schema=f"query_id {qid_t}, neighbor_id {nid_t}, adc_dist double",
+    return _broadcast_topk(
+        queries, query_id_col or id_col, vec_col,
+        lambda q: _pq_table(q, books),
+        encoded, id_col, ["codes"],
+        lambda lut, pdf: _adc(
+            lut, np.stack(pdf["codes"].to_numpy()).astype(np.int64)
+        ),
+        "adc_dist", False, k,
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id")
-    )
-    return candidates.withColumn(
-        "rank", F.row_number().over(w)
-    ).filter(F.col("rank") <= k)
 
 
 def ivfpq_build(
@@ -930,116 +942,51 @@ def ivfpq_search(
     query_id_col: str | None = None,
 ) -> DataFrame:
     """IVF-PQ top-k: each query probes its ``nprobe`` nearest coarse
-    cells and scores ONLY those cells' codes by asymmetric distance
-    against a per-(query, cell) lookup table built from the query's
-    RESIDUAL to that cell's centroid - candidates are never
-    dequantized and never leave their partition before the k-bounded
-    merge. nprobe=nlist is exhaustive-PQ (equals pq_search on the
-    residual index, pytest-pinned); recall rises with nprobe.
+    cells (ties toward the smaller cluster id) and scores ONLY those
+    cells' codes by asymmetric distance against a per-(query, cell)
+    lookup table built from the query's RESIDUAL to that cell's
+    centroid - candidates are never dequantized and never leave their
+    partition before the k-bounded merge. nprobe=nlist is
+    exhaustive-PQ (equals pq_search on the residual index,
+    pytest-pinned); recall rises with nprobe.
 
     Output: (query_id, neighbor_id, adc_dist, rank), ADC approximates
-    squared L2; ties toward the smaller neighbor id, applied in the
-    LOCAL selection (the pq_search/knn_join rule).
-
-    Scale shape: queries collect driver-side (the small side); the
-    broadcast is Q x nprobe x m x k doubles of LUT plus the probe
-    lists. At lake scale ``encoded`` is read PARTITIONED BY cluster,
-    so the scan itself prunes to the union of probed cells
+    squared L2. The broadcast query side is Q x nprobe x m x k doubles
+    of table plus the probe lists; the rest follows the module's top-k
+    contract. At lake scale ``encoded`` is read PARTITIONED BY
+    cluster, so the scan itself prunes to the union of probed cells
     (PartitionFilters - the ivf_search_indexed contract); here the
     kernel masks per batch, which is the same candidate bound without
     the I/O pruning."""
-    import numpy as np
-
-    from pyspark.sql import Window as W
-
-    qid = query_id_col or id_col
-    qid_t = queries.schema[qid].dataType.simpleString()
-    nid_t = encoded.schema[id_col].dataType.simpleString()
     books = [np.asarray(b, dtype=np.float64) for b in codebooks]
-    m = len(books)
-    sub = books[0].shape[1]
-    kcent = books[0].shape[0]
     cids = np.array([c for c, _ in centroids], dtype=np.int64)
     cmat = np.asarray([v for _, v in centroids], dtype=np.float64)
-    nlist = len(cmat)
-    npb = min(nprobe, nlist)
-    q_rows = queries.select(F.col(qid).alias("qid"), F.col(vec_col)).collect()
-    q_ids = np.array([r[0] for r in q_rows])
-    q_mat = np.stack([np.asarray(r[1], dtype=np.float64) for r in q_rows])
-    nq = len(q_ids)
-    # coarse routing: nprobe nearest centroids per query (ties toward
-    # the smaller cluster id via stable argsort on (dist, id))
-    cd = ((q_mat[:, None, :] - cmat[None, :, :]) ** 2).sum(axis=2)
-    # positions into the (possibly gappy) centroid list; the kernel
-    # compares against the ACTUAL cluster ids
-    probes = cids[np.argsort(cd, axis=1, kind="stable")[:, :npb]]
-    probe_pos = np.argsort(cd, axis=1, kind="stable")[:, :npb]
-    # per-(query, probed cell) LUT over the query RESIDUAL
-    lut = np.empty((nq, npb, m, kcent), dtype=np.float64)
-    for qi in range(nq):
-        for pi in range(npb):
-            r = q_mat[qi] - cmat[probe_pos[qi, pi]]
-            for j in range(m):
-                diff = r[j * sub : (j + 1) * sub][None, :] - books[j]
-                lut[qi, pi, j, :] = (diff * diff).sum(axis=1)
-    sc = queries.sparkSession.sparkContext
-    bq = sc.broadcast((q_ids, probes, lut))
+    npb = min(nprobe, len(cmat))
 
-    def score(batches):
-        import pandas as pd
+    def prepare(q: np.ndarray) -> tuple:
+        # positions into the (possibly gappy) centroid list; the scan
+        # compares against the ACTUAL cluster ids
+        cd = ((q[:, None, :] - cmat[None, :, :]) ** 2).sum(axis=2)
+        pos = _topk(cd, cids, npb, False)
+        residuals = (q[:, None, :] - cmat[pos]).reshape(len(q) * npb, -1)
+        lut = _pq_table(residuals, books)
+        return cids[pos], lut.reshape(len(q), npb, *lut.shape[1:])
 
-        ids_q, prb, tables = bq.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            c_ids = pdf[id_col].to_numpy()
-            clusters = pdf["cluster"].to_numpy()
-            codes = np.stack(
-                [np.asarray(c, dtype=np.int64) for c in pdf["codes"]]
-            )
-            id_rank = np.argsort(np.argsort(c_ids, kind="stable"))
-            rq, rc, rd = [], [], []
-            for qi in range(len(ids_q)):
-                dists, keeps = [], []
-                for pi in range(prb.shape[1]):
-                    mask = clusters == prb[qi, pi]
-                    if not mask.any():
-                        continue
-                    sel = codes[mask]
-                    d = np.zeros(len(sel), dtype=np.float64)
-                    for j in range(sel.shape[1]):
-                        d += tables[qi, pi, j, sel[:, j]]
-                    dists.append(d)
-                    keeps.append(np.flatnonzero(mask))
-                if not dists:
-                    continue
-                d_all = np.concatenate(dists)
-                rows = np.concatenate(keeps)
-                kk = min(k, len(d_all))
-                order = np.lexsort((id_rank[rows], d_all))[:kk]
-                rq.append(np.repeat(ids_q[qi], kk))
-                rc.append(c_ids[rows[order]])
-                rd.append(d_all[order])
-            if not rq:
-                continue
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(rq),
-                    "neighbor_id": np.concatenate(rc),
-                    "adc_dist": np.concatenate(rd),
-                }
-            )
+    def score(prepared: tuple, pdf: pd.DataFrame) -> np.ndarray:
+        probes, lut = prepared
+        clusters = pdf["cluster"].to_numpy()
+        codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
+        dist = np.full((len(probes), len(pdf)), np.inf)
+        for qi, pi in np.ndindex(probes.shape):
+            rows = clusters == probes[qi, pi]
+            dist[qi, rows] = _adc(lut[qi, pi], codes[rows])
+        return dist
 
-    candidates = encoded.select(id_col, "cluster", "codes").mapInPandas(
-        score,
-        schema=f"query_id {qid_t}, neighbor_id {nid_t}, adc_dist double",
+    return _broadcast_topk(
+        queries, query_id_col or id_col, vec_col, prepare,
+        encoded, id_col, ["cluster", "codes"], score,
+        "adc_dist", False, k,
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id")
-    )
-    return candidates.withColumn(
-        "rank", F.row_number().over(w)
-    ).filter(F.col("rank") <= k)
 
 
 def mmr_rerank(
@@ -1073,14 +1020,11 @@ def mmr_rerank(
     order and argmax takes the first maximum) - deterministic across
     partitionings and replays. Returns (query_col, rank, id_col,
     relevance, mmr_score), rank 1 first-selected."""
-    import numpy as np
-
     if not 0.0 <= lambda_ <= 1.0:
         raise ValueError(f"lambda_ must be in [0, 1], got {lambda_}")
-    qt = candidates.schema[query_col].dataType.simpleString()
-    it = candidates.schema[id_col].dataType.simpleString()
     out_schema = (
-        f"{query_col} {qt}, rank int, {id_col} {it}, "
+        f"{query_col} {_type(candidates, query_col)}, rank int, "
+        f"{id_col} {_type(candidates, id_col)}, "
         "relevance double, mmr_score double"
     )
 
@@ -1088,12 +1032,7 @@ def mmr_rerank(
         pdf = pdf.sort_values(id_col, kind="mergesort")
         ids = pdf[id_col].to_numpy()
         rel = pdf[rel_col].to_numpy(dtype=np.float64)
-        mat = np.stack(
-            [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-        )
-        norms = np.linalg.norm(mat, axis=1)
-        norms[norms == 0.0] = 1.0
-        unit = mat / norms[:, None]
+        unit = _unit_rows(pdf[vec_col].to_numpy())
         n = len(ids)
         take = min(k, n)
         selected: list[int] = []
@@ -1166,8 +1105,6 @@ def mine_hard_negatives(
     over-fetched rows - never the corpus. Output: (query_id, neg_id,
     cos_sim, rank), rank 1 = hardest surviving negative, ties to the
     smaller id (knn_join's determinism carries through)."""
-    from pyspark.sql import Window as W
-
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     fetch = k + 1 + (margin if margin is not None else k)
@@ -1190,16 +1127,9 @@ def mine_hard_negatives(
             )
         ).dropDuplicates()
         cand = cand.join(ex, ["query_id", "neighbor_id"], "left_anti")
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("neighbor_id").alias("neg_id"),
-            "cos_sim",
-            "rank",
-        )
+    return _merge(cand, "cos_sim", True, k).select(
+        "query_id",
+        F.col("neighbor_id").alias("neg_id"),
+        "cos_sim",
+        "rank",
     )

@@ -1276,10 +1276,74 @@ def test_knn_join_clustered_exhaustive_equals_brute(spark) -> None:
     assert hits / len(brute) >= 0.9  # blobs: probing the home cluster suffices
 
 
+def test_knn_join_clustered_breaks_ties_like_knn_join(spark) -> None:
+    """An exhaustive probe equals knn_join on tied cosines too: thirty
+    identical corpus vectors tie, and both the nprobe routing and the
+    per-cluster selection break ties toward the smaller id before the
+    merge, so both joins return ids 0, 1, 2."""
+    import random
+
+    rng = random.Random(1)
+    ids = list(range(40))
+    rng.shuffle(ids)
+    vecs = [[1.0, 0.0, 0.0, 0.0]] * 30 + [
+        [0.0, 1.0, rng.random(), 0.0] for _ in range(10)
+    ]
+    corpus = spark.createDataFrame(
+        list(zip(ids, vecs)), ["vec_id", "embedding"]
+    ).repartition(3)
+    queries = spark.createDataFrame(
+        [(100, [1.0, 0.0, 0.0, 0.0])], ["vec_id", "embedding"]
+    )
+
+    def ranked(df):
+        return [r.neighbor_id for r in sorted(df.collect(), key=lambda r: r.rank)]
+
+    assert ranked(S.knn_join(queries, corpus, k=3)) == [0, 1, 2]
+    assert ranked(
+        S.knn_join_clustered(queries, corpus, k=3, nlist=2, nprobe=2)
+    ) == [0, 1, 2]
+
+
+@pytest.mark.parametrize(
+    "kernel", ["knn_join", "mine_hard_negatives", "pq_search", "ivfpq_search"]
+)
+def test_topk_kernels_empty_query_side(spark, kernel) -> None:
+    """An empty query side gives an empty result with the kernel's
+    usual columns and dtypes, not a driver-side crash."""
+    import numpy as np
+
+    rng = np.random.default_rng(5)
+    corpus = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(rng.normal(size=(40, 4)))],
+        "vec_id long, embedding array<double>",
+    )
+    queries = corpus.limit(0)
+    if kernel == "knn_join":
+        out = S.knn_join(queries, corpus, k=3)
+        cols = ["query_id", "neighbor_id", "cos_sim", "rank"]
+    elif kernel == "mine_hard_negatives":
+        out = S.mine_hard_negatives(queries, corpus, k=3)
+        cols = ["query_id", "neg_id", "cos_sim", "rank"]
+    elif kernel == "pq_search":
+        books = S.pq_train(corpus, m=2, k=4)
+        out = S.pq_search(queries, S.pq_encode(corpus, books), books, k=3)
+        cols = ["query_id", "neighbor_id", "adc_dist", "rank"]
+    else:
+        encoded, cents, books = S.ivfpq_build(corpus, nlist=2, m=2, k=4)
+        out = S.ivfpq_search(queries, encoded, cents, books, k=3, nprobe=2)
+        cols = ["query_id", "neighbor_id", "adc_dist", "rank"]
+    assert out.dtypes == list(
+        zip(cols, ["bigint", "bigint", "double", "int"])
+    )
+    assert out.collect() == []
+
+
 def test_knn_joins_preserve_string_id_types(spark) -> None:
-    """knn_join / knn_join_clustered derive id column types from the
-    input schemas: string doc ids flow through both paths unchanged
-    (no hardcoded long schema, no numpy int cast)."""
+    """knn_join / knn_join_clustered, and the bucketed pair kernels
+    cosine_pairs_matmul / lsh_cosine_pairs, derive id column types
+    from the input schemas: string doc ids flow through every path
+    unchanged (no hardcoded long schema, no numpy int cast)."""
     import numpy as np
 
     rng = np.random.default_rng(3)
@@ -1308,6 +1372,17 @@ def test_knn_joins_preserve_string_id_types(spark) -> None:
     assert {(r.query_id, r.rank): r.neighbor_id for r in out_c.collect()} == {
         (r.query_id, r.rank): r.neighbor_id for r in rows
     }
+
+    # each near-copy query pairs with its source doc and nothing else
+    both = corpus.unionByName(queries)
+    copies = {(f"doc-{i:03d}", f"q-{i}") for i in range(4)}
+    for pairs in (
+        S.cosine_pairs_matmul(both.withColumn("b", F.lit(0)), "b", 0.99),
+        S.lsh_cosine_pairs(both, 0.99, num_planes=4),
+    ):
+        assert dict(pairs.dtypes)["id_a"] == "string"
+        assert dict(pairs.dtypes)["id_b"] == "string"
+        assert {(r.id_a, r.id_b) for r in pairs.collect()} == copies
 
 
 def test_sentence_udtf_lateral(spark) -> None:

@@ -522,6 +522,28 @@ def test_lake_listing_is_single() -> None:
     assert hits == {"io.py"}
 
 
+def test_vector_topk_is_single() -> None:
+    """The vector top-k contract is written once, in
+    operators/similarity.py: one id-tie-broken local selection, one
+    zero-guarded row normaliser, one merge window and one reader of id
+    types from the input schema; no bare ``argpartition`` selection is
+    left to drop a tied candidate."""
+    text = (
+        ROOT
+        / "etl_marketdata_downloader_archived_spark"
+        / "operators"
+        / "similarity.py"
+    ).read_text(encoding="utf-8")
+    for needle in (
+        "np.lexsort(",
+        "== 0.0] = 1.0",
+        "F.row_number()",
+        ".simpleString()",
+    ):
+        assert text.count(needle) == 1, needle
+    assert "argpartition(" not in text
+
+
 def test_jaccard_threshold_is_single() -> None:
     """The exact-Jaccard threshold is quantized once, in
     operators/fuzzy.py: the range check's message appears once in the
