@@ -29,6 +29,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .ranking import word_tokens
+from .text import ngrams
+
 __all__ = [
     "hashed_ngram_buckets",
     "dsir_log_weights",
@@ -36,27 +39,10 @@ __all__ = [
 ]
 
 
-def _words(text: Column | str) -> Column:
-    """The engine's standard [^a-z]+ lowercase word rule (same stream
-    the quality model and the DuckDB `_WORDS` oracles tokenize)."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.filter(
-        F.split(F.lower(c), "[^a-z]+"), lambda t: t != F.lit("")
-    )
-
-
 def _grams(words: Column) -> Column:
     """Unigrams ++ bigrams WITH multiplicity - bag features, not the
-    dedup family's distinct shingles (DSIR models token frequency).
-    Bigrams via the slice/zip_with chain (the word_shingles measured
-    formulation; index-based transform was ~11x slower)."""
-    m = F.greatest(F.size(words) - 1, F.lit(0))
-    bi = F.zip_with(
-        F.slice(words, 1, m),
-        F.slice(words, 2, m),
-        lambda a, b: F.concat_ws(" ", a, b),
-    )
-    return F.concat(words, bi)
+    dedup family's distinct shingles (DSIR models token frequency)."""
+    return F.concat(words, ngrams(words, 2))
 
 
 def _bucket(gram: Column, m: int, seed: int, algo: str) -> Column:
@@ -85,7 +71,7 @@ def hashed_ngram_buckets(
     if m < 1:
         raise ValueError(f"m must be >= 1, got {m}")
     return (
-        df.select(F.col(id_col), F.explode(_grams(_words(text_col))).alias("_g"))
+        df.select(F.col(id_col), F.explode(_grams(word_tokens(text_col))).alias("_g"))
         .select(id_col, _bucket(F.col("_g"), m, seed, algo).alias("bucket"))
         .groupBy(id_col, "bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))

@@ -654,6 +654,69 @@ def jaccard_prefix_join_rs(
     )
 
 
+# The two posting stores (the exact store's prefix postings here, the
+# near-dup band postings in operators.dedup) share one layout and one
+# screen: ``_bk = pmod(hash, B)`` partitions a store, a screen reads
+# only the buckets its own batch hashes into, candidate ids are
+# snapshotted once for a corpus loader, and the ``_meta`` sidecar is
+# checked against the threshold denominator.
+
+
+def _bucket_of(hash_col: str, buckets: int) -> Column:
+    """The store partition key ``_bk`` of a posting hash."""
+    return F.pmod(F.col(hash_col), F.lit(buckets))
+
+
+def _prune_store(
+    batch_post: DataFrame, store: DataFrame, hash_col: str, buckets: int,
+    builder: str,
+) -> tuple[DataFrame, DataFrame]:
+    """(batch postings, store read) for a ``_bk``-bucketed store: the
+    batch side is micro-batch sized, so one bounded collect of its
+    distinct bucket keys (<= ``buckets`` ints) becomes a PARTITION
+    filter on the store scan. Candidates only meet on equal hashes,
+    and equal hashes share a bucket, so pruning drops no candidate.
+    The batch postings come back checkpointed so the bucket probe and
+    the candidate join share one computation of them."""
+    if "_bk" not in store.columns:
+        raise ValueError(
+            "store_buckets given but the posting store has no _bk "
+            f"column - build it with {builder}(bucket_by=B) and write "
+            "partitionBy('_bk')"
+        )
+    batch_post = batch_post.localCheckpoint()
+    hit = [
+        r["_b"]
+        for r in batch_post.select(_bucket_of(hash_col, buckets).alias("_b"))
+        .distinct()
+        .collect()
+    ]
+    return batch_post, store.filter(F.col("_bk").isin(hit)).drop("_bk")
+
+
+def _load_candidates(
+    cands: DataFrame, corpus_loader, cand_col: str, id_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """(cands, corpus rows) with the batch-bounded candidate set
+    snapshotted once: the loader's bucket-key collect and the verify
+    join must share one computation of the candidate join."""
+    cands = cands.localCheckpoint()
+    return cands, corpus_loader(
+        cands.select(F.col(cand_col).alias(id_col)).distinct()
+    )
+
+
+def _read_checked_meta(spark, postings_dir: str) -> dict | None:
+    """A posting store's ``_meta`` sidecar, or None when absent; raises
+    when its threshold denominator is not ``_Q``."""
+    meta = _read_meta(spark, postings_dir)
+    if meta is not None and meta.get("_q") != _Q:
+        raise ValueError(
+            f"posting-store _meta at {postings_dir} is corrupt: {meta}"
+        )
+    return meta
+
+
 def jaccard_prefix_postings(
     df: DataFrame,
     id_col: str,
@@ -688,7 +751,7 @@ def jaccard_prefix_postings(
     if bucket_by is not None:
         if bucket_by < 1:
             raise ValueError(f"bucket_by must be >= 1, got {bucket_by}")
-        out = out.withColumn("_bk", F.pmod(F.col("_hk"), F.lit(bucket_by)))
+        out = out.withColumn("_bk", _bucket_of("_hk", bucket_by))
     return out
 
 
@@ -781,29 +844,11 @@ def jaccard_screen_vs_postings(
             )
     bp = jaccard_prefix_postings(batch, id_col, tokens_col, threshold)
     if store_buckets is not None:
-        if "_bk" not in store_postings.columns:
-            raise ValueError(
-                "store_buckets given but the store has no _bk column "
-                "- build it with jaccard_prefix_postings(bucket_by=B) "
-                "and write partitionBy('_bk')"
-            )
-        # the batch side is micro-batch sized: one bounded collect of
-        # its distinct bucket keys (<= B ints) buys a partition
-        # filter on the store scan. _bk is re-derived from _hk under
-        # the store's OWN bucket count, so the batch postings carry
-        # no bucket column; localCheckpoint so the bucket probe and
-        # the candidate join share one computation of the batch
-        # postings instead of re-running the prefix window twice.
-        bp = bp.localCheckpoint()
-        buckets = [
-            r["_b"]
-            for r in bp.select(
-                F.pmod(F.col("_hk"), F.lit(store_buckets)).alias("_b")
-            ).distinct().collect()
-        ]
-        store_postings = store_postings.filter(
-            F.col("_bk").isin(buckets)
-        ).drop("_bk")
+        # _bk is re-derived from _hk under the store's OWN bucket
+        # count, so the batch postings carry no bucket column
+        bp, store_postings = _prune_store(
+            bp, store_postings, "_hk", store_buckets, "jaccard_prefix_postings"
+        )
     cand = (
         store_postings.alias("a")
         .join(bp.alias("b"), "_hk")
@@ -815,13 +860,7 @@ def jaccard_screen_vs_postings(
         .distinct()
     )
     if corpus_loader is not None:
-        # candidate ids are batch-bounded: snapshot them once so the
-        # loader's bucket-key collect and the verify join below share
-        # one computation of the candidate join
-        cand = cand.localCheckpoint()
-        corpus = corpus_loader(
-            cand.select(F.col("left_id").alias(id_col)).distinct()
-        )
+        cand, corpus = _load_candidates(cand, corpus_loader, "left_id", id_col)
     corpus_tok = _tokenize_sets(
         corpus, id_col, tokens_col, "jaccard_screen_vs_postings"
     )
@@ -859,13 +898,9 @@ def read_postings_meta(spark, postings_dir: str) -> dict | None:
     """Read the ``_meta`` sidecar: ``{"p_num": int, "buckets":
     int | None}``, or None for a legacy store (the caller then falls
     back to the distinct-_p scan and may write the sidecar forward)."""
-    meta = _read_meta(spark, postings_dir)
+    meta = _read_checked_meta(spark, postings_dir)
     if meta is None:
         return None
-    if meta.get("_q") != _Q:
-        raise ValueError(
-            f"posting-store _meta at {postings_dir} is corrupt: {meta}"
-        )
     return {"p_num": meta["_p"], "buckets": meta["_buckets"]}
 
 

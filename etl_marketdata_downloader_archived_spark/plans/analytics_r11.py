@@ -16,6 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from ..operators.ranking import word_tokens
+from ..operators.text import ngrams
 from .registry import q
 
 _CENTS = "CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)"
@@ -281,25 +283,9 @@ def jaccard_prefix_join_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = (
         load_table(spark, sf_dir, "documents")
-        .select(
-            "doc_id",
-            F.filter(
-                F.split(F.lower("text"), "[^a-z]+"), lambda x: x != ""
-            ).alias("ws"),
-        )
+        .select("doc_id", word_tokens("text").alias("ws"))
         .filter(F.size("ws") >= 3)
-        # slice+zip, NOT per-index lambda access: projection collapse
-        # inlines the ws expression into every ws[i], re-running the
-        # split per shingle element (measured 3.5x slower); the three
-        # slices evaluate ws O(1) times per row
-        .select(
-            "doc_id",
-            F.expr(
-                "transform(arrays_zip(slice(ws, 1, size(ws)-2),"
-                " slice(ws, 2, size(ws)-2), slice(ws, 3, size(ws)-2)),"
-                " s -> concat_ws(' ', s['0'], s['1'], s['2']))"
-            ).alias("toks"),
-        )
+        .select("doc_id", ngrams(F.col("ws"), 3).alias("toks"))
     )
     out = jaccard_prefix_join(d, "doc_id", "toks", threshold=0.7)
     return out.select(

@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from ..operators.ranking import word_tokens
+from ..operators.text import ngrams
 from .registry import q
 
 
@@ -489,21 +491,9 @@ def jaccard_join_rs_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = (
         load_table(spark, sf_dir, "documents")
-        .select(
-            "doc_id",
-            F.filter(
-                F.split(F.lower("text"), "[^a-z]+"), lambda x: x != ""
-            ).alias("ws"),
-        )
+        .select("doc_id", word_tokens("text").alias("ws"))
         .filter(F.size("ws") >= 3)
-        .select(
-            "doc_id",
-            F.expr(
-                "transform(arrays_zip(slice(ws, 1, size(ws)-2),"
-                " slice(ws, 2, size(ws)-2), slice(ws, 3, size(ws)-2)),"
-                " s -> concat_ws(' ', s['0'], s['1'], s['2']))"
-            ).alias("toks"),
-        )
+        .select("doc_id", ngrams(F.col("ws"), 3).alias("toks"))
     )
     left = d.filter(F.col("doc_id") % 2 == 0)
     right = d.filter(F.col("doc_id") % 2 == 1)

@@ -16,6 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from ..operators.ranking import word_tokens
+from ..operators.text import ngrams
 from .registry import q
 
 _WORDS = "list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')"
@@ -86,28 +88,9 @@ def dup_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical in DuckDB (r15 rewrite parity-verified at both driver
     scales)."""
     d = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        "source",
-        F.filter(
-            F.split(F.lower("text"), "[^a-z]+"), lambda x: x != ""
-        ).alias("ws"),
+        "doc_id", "source", word_tokens("text").alias("ws")
     ).filter(F.size("ws") >= 5)
-    # slice+zip (not per-index lambda): projection collapse would
-    # re-evaluate ws per element - same measured trap as the r11
-    # trigram builder
-    sh = d.select(
-        "source",
-        F.array_distinct(
-            F.expr(
-                "transform(arrays_zip("
-                " slice(ws, 1, size(ws)-4), slice(ws, 2, size(ws)-4),"
-                " slice(ws, 3, size(ws)-4), slice(ws, 4, size(ws)-4),"
-                " slice(ws, 5, size(ws)-4)),"
-                " s -> concat_ws(' ', s['0'], s['1'], s['2'], s['3'],"
-                " s['4']))"
-            )
-        ).alias("t"),
-    )
+    sh = d.select("source", F.array_distinct(ngrams(F.col("ws"), 5)).alias("t"))
     tot = sh.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.size("t").cast("bigint")).alias("total_grams"),
@@ -178,11 +161,7 @@ def gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode), one hash aggregate on the language key; linear,
     scan-bound, partial-aggregated."""
     d = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        "lang",
-        F.filter(
-            F.split(F.lower("text"), "[^a-z]+"), lambda x: x != ""
-        ).alias("ws"),
+        "doc_id", "lang", word_tokens("text").alias("ws")
     ).filter(F.size("ws") > 0)
     m = d.select(
         "lang",
@@ -645,12 +624,7 @@ def map_lambda_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the map pipeline end-to-end by its observable rows."""
     d = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") < 100
-    ).select(
-        "doc_id",
-        F.filter(
-            F.split(F.lower("text"), "[^a-z]+"), lambda x: x != ""
-        ).alias("ws"),
-    )
+    ).select("doc_id", word_tokens("text").alias("ws"))
     counts = d.select(
         "doc_id",
         F.aggregate(

@@ -14,6 +14,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from ..operators.ranking import word_tokens
+from ..operators.text import ngrams
+from .llm_ops import _cos_sql
 from .registry import q
 
 _HEX8 = """(  (strpos('0123456789abcdef', substr(hx, 1, 1)) - 1) * 268435456
@@ -196,21 +199,9 @@ def dedup_keep_best_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
         "score", F.length("text")
     )
     toks = (
-        d.select(
-            "doc_id",
-            F.filter(
-                F.split(F.lower("text"), "[^a-z]+"), lambda x: x != ""
-            ).alias("ws"),
-        )
+        d.select("doc_id", word_tokens("text").alias("ws"))
         .filter(F.size("ws") >= 3)
-        .select(
-            "doc_id",
-            F.expr(
-                "transform(arrays_zip(slice(ws, 1, size(ws)-2),"
-                " slice(ws, 2, size(ws)-2), slice(ws, 3, size(ws)-2)),"
-                " s -> concat_ws(' ', s['0'], s['1'], s['2']))"
-            ).alias("toks"),
-        )
+        .select("doc_id", ngrams(F.col("ws"), 3).alias("toks"))
     )
     # output-bounded snapshot: the pair set feeds THREE consumers
     # (connected_components' collect, both participant projections) -
@@ -296,11 +287,7 @@ def temperature_mix_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
-        F.size(
-            F.filter(
-                F.split(F.lower("text"), "[^a-z]+"), lambda t: t != ""
-            )
-        ).cast("bigint").alias("nt"),
+        F.size(word_tokens("text")).cast("bigint").alias("nt"),
     )
     counts = {
         r["source"]: r["n"]
@@ -346,17 +333,6 @@ def temperature_mix_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DOT15 = """list_sum([CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)
-                    for i in generate_series(1, len({a}))])"""
-
-
-def _cos15(a: str, b: str) -> str:
-    return (
-        f"({_DOT15.format(a=a, b=b)} / "
-        f"(sqrt({_DOT15.format(a=a, b=a)}) * sqrt({_DOT15.format(a=b, b=b)})))"
-    )
-
-
 @q(
     "hard_negatives_cert",
     oracle=f"""
@@ -366,7 +342,7 @@ def _cos15(a: str, b: str) -> str:
     ),
     scored AS (
         SELECT qs.query_id, e.vec_id AS neg_id,
-               {_cos15('e.embedding', 'qs.qv')} AS cos
+               {_cos_sql('e.embedding', 'qs.qv')} AS cos
         FROM qs JOIN embeddings e
           ON e.vec_id <> qs.query_id
          AND e.vec_id <> qs.query_id + 1

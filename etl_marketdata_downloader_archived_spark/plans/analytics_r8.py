@@ -18,6 +18,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from ..operators.ranking import word_tokens
 from .registry import q
 
 
@@ -848,10 +849,7 @@ def tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (AQE broadcasts), ties break on the term for a deterministic
     row set."""
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id",
-        F.explode(F.split(F.lower(F.col("text")), "[^a-z]+")).alias("term"),
-    ).filter(F.col("term") != "")
+    toks = d.select("doc_id", F.explode(word_tokens("text")).alias("term"))
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = tf.select(F.countDistinct("doc_id").alias("n_docs"))

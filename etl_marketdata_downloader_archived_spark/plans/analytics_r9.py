@@ -17,6 +17,8 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from ..operators.ranking import word_tokens
+from ..operators.text import ngrams
 from .registry import q
 
 
@@ -1578,11 +1580,8 @@ def boilerplate_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenization is the engine-wide [^a-z]+ split the inverted_index
     oracle certifies.
 
-    Shape (r15): bigrams build IN-ROW with the slice/zip_with chain
-    (the word_shingles measured formulation - the previous per-index
-    ``transform(sequence(...), i -> ws[i]...)`` re-evaluates the
-    token array per element under projection collapse, the documented
-    11x trap) and per-doc presence dedups IN-ROW with array_distinct,
+    Shape (r15): bigrams build IN-ROW (``text.ngrams``) and per-doc
+    presence dedups IN-ROW with array_distinct,
     which makes the exploded (doc, shingle) rows unique BY
     CONSTRUCTION - so the old corpus-wide ``.distinct()`` shuffle is
     gone outright and the explode feeds the (source, shingle) count
@@ -1591,20 +1590,8 @@ def boilerplate_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     Broadcast per-source doc totals as before; everything after the
     aggregate is vocabulary-sized."""
     d = load_table(spark, sf_dir, "documents")
-    ws = F.filter(
-        F.split(F.lower(F.col("text")), "[^a-z]+"), lambda w: w != ""
-    )
-    # slice length 0 (docs with < 2 tokens) -> empty array -> no rows;
-    # no explicit filter needed (and no descending-sequence trap)
-    m = F.greatest(F.size("ws") - 1, F.lit(0))
-    bigrams = F.array_distinct(
-        F.zip_with(
-            F.slice("ws", 1, m),
-            F.slice("ws", 2, m),
-            lambda a, b: F.concat_ws(" ", a, b),
-        )
-    )
-    grams = d.select("source", ws.alias("ws")).select(
+    bigrams = F.array_distinct(ngrams(F.col("ws"), 2))
+    grams = d.select("source", word_tokens("text").alias("ws")).select(
         "source", F.explode(bigrams).alias("shingle")
     )
     pg = grams.groupBy("source", "shingle").agg(

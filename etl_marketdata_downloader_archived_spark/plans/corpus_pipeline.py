@@ -192,9 +192,7 @@ def prepare_training_corpus(
 
     if target_mix is not None or mix_temperature is not None:
         if mix_by == "tokens":
-            weight = F.size(
-                F.filter(F.split(text_col, r"\s+"), lambda t: t != F.lit(""))
-            )
+            weight = F.size(X.ws_words(text_col))
         else:
             weight = F.lit(1)
         counts = {

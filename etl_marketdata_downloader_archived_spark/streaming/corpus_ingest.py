@@ -77,6 +77,7 @@ from ..operators.dedup import (
 )
 from ..operators.dsir import hashed_ngram_buckets
 from ..operators.fuzzy import (
+    _bucket_of,
     _quantize,
     compact_postings,
     jaccard_prefix_join,
@@ -585,7 +586,7 @@ def start_corpus_ingest_neardup(
         postings = surv_post.join(drops, id_col, "left_anti")
         if lay.buckets is not None:
             postings = postings.withColumn(
-                "_bk", F.pmod(F.col("band_hash"), F.lit(lay.buckets))
+                "_bk", _bucket_of("band_hash", lay.buckets)
             )
         _commit(spark, ing, lay, admitted, postings)
 

@@ -18,6 +18,14 @@ sys.path.insert(0, str(ROOT))
 SF_DIR = "/root/testdata/sf0.001"
 
 
+def pytest_configure(config) -> None:
+    config.addinivalue_line(
+        "markers",
+        "parity: Spark-vs-DuckDB oracle comparison of registered queries "
+        "(tools/parity.py); runs by default",
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     from etl_marketdata_downloader_archived_spark.session import get_spark

@@ -791,6 +791,34 @@ def test_incremental_minhash_dedup_admission(spark) -> None:
     assert admitted3.count() == 0
 
 
+def test_band_postings_skip_unshingleable_docs(spark) -> None:
+    """Documents too short to make one shingle are never posted: all
+    empty shingle sets would share one band hash per band, so every
+    short document in the store would meet every new short document
+    on that hot key. A 2-word newcomer screened against a store built
+    from them draws no candidate and is admitted."""
+    short = spark.createDataFrame(
+        [(1, "a b"), (2, "x"), (3, "")], "doc_id long, text string"
+    )
+    kw = dict(num_hashes=8, bands=4, shingle_n=3)
+    store = D.band_postings(short, "doc_id", "text", **kw)
+    assert store.collect() == []
+
+    loaded = []
+
+    def loader(ids):
+        loaded.extend(r.doc_id for r in ids.collect())
+        return short
+
+    batch = spark.createDataFrame([(10, "c d")], "doc_id long, text string")
+    admitted, new_post = D.incremental_minhash_dedup(
+        batch, store, None, "doc_id", "text", corpus_loader=loader, **kw
+    )
+    assert [r.doc_id for r in admitted.collect()] == [10]
+    assert new_post.collect() == []
+    assert loaded == []  # the screen had no candidates
+
+
 def test_corpus_operators_on_empty_input(spark) -> None:
     """Every corpus operator degrades to an empty (not crashing)
     result on an empty frame - the shape a filtered-out partition or

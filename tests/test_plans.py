@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_marketdata_downloader_archived_spark.io import load_table
@@ -542,6 +543,76 @@ def test_vector_topk_is_single() -> None:
     ):
         assert text.count(needle) == 1, needle
     assert "argpartition(" not in text
+
+
+def test_text_tokenizers_are_single() -> None:
+    """Text-to-shingles is written once: the ``[^a-z]+`` word rule
+    only in ranking.word_tokens (plus quality_model's pyspark.ml
+    RegexTokenizer pattern), and every " "-join of tokens - the n-gram
+    builder and the chunker - only in operators/text.py."""
+    pkg = ROOT / "etl_marketdata_downloader_archived_spark"
+    rule, joins = {}, {}
+    for p in pkg.rglob("*.py"):
+        text = p.read_text(encoding="utf-8")
+        rel = p.relative_to(pkg).as_posix()
+        if '"[^a-z]+"' in text:
+            rule[rel] = text.count('"[^a-z]+"')
+        n = text.count('concat_ws(" "') + text.count("concat_ws(' '")
+        if n:
+            joins[rel] = n
+    assert rule == {"operators/ranking.py": 1, "operators/quality_model.py": 1}
+    assert set(joins) == {"operators/text.py"}
+
+
+PARITY_QUERIES = [
+    "boilerplate_shingles",
+    "jaccard_prefix_join",
+    "jaccard_join_rs",
+    "dup_ngram_spans",
+    "gopher_rules",
+    "map_lambda_funcs",
+    "dedup_keep_best_cert",
+    "temperature_mix_cert",
+    "hard_negatives_cert",
+    "strip_dup_spans",
+    "greedy_admission_cert",
+    "graph_components",
+    "bfs_hops",
+    "dedup_keep_set",
+    "dsir_bucket_stats",
+    "dsir_weights_cert",
+    "text_analysis",
+    "tfidf_topk",
+    "dedup_near_panel",
+]
+
+
+@pytest.fixture(scope="module")
+def oracle_con(sf_dir):
+    from tools.parity import oracle_db
+
+    con = oracle_db(sf_dir)
+    yield con
+    con.close()
+
+
+@pytest.mark.parity
+@pytest.mark.parametrize("name", PARITY_QUERIES)
+def test_text_query_parity(spark, sf_dir, oracle_con, name) -> None:
+    """The text, dedup and DSIR queries built on the shared
+    text-to-shingles helpers match their DuckDB oracles row for row
+    (tools/parity.py's comparison); dedup_near_panel has no oracle and
+    must still run."""
+    from etl_marketdata_downloader_archived_spark.plans.registry import (
+        all_oracles,
+        all_queries,
+    )
+    from tools.parity import check_query
+
+    status, line = check_query(
+        spark, oracle_con, sf_dir, name, all_queries()[name], all_oracles().get(name)
+    )
+    assert status == ("rows" if name == "dedup_near_panel" else "pass"), line
 
 
 def test_jaccard_threshold_is_single() -> None:

@@ -145,6 +145,21 @@ def main() -> int:
         print("(vanilla driver-style session)")
     else:
         spark = get_spark("parity")
+    con = oracle_db(sf_dir)
+    counts = Counter()
+    for name, fn in sorted(queries.items()):
+        if only and name not in only:
+            continue
+        status, line = check_query(spark, con, sf_dir, name, fn, oracles.get(name))
+        print(line)
+        counts[status] += 1
+
+    print(f"\n{counts['pass']} pass, {counts['fail']} fail, {counts['rows']} rows-only")
+    return 1 if counts["fail"] else 0
+
+
+def oracle_db(sf_dir: str):
+    """A DuckDB connection with one view per fixture table of ``sf_dir``."""
     con = duckdb.connect()
     for t in TABLES:
         # The engine's timestamp domain is MICROSECONDS (load_table
@@ -165,98 +180,84 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT {sel} "
             f"FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
+    return con
 
-    n_pass = n_fail = n_rows_only = 0
-    for name, fn in sorted(queries.items()):
-        if only and name not in only:
-            continue
+
+def check_query(spark, con, sf_dir: str, name: str, fn, oracle: str | None):
+    """Run one registered query on Spark and its oracle (if any) on
+    ``con``. Returns (status, line): status is "pass", "fail" or
+    "rows" (no oracle: rows-only), line the report line."""
+    try:
+        sdf = fn(spark, sf_dir)
+        s_cols = list(sdf.columns)
+        s_rows = [tuple(r) for r in sdf.collect()]
+    except Exception as exc:  # noqa: BLE001
+        return "fail", f"FAIL  {name}: spark error: {exc}"
+    finally:
+        # operators that persist() multi-consumer stages would
+        # otherwise pin blocks for the rest of the 146-query
+        # battery (bench.py's cold-cache rule, applied here too)
+        spark.catalog.clearCache()
+    if oracle is None:
+        return "rows", f"rows  {name}: rows-only ({len(s_rows)} rows)"
+    try:
+        arrow_schema = con.execute(oracle).fetch_arrow_table().schema
+        res = con.execute(oracle)
+        d_cols = [d[0] for d in res.description]
+        d_rows = res.fetchall()
+    except Exception as exc:  # noqa: BLE001
+        return "fail", f"FAIL  {name}: duckdb error: {exc}"
+
+    problems = []
+    drifts = type_drift(sdf.schema, arrow_schema)
+    if drifts:
+        problems.append("type-drift " + "; ".join(drifts))
+    if len(s_rows) != len(d_rows):
+        problems.append(f"rowcount spark={len(s_rows)} duckdb={len(d_rows)}")
+    if sorted(s_cols) != sorted(d_cols):
+        problems.append(f"schema spark={sorted(s_cols)} duckdb={sorted(d_cols)}")
+    if not problems:
+        ms, md = row_multiset(s_cols, s_rows), row_multiset(d_cols, d_rows)
+        if ms != md:
+            diff_s = list((ms - md).items())[:3]
+            diff_d = list((md - ms).items())[:3]
+            problems.append(f"values spark-only={diff_s} duckdb-only={diff_d}")
+    if problems and all(p.startswith("values ") for p in problems):
+        # Retry ONLY value-multiset mismatches: type-drift /
+        # rowcount / schema problems are thread-invariant, and a
+        # blanket retry would silently re-declare PASS without
+        # re-checking them (the Arrow physical-type parity gate
+        # must not be bypassable by the retry path).
+        #
+        # DuckDB 1.0's PARALLEL window aggregation is
+        # nondeterministic on large partitions: the same
+        # ROWS-frame running sum over a fully unique ORDER BY
+        # returned three distinct prefixes across identical runs
+        # at sf0.1 (win_frames, suppkey 707: 7728/7731/7744), only
+        # one matching the explicitly-sorted ground truth both
+        # engines agree on. Before declaring a mismatch, re-run
+        # the ORACLE single-threaded (deterministic and correct)
+        # and compare against that - the Spark side is already
+        # deterministic by the exactness recipe.
         try:
-            sdf = fn(spark, sf_dir)
-            s_cols = list(sdf.columns)
-            s_rows = [tuple(r) for r in sdf.collect()]
-        except Exception as exc:  # noqa: BLE001
-            print(f"FAIL  {name}: spark error: {exc}")
-            n_fail += 1
-            continue
-        finally:
-            # operators that persist() multi-consumer stages would
-            # otherwise pin blocks for the rest of the 146-query
-            # battery (bench.py's cold-cache rule, applied here too)
-            spark.catalog.clearCache()
-        if name not in oracles:
-            print(f"rows  {name}: rows-only ({len(s_rows)} rows)")
-            n_rows_only += 1
-            continue
-        try:
-            arrow_schema = con.execute(oracles[name]).fetch_arrow_table().schema
-            res = con.execute(oracles[name])
+            con.execute("SET threads=1")
+            res = con.execute(oracle)
             d_cols = [d[0] for d in res.description]
             d_rows = res.fetchall()
-        except Exception as exc:  # noqa: BLE001
-            print(f"FAIL  {name}: duckdb error: {exc}")
-            n_fail += 1
-            continue
-
-        problems = []
-        drifts = type_drift(sdf.schema, arrow_schema)
-        if drifts:
-            problems.append("type-drift " + "; ".join(drifts))
-        if len(s_rows) != len(d_rows):
-            problems.append(f"rowcount spark={len(s_rows)} duckdb={len(d_rows)}")
-        if sorted(s_cols) != sorted(d_cols):
-            problems.append(f"schema spark={sorted(s_cols)} duckdb={sorted(d_cols)}")
-        if not problems:
-            ms, md = row_multiset(s_cols, s_rows), row_multiset(d_cols, d_rows)
-            if ms != md:
-                diff_s = list((ms - md).items())[:3]
-                diff_d = list((md - ms).items())[:3]
-                problems.append(f"values spark-only={diff_s} duckdb-only={diff_d}")
-        if problems and all(p.startswith("values ") for p in problems):
-            # Retry ONLY value-multiset mismatches: type-drift /
-            # rowcount / schema problems are thread-invariant, and a
-            # blanket retry would silently re-declare PASS without
-            # re-checking them (the Arrow physical-type parity gate
-            # must not be bypassable by the retry path).
-            #
-            # DuckDB 1.0's PARALLEL window aggregation is
-            # nondeterministic on large partitions: the same
-            # ROWS-frame running sum over a fully unique ORDER BY
-            # returned three distinct prefixes across identical runs
-            # at sf0.1 (win_frames, suppkey 707: 7728/7731/7744), only
-            # one matching the explicitly-sorted ground truth both
-            # engines agree on. Before declaring a mismatch, re-run
-            # the ORACLE single-threaded (deterministic and correct)
-            # and compare against that - the Spark side is already
-            # deterministic by the exactness recipe.
-            try:
-                con.execute("SET threads=1")
-                res = con.execute(oracles[name])
-                d_cols = [d[0] for d in res.description]
-                d_rows = res.fetchall()
-            finally:
-                con.execute("RESET threads")
-            if (
-                len(s_rows) == len(d_rows)
-                and sorted(s_cols) == sorted(d_cols)
-                and row_multiset(s_cols, s_rows) == row_multiset(d_cols, d_rows)
-            ):
-                print(
-                    f"PASS  {name} ({len(s_rows)} rows; oracle retried "
-                    "single-threaded - parallel-DuckDB nondeterminism)"
-                )
-                n_pass += 1
-                continue
-            print(f"FAIL  {name}: " + "; ".join(problems))
-            n_fail += 1
-        elif problems:
-            print(f"FAIL  {name}: " + "; ".join(problems))
-            n_fail += 1
-        else:
-            print(f"PASS  {name} ({len(s_rows)} rows)")
-            n_pass += 1
-
-    print(f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only")
-    return 1 if n_fail else 0
+        finally:
+            con.execute("RESET threads")
+        if (
+            len(s_rows) == len(d_rows)
+            and sorted(s_cols) == sorted(d_cols)
+            and row_multiset(s_cols, s_rows) == row_multiset(d_cols, d_rows)
+        ):
+            return "pass", (
+                f"PASS  {name} ({len(s_rows)} rows; oracle retried "
+                "single-threaded - parallel-DuckDB nondeterminism)"
+            )
+    if problems:
+        return "fail", f"FAIL  {name}: " + "; ".join(problems)
+    return "pass", f"PASS  {name} ({len(s_rows)} rows)"
 
 
 if __name__ == "__main__":
