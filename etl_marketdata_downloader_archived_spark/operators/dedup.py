@@ -139,7 +139,12 @@ def line_dedup(
 def word_shingles(text: Column | str, n: int = 3) -> Column:
     """Distinct word n-gram shingles of a text column (pure Catalyst,
     no UDF): ``text.ngrams`` over the whitespace split, deduplicated."""
-    return F.array_distinct(ngrams(tokens(text), n))
+    return _shingle_set(tokens(text), n)
+
+
+def _shingle_set(toks: Column, n: int) -> Column:
+    """``word_shingles`` over an already-split token array column."""
+    return F.array_distinct(ngrams(toks, n))
 
 
 def _hash_each(strings: Column) -> Column:
@@ -150,12 +155,20 @@ def _hash_each(strings: Column) -> Column:
 def _hashed_shingles(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     """(id_col, shingles array<long>) for every document with at least
     one shingle, i.e. at least n whitespace tokens (module docstring).
-    The filter reads the token count, not the shingle array: a filter
-    on a projected column is pushed below the projection with the
-    column's expression inlined, which would build every shingle set
-    twice."""
-    return df.filter(F.size(tokens(text_col)) >= n).select(
-        F.col(id_col), _hash_each(word_shingles(text_col, n)).alias("shingles")
+    The token array is projected once and the shingles are built over
+    that column, so the split runs once per row. A shorter document is
+    dropped by exploding a one-element array that is NULL for it, not
+    by a filter: a filter is pushed below the token projection with
+    ``tokens(text)`` inlined, which would split every text twice."""
+    toks = df.select(F.col(id_col), tokens(text_col).alias("_t"))
+    return toks.select(
+        F.col(id_col),
+        F.explode(
+            F.when(
+                F.size("_t") >= n,
+                F.array(_hash_each(_shingle_set(F.col("_t"), n))),
+            )
+        ).alias("shingles"),
     )
 
 
@@ -549,10 +562,15 @@ def ngram_jaccard_pairs(
     # in-function release point; callers that invoke the operator
     # repeatedly in one session release via spark.catalog.clearCache()
     # (the harnesses do) or by materializing + unpersisting.
-    s = _spread(df).select(
-        F.col(id_col), F.col(bucket_col).alias("_bucket"),
-        word_shingles(text_col, n).alias("_sh"),
-    ).persist(StorageLevel.DISK_ONLY)
+    s = (
+        _spread(df)
+        .select(
+            F.col(id_col), F.col(bucket_col).alias("_bucket"),
+            tokens(text_col).alias("_t"),
+        )
+        .select(id_col, "_bucket", _shingle_set(F.col("_t"), n).alias("_sh"))
+        .persist(StorageLevel.DISK_ONLY)
+    )
     postings = s.select(
         "_bucket", F.col(id_col), F.explode("_sh").alias("_g")
     )

@@ -71,7 +71,8 @@ def hashed_ngram_buckets(
     if m < 1:
         raise ValueError(f"m must be >= 1, got {m}")
     return (
-        df.select(F.col(id_col), F.explode(_grams(word_tokens(text_col))).alias("_g"))
+        df.select(F.col(id_col), word_tokens(text_col).alias("_w"))
+        .select(F.col(id_col), F.explode(_grams(F.col("_w"))).alias("_g"))
         .select(id_col, _bucket(F.col("_g"), m, seed, algo).alias("bucket"))
         .groupBy(id_col, "bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))

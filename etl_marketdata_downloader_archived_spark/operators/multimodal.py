@@ -31,6 +31,20 @@ tested. Codecs come in two tiers:
   SQL-recomputable so the full binary pipeline stays
   oracle-checkable.
 
+Container framing is written once per format, and every decoder of
+that format walks it through the one helper:
+
+- JPEG (ITU-T T.81 B.1.1, ``_jpeg_segment``): a marker is 0xFF plus a
+  code byte, and any number of 0xFF fill bytes may precede it. SOI,
+  TEM and RST0-7 stand alone and EOI ends the stream; every other
+  marker opens a segment whose 2-byte big-endian length counts
+  itself and must fit in the buffer. A byte other than 0xFF where a
+  marker is due is a desync error.
+- ISO-BMFF (ISO/IEC 14496-12 4.2, ``_mp4_boxes``): a box opens with a
+  32-bit big-endian size and a fourcc type. Size 1 means a 64-bit
+  largesize follows the type, size 0 runs to the end of the
+  container, and no box may overrun its container.
+
 Extends the reference's raw-bytes landing (reference:
 data-downloader/data_downloader.py:69-70 stores fetched bytes with no
 metadata at all).
@@ -125,6 +139,33 @@ _JPEG_SOF = {
 }
 
 
+def _jpeg_segment(b: bytes, pos: int) -> tuple[int, bytes, int]:
+    """One step of the JPEG marker walk from ``pos`` (framing rules in
+    the module docstring): (marker, segment payload, offset after the
+    segment). Stand-alone markers are stepped over; EOI comes back
+    with an empty payload. Raises ValueError on desync or
+    truncation."""
+    while True:
+        if b[pos : pos + 1] != b"\xff":
+            raise ValueError("JPEG marker desync")
+        while pos < len(b) and b[pos] == 0xFF:
+            pos += 1
+        if pos >= len(b):
+            raise ValueError("truncated JPEG: trailing fill bytes")
+        marker = b[pos]
+        pos += 1
+        if marker == 0xD9:
+            return marker, b"", pos
+        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
+            continue  # SOI, TEM, RSTn
+        if pos + 2 > len(b):
+            raise ValueError("truncated JPEG segment length")
+        end = pos + int.from_bytes(b[pos : pos + 2], "big")
+        if end < pos + 2 or end > len(b):
+            raise ValueError("truncated JPEG segment")
+        return marker, b[pos + 2 : end], end
+
+
 def _decode_jpeg_header(b: bytes) -> dict | None:
     """HEADER-ONLY JPEG decode: a pure-stdlib segment walk to the SOF
     marker (ITU-T T.81 B.2.2) for dimensions, channel count and
@@ -144,33 +185,14 @@ def _decode_jpeg_header(b: bytes) -> dict | None:
         return None
     pos = 2
     while True:
-        if pos + 4 > len(b):
-            raise ValueError("truncated JPEG: no SOF before EOF")
-        if b[pos] != 0xFF:
-            raise ValueError("JPEG marker desync")
-        # fill bytes: any number of FFs may pad before a marker
-        while pos < len(b) and b[pos] == 0xFF:
-            pos += 1
-        if pos >= len(b):
-            raise ValueError("truncated JPEG: trailing fill bytes")
-        marker = b[pos]
-        pos += 1
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            continue  # stand-alone markers: SOI, TEM, RSTn
-        if marker == 0xD9:  # EOI before any SOF
+        marker, seg, pos = _jpeg_segment(b, pos)
+        if marker == 0xD9:
             raise ValueError("JPEG ended with no frame header")
-        if pos + 2 > len(b):
-            raise ValueError("truncated JPEG segment length")
-        seg_len = int.from_bytes(b[pos : pos + 2], "big")
-        if seg_len < 2 or pos + seg_len > len(b):
-            raise ValueError("truncated JPEG segment")
+        if marker == 0xDA:  # SOS with no prior SOF: not a valid frame
+            raise ValueError("JPEG SOS before SOF")
         if marker in _JPEG_SOF:
-            seg = b[pos + 2 : pos + seg_len]
             if len(seg) < 6:
                 raise ValueError("short SOF segment")
-            height = int.from_bytes(seg[1:3], "big")
-            width = int.from_bytes(seg[3:5], "big")
-            n_components = seg[5]
             return {
                 "modality_detected": (
                     # all four progressive-DCT SOF variants (T.81
@@ -180,13 +202,10 @@ def _decode_jpeg_header(b: bytes) -> dict | None:
                     if marker in (0xC2, 0xC6, 0xCA, 0xCE)
                     else "image/jpeg"
                 ),
-                "width": width,
-                "height": height,
-                "n_channels": int(n_components),
+                "width": int.from_bytes(seg[3:5], "big"),
+                "height": int.from_bytes(seg[1:3], "big"),
+                "n_channels": int(seg[5]),
             }
-        if marker == 0xDA:  # SOS with no prior SOF: not a valid frame
-            raise ValueError("JPEG SOS before SOF")
-        pos += seg_len
 
 
 def _build_huffman(counts: bytes, symbols: bytes) -> dict:
@@ -205,6 +224,35 @@ def _build_huffman(counts: bytes, symbols: bytes) -> dict:
             code += 1
         code <<= 1
     return lut
+
+
+def _read_dht(seg: bytes, dc_luts: dict, ac_luts: dict) -> None:
+    """Load every table of a DHT segment (T.81 B.2.4.2) into
+    ``dc_luts`` / ``ac_luts`` by table id; a table redefined later in
+    the stream replaces the earlier one."""
+    j = 0
+    while j < len(seg):
+        cls = seg[j] >> 4
+        tid = seg[j] & 0x0F
+        j += 1
+        if j + 16 > len(seg):
+            raise ValueError("short DHT segment")
+        counts = seg[j : j + 16]
+        j += 16
+        nsym = sum(counts)
+        if j + nsym > len(seg):
+            raise ValueError("short DHT symbol list")
+        (ac_luts if cls else dc_luts)[tid] = _build_huffman(
+            counts, seg[j : j + nsym]
+        )
+        j += nsym
+
+
+def _read_dri(seg: bytes) -> int:
+    """DRI segment -> restart interval in MCUs (0 = none)."""
+    if len(seg) < 2:
+        raise ValueError("short DRI segment")
+    return int.from_bytes(seg[:2], "big")
 
 
 class _JpegBits:
@@ -242,6 +290,15 @@ class _JpegBits:
                 return sym
         raise ValueError("JPEG Huffman code longer than 16 bits")
 
+    def read_dc_diff(self, lut: dict, precision: int) -> int:
+        """One DC difference (T.81 F.2.2.1): the category symbol - at
+        most 11 for 8-bit samples, 15 for 12-bit (F.1.2.1.1) - then
+        EXTEND of that many magnitude bits."""
+        t = self.read_symbol(lut)
+        if t > precision + 3:
+            raise ValueError("JPEG DC category out of range")
+        return _extend(self.read_bits(t), t)
+
 
 def _extend(v: int, t: int) -> int:
     """T.81 F.2.2.1 EXTEND: map the t magnitude bits to the signed
@@ -251,17 +308,12 @@ def _extend(v: int, t: int) -> int:
     return v if v >= (1 << (t - 1)) else v - (1 << t) + 1
 
 
-def _split_entropy(b: bytes, pos: int) -> list[bytes]:
-    """Slice the scan's entropy-coded bytes into restart intervals:
-    de-stuff FF00 -> FF, split on RSTn, stop at any other marker
-    (normally EOI). Returns the de-stuffed interval list."""
-    return _split_entropy_pos(b, pos)[0]
-
-
 def _split_entropy_pos(b: bytes, pos: int) -> tuple[list[bytes], int]:
-    """As ``_split_entropy``, but also returns the offset of the 0xFF
-    that terminates the scan - the progressive walker resumes its
-    marker loop there (a progressive stream holds MANY scans)."""
+    """Slice the scan's entropy-coded bytes into restart intervals:
+    de-stuff FF00 -> FF, split on RSTn, stop at any other marker.
+    Returns the de-stuffed interval list and the offset of the 0xFF
+    that ends the scan, where the marker walk resumes (a progressive
+    stream holds MANY scans)."""
     segments: list[bytes] = []
     cur = bytearray()
     i = pos
@@ -287,6 +339,21 @@ def _split_entropy_pos(b: bytes, pos: int) -> tuple[list[bytes], int]:
     raise ValueError("truncated JPEG: entropy stream ran past EOF")
 
 
+def _interval_bits(
+    intervals: list[bytes], m: int, restart: int
+) -> _JpegBits | None:
+    """The bit reader over the next restart interval when coding unit
+    ``m`` (an MCU, or a block of a single-component scan) opens one -
+    unit 0 opens the first - else None. The caller resets its DC
+    predictions or its EOB run there (T.81 E.1.4, G.1.2.3)."""
+    k, r = divmod(m, restart) if restart else (0, m)
+    if r:
+        return None
+    if k >= len(intervals):
+        raise ValueError("JPEG missing restart marker")
+    return _JpegBits(intervals[k])
+
+
 def _idct_matrix():
     """8-point DCT-III basis: A[u, x] = C(u)/2 * cos((2x+1)u*pi/16),
     so an 8x8 coefficient block F inverts as A.T @ F @ A."""
@@ -299,33 +366,34 @@ def _idct_matrix():
     return a
 
 
-# zig-zag index -> (row, col) of the 8x8 block, T.81 figure A.6
+# row-major position in the 8x8 block -> zig-zag index, T.81 figure A.6
 _ZIGZAG = [
-    (0,0),(0,1),(1,0),(2,0),(1,1),(0,2),(0,3),(1,2),
-    (2,1),(3,0),(4,0),(3,1),(2,2),(1,3),(0,4),(0,5),
-    (1,4),(2,3),(3,2),(4,1),(5,0),(6,0),(5,1),(4,2),
-    (3,3),(2,4),(1,5),(0,6),(0,7),(1,6),(2,5),(3,4),
-    (4,3),(5,2),(6,1),(7,0),(7,1),(6,2),(5,3),(4,4),
-    (3,5),(2,6),(1,7),(2,7),(3,6),(4,5),(5,4),(6,3),
-    (7,2),(7,3),(6,4),(5,5),(4,6),(3,7),(4,7),(5,6),
-    (6,5),(7,4),(7,5),(6,6),(5,7),(6,7),(7,6),(7,7),
+    0, 1, 5, 6, 14, 15, 27, 28,
+    2, 4, 7, 13, 16, 26, 29, 42,
+    3, 8, 12, 17, 25, 30, 41, 43,
+    9, 11, 18, 24, 31, 40, 44, 53,
+    10, 19, 23, 32, 39, 45, 52, 54,
+    20, 22, 33, 38, 46, 51, 55, 60,
+    21, 34, 37, 47, 50, 56, 59, 61,
+    35, 36, 48, 49, 57, 58, 62, 63,
 ]
 
 
 def _decode_jpeg_pixels(b: bytes) -> dict | None:
     """REAL JPEG pixel decode, pure stdlib+numpy (ITU-T T.81
-    annexes B/F/G): segment walk collecting DQT/DHT/DRI, then either
-    the sequential-DCT path (C0 baseline / C1 extended, 8-bit:
-    per-MCU entropy decode - DC prediction + EXTEND, AC run/size with
-    EOB/ZRL) or the PROGRESSIVE path (C2: the multi-scan coefficient
-    accumulator in ``_decode_jpeg_progressive``), then dequantize,
-    de-zigzag, separable float64 IDCT, +128 level shift,
-    nearest-neighbor chroma upsampling and the declared color
-    transform (JFIF YCbCr->RGB; Adobe YCCK/CMYK under the
-    inverted-ink convention for 4-component frames). Returns
-    the header dict with ``mean_value`` = mean over all pixels and
-    channels (mean ink coverage for CMYK) - the pixels_decoded=true
-    signal.
+    annexes B/F/G): segment walk collecting DQT/DHT/DRI/APP14/SOF up
+    to the first SOS, then the entropy decode into per-component
+    QUANTIZED coefficient arrays - either the sequential-DCT MCU loop
+    (C0 baseline / C1 extended: DC prediction + EXTEND, AC run/size
+    with EOB/ZRL) or the PROGRESSIVE scan accumulator (C2,
+    ``_decode_jpeg_progressive``) - then one reconstruction
+    (``_jpeg_planes``: dequantize, de-zigzag, separable float64 IDCT,
+    level shift) and ``_jpeg_mean`` (nearest-neighbor chroma
+    upsampling and the declared color transform: JFIF YCbCr->RGB;
+    Adobe YCCK/CMYK under the inverted-ink convention for 4-component
+    frames). Returns the header dict with ``mean_value`` = mean over
+    all pixels and channels (mean ink coverage for CMYK) - the
+    pixels_decoded=true signal.
 
     Returns None when the frame is eligible-looking JPEG but outside
     this tier (lossless/arithmetic, 12-bit color - only 12-bit
@@ -349,26 +417,9 @@ def _decode_jpeg_pixels(b: bytes) -> dict | None:
     adobe_transform: int | None = None
     pos = 2
     while True:
-        if pos + 2 > len(b):
-            raise ValueError("truncated JPEG: no SOS before EOF")
-        if b[pos] != 0xFF:
-            raise ValueError("JPEG marker desync")
-        while pos < len(b) and b[pos] == 0xFF:
-            pos += 1
-        if pos >= len(b):
-            raise ValueError("truncated JPEG: trailing fill bytes")
-        marker = b[pos]
-        pos += 1
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            continue
+        marker, seg, pos = _jpeg_segment(b, pos)
         if marker == 0xD9:
             raise ValueError("JPEG ended with no scan")
-        if pos + 2 > len(b):
-            raise ValueError("truncated JPEG segment length")
-        seg_len = int.from_bytes(b[pos : pos + 2], "big")
-        if seg_len < 2 or pos + seg_len > len(b):
-            raise ValueError("truncated JPEG segment")
-        seg = b[pos + 2 : pos + seg_len]
         if marker == 0xDB:  # DQT: one or more tables per segment
             j = 0
             while j < len(seg):
@@ -386,26 +437,10 @@ def _decode_jpeg_pixels(b: bytes) -> dict | None:
                 else:
                     qtables[tid] = list(seg[j : j + 64])
                 j += n
-        elif marker == 0xC4:  # DHT: one or more tables per segment
-            j = 0
-            while j < len(seg):
-                cls = seg[j] >> 4
-                tid = seg[j] & 0x0F
-                j += 1
-                if j + 16 > len(seg):
-                    raise ValueError("short DHT segment")
-                counts = seg[j : j + 16]
-                j += 16
-                nsym = sum(counts)
-                if j + nsym > len(seg):
-                    raise ValueError("short DHT symbol list")
-                lut = _build_huffman(counts, seg[j : j + nsym])
-                j += nsym
-                (ac_luts if cls else dc_luts)[tid] = lut
-        elif marker == 0xDD:  # DRI
-            if len(seg) < 2:
-                raise ValueError("short DRI segment")
-            restart_interval = int.from_bytes(seg[:2], "big")
+        elif marker == 0xC4:
+            _read_dht(seg, dc_luts, ac_luts)
+        elif marker == 0xDD:
+            restart_interval = _read_dri(seg)
         elif marker == 0xEE and seg[:5] == b"Adobe":  # APP14
             # transform byte: 0 = components are literal RGB,
             # 1 = YCbCr, 2 = YCCK (T-REC-T.872 / Adobe tech note)
@@ -446,13 +481,9 @@ def _decode_jpeg_pixels(b: bytes) -> dict | None:
                 raise ValueError("JPEG SOS before SOF")
             if len(seg) < 1 or len(seg) < 1 + 2 * seg[0]:
                 raise ValueError("short SOS segment")
-            sos_seg = seg
-            _, _, H, W, comps = frame
-            entropy_pos = pos + seg_len
-            break
-        pos += seg_len
+            break  # seg is the first scan header, pos its entropy data
 
-    progressive = frame[0] == 0xC2
+    sof, precision, H, W, comps = frame
     if len(comps) == 3:
         # color-space honesty: decode only what the file DECLARES -
         # YCbCr via Adobe APP14 transform=1 or (no APP14 + the
@@ -494,100 +525,71 @@ def _decode_jpeg_pixels(b: bytes) -> dict | None:
             raise ValueError("JPEG component references missing DQT")
         c["q"] = qtables[c["tq"]]
 
-    if progressive:
-        planes = _decode_jpeg_progressive(
-            b,
-            sos_seg,
-            entropy_pos,
-            frame,
-            hmax,
-            vmax,
-            dc_luts,
-            ac_luts,
-            restart_interval,
-        )
-        return _jpeg_mean(
-            comps, planes, H, W, hmax, vmax, "image/jpeg;progressive",
-            adobe_transform, maxval=(1 << frame[1]) - 1,
-        )
-
-    ns = sos_seg[0]
-    scan_tables = {}
-    for s in range(ns):
-        cs, tdta = sos_seg[1 + 2 * s], sos_seg[2 + 2 * s]
-        scan_tables[cs] = (tdta >> 4, tdta & 0x0F)
-    if ns != len(comps):
-        return None  # multi-scan sequential: out of tier
-    for c in comps:
-        if c["id"] not in scan_tables:
-            raise ValueError("JPEG scan omits a frame component")
-        td, ta = scan_tables[c["id"]]
-        if td not in dc_luts or ta not in ac_luts:
-            raise ValueError("JPEG scan references missing DHT")
-        c["dc"] = dc_luts[td]
-        c["ac"] = ac_luts[ta]
+    progressive = sof == 0xC2
+    if not progressive:
+        if seg[0] != len(comps):
+            return None  # multi-scan sequential: out of tier
+        # scan component id -> (DC table id << 4) | AC table id
+        tables = {seg[1 + 2 * s]: seg[2 + 2 * s] for s in range(seg[0])}
+        for c in comps:
+            if c["id"] not in tables:
+                raise ValueError("JPEG scan omits a frame component")
+            td, ta = tables[c["id"]] >> 4, tables[c["id"]] & 0x0F
+            if td not in dc_luts or ta not in ac_luts:
+                raise ValueError("JPEG scan references missing DHT")
+            c["dc"] = dc_luts[td]
+            c["ac"] = ac_luts[ta]
 
     mcus_x = -(-W // (8 * hmax))
     mcus_y = -(-H // (8 * vmax))
-    precision = frame[1]
-    half = float(1 << (precision - 1))  # level shift: 128 or 2048
-    max_t = 11 if precision == 8 else 15  # T.81 F.1.2.1.1 DC categories
-    idct = _idct_matrix()
-    planes = {
+    coefs = {
         c["id"]: np.zeros(
-            (mcus_y * 8 * c["v"], mcus_x * 8 * c["h"]), dtype=np.float64
+            (mcus_y * c["v"], mcus_x * c["h"], 64), dtype=np.int64
         )
         for c in comps
     }
-    segments = _split_entropy(b, entropy_pos)
-    seg_idx = 0
-    bits = _JpegBits(segments[0])
-    preds = {c["id"]: 0 for c in comps}
-    n_mcus = mcus_x * mcus_y
-    for m in range(n_mcus):
-        if restart_interval and m and m % restart_interval == 0:
-            seg_idx += 1
-            if seg_idx >= len(segments):
-                raise ValueError("JPEG missing restart marker")
-            bits = _JpegBits(segments[seg_idx])
-            preds = {c["id"]: 0 for c in comps}
-        my, mx = divmod(m, mcus_x)
-        for c in comps:
-            for by in range(c["v"]):
-                for bx in range(c["h"]):
-                    coeffs = np.zeros(64, dtype=np.float64)
-                    t = bits.read_symbol(c["dc"])
-                    if t > max_t:
-                        raise ValueError("JPEG DC category out of range")
-                    diff = _extend(bits.read_bits(t), t)
-                    preds[c["id"]] += diff
-                    coeffs[0] = preds[c["id"]] * c["q"][0]
-                    k = 1
-                    while k < 64:
-                        rs = bits.read_symbol(c["ac"])
-                        r, s = rs >> 4, rs & 0x0F
-                        if s == 0:
-                            if r == 15:  # ZRL: skip 16 zeros
-                                k += 16
-                                continue
-                            break  # EOB
-                        k += r
-                        if k > 63:
-                            raise ValueError("JPEG AC index overflow")
-                        coeffs[k] = _extend(bits.read_bits(s), s) * c["q"][k]
-                        k += 1
-                    block = np.zeros((8, 8), dtype=np.float64)
-                    for k in range(64):
-                        r_, c_ = _ZIGZAG[k]
-                        block[r_, c_] = coeffs[k]
-                    px = idct.T @ block @ idct + half
-                    y0 = (my * c["v"] + by) * 8
-                    x0 = (mx * c["h"] + bx) * 8
-                    planes[c["id"]][y0 : y0 + 8, x0 : x0 + 8] = px
+    if progressive:
+        _decode_jpeg_progressive(
+            b, seg, pos, frame, hmax, vmax, mcus_x, mcus_y,
+            dc_luts, ac_luts, restart_interval, coefs,
+        )
+    else:
+        intervals = _split_entropy_pos(b, pos)[0]
+        for m in range(mcus_x * mcus_y):
+            nxt = _interval_bits(intervals, m, restart_interval)
+            if nxt is not None:
+                bits, preds = nxt, {c["id"]: 0 for c in comps}
+            my, mx = divmod(m, mcus_x)
+            for c in comps:
+                for by in range(c["v"]):
+                    for bx in range(c["h"]):
+                        block = coefs[c["id"]][
+                            my * c["v"] + by, mx * c["h"] + bx
+                        ]
+                        preds[c["id"]] += bits.read_dc_diff(c["dc"], precision)
+                        block[0] = preds[c["id"]]
+                        # a sequential scan ends the block at every
+                        # s == 0, r != 15 symbol (EOB); a progressive
+                        # first scan reads an EOB run there instead
+                        k = 1
+                        while k < 64:
+                            rs = bits.read_symbol(c["ac"])
+                            r, s = rs >> 4, rs & 0x0F
+                            if s == 0:
+                                if r == 15:  # ZRL: skip 16 zeros
+                                    k += 16
+                                    continue
+                                break  # EOB
+                            k += r
+                            if k > 63:
+                                raise ValueError("JPEG AC index overflow")
+                            block[k] = _extend(bits.read_bits(s), s)
+                            k += 1
 
     return _jpeg_mean(
-        comps, planes, H, W, hmax, vmax, "image/jpeg", adobe_transform,
-        maxval=(1 << precision) - 1,
+        comps, _jpeg_planes(comps, coefs, precision), H, W, hmax, vmax,
+        "image/jpeg;progressive" if progressive else "image/jpeg",
+        adobe_transform, maxval=(1 << precision) - 1,
     )
 
 
@@ -598,22 +600,24 @@ def _decode_jpeg_progressive(
     frame,
     hmax: int,
     vmax: int,
+    mcus_x: int,
+    mcus_y: int,
     dc_luts: dict,
     ac_luts: dict,
     restart_interval: int,
-) -> dict:
+    coefs: dict,
+) -> None:
     """Progressive-DCT scan accumulator (ITU-T T.81 annex G, Huffman):
-    walk every scan of the frame, updating per-block QUANTIZED
-    coefficient arrays - spectral selection (each AC scan carries one
-    component's [Ss, Se] band), successive approximation (first scans
-    deliver coefficients at point transform Al, refinement scans the
-    next lower bit), DC scans interleaved or single-component, AC
-    scans single-component raster over the component's own block
-    grid, EOB runs spanning blocks, restart intervals resetting
-    DC predictions and the EOB run. Tables (DHT) and DRI may be
-    redefined between scans. Returns the reconstructed float planes
-    keyed by component id (dequantize + IDCT at the end - exactly
-    once, after all scans landed their bits).
+    walk every scan of the frame, updating the per-block QUANTIZED
+    coefficient arrays ``coefs`` - spectral selection (each AC scan
+    carries one component's [Ss, Se] band), successive approximation
+    (first scans deliver coefficients at point transform Al,
+    refinement scans the next lower bit), DC scans interleaved or
+    single-component, AC scans single-component raster over the
+    component's own block grid, EOB runs spanning blocks, restart
+    intervals resetting DC predictions and the EOB run. Tables (DHT)
+    and DRI may be redefined between scans; the walk ends at EOI. The
+    caller reconstructs once, after all scans landed their bits.
 
     Refinement follows the G.1.2.3 control flow: a correction bit is
     read for every NONZERO-HISTORY coefficient crossed (its magnitude
@@ -621,18 +625,8 @@ def _decode_jpeg_progressive(
     multiples of 1 << (Al+1), so the bit position is always vacant),
     zero-history runs consume the symbol's run length, and an EOB run
     still reads the tail correction bits of every block it covers."""
-    import numpy as np
-
-    _, _, H, W, comps = frame
-    mcus_x = -(-W // (8 * hmax))
-    mcus_y = -(-H // (8 * vmax))
+    _, precision, H, W, comps = frame
     by_id = {c["id"]: c for c in comps}
-    coefs = {
-        c["id"]: np.zeros(
-            (mcus_y * c["v"], mcus_x * c["h"], 64), dtype=np.int64
-        )
-        for c in comps
-    }
     for c in comps:
         # non-interleaved scans raster over the component's CEIL block
         # grid (T.81 A.2.2), which can be smaller than the padded
@@ -655,14 +649,11 @@ def _decode_jpeg_progressive(
         ah, al = ahal >> 4, ahal & 0x0F
         if se > 63 or ss > se:
             raise ValueError("progressive spectral band out of range")
-        segments, endpos = _split_entropy_pos(b, epos)
-        seg_idx = 0
-        bits = _JpegBits(segments[0])
+        intervals, endpos = _split_entropy_pos(b, epos)
         if ss == 0:
             # ---- DC scan (first or refinement), MCU- or raster-order
             if se != 0:
                 raise ValueError("progressive DC scan with Se != 0")
-            preds = {c["id"]: 0 for c, _, _ in scomps}
             luts = {}
             if ah == 0:
                 for c, td, _ in scomps:
@@ -677,21 +668,17 @@ def _decode_jpeg_progressive(
 
             def dc_unit(c, block) -> None:
                 if ah == 0:
-                    t = bits.read_symbol(luts[c["id"]])
-                    if t > (11 if frame[1] == 8 else 15):
-                        raise ValueError("JPEG DC category out of range")
-                    preds[c["id"]] += _extend(bits.read_bits(t), t)
+                    preds[c["id"]] += bits.read_dc_diff(
+                        luts[c["id"]], precision
+                    )
                     block[0] = preds[c["id"]] << al
                 elif bits.read_bit():
                     block[0] = int(block[0]) | (1 << al)
 
             for m in range(units):
-                if rst and m and m % rst == 0:
-                    seg_idx += 1
-                    if seg_idx >= len(segments):
-                        raise ValueError("JPEG missing restart marker")
-                    bits = _JpegBits(segments[seg_idx])
-                    preds = {c["id"]: 0 for c, _, _ in scomps}
+                nxt = _interval_bits(intervals, m, rst)
+                if nxt is not None:
+                    bits, preds = nxt, {c["id"]: 0 for c, _, _ in scomps}
                 if ns > 1:
                     my, mx = divmod(m, mcus_x)
                     for c, _, _ in scomps:
@@ -717,15 +704,11 @@ def _decode_jpeg_progressive(
             raise ValueError("progressive scan missing AC DHT")
         ac = ac_luts[ta]
         arr = coefs[c["id"]]
-        eobrun = 0
         p1, m1 = 1 << al, -(1 << al)
         for m in range(c["bh"] * c["bw"]):
-            if rst and m and m % rst == 0:
-                seg_idx += 1
-                if seg_idx >= len(segments):
-                    raise ValueError("JPEG missing restart marker")
-                bits = _JpegBits(segments[seg_idx])
-                eobrun = 0
+            nxt = _interval_bits(intervals, m, rst)
+            if nxt is not None:
+                bits, eobrun = nxt, 0
             by, bx = divmod(m, c["bw"])
             block = arr[by, bx]
             if ah == 0:
@@ -792,53 +775,34 @@ def _decode_jpeg_progressive(
                     eobrun -= 1
         return endpos
 
-    # first scan, then the continuing marker walk until EOI
+    # first scan, then the marker walk between scans until EOI
     pos = do_scan(first_sos_seg, entropy_pos, restart_interval)
     while True:
-        while pos < len(b) and b[pos] == 0xFF:
-            pos += 1
-        if pos >= len(b):
-            raise ValueError("truncated progressive JPEG: no EOI")
-        marker = b[pos]
-        pos += 1
-        if marker == 0xD9:  # EOI
-            break
-        if marker in (0x01,) or 0xD0 <= marker <= 0xD8:
-            continue
-        if pos + 2 > len(b):
-            raise ValueError("truncated JPEG segment length")
-        seg_len = int.from_bytes(b[pos : pos + 2], "big")
-        if seg_len < 2 or pos + seg_len > len(b):
-            raise ValueError("truncated JPEG segment")
-        seg = b[pos + 2 : pos + seg_len]
-        if marker == 0xC4:  # DHT between scans
-            j = 0
-            while j < len(seg):
-                cls = seg[j] >> 4
-                tid = seg[j] & 0x0F
-                j += 1
-                if j + 16 > len(seg):
-                    raise ValueError("short DHT segment")
-                counts = seg[j : j + 16]
-                j += 16
-                nsym = sum(counts)
-                if j + nsym > len(seg):
-                    raise ValueError("short DHT symbol list")
-                lut = _build_huffman(counts, seg[j : j + nsym])
-                j += nsym
-                (ac_luts if cls else dc_luts)[tid] = lut
-            pos += seg_len
-        elif marker == 0xDD:  # DRI between scans
-            if len(seg) < 2:
-                raise ValueError("short DRI segment")
-            restart_interval = int.from_bytes(seg[:2], "big")
-            pos += seg_len
+        marker, seg, nxt = _jpeg_segment(b, pos)
+        if marker == 0xD9:
+            return
+        if marker == 0xC4:
+            _read_dht(seg, dc_luts, ac_luts)
+        elif marker == 0xDD:
+            restart_interval = _read_dri(seg)
         elif marker == 0xDA:
-            pos = do_scan(seg, pos + seg_len, restart_interval)
-        else:  # APPn / COM / DQT redefinitions: skip
-            pos += seg_len
+            nxt = do_scan(seg, nxt, restart_interval)
+        # APPn / COM / DQT redefinitions: skipped
+        pos = nxt
+
+
+def _jpeg_planes(comps, coefs: dict, precision: int) -> dict:
+    """Reconstruct each component's sample plane from its QUANTIZED
+    (blocks_y, blocks_x, 64) coefficient array, one block at a time:
+    dequantize, de-zigzag, separable float64 IDCT, level shift (128,
+    or 2048 for 12-bit). An integer coefficient times an integer
+    quantizer is exact in float64, so both entropy paths land the
+    same planes."""
+    import numpy as np
 
     idct = _idct_matrix()
+    half = float(1 << (precision - 1))
+    zigzag = np.array(_ZIGZAG)
     planes = {}
     for c in comps:
         arr = coefs[c["id"]]
@@ -846,13 +810,9 @@ def _decode_jpeg_progressive(
         p = np.zeros((arr.shape[0] * 8, arr.shape[1] * 8))
         for by in range(arr.shape[0]):
             for bx in range(arr.shape[1]):
-                cvec = arr[by, bx].astype(np.float64) * q
-                block = np.zeros((8, 8))
-                for k in range(64):
-                    r_, c_ = _ZIGZAG[k]
-                    block[r_, c_] = cvec[k]
+                block = (arr[by, bx] * q)[zigzag].reshape(8, 8)
                 p[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                    idct.T @ block @ idct + float(1 << (frame[1] - 1))
+                    idct.T @ block @ idct + half
                 )
         planes[c["id"]] = p
     return planes
@@ -1055,97 +1015,103 @@ def _decode_wav(b: bytes) -> dict | None:
     return out
 
 
-def _decode_mp4(b: bytes) -> dict | None:
-    """HEADER-TIER MP4/ISO-BMFF decode, pure stdlib (ISO/IEC 14496-12
-    box grammar): walk the length-prefixed box tree - 32-bit sizes,
-    the size==1 64-bit largesize escape, size==0 runs-to-EOF - into
-    ``moov`` for the movie header (``mvhd`` v0/v1: timescale +
-    duration -> real ``duration_s``) and the first visually-sized
-    track header (``tkhd`` v0/v1: 16.16 fixed-point width/height).
-    Returns None when the payload is not BMFF (no ftyp as the first
-    box); raises ValueError on malformed box structure (undersized or
-    overrunning box, short header payload) so the caller's quarantine
-    path stamps ``corrupt/mp4``.
+def _mp4_boxes(b: bytes, lo: int, hi: int) -> Iterator[tuple[bytes, int, int]]:
+    """Yield (type, body_lo, body_hi) for each ISO-BMFF box in
+    [lo, hi) (framing rules in the module docstring)."""
+    pos = lo
+    while pos < hi:
+        if pos + 8 > hi:
+            raise ValueError("truncated MP4 box header")
+        size = int.from_bytes(b[pos : pos + 4], "big")
+        typ = b[pos + 4 : pos + 8]
+        body = pos + 8
+        if size == 1:
+            if pos + 16 > hi:
+                raise ValueError("truncated MP4 largesize")
+            size = int.from_bytes(b[pos + 8 : pos + 16], "big")
+            body = pos + 16
+            if size < 16:
+                raise ValueError("MP4 largesize smaller than header")
+        elif size == 0:
+            size = hi - pos
+        elif size < 8:
+            raise ValueError("MP4 box size smaller than header")
+        if pos + size > hi:
+            raise ValueError("MP4 box overruns its container")
+        yield typ, body, pos + size
+        pos += size
 
-    This upgrades the former MP4 stub to the same honest tier
-    baseline-JPEG held before r11: duration/dimensions are decoded
-    from the actual payload bytes (differentially tested against an
-    independent spec-written box builder in tests/test_operators.py),
-    while frame pixels genuinely need a codec library - mean_value
-    stays NULL, the pixels_decoded=false signal."""
+
+def _fourcc(raw: bytes) -> str:
+    return raw.decode("ascii", "replace").strip()
+
+
+def _mp4_duration(b: bytes, lo: int, hi: int, name: str) -> float | None:
+    """Seconds from an mvhd/mdhd full-box body [lo, hi): after the 4
+    version/flags bytes, v0 has 32-bit creation+modification times (8
+    bytes) before the timescale and a 32-bit duration, v1 64-bit ones
+    (16 bytes) and a 64-bit duration. None when the timescale is 0."""
+    if hi - lo < 4:
+        raise ValueError(f"short {name} box")
+    off, dur_w = (16, 8) if b[lo] == 1 else (8, 4)
+    if hi - lo < 4 + off + 4 + dur_w:
+        raise ValueError(f"short {name} box")
+    p = lo + 4 + off
+    timescale = int.from_bytes(b[p : p + 4], "big")
+    duration = int.from_bytes(b[p + 4 : p + 4 + dur_w], "big")
+    return duration / timescale if timescale else None
+
+
+def _tkhd_dims(b: bytes, lo: int, hi: int) -> tuple[int, int] | None:
+    """(width, height) from a tkhd full-box body [lo, hi): 16.16 fixed
+    point, the last 8 of its 84 (v0) / 96 (v1) bytes incl.
+    version/flags. None when either is 0 (a non-visual track)."""
+    need = 96 if hi > lo and b[lo] == 1 else 84
+    if hi - lo < need:
+        raise ValueError("short tkhd box")
+    p = lo + need - 8
+    w = int.from_bytes(b[p : p + 4], "big") >> 16
+    h = int.from_bytes(b[p + 4 : p + 8], "big") >> 16
+    return (w, h) if w and h else None
+
+
+def _decode_mp4(b: bytes) -> dict | None:
+    """HEADER-TIER MP4/ISO-BMFF decode, pure stdlib (ISO/IEC 14496-12):
+    walk the box tree into ``moov`` for the movie header (``mvhd``:
+    timescale + duration -> real ``duration_s``) and the first
+    visually-sized track header (``tkhd`` width/height). Returns None
+    when the payload is not BMFF (no ftyp as the first box); raises
+    ValueError on malformed box structure (undersized or overrunning
+    box, short header payload) so the caller's quarantine path stamps
+    ``corrupt/mp4``.
+
+    Duration/dimensions are decoded from the actual payload bytes
+    (differentially tested against an independent spec-written box
+    builder in tests/test_operators.py), while frame pixels genuinely
+    need a codec library - mean_value stays NULL, the
+    pixels_decoded=false signal."""
     if len(b) < 12 or b[4:8] != b"ftyp":
         return None
-
-    def walk(lo: int, hi: int):
-        """Yield (type, body_lo, body_hi) for each box in [lo, hi)."""
-        pos = lo
-        while pos < hi:
-            if pos + 8 > hi:
-                raise ValueError("truncated MP4 box header")
-            size = int.from_bytes(b[pos : pos + 4], "big")
-            typ = b[pos + 4 : pos + 8]
-            body = pos + 8
-            if size == 1:
-                if pos + 16 > hi:
-                    raise ValueError("truncated MP4 largesize")
-                size = int.from_bytes(b[pos + 8 : pos + 16], "big")
-                body = pos + 16
-                if size < 16:
-                    raise ValueError("MP4 largesize smaller than header")
-            elif size == 0:
-                size = hi - pos
-            elif size < 8:
-                raise ValueError("MP4 box size smaller than header")
-            if pos + size > hi:
-                raise ValueError("MP4 box overruns its container")
-            yield typ, body, pos + size
-            pos += size
-
     out = {
         "modality_detected": "video/mp4",
         "duration_s": None,
         "width": None,
         "height": None,
     }
-    for typ, lo, hi in walk(0, len(b)):
+    for typ, lo, hi in _mp4_boxes(b, 0, len(b)):
         if typ != b"moov":
             continue
-        for t2, lo2, hi2 in walk(lo, hi):
+        for t2, lo2, hi2 in _mp4_boxes(b, lo, hi):
             if t2 == b"mvhd":
-                if hi2 - lo2 < 4:
-                    raise ValueError("short mvhd box")
-                ver = b[lo2]
-                # after the 4 version/flags bytes: v0 has 32-bit
-                # creation+modification (8 bytes) before timescale,
-                # v1 has 64-bit ones (16 bytes) and a 64-bit duration
-                off, dur_w = (16, 8) if ver == 1 else (8, 4)
-                if hi2 - lo2 < 4 + off + 4 + dur_w:
-                    raise ValueError("short mvhd box")
-                p = lo2 + 4 + off
-                timescale = int.from_bytes(b[p : p + 4], "big")
-                duration = int.from_bytes(
-                    b[p + 4 : p + 4 + dur_w], "big"
-                )
-                if timescale:
-                    out["duration_s"] = duration / timescale
+                duration = _mp4_duration(b, lo2, hi2, "mvhd")
+                if duration is not None:
+                    out["duration_s"] = duration
             elif t2 == b"trak" and out["width"] is None:
-                for t3, lo3, hi3 in walk(lo2, hi2):
-                    if t3 != b"tkhd":
-                        continue
-                    ver = b[lo3]
-                    # full payload incl. version/flags: 84 (v0) / 96
-                    # (v1) bytes, width/height the last 8
-                    need = 96 if ver == 1 else 84
-                    if hi3 - lo3 < need:
-                        raise ValueError("short tkhd box")
-                    # width/height: 16.16 fixed point, the box's
-                    # last 8 payload bytes
-                    p = lo3 + need - 8
-                    w = int.from_bytes(b[p : p + 4], "big") >> 16
-                    h = int.from_bytes(b[p + 4 : p + 8], "big") >> 16
-                    if w and h:
-                        out["width"] = int(w)
-                        out["height"] = int(h)
+                for t3, lo3, hi3 in _mp4_boxes(b, lo2, hi2):
+                    if t3 == b"tkhd":
+                        dims = _tkhd_dims(b, lo3, hi3)
+                        if dims:
+                            out["width"], out["height"] = dims
     return out
 
 
@@ -1167,80 +1133,40 @@ def _mp4_tracks(b: bytes) -> list[dict] | None:
     structure so callers quarantine (same contract as _decode_mp4)."""
     if len(b) < 12 or b[4:8] != b"ftyp":
         return None
-
-    def walk(lo: int, hi: int):
-        pos = lo
-        while pos < hi:
-            if pos + 8 > hi:
-                raise ValueError("truncated MP4 box header")
-            size = int.from_bytes(b[pos : pos + 4], "big")
-            typ = b[pos + 4 : pos + 8]
-            body = pos + 8
-            if size == 1:
-                if pos + 16 > hi:
-                    raise ValueError("truncated MP4 largesize")
-                size = int.from_bytes(b[pos + 8 : pos + 16], "big")
-                body = pos + 16
-                if size < 16:
-                    raise ValueError("MP4 largesize smaller than header")
-            elif size == 0:
-                size = hi - pos
-            elif size < 8:
-                raise ValueError("MP4 box size smaller than header")
-            if pos + size > hi:
-                raise ValueError("MP4 box overruns its container")
-            yield typ, body, pos + size
-            pos += size
-
-    def fourcc(raw: bytes) -> str:
-        return raw.decode("ascii", "replace").strip()
-
     movie_duration = None
     tracks: list[dict] = []
-    for typ, lo, hi in walk(0, len(b)):
+    for typ, lo, hi in _mp4_boxes(b, 0, len(b)):
         if typ != b"moov":
             continue
         # two passes over moov's children: 14496-12 does not mandate
         # sibling ORDER (review finding - a trak before mvhd would
         # silently lose the movie-duration fallback on a one-pass walk)
-        for t2, lo2, hi2 in walk(lo, hi):
+        for t2, lo2, hi2 in _mp4_boxes(b, lo, hi):
             if t2 == b"mvhd":
-                ver = b[lo2]
-                off, dur_w = (16, 8) if ver == 1 else (8, 4)
-                if hi2 - lo2 < 4 + off + 4 + dur_w:
-                    raise ValueError("short mvhd box")
-                p = lo2 + 4 + off
-                ts = int.from_bytes(b[p : p + 4], "big")
-                dur = int.from_bytes(b[p + 4 : p + 4 + dur_w], "big")
-                if ts:
-                    movie_duration = dur / ts
-        for t2, lo2, hi2 in walk(lo, hi):
+                duration = _mp4_duration(b, lo2, hi2, "mvhd")
+                if duration is not None:
+                    movie_duration = duration
+        for t2, lo2, hi2 in _mp4_boxes(b, lo, hi):
             if t2 == b"trak":
                 tr = {
                     "handler": None, "codec": None, "codec_private": None,
                     "n_samples": None, "sample_rate": None,
                     "duration_s": None, "width": None, "height": None,
                 }
-                for t3, lo3, hi3 in walk(lo2, hi2):
+                for t3, lo3, hi3 in _mp4_boxes(b, lo2, hi2):
                     if t3 == b"tkhd":
-                        ver = b[lo3]
-                        need = 96 if ver == 1 else 84
-                        if hi3 - lo3 < need:
-                            raise ValueError("short tkhd box")
-                        p = lo3 + need - 8
-                        w = int.from_bytes(b[p : p + 4], "big") >> 16
-                        h = int.from_bytes(b[p + 4 : p + 8], "big") >> 16
-                        if w and h:
-                            tr["width"], tr["height"] = int(w), int(h)
+                        dims = _tkhd_dims(b, lo3, hi3)
+                        if dims:
+                            tr["width"], tr["height"] = dims
                     elif t3 == b"mdia":
-                        _mp4_mdia(b, walk, lo3, hi3, tr, fourcc)
+                        _mp4_mdia(b, lo3, hi3, tr)
                 if tr["duration_s"] is None:
                     tr["duration_s"] = movie_duration
                 tracks.append(tr)
     return tracks
 
 
-def _mp4_mdia(b: bytes, walk, lo: int, hi: int, tr: dict, fourcc) -> None:
+def _mp4_mdia(b: bytes, lo: int, hi: int, tr: dict) -> None:
     """mdia subtree of the track walk: mdhd (track-local timescale ->
     duration_s), hdlr (handler fourcc at body offset 8), and the
     minf/stbl sample tables (stsd/stsz/stts). Two passes because the
@@ -1248,27 +1174,21 @@ def _mp4_mdia(b: bytes, walk, lo: int, hi: int, tr: dict, fourcc) -> None:
     fields) and 14496-12 does not mandate hdlr-before-minf sibling
     order (review finding - a one-pass walk decoded an mp4a entry
     with the visual offsets when hdlr followed minf)."""
-    for t4, lo4, hi4 in walk(lo, hi):
+    for t4, lo4, hi4 in _mp4_boxes(b, lo, hi):
         if t4 == b"mdhd":
-            ver = b[lo4]
-            off, dur_w = (16, 8) if ver == 1 else (8, 4)
-            if hi4 - lo4 < 4 + off + 4 + dur_w:
-                raise ValueError("short mdhd box")
-            p = lo4 + 4 + off
-            ts = int.from_bytes(b[p : p + 4], "big")
-            dur = int.from_bytes(b[p + 4 : p + 4 + dur_w], "big")
-            if ts:
-                tr["duration_s"] = dur / ts
+            duration = _mp4_duration(b, lo4, hi4, "mdhd")
+            if duration is not None:
+                tr["duration_s"] = duration
         elif t4 == b"hdlr":
             if hi4 - lo4 < 12:
                 raise ValueError("short hdlr box")
-            tr["handler"] = fourcc(b[lo4 + 8 : lo4 + 12])
-    for t4, lo4, hi4 in walk(lo, hi):
+            tr["handler"] = _fourcc(b[lo4 + 8 : lo4 + 12])
+    for t4, lo4, hi4 in _mp4_boxes(b, lo, hi):
         if t4 == b"minf":
-            for t5, lo5, hi5 in walk(lo4, hi4):
+            for t5, lo5, hi5 in _mp4_boxes(b, lo4, hi4):
                 if t5 != b"stbl":
                     continue
-                for t6, lo6, hi6 in walk(lo5, hi5):
+                for t6, lo6, hi6 in _mp4_boxes(b, lo5, hi5):
                     if t6 == b"stsd":
                         if hi6 - lo6 < 8:
                             raise ValueError("short stsd box")
@@ -1280,12 +1200,12 @@ def _mp4_mdia(b: bytes, walk, lo: int, hi: int, tr: dict, fourcc) -> None:
                         # region must raise the CONTRACT error, not
                         # leak StopIteration (review finding)
                         try:
-                            etyp, elo, ehi = next(walk(lo6 + 8, hi6))
+                            etyp, elo, ehi = next(_mp4_boxes(b, lo6 + 8, hi6))
                         except StopIteration:
                             raise ValueError(
                                 "stsd claims entries but has none"
                             ) from None
-                        tr["codec"] = fourcc(etyp)
+                        tr["codec"] = _fourcc(etyp)
                         # fixed SampleEntry fields before the child
                         # boxes: 78 bytes (visual) / 28 (audio v0);
                         # the first well-formed child is the codec-
@@ -1302,8 +1222,8 @@ def _mp4_mdia(b: bytes, walk, lo: int, hi: int, tr: dict, fourcc) -> None:
                             child_off = elo + 78
                         if child_off + 8 <= ehi:
                             try:
-                                ct, _, _ = next(walk(child_off, ehi))
-                                tr["codec_private"] = fourcc(ct)
+                                ct, _, _ = next(_mp4_boxes(b, child_off, ehi))
+                                tr["codec_private"] = _fourcc(ct)
                             except (ValueError, StopIteration):
                                 pass  # no parseable child: leave None
                     elif t6 == b"stsz":
@@ -1379,43 +1299,17 @@ def mp4_track_report(assets: DataFrame) -> DataFrame:
 
 
 def decode_media(assets: DataFrame) -> DataFrame:
-    """REAL media decode for the formats a stdlib-only environment can
-    handle - PNG (struct+zlib chunk walk, inflate, scanline unfilter,
-    pixel mean), WAV/PCM (wave module: channels, rate, duration,
-    RMS), and BASELINE/extended-sequential JPEG (full T.81 pixel
-    decode: DQT/DHT/DRI walk, per-MCU Huffman entropy decode,
-    dequant, float64 IDCT, chroma upsampling, JFIF YCbCr->RGB -
-    ``mean_value`` is the real pixel mean) - dispatched on magic
-    bytes per asset, and MP4/ISO-BMFF box trees decode the header
-    tier (mvhd duration, tkhd dimensions). PROGRESSIVE-DCT Huffman
-    JPEG decodes real pixels too (T.81 annex G: spectral selection,
-    successive approximation, EOB runs - the multi-scan coefficient
-    accumulator in ``_decode_jpeg_progressive``). Adobe 4-component
-    CMYK/YCCK JPEG (APP14 transform 0/2) decodes real pixels too
-    under the inverted-ink convention: ``mean_value`` is mean INK
-    COVERAGE over C/M/Y/K (255 = solid), n_channels=4. Adobe
-    transform=0 THREE-component frames decode as the literal RGB
-    they declare, and 12-BIT GRAYSCALE (SOF1/progressive) decodes
-    with mean_value in its native 0..4095 range. The remaining JPEG
-    tiers (lossless, arithmetic, 12-bit color, undeclared component
-    spaces) fall back to the HEADER-ONLY SOF
-    walk: width/height/channels real, ``mean_value`` NULL - a NULL
-    mean_value on an image row IS pixels_decoded=false. Anything
-    else passes through with byte length + checksum and NULL media
-    fields.
-
-    This replaces the ``fake=True`` stub for all four formats: the
-    emitted width/height/duration/pixel-mean/RMS are decoded from the
-    actual payload bytes, differentially tested against independent
-    spec-written encoders (tests/test_operators.py writes PNGs, WAVs,
-    baseline JPEGs, and ISO-BMFF box trees from first principles).
-    Only the tiers a codec LIBRARY genuinely owns remain out: JPEG
-    arithmetic-coded / 12-bit-color pixels and MP4 frame data (both
-    yield real metadata with NULL mean_value). Arrow-batched
-    mapInPandas; the per-asset
-    Python codec is the honest cost of decoding in this environment -
-    swap in a vectorized binding (pillow/pyav) behind the same batch
-    interface in production.
+    """Decode each asset's bytes into one MEDIA_SCHEMA row with the
+    real decoders of this module (tiers in the module docstring),
+    dispatched per asset on magic bytes: PNG, WAV, MP4/ISO-BMFF, then
+    JPEG - the pixel tier first, the header-only SOF walk when the
+    frame is outside that tier or its entropy data fails to decode. A
+    NULL ``mean_value`` on an image row IS pixels_decoded=false.
+    Anything else passes through with byte length + checksum and NULL
+    media fields. Arrow-batched mapInPandas; the per-asset Python
+    codec is the honest cost of decoding in this environment - swap in
+    a vectorized binding (pillow/pyav) behind the same batch interface
+    in production.
 
     Robustness contract: a malformed payload NEVER fails the job. A
     truncated IDAT, short header, bad filter byte, or mid-chunk WAV

@@ -819,6 +819,24 @@ def test_band_postings_skip_unshingleable_docs(spark) -> None:
     assert loaded == []  # the screen had no candidates
 
 
+def test_token_split_runs_once_per_row(spark) -> None:
+    """The DSIR and shingle projections split each text once: the
+    token array is projected in one select and read as a column after
+    it, so the executed plan holds a single ``split(``."""
+    from etl_marketdata_downloader_archived_spark.operators import dsir
+
+    df = spark.createDataFrame(
+        [(1, "the quick brown fox jumps"), (2, "a b")],
+        "doc_id long, text string",
+    )
+
+    def splits(out) -> int:
+        return out._jdf.queryExecution().executedPlan().toString().count("split(")
+
+    assert splits(dsir.hashed_ngram_buckets(df, "doc_id", "text")) == 1
+    assert splits(D.band_postings(df, "doc_id", "text", shingle_n=3)) == 1
+
+
 def test_corpus_operators_on_empty_input(spark) -> None:
     """Every corpus operator degrades to an empty (not crashing)
     result on an empty frame - the shape a filtered-out partition or
@@ -3573,7 +3591,8 @@ def test_decode_media_jpeg_progressive_pixels(spark) -> None:
     (interleaved DC scans over the padded grid, non-interleaved AC
     over each component's ceil grid), baseline-vs-progressive mean
     IDENTITY on the same input, and the honest fallbacks: a
-    truncated progressive stream keeps real header metadata with
+    truncated progressive stream, or one with a stray byte where a
+    marker is due between scans, keeps real header metadata with
     NULL mean, and an arithmetic-coded SOF stays header-only."""
     import numpy as np
 
@@ -3604,6 +3623,17 @@ def test_decode_media_jpeg_progressive_pixels(spark) -> None:
     ]
     ent_trunc = payloads["p_sa_gray"][0][:-6]
     rows.append(("p_trunc", "image", bytearray(ent_trunc)))
+    # an empty COM segment and then a bare D9 spliced in at the 0xFF
+    # that ends the first scan: a stray byte where a marker is due
+    sa = payloads["p_sa_gray"][0]
+    pos = 2
+    while sa[pos + 1] != 0xDA:  # segment walk to the first SOS
+        pos += 2 + int.from_bytes(sa[pos + 2 : pos + 4], "big")
+    pos += 2 + int.from_bytes(sa[pos + 2 : pos + 4], "big")
+    while sa[pos] != 0xFF or sa[pos + 1] == 0x00:  # end of that scan
+        pos += 1
+    desync = sa[:pos] + b"\xff\xfe\x00\x02\xd9" + sa[pos:]
+    rows.append(("p_desync", "image", bytearray(desync)))
     assets = spark.createDataFrame(
         rows, "asset_id string, modality string, content binary"
     )
@@ -3635,6 +3665,13 @@ def test_decode_media_jpeg_progressive_pixels(spark) -> None:
 
     # truncation inside the entropy stream: metadata real, mean NULL
     r = got["p_trunc"]
+    assert r.modality_detected == "image/jpeg;progressive"
+    assert (r.width, r.height) == (13, 21)
+    assert r.mean_value is None
+
+    # a marker desync between scans is a framing error, not EOI: the
+    # pixel tier gives up and the header tier answers
+    r = got["p_desync"]
     assert r.modality_detected == "image/jpeg;progressive"
     assert (r.width, r.height) == (13, 21)
     assert r.mean_value is None
@@ -5037,6 +5074,30 @@ def test_mp4_track_report_order_and_truncation_corners(spark) -> None:
     assert s.sample_rate == 44100      # audio offsets despite hdlr-last
     assert s.duration_s == 2.5         # mvhd fallback despite trak-first
     assert got[("badstsd", -1)].codec == "corrupt/mp4"
+
+
+def test_media_container_walks_are_single() -> None:
+    """Each container rule of the media decoders is written once in
+    operators/multimodal.py: the JPEG segment walk, the DHT reader,
+    the restart-interval step, the DC difference decode, the BMFF box
+    walk and the tkhd read each raise their error from one place."""
+    from pathlib import Path
+
+    src = (
+        Path(__file__).resolve().parents[1]
+        / "etl_marketdata_downloader_archived_spark"
+        / "operators"
+        / "multimodal.py"
+    ).read_text(encoding="utf-8")
+    for msg in (
+        "truncated JPEG segment length",
+        "short DHT segment",
+        "JPEG missing restart marker",
+        "JPEG DC category out of range",
+        "MP4 box overruns its container",
+        "short tkhd box",
+    ):
+        assert src.count(msg) == 1, msg
 
 
 def test_dsir_weights_match_python_replay_and_select(spark) -> None:

@@ -584,6 +584,8 @@ PARITY_QUERIES = [
     "text_analysis",
     "tfidf_topk",
     "dedup_near_panel",
+    "dedup_ngram_jaccard",
+    "dedup_containment",
 ]
 
 
